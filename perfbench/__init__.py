@@ -1,0 +1,1 @@
+"""The extraction benchmark; see README.md and ``run.py``."""
