@@ -2,7 +2,7 @@
 
 Re-implements, from published behavior only, the reference's
 ``MarkdownConverter`` (reference: src/utils/markdown-converter.ts:126-969)
-as pure Python so it can run inside one Arrow-batched ``mapInPandas`` stage.
+as pure Python so it can run inside one Arrow-batched ``mapInArrow`` stage.
 Operator order is semantics-bearing and mirrors the reference exactly
 (markdown-converter.ts:152-254):
 

@@ -1,11 +1,12 @@
 """The vectorized extraction stage: documents → ordered Markdown span arrays.
 
-One Arrow-batched ``mapInPandas`` stage carries the whole per-document chain
-(P1…C-H from the converter, M1 serialization, M2–M14 postprocess) —
-exactly one Python/JVM round-trip per the north_rule's "vectorized
-pandas/Arrow UDFs only" constraint.  Never throws: per-document failures land
-in the ``error`` column (mirrors the reference's error taxonomy,
-reference: src/errors.ts:1-31, and the converter's fallback-to-cleaned-HTML,
+One Arrow-batched ``mapInArrow`` stage (``mapInPandas`` with
+``use_arrow=False``) carries the whole per-document chain (P1…C-H from the
+converter, M1 serialization, M2–M14 postprocess) — exactly one Python/JVM
+round-trip per the north_rule's "vectorized pandas/Arrow UDFs only"
+constraint.  Never throws: per-document failures land in the ``error``
+column (mirrors the reference's error taxonomy, reference:
+src/errors.ts:1-31, and the converter's fallback-to-cleaned-HTML,
 markdown-converter.ts:249-253).
 
 Skew handling (north_rule): callers salt-repartition on ``doc_id`` before
@@ -16,7 +17,9 @@ this stage via :func:`salted_repartition`; Arrow batch size is bounded by
 from __future__ import annotations
 
 import re
+import sys
 import time
+import zipimport
 from collections.abc import Iterator
 
 import pandas as pd
@@ -133,6 +136,25 @@ def spans_to_markdown(spans: list[dict]) -> str:
 # --- the UDF ----------------------------------------------------------------
 
 
+def _drop_zip_importers() -> None:
+    """Forget the cached ``zipimporter`` of every archive on ``sys.path``.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start of
+    every task (``worker_util.setup_spark_files``).  Before Python 3.13 that
+    makes each cached ``zipimporter`` re-read its archive's central
+    directory in pure Python: pyspark.zip, the spark-core jar and the
+    ``--py-files`` zip cost 0.2–0.4 s per task.  Dropping the importers
+    leaves that call nothing to re-read.  Loaded modules stay in
+    ``sys.modules``, and a later import from an archive rebuilds its
+    importer through ``sys.path_hooks`` from
+    ``zipimport._zip_directory_cache``; the archives do not change while a
+    worker lives.
+    """
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]
+
+
 def _convert_document(converter, assemble, base_url, source_url, max_content_length):
     """The per-document conversion chain shared by both batch adapters
     (mapInPandas and mapInArrow): assemble → preprocess → to_markdown (with
@@ -186,6 +208,7 @@ def _extract_batches(
     from .convert.converter import MarkdownConverter
     from .fixtures import assemble_html
 
+    _drop_zip_importers()
     converter = MarkdownConverter()
 
     for pdf in batches:
@@ -234,6 +257,7 @@ def _extract_arrow_batches(
 
     from .convert.converter import MarkdownConverter
 
+    _drop_zip_importers()
     converter = MarkdownConverter()
     span_type = pa.struct(
         [("kind", pa.string()), ("text", pa.string()), ("media_ref", pa.string()), ("offset", pa.int32())]

@@ -8,6 +8,8 @@ match exactly.
 """
 
 import json
+import os
+import re
 import shutil
 import subprocess
 
@@ -17,7 +19,6 @@ from pyspark.sql import functions as F
 from fetch_engines_spark import classifiers as X
 
 node = shutil.which("node")
-pytestmark = pytest.mark.skipif(node is None, reason="node not available")
 
 _NODE_SCRIPT = """
 import * as rd from '/root/reference/dist/utils/render-detection.js';
@@ -40,6 +41,15 @@ const out = docs.map((html) => {
 });
 console.log(JSON.stringify(out));
 """
+
+# both node scripts import this compiled module of the reference
+_REFERENCE_JS = re.search(r"from '([^']+)'", _NODE_SCRIPT).group(1)
+pytestmark = [
+    pytest.mark.skipif(node is None, reason="node not available"),
+    pytest.mark.skipif(
+        not os.path.exists(_REFERENCE_JS), reason=f"{_REFERENCE_JS} not present"
+    ),
+]
 
 
 def _variants() -> list[str]:

@@ -326,3 +326,46 @@ def test_span_equality_report_joins_on_position(spark):
     )
     bad = span_equality_report(df.filter(F.col("doc_id") == "dup"), swapped).collect()
     assert bad[0].equal is False and bad[0].n_mismatched == 2
+
+
+def test_drop_zip_importers_keeps_archive_imports_working(tmp_path):
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from fetch_engines_spark.extract import _drop_zip_importers
+
+    archive = tmp_path / "pkg.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("zpkg/__init__.py", "")
+        zf.writestr("zpkg/sub/__init__.py", "NAME = 'sub'\n")
+        zf.writestr("zpkg/sub/other.py", "NAME = 'other'\n")
+
+    saved_path = list(sys.path)
+    saved_modules = dict(sys.modules)
+    saved_cache = dict(sys.path_importer_cache)
+    sys.path.insert(0, str(archive))
+    try:
+        importlib.invalidate_caches()
+        assert importlib.import_module("zpkg.sub").NAME == "sub"
+        assert any(
+            isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+        )
+
+        _drop_zip_importers()
+        assert not any(
+            isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+        )
+
+        # the next task's setup calls invalidate_caches(); a module not yet
+        # loaded from the same archive must still import afterwards
+        importlib.invalidate_caches()
+        assert "zpkg.sub.other" not in sys.modules
+        assert importlib.import_module("zpkg.sub.other").NAME == "other"
+    finally:
+        sys.path[:] = saved_path
+        sys.modules.clear()
+        sys.modules.update(saved_modules)
+        sys.path_importer_cache.clear()
+        sys.path_importer_cache.update(saved_cache)
