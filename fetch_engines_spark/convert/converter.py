@@ -13,6 +13,9 @@ P8 title election → P9 head drop → C-A forum detect →
 C-I html-wrapper guard → C-F content-subtree boilerplate →
 C-G in-content link-density prune → C-H primary-H1 →
 M1 serialize → M2–M13 postprocess (+ M14 source injection helper).
+
+M1 lives in ``serialize``; ``extract.convert_document`` chains the stages
+per document.
 """
 
 from __future__ import annotations
@@ -21,7 +24,6 @@ import re
 from urllib.parse import urljoin, urlparse
 
 from ..dom import Element, collect_first_matches, collect_matches, parse_html, subtree_stats
-from .serialize import to_markdown
 
 # --- constants (parity: markdown-converter.ts:27-113) -----------------------
 
@@ -675,26 +677,9 @@ def inject_source_url(markdown: str, source_url: str | None) -> str:
 
 
 class MarkdownConverter:
-    """HTML → Markdown with boilerplate stripping (reference-parity)."""
-
-    def convert(
-        self,
-        html: str,
-        base_url: str | None = None,
-        max_content_length: int | None = None,
-    ) -> str:
-        content_el, _title = self.preprocess(html, base_url)
-        if isinstance(content_el, str):
-            markdown = content_el  # fallback: cleaned raw HTML string
-        else:
-            try:
-                markdown = to_markdown(content_el)
-            except (RecursionError, Exception):
-                # Serialization failure falls back to the (cleaned) raw
-                # input, mirroring the reference's conversion-failure path
-                # (FetchEngine.ts:138-141).
-                markdown = cleanup_content_html(cleanup_html(html))
-        return postprocess_markdown(markdown, max_content_length)
+    """Boilerplate stripping and content selection, P1–C-H
+    (reference-parity).  The full chain, serialization and postprocess
+    included, is ``extract.convert_document``."""
 
     def preprocess(
         self, html: str, base_url: str | None = None

@@ -1,13 +1,13 @@
 """The vectorized extraction stage: documents → ordered Markdown span arrays.
 
-One Arrow-batched ``mapInArrow`` stage (``mapInPandas`` with
-``use_arrow=False``) carries the whole per-document chain (P1…C-H from the
-converter, M1 serialization, M2–M14 postprocess) — exactly one Python/JVM
-round-trip per the north_rule's "vectorized pandas/Arrow UDFs only"
-constraint.  Never throws: per-document failures land in the ``error``
-column (mirrors the reference's error taxonomy, reference:
-src/errors.ts:1-31, and the converter's fallback-to-cleaned-HTML,
-markdown-converter.ts:249-253).
+A native projection assembles each document's html from its spans, then
+one Arrow-batched ``mapInArrow`` stage carries the whole per-document chain
+(:func:`convert_document`: P1…C-H from the converter, M1 serialization,
+M2–M14 postprocess) — exactly one Python/JVM round-trip per the
+north_rule's "vectorized pandas/Arrow UDFs only" constraint.  Never
+throws: per-document failures land in the ``error`` column (mirrors the
+reference's error taxonomy, reference: src/errors.ts:1-31, and the
+converter's fallback-to-cleaned-HTML, markdown-converter.ts:249-253).
 
 Skew handling (north_rule): callers salt-repartition on ``doc_id`` before
 this stage via :func:`salted_repartition`; Arrow batch size is bounded by
@@ -16,13 +16,12 @@ this stage via :func:`salted_repartition`; Arrow batch size is bounded by
 
 from __future__ import annotations
 
+import functools
 import re
 import sys
 import time
 import zipimport
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -155,18 +154,35 @@ def _drop_zip_importers() -> None:
             del sys.path_importer_cache[path]
 
 
-def _convert_document(converter, assemble, base_url, source_url, max_content_length):
-    """The per-document conversion chain shared by both batch adapters
-    (mapInPandas and mapInArrow): assemble → preprocess → to_markdown (with
+def convert_document(
+    html: str | None,
+    base_url: str | None = None,
+    source_url: str | None = None,
+    max_content_length: int | None = None,
+) -> tuple[str, str, str | None, list[dict], int]:
+    """The per-document conversion chain: preprocess → to_markdown (with
     the cleanup fallback, parity FetchEngine.ts:138-141) → postprocess →
-    source-url injection → markdown_to_spans, with the per-doc error
-    taxonomy.  ``assemble`` is a zero-arg callable returning the html
-    string so each adapter keeps its own assembly strategy while the
-    conversion+fallback logic exists exactly once.
+    source-url injection → markdown_to_spans.
 
-    Returns ``(title, markdown, error, out_spans, in_bytes)``.
+    Never raises.  ``error`` is one of:
+
+    - ``None``;
+    - ``ERR_PREPROCESS_FALLBACK``: preprocess fell back to the cleaned raw
+      HTML, which is postprocessed and segmented as the markdown;
+    - ``ERR_MARKDOWN_CONVERSION_FALLBACK``: serialization failed, and the
+      cleaned raw HTML is postprocessed and segmented instead;
+    - ``ERR_EXTRACTION: <type>: <message>``, cut at 500 characters, with
+      empty markdown and spans.
+
+    Returns ``(title, markdown, error, spans, in_bytes)``.
     """
-    from .convert.converter import inject_source_url, postprocess_markdown
+    from .convert.converter import (
+        MarkdownConverter,
+        cleanup_content_html,
+        cleanup_html,
+        inject_source_url,
+        postprocess_markdown,
+    )
     from .convert.serialize import to_markdown
 
     error = None
@@ -174,9 +190,9 @@ def _convert_document(converter, assemble, base_url, source_url, max_content_len
     markdown = ""
     in_bytes = 0
     try:
-        html = assemble() or ""
+        html = html or ""
         in_bytes = len(html.encode("utf-8", "ignore"))
-        content, title = converter.preprocess(html, base_url)
+        content, title = MarkdownConverter().preprocess(html, base_url)
         if isinstance(content, str):
             markdown = content
             error = "ERR_PREPROCESS_FALLBACK"
@@ -184,10 +200,6 @@ def _convert_document(converter, assemble, base_url, source_url, max_content_len
             try:
                 markdown = to_markdown(content)
             except Exception:
-                # serialization fallback = cleaned raw input
-                # (parity: FetchEngine.ts:138-141)
-                from .convert.converter import cleanup_content_html, cleanup_html
-
                 markdown = cleanup_content_html(cleanup_html(html))
                 error = "ERR_MARKDOWN_CONVERSION_FALLBACK"
         markdown = postprocess_markdown(markdown, max_content_length)
@@ -201,138 +213,43 @@ def _convert_document(converter, assemble, base_url, source_url, max_content_len
     return title, markdown, error, out_spans, in_bytes
 
 
-def _extract_batches(
-    batches: Iterator[pd.DataFrame], max_content_length: int | None = None
-) -> Iterator[pd.DataFrame]:
-    # Import inside the worker so the zipped --py-files package resolves.
-    from .convert.converter import MarkdownConverter
-    from .fixtures import assemble_html
-
-    _drop_zip_importers()
-    converter = MarkdownConverter()
-
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in OUTPUT_SCHEMA.names}
-        has_base = "base_url" in pdf.columns
-        has_source = "source_url" in pdf.columns
-        for row in pdf.itertuples(index=False):
-            t0 = time.perf_counter()
-            doc_id = row.doc_id
-            spans_in = row.spans if row.spans is not None else []
-            base_url = getattr(row, "base_url", None) if has_base else None
-            source_url = getattr(row, "source_url", None) if has_source else None
-            # Arrow delivers struct elements as dicts; accept Rows too.
-            title, markdown, error, out_spans, in_bytes = _convert_document(
-                converter,
-                lambda: assemble_html(
-                    [s if isinstance(s, dict) else s.asDict() for s in spans_in]
-                ),
-                base_url,
-                source_url,
-                max_content_length,
-            )
-            wall_us = int((time.perf_counter() - t0) * 1_000_000)
-            out["doc_id"].append(doc_id)
-            out["title"].append(title)
-            out["spans"].append(out_spans)
-            out["markdown"].append(markdown)
-            out["error"].append(error)
-            out["in_bytes"].append(in_bytes)
-            out["out_bytes"].append(len(markdown.encode("utf-8", "ignore")))
-            out["wall_us"].append(wall_us)
-        yield pd.DataFrame(out)
-
-
 def _extract_arrow_batches(
     batches, emit_markdown: bool = True, max_content_length: int | None = None
 ):
-    """Arrow-native variant of the extraction stage (mapInArrow): consumes
-    pyarrow RecordBatches and builds the output arrays directly, skipping
-    the pandas materialization on both sides of the boundary.
+    """The extraction stage's Python side (``mapInArrow``): consumes
+    RecordBatches of ``(doc_id[, base_url, source_url], html)``, with
+    ``html`` assembled JVM-side by :func:`html_assembly_expr`, and builds
+    the ``OUTPUT_SCHEMA`` arrays directly.
 
     With ``emit_markdown=False`` the markdown column is emitted as nulls —
     it never crosses the Arrow boundary (the span array already carries
     the content; at corpus scale this halves the stage's output bytes)."""
     import pyarrow as pa
-
-    from .convert.converter import MarkdownConverter
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     _drop_zip_importers()
-    converter = MarkdownConverter()
-    span_type = pa.struct(
-        [("kind", pa.string()), ("text", pa.string()), ("media_ref", pa.string()), ("offset", pa.int32())]
-    )
-    out_schema = pa.schema(
-        [
-            ("doc_id", pa.string()),
-            ("title", pa.string()),
-            ("spans", pa.list_(span_type)),
-            ("markdown", pa.string()),
-            ("error", pa.string()),
-            ("in_bytes", pa.int64()),
-            ("out_bytes", pa.int64()),
-            ("wall_us", pa.int64()),
-        ]
-    )
+    out_schema = to_arrow_schema(OUTPUT_SCHEMA)
 
     for batch in batches:
-        cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-        doc_ids = cols["doc_id"].to_pylist()
-        # html pre-assembled JVM-side (assemble_in_jvm): only the joined
-        # string crosses Arrow — the span structs never materialize as
-        # Python objects.  Fallback: assemble here from the spans column.
-        htmls = cols["html"].to_pylist() if "html" in cols else None
-        spans_col = cols["spans"].to_pylist() if htmls is None else None
-        base_urls = cols["base_url"].to_pylist() if "base_url" in cols else [None] * len(doc_ids)
-        source_urls = (
-            cols["source_url"].to_pylist() if "source_url" in cols else [None] * len(doc_ids)
-        )
-        o_title, o_spans, o_md, o_err, o_in, o_out, o_wall = [], [], [], [], [], [], []
-
-        def assemble(i):
-            if htmls is not None:
-                return htmls[i] or ""
-            spans_in = spans_col[i] or []
-            # null offsets order last, stable — the same explicit
-            # rule as html_assembly_expr's JVM comparator
-            return "".join(
-                s["text"]
-                for s in sorted(
-                    spans_in,
-                    key=lambda s: (s["offset"] is None, s["offset"] or 0),
-                )
-                if s["kind"] == "html" and s["text"]
-            )
-
-        for i, doc_id in enumerate(doc_ids):
+        cols = batch.to_pydict()
+        n = batch.num_rows
+        out = {name: [] for name in out_schema.names}
+        out["doc_id"] = cols["doc_id"]
+        for html, base_url, source_url in zip(
+            cols["html"], cols.get("base_url", [None] * n), cols.get("source_url", [None] * n)
+        ):
             t0 = time.perf_counter()
-            title, markdown, error, out_spans, in_bytes = _convert_document(
-                converter,
-                lambda: assemble(i),
-                base_urls[i],
-                source_urls[i],
-                max_content_length,
+            title, markdown, error, spans, in_bytes = convert_document(
+                html, base_url, source_url, max_content_length
             )
-            o_title.append(title)
-            o_spans.append(out_spans)
-            o_md.append(markdown if emit_markdown else None)
-            o_err.append(error)
-            o_in.append(in_bytes)
-            o_out.append(len(markdown.encode("utf-8", "ignore")))
-            o_wall.append(int((time.perf_counter() - t0) * 1_000_000))
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(doc_ids, pa.string()),
-                pa.array(o_title, pa.string()),
-                pa.array(o_spans, pa.list_(span_type)),
-                pa.array(o_md, pa.string()),
-                pa.array(o_err, pa.string()),
-                pa.array(o_in, pa.int64()),
-                pa.array(o_out, pa.int64()),
-                pa.array(o_wall, pa.int64()),
-            ],
-            schema=out_schema,
-        )
+            out["title"].append(title)
+            out["spans"].append(spans)
+            out["markdown"].append(markdown if emit_markdown else None)
+            out["error"].append(error)
+            out["in_bytes"].append(in_bytes)
+            out["out_bytes"].append(len(markdown.encode("utf-8", "ignore")))
+            out["wall_us"].append(int((time.perf_counter() - t0) * 1_000_000))
+        yield pa.RecordBatch.from_pydict(out, schema=out_schema)
 
 
 def salted_repartition(df: DataFrame, num_partitions: int, salt_buckets: int = 16) -> DataFrame:
@@ -364,8 +281,8 @@ def html_assembly_expr(spans_col: str = "spans"):
     shipped or built).
 
     Null offsets (contract-violating but tolerated) order LAST, stable
-    among themselves — the same explicit rule as the Python fallback
-    assembly, so assemble_in_jvm=True/False agree on every input."""
+    among themselves.  Null or empty span arrays and documents without
+    html text yield an empty string (or null), never an error."""
     filtered = F.filter(
         F.col(spans_col),
         lambda s: (s["kind"] == "html") & s["text"].isNotNull() & (s["text"] != ""),
@@ -386,44 +303,32 @@ def extract_spans(
     documents: DataFrame,
     num_partitions: int | None = None,
     keep_markdown: bool = True,
-    use_arrow: bool = True,
     max_content_length: int | None = None,
-    assemble_in_jvm: bool = True,
 ) -> DataFrame:
     """documents(doc_id, spans[, base_url, canonical_url, source_url]) →
     outputs(doc_id, title, spans, markdown, error, metrics cols).
 
-    Defaults to the Arrow-native ``mapInArrow`` stage (measured ~15% faster
-    than mapInPandas on this workload — no pandas materialization);
-    ``use_arrow=False`` selects the mapInPandas variant.
-    ``assemble_in_jvm`` (default) performs the span→html document assembly
-    as a native projection so the span structs never cross into Python.
+    One path: the span→html document assembly runs as a native projection
+    (:func:`html_assembly_expr`, so the span structs never cross into
+    Python), then one ``mapInArrow`` stage runs :func:`convert_document`
+    per document.  ``num_partitions`` salt-repartitions the input first;
+    ``keep_markdown=False`` drops the markdown column.
     """
     df = documents
     if num_partitions:
         df = salted_repartition(df, num_partitions)
     # canonical_url is part of the documents contract but unused by the
     # conversion chain — excluding it here keeps it off the Arrow boundary
-    cols = [c for c in ("doc_id", "base_url", "source_url", "spans") if c in df.columns]
-    sel = df.select(*cols)
-    if use_arrow and assemble_in_jvm and hasattr(sel, "mapInArrow"):
-        sel = sel.withColumn("html", html_assembly_expr("spans")).drop("spans")
-    if use_arrow and hasattr(sel, "mapInArrow"):
-        import functools
-
-        fn = functools.partial(
+    cols = [c for c in ("doc_id", "base_url", "source_url") if c in df.columns]
+    sel = df.select(*cols, html_assembly_expr("spans").alias("html"))
+    out = sel.mapInArrow(
+        functools.partial(
             _extract_arrow_batches,
             emit_markdown=keep_markdown,
             max_content_length=max_content_length,
-        )
-        out = sel.mapInArrow(fn, schema=OUTPUT_SCHEMA)
-    else:
-        import functools
-
-        out = sel.mapInPandas(
-            functools.partial(_extract_batches, max_content_length=max_content_length),
-            schema=OUTPUT_SCHEMA,
-        )
+        ),
+        schema=OUTPUT_SCHEMA,
+    )
     if not keep_markdown:
         out = out.drop("markdown")
     return out

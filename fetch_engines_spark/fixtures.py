@@ -681,20 +681,6 @@ def html_to_input_spans(html: str) -> list[dict]:
     return spans
 
 
-def assemble_html(spans: list[dict]) -> str:
-    """Inverse of the synthesis split: concatenate kind='html' spans by
-    offset order (media spans are by-reference duplicates of refs already
-    inside the html fragments)."""
-    ordered = sorted(
-        (s for s in spans if s.get("kind") == "html" and s.get("text")),
-        # null offsets order last, stable — the same explicit rule as
-        # html_assembly_expr's JVM comparator and the Arrow fallback, so
-        # every assembly path agrees on contract-violating inputs
-        key=lambda s: (s["offset"] is None, s["offset"] if s["offset"] is not None else 0),
-    )
-    return "".join(s["text"] for s in ordered)
-
-
 def fixture_document_rows(replicas: int = 1, skew_ids: dict[str, int] | None = None) -> list[dict]:
     """Build deterministic documents rows from the fixture corpus.
 

@@ -498,7 +498,10 @@ def mixture_sample(
     old one-reducer-per-stratum corpus sort — and mix_rank composes as
     offset + within-bucket rank, identical to the single global rank
     because bucket order IS md5-prefix order.  Returns the input columns
-    plus mix_rank."""
+    plus mix_rank.
+
+    Keys must be non-null: a row whose ``key_col`` is null has no md5 rank,
+    so it is dropped before the counts and never takes a cap slot."""
     from itertools import chain
 
     from pyspark.sql import Window
@@ -509,6 +512,7 @@ def mixture_sample(
         raise ValueError(
             "mixture_sample: targets_bp must be non-empty with positive shares"
         )
+    df = df.filter(F.col(key_col).isNotNull())
     n_buckets = 4096  # 3 hex chars of the rank md5; ~n_s/4096 rows per window key
     tmap = F.create_map(
         *chain.from_iterable((F.lit(k), F.lit(v)) for k, v in targets_bp.items())
@@ -575,15 +579,16 @@ def mixture_sample_sql(
     source: str = "documents",
 ) -> str:
     """DuckDB twin of mixture_sample: same integer scale/caps, same
-    md5-rank selection."""
+    md5-rank selection, same drop of null-key rows."""
     tvals = ", ".join(
         "('{}', {})".format(k.replace("'", "''"), v) for k, v in targets_bp.items()
     )
     return f"""
 WITH t(stratum, tbp) AS (VALUES {tvals}),
+keyed AS (SELECT * FROM {source} WHERE {key_col} IS NOT NULL),
 counts AS (
   SELECT s.{stratum_col} AS stratum, t.tbp, count(*) AS n
-  FROM {source} s JOIN t ON s.{stratum_col} = t.stratum
+  FROM keyed s JOIN t ON s.{stratum_col} = t.stratum
   GROUP BY 1, 2
 ),
 scale AS (
@@ -598,7 +603,7 @@ ranked AS (
            ORDER BY md5(CAST(s.{key_col} AS VARCHAR)), s.{key_col}
          ) AS BIGINT) AS mix_rank,
          c.cap
-  FROM {source} s JOIN caps c ON s.{stratum_col} = c.stratum
+  FROM keyed s JOIN caps c ON s.{stratum_col} = c.stratum
 )
 SELECT * EXCLUDE (cap) FROM ranked WHERE mix_rank <= cap
 """

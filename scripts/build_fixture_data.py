@@ -2,9 +2,10 @@
 
 Deterministic (no RNG, no wall clock).  The expected_spans/expected_markdown
 files are the golden oracle the driver's DuckDB side reads for the
-extraction queries: they are produced by the pure-Python converter (the same
-code the Spark UDF runs), validated against the reference's own containment
-assertions by tests/test_converter_fixtures.py before being trusted here.
+extraction queries: they are produced by ``extract.convert_document`` (the
+chain the Spark stage runs per document), validated against the reference's
+own containment assertions by tests/test_converter_fixtures.py before being
+trusted here.
 
 Run: python scripts/build_fixture_data.py
 """
@@ -19,9 +20,7 @@ import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-from fetch_engines_spark.convert.converter import MarkdownConverter, postprocess_markdown
-from fetch_engines_spark.convert.serialize import to_markdown
-from fetch_engines_spark.extract import markdown_to_spans
+from fetch_engines_spark.extract import convert_document
 from fetch_engines_spark.fixtures import FIXTURES, fixture_document_rows
 from fetch_engines_spark.pipelines.multimodal import encode_payload
 
@@ -65,19 +64,15 @@ TRUNCATE_AT = 400  # max_content_length for the M13 truncation golden
 
 
 def build_expected() -> None:
-    conv = MarkdownConverter()
     md_rows = []
     span_rows = []
     trunc_rows = []
     for f in FIXTURES:
-        # mirror extract.py's UDF exactly: serialize (or fallback), then
-        # postprocess both branches
-        content, title = conv.preprocess(f.html, f.base_url)
-        markdown = content if isinstance(content, str) else to_markdown(content)
-        trunc_rows.append((f.id, title, postprocess_markdown(markdown, TRUNCATE_AT)))
-        markdown = postprocess_markdown(markdown)
+        title, markdown, _error, spans, _in_bytes = convert_document(f.html, f.base_url)
+        truncated = convert_document(f.html, f.base_url, max_content_length=TRUNCATE_AT)[1]
+        trunc_rows.append((f.id, title, truncated))
         md_rows.append((f.id, title, markdown))
-        for s in markdown_to_spans(markdown):
+        for s in spans:
             span_rows.append((f.id, s["offset"], s["kind"], s["text"], s["media_ref"]))
     pq.write_table(
         pa.table(
@@ -447,12 +442,9 @@ def build_mixed_content() -> None:
     from fetch_engines_spark.pdf import parse_pdf_spans  # count check below
 
     rows = []  # (content_id, mime, payload, exp_route, exp_n_spans)
-    conv = MarkdownConverter()
     for fid in ("F01", "F03", "F22"):
         f = FIXTURES_BY_ID[fid]
-        content, _title = conv.preprocess(f.html, f.base_url)
-        md = content if isinstance(content, str) else to_markdown(content)
-        n_spans = len(markdown_to_spans(postprocess_markdown(md)))
+        n_spans = len(convert_document(f.html, f.base_url)[3])
         rows.append(
             (f"html-{fid}", "text/html; charset=utf-8", f.html.encode(), "html", n_spans)
         )

@@ -28,15 +28,14 @@ sys.path.insert(0, REPO)
 
 
 def _convert(n: int) -> int:
-    from fetch_engines_spark.convert.converter import MarkdownConverter
+    from fetch_engines_spark.extract import convert_document
     from fetch_engines_spark.fixtures import FIXTURES
 
     pages = [f.html for f in FIXTURES if f.must_contain or f.must_not_contain]
-    conv = MarkdownConverter()
     c = 0
     for _ in range(n):
         for h in pages:
-            conv.convert(h, base_url="https://example.com/x")
+            convert_document(h, base_url="https://example.com/x")
             c += 1
     return c
 

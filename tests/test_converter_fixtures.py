@@ -8,6 +8,7 @@ Markdown for each fixture page (SURVEY.md §5 layer 1).
 import pytest
 
 from fetch_engines_spark.convert import MarkdownConverter, inject_source_url
+from fetch_engines_spark.extract import convert_document
 from fetch_engines_spark.fixtures import EXTRACTION_FIXTURE_IDS, FIXTURES_BY_ID
 
 
@@ -17,50 +18,50 @@ def converter():
 
 
 @pytest.mark.parametrize("fid", EXTRACTION_FIXTURE_IDS)
-def test_fixture_containment(converter, fid):
+def test_fixture_containment(fid):
     f = FIXTURES_BY_ID[fid]
-    md = converter.convert(f.html, base_url=f.base_url)
+    md = convert_document(f.html, base_url=f.base_url)[1]
     for expected in f.must_contain:
         assert expected in md, f"{fid}: missing {expected!r}\n---\n{md}"
     for banned in f.must_not_contain:
         assert banned not in md, f"{fid}: unexpected {banned!r}\n---\n{md}"
 
 
-def test_gfm_table_first_row_promoted(converter):
-    md = converter.convert(FIXTURES_BY_ID["F01"].html)
+def test_gfm_table_first_row_promoted():
+    md = convert_document(FIXTURES_BY_ID["F01"].html)[1]
     lines = [ln for ln in md.split("\n") if ln.startswith("|")]
     assert lines[0].startswith("| **Position** |")
     assert set(lines[1].replace("|", "").split()) == {"---"}
 
 
-def test_title_injected_as_h1_when_missing(converter):
+def test_title_injected_as_h1_when_missing():
     html = (
         "<html><head><title>Doc Title</title></head>"
         "<body><main><p>Body content long enough to be selected as the main "
         "content of this page, including several descriptive words.</p></main></body></html>"
     )
-    md = converter.convert(html)
+    md = convert_document(html)[1]
     assert md.startswith("# Doc Title")
 
 
-def test_h1_replaced_by_longer_containing_title(converter):
+def test_h1_replaced_by_longer_containing_title():
     html = (
         "<html><head><title>Short | Full Site Name And More</title></head>"
         "<body><main><h1>Short</h1><p>Body content long enough to be selected as "
         "main content for this fixture page with words.</p></main></body></html>"
     )
-    md = converter.convert(html)
+    md = convert_document(html)[1]
     assert "# Short | Full Site Name And More" in md
 
 
-def test_first_heading_promoted_when_no_title(converter):
-    md = converter.convert(FIXTURES_BY_ID["F07"].html, base_url="https://example.com/")
+def test_first_heading_promoted_when_no_title():
+    md = convert_document(FIXTURES_BY_ID["F07"].html, base_url="https://example.com/")[1]
     assert "# Recent News" in md
 
 
-def test_max_content_length_truncation(converter):
+def test_max_content_length_truncation():
     html = "<body><main><p>" + ("Sentence one. " * 200) + "</p></main></body>"
-    md = converter.convert(html, max_content_length=300)
+    md = convert_document(html, max_content_length=300)[1]
     assert md.endswith("... (truncated)")
     assert len(md) <= 300 + len("... (truncated)")
 
@@ -87,15 +88,15 @@ def test_preprocess_failure_falls_back_to_cleaned_html(converter, monkeypatch):
     assert title == ""
 
 
-def test_template_vars_and_control_chars_scrubbed(converter):
+def test_template_vars_and_control_chars_scrubbed():
     html = "<body><main><p>keep {{tmpl}} this\x07 text plus enough words to be the selected main content.</p></main></body>"
-    md = converter.convert(html)
+    md = convert_document(html)[1]
     assert "{{tmpl}}" not in md
     assert "\x07" not in md
     assert "keep" in md
 
 
-def test_forum_branch_assembles_post_and_comments(converter):
+def test_forum_branch_assembles_post_and_comments():
     html = """
     <body>
       <header><a href='/'>site chrome</a></header>
@@ -107,35 +108,35 @@ def test_forum_branch_assembles_post_and_comments(converter):
         <div class="sidebar"><a href='/x'>sidebar junk</a></div>
       </div>
     </body>"""
-    md = converter.convert(html)
+    md = convert_document(html)[1]
     assert "The original submission text" in md
     assert "First comment body." in md
     assert "sidebar junk" not in md
     assert "site chrome" not in md
 
 
-def test_svg_image_refs_removed(converter):
+def test_svg_image_refs_removed():
     html = (
         "<body><main><h1>T</h1><img src='/logo.SVG' alt='logo'><img src='/photo.png' alt='photo'>"
         "<p>Enough body text for content selection to keep this main element.</p></main></body>"
     )
-    md = converter.convert(html)
+    md = convert_document(html)[1]
     assert "logo" not in md
     assert "photo.png" in md
 
 
-def test_breadcrumbs_removed(converter):
+def test_breadcrumbs_removed():
     html = (
         "<body><main><nav aria-label='breadcrumb'><a href='/'>Home</a> &gt; "
         "<a href='/c'>Category</a></nav><h1>Article</h1>"
         "<p>Enough text to keep this main element selected as content.</p></main></body>"
     )
-    md = converter.convert(html)
+    md = convert_document(html)[1]
     assert "Home" not in md
     assert "Article" in md
 
 
-def test_serializer_edge_blocks(converter):
+def test_serializer_edge_blocks():
     """Pin additional serializer behaviors: thead tables, nested lists,
     blockquote, hr, definition lists, inline code in headings."""
     html = """
@@ -149,7 +150,7 @@ def test_serializer_edge_blocks(converter):
       <dl><dt>Term</dt><dd>Definition text</dd></dl>
       <p>after the rule with plenty of supporting words to stay selected here</p>
     </main></body>"""
-    md = converter.convert(html)
+    md = convert_document(html)[1]
     assert "# Edge `cases`" in md
     assert "| A | B |" in md and "| 1 | 2 |" in md
     # M9 (reference postprocess step 6) trims leading spaces per line, so
@@ -161,24 +162,24 @@ def test_serializer_edge_blocks(converter):
     assert "Term" in md and "Definition text" in md
 
 
-def test_ordered_list_numbering(converter):
+def test_ordered_list_numbering():
     html = ("<body><main><h1>Steps</h1><ol><li>first step</li><li>second step</li>"
             "<li>third step</li></ol><p>closing text to keep main selected with more words</p></main></body>")
-    md = converter.convert(html)
+    md = convert_document(html)[1]
     assert "1. first step" in md and "2. second step" in md and "3. third step" in md
 
 
-def test_strikethrough_and_em(converter):
+def test_strikethrough_and_em():
     html = ("<body><main><h1>Styles</h1><p>Some <em>emphasis</em> and <s>struck</s> and "
             "<strong>bold</strong> text in a paragraph long enough to be chosen as content.</p></main></body>")
-    md = converter.convert(html)
+    md = convert_document(html)[1]
     assert "*emphasis*" in md and "~~struck~~" in md and "**bold**" in md
 
 
-def test_linked_image_stays_inline(converter):
+def test_linked_image_stays_inline():
     html = ("<body><main><h1>Pic</h1><p><a href='/big.png'><img src='/thumb.png' alt='thumb'></a>"
             " caption words and enough additional text for the content selection to hold.</p></main></body>")
-    md = converter.convert(html)
+    md = convert_document(html)[1]
     assert "[![thumb](/thumb.png)](/big.png)" in md
 
 
@@ -192,16 +193,16 @@ def test_forum_detection_via_og_url(converter):
     )
     content, _ = converter.preprocess(html)
     # forum branch selected: no .fatitem/.comments → falls back to cleaned body
-    md = converter.convert(html)
+    md = convert_document(html)[1]
     assert "Single post body" in md
 
 
-def test_relative_canonical_resolved_against_dummy_base(converter):
+def test_relative_canonical_resolved_against_dummy_base():
     """Relative canonical URLs resolve against http://example.com (parity:
     markdown-converter.ts:666-668) — no crash, no forum detection."""
     html = (
         "<html><head><link rel='canonical' href='/article/42'></head>"
         "<body><main><h1>T</h1><p>Body content with enough words to be selected as main.</p></main></body></html>"
     )
-    md = converter.convert(html)
+    md = convert_document(html)[1]
     assert "Body content" in md

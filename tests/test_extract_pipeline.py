@@ -7,10 +7,13 @@ This is the span-sequence-equality layer (BASELINE.json invariant:
 import pytest
 from pyspark.sql import functions as F
 
-from fetch_engines_spark.convert import MarkdownConverter
+from fetch_engines_spark.convert import converter as converter_mod
+from fetch_engines_spark.convert import serialize as serialize_mod
 from fetch_engines_spark.extract import (
     INPUT_SCHEMA,
+    convert_document,
     extract_spans,
+    html_assembly_expr,
     markdown_to_spans,
     span_equality_report,
     spans_to_markdown,
@@ -18,7 +21,6 @@ from fetch_engines_spark.extract import (
 from fetch_engines_spark.fixtures import (
     EXTRACTION_FIXTURE_IDS,
     FIXTURES_BY_ID,
-    assemble_html,
     fixture_document_rows,
 )
 
@@ -35,12 +37,13 @@ def extracted(spark, documents_df):
     return df
 
 
-def test_input_synthesis_roundtrip():
+def test_input_synthesis_roundtrip(documents_df):
+    """The product's JVM assembly of each fixture's synthesized spans gives
+    back the fixture's html."""
+    rows = documents_df.select("doc_id", html_assembly_expr().alias("html")).collect()
     for fid in EXTRACTION_FIXTURE_IDS:
-        f = FIXTURES_BY_ID[fid]
-        rows = [r for r in fixture_document_rows() if r["doc_id"] == fid]
-        assert len(rows) == 1
-        assert assemble_html(rows[0]["spans"]) == f.html
+        html = [r.html for r in rows if r.doc_id == fid]
+        assert html == [FIXTURES_BY_ID[fid].html], fid
 
 
 def test_all_docs_extracted_no_errors(extracted):
@@ -61,14 +64,15 @@ def test_span_markdown_roundtrip(extracted):
 
 
 def test_spark_output_matches_local_converter(extracted):
-    """The distributed result must equal the single-threaded reference-parity
-    converter run per document (the engine's own oracle)."""
-    conv = MarkdownConverter()
+    """The distributed result must equal the conversion chain run in this
+    process on each fixture's original html (the engine's own oracle)."""
     by_id = {r.doc_id: r for r in extracted.collect()}
     for fid in EXTRACTION_FIXTURE_IDS:
         f = FIXTURES_BY_ID[fid]
-        expected_md = conv.convert(f.html, base_url=f.base_url)
-        assert by_id[fid].markdown == expected_md, fid
+        title, markdown, error, spans, _ = convert_document(f.html, f.base_url)
+        r = by_id[fid]
+        assert r.markdown == markdown, fid
+        assert (r.title, [s.asDict() for s in r.spans], r.error) == (title, spans, error), fid
 
 
 def test_fixture_containment_through_spark(extracted):
@@ -238,16 +242,12 @@ def test_csv_schema_ddl_with_parameterized_types(spark, tmp_path):
     assert rejects.count() == 1
 
 
-def test_jvm_assembly_matches_python_assembly(spark):
-    """The native span→html assembly projection must produce byte-identical
-    extraction output to the in-Python assembly, including the edge shapes:
-    null spans, empty arrays, media-only docs, empty-text html spans,
-    out-of-order offsets, and null offsets (which order last, stably, in
-    both paths rather than raising in one and tying in the other)."""
-    from fetch_engines_spark.extract import INPUT_SCHEMA, extract_spans
-    from fetch_engines_spark.fixtures import fixture_document_rows
-
-    rows = fixture_document_rows() + [
+def test_html_assembly_edge_shapes(spark):
+    """The native span→html assembly on contract-edge documents: null and
+    empty span arrays, media-only docs, empty-text html spans, out-of-order
+    offsets, and null offsets (which order last, stably).  None of them
+    fails extraction."""
+    rows = [
         {"doc_id": "x-null", "base_url": None, "canonical_url": None, "spans": None},
         {"doc_id": "x-empty", "base_url": None, "canonical_url": None, "spans": []},
         {
@@ -277,25 +277,75 @@ def test_jvm_assembly_matches_python_assembly(spark):
         },
     ]
     docs = spark.createDataFrame(rows, INPUT_SCHEMA)
-    a = {
-        r.doc_id: (r.title, [tuple(s) for s in (r.spans or [])], r.error)
-        for r in extract_spans(docs, assemble_in_jvm=True).collect()
+    html = {
+        r.doc_id: r.html
+        for r in docs.select("doc_id", html_assembly_expr().alias("html")).collect()
     }
-    b = {
-        r.doc_id: (r.title, [tuple(s) for s in (r.spans or [])], r.error)
-        for r in extract_spans(docs, assemble_in_jvm=False).collect()
+    assert html == {
+        "x-null": None,
+        "x-empty": "",
+        "x-media-only": "",
+        "x-out-of-order": "<p>hello world</p>",
+        "x-null-offset": "<p>head tail</p>",
     }
-    # the mapInPandas adapter (fixtures.assemble_html) must agree too —
-    # including on null offsets, which once raised TypeError in its sort
-    c = {
-        r.doc_id: (r.title, [tuple(s) for s in (r.spans or [])], r.error)
-        for r in extract_spans(docs, use_arrow=False).collect()
-    }
-    assert a == b
-    assert a == c
-    assert a["x-out-of-order"][1]  # content extracted from reordered spans
-    assert a["x-null-offset"][2] is None  # tolerated, not an ERR_EXTRACTION row
-    assert "head" in " ".join(s[1] or "" for s in a["x-null-offset"][1])
+
+    out = {r.doc_id: r for r in extract_spans(docs).collect()}
+    assert set(out) == set(html)
+    assert {d: r.error for d, r in out.items()} == dict.fromkeys(html)
+    assert [s.text for s in out["x-out-of-order"].spans] == ["hello world"]
+    assert [s.text for s in out["x-null-offset"].spans] == ["head tail"]
+
+
+def _raise(exc):
+    def fn(*args, **kwargs):
+        raise exc
+
+    return fn
+
+
+_PAGE = (
+    "<html><head><title>Doc Title</title></head><body><main><p>Body content "
+    "long enough to be selected as the main content of this page.</p>"
+    "<!-- a comment --></main></body></html>"
+)
+
+
+def _cleaned_fallback(html):
+    return converter_mod.postprocess_markdown(
+        converter_mod.cleanup_content_html(converter_mod.cleanup_html(html))
+    )
+
+
+def test_convert_document_preprocess_fallback(monkeypatch):
+    monkeypatch.setattr(converter_mod, "parse_html", _raise(ValueError("bad dom")))
+    title, markdown, error, spans, in_bytes = convert_document(_PAGE)
+    assert error == "ERR_PREPROCESS_FALLBACK"
+    assert title == ""
+    assert markdown == _cleaned_fallback(_PAGE) and "<!--" not in markdown
+    assert spans == markdown_to_spans(markdown) != []
+    assert in_bytes == len(_PAGE.encode())
+
+
+def test_convert_document_markdown_conversion_fallback(monkeypatch):
+    monkeypatch.setattr(serialize_mod, "to_markdown", _raise(RecursionError("deep")))
+    title, markdown, error, spans, in_bytes = convert_document(_PAGE)
+    assert error == "ERR_MARKDOWN_CONVERSION_FALLBACK"
+    assert title == "Doc Title"
+    assert markdown == _cleaned_fallback(_PAGE)
+    assert spans == markdown_to_spans(markdown) != []
+    assert in_bytes == len(_PAGE.encode())
+
+
+def test_convert_document_extraction_error_is_cut_and_empty(monkeypatch):
+    monkeypatch.setattr(
+        converter_mod, "postprocess_markdown", _raise(ValueError("x" * 1000))
+    )
+    title, markdown, error, spans, in_bytes = convert_document(_PAGE, source_url="https://e.com/")
+    assert error == ("ERR_EXTRACTION: ValueError: " + "x" * 1000)[:500]
+    assert len(error) == 500
+    assert (markdown, spans) == ("", [])
+    assert title == "Doc Title"
+    assert in_bytes == len(_PAGE.encode())
 
 
 def test_span_equality_report_joins_on_position(spark):

@@ -3043,6 +3043,34 @@ def test_mixture_sample_exact_ratios_and_edge_cases(spark):
     assert empty.count() == 0
 
 
+def test_mixture_sample_drops_null_keys(spark):
+    """A null key has no md5 rank: both engines drop the row before the
+    counts, so it neither takes a cap slot nor shifts the ranks."""
+    import duckdb
+
+    from fetch_engines_spark.pipelines.text import mixture_sample, mixture_sample_sql
+
+    stratum_a = [(None, "a")] + [(f"a{i}", "a") for i in range(10)]
+    stratum_b = [(f"b{i}", "b") for i in range(10)]
+    cases = [
+        (stratum_a, {"a": 10000}, {"a": 10}),
+        (stratum_a + stratum_b, {"a": 5000, "b": 5000}, {"a": 10, "b": 10}),
+    ]
+    for rows, targets, caps in cases:
+        docs = spark.createDataFrame(rows, "doc_id string, source string")
+        out = {(r.doc_id, r.source, r.mix_rank) for r in mixture_sample(docs, targets).collect()}
+        for stratum, cap in caps.items():
+            ranks = sorted(rank for _, s, rank in out if s == stratum)
+            assert ranks == list(range(1, cap + 1)), (targets, stratum, ranks)
+        assert all(doc_id is not None for doc_id, _, _ in out)
+
+        con = duckdb.connect()
+        con.execute("CREATE TABLE documents (doc_id VARCHAR, source VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+        assert set(con.sql(mixture_sample_sql(targets)).fetchall()) == out
+        con.close()
+
+
 def test_bloom_gate_null_key_reads_definitely_new(spark):
     """A NULL key has no bloom positions; the row must still appear in
     the gate output as maybe_present=0 (definitely new), not silently

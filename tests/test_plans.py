@@ -44,7 +44,8 @@ def test_topk_window_has_rank_limit_pushdown(spark):
 
 def test_extraction_plan_is_single_python_stage(spark):
     """Exactly ONE Python boundary (the Arrow extraction stage) — the
-    north_rule's one-vectorized-UDF constraint, enforced on the plan."""
+    north_rule's one-vectorized-UDF constraint, enforced on the plan — fed
+    by the JVM-side html assembly below it."""
     df = entrymod.queries()["extract_spans_fixture"](spark, SF)
     plan = plan_of(df)
     n_python = (
@@ -52,6 +53,9 @@ def test_extraction_plan_is_single_python_stage(spark):
         + plan.count("ArrowEvalPython") + plan.count("BatchEvalPython")
     )
     assert n_python == 1, plan
+    assert plan.count("MapInArrow") == 1 and plan.count("MapInPandas") == 0, plan
+    below = plan.split("MapInArrow", 1)[1]
+    assert "array_join(" in below and "AS html#" in below, plan
 
 
 def test_classifier_queries_have_no_python(spark):

@@ -6,11 +6,9 @@ import string
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from fetch_engines_spark.convert.converter import MarkdownConverter, postprocess_markdown
+from fetch_engines_spark.convert.converter import postprocess_markdown
 from fetch_engines_spark.dom import parse_html
-from fetch_engines_spark.extract import markdown_to_spans, spans_to_markdown
-
-conv = MarkdownConverter()
+from fetch_engines_spark.extract import convert_document, markdown_to_spans, spans_to_markdown
 
 TAGS = ["div", "p", "a", "span", "main", "nav", "ul", "li", "table", "tr", "td",
         "h1", "h2", "script", "style", "img", "button", "pre", "code", "strong"]
@@ -48,14 +46,17 @@ def html_fragments(draw, depth=0):
 @settings(max_examples=150, deadline=None)
 @given(html_fragments())
 def test_convert_never_raises(html):
-    md = conv.convert(html, base_url="https://example.com/a/b")
+    _, md, error, _, _ = convert_document(html, base_url="https://example.com/a/b")
     assert isinstance(md, str)
+    assert not (error or "").startswith("ERR_EXTRACTION"), error
 
 
 @settings(max_examples=150, deadline=None)
 @given(text_strategy)
 def test_convert_raw_text_never_raises(text):
-    assert isinstance(conv.convert(text), str)
+    _, md, error, _, _ = convert_document(text)
+    assert isinstance(md, str)
+    assert not (error or "").startswith("ERR_EXTRACTION"), error
 
 
 @settings(max_examples=150, deadline=None)
@@ -70,7 +71,7 @@ def test_parse_never_raises(html):
 def test_span_roundtrip_from_any_page(html):
     """spans → markdown reconstruction must be lossless for any produced
     markdown, and offsets dense."""
-    md = conv.convert(html)
+    md = convert_document(html)[1]
     spans = markdown_to_spans(md)
     assert spans_to_markdown(spans) == md
     assert [s["offset"] for s in spans] == list(range(len(spans)))
@@ -85,8 +86,9 @@ def test_postprocess_idempotent_on_its_own_output(md):
 
 def test_deeply_nested_html_does_not_crash():
     html = "<div>" * 3000 + "deep content here" + "</div>" * 3000
-    md = conv.convert(html)
+    _, md, error, _, _ = convert_document(html)
     assert isinstance(md, str)
+    assert not (error or "").startswith("ERR_EXTRACTION"), error
 
 
 from hypothesis import given, settings

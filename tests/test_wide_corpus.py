@@ -74,7 +74,7 @@ def test_sf0001_corpus_extracts_clean(spark):
     ],
 )
 def test_unicode_pages(spark, html, expected):
-    from fetch_engines_spark.convert import MarkdownConverter
+    from fetch_engines_spark.extract import convert_document
 
-    md = MarkdownConverter().convert(html)
+    md = convert_document(html)[1]
     assert expected in md
