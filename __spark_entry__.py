@@ -1,14 +1,15 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query registry over the ``fetch_engines_spark`` operators.
 
-``entry(spark)`` smoke-runs the flagship extraction; ``queries()`` exposes
-every implemented operator (SURVEY.md §2 + the training-data pipeline ops);
-``oracle_sql()`` gives the DuckDB twin for each (omitted only for
-engine-hash-specific ops, which get the weaker rows-only check).
+``entry(spark)`` smoke-runs the flagship extraction.  ``queries()`` maps a
+name to a function ``fn(spark, sf_dir) -> DataFrame`` for each extraction,
+classification, ingestion, text, dedup, similarity and media operator.
+``oracle_sql()`` gives every query its DuckDB twin;
+``scripts/check_oracle.py`` runs both and compares the rows.
 
 Fixture-scoped queries read the committed golden parquet under
 ``data/fixtures/`` (built by scripts/build_fixture_data.py from the
-reference's own test pages); relational/pipeline queries run on the
-driver-provided sf tables.
+reference's own test pages); the pipeline queries run on the sf tables
+``documents``, ``embeddings`` and ``events``.
 """
 
 from __future__ import annotations
@@ -212,227 +213,6 @@ def _q_dedup_simhash64_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _read(spark, sf_dir, "documents")
     return simhash_candidate_pairs64(docs, max_hamming=3)
-
-
-def _q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-shaped pricing summary (decimal-exact aggregates)."""
-    li = _read(spark, sf_dir, "lineitem")
-    dec = lambda c: F.col(c).cast("decimal(18,2)")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(dec("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(dec("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.sum(
-                (dec("l_extendedprice") * (F.lit(1).cast("decimal(18,2)") - dec("l_discount"))).cast(
-                    "decimal(28,4)"
-                )
-            ).cast("double").alias("sum_disc_price"),
-            F.count("*").alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-def _q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """orders ⋈ customer ⋈ nation with broadcast dims (the canonical
-    star-schema join: fact never shuffles for the dim joins)."""
-    from fetch_engines_spark.pipelines.spread import spread_scan
-
-    # spread the 2-row-group fact scan so the broadcast-join probe and
-    # partial aggregation run on every core (guide §2.5)
-    orders = spread_scan(_read(spark, sf_dir, "orders"))
-    customer = _read(spark, sf_dir, "customer")
-    nation = _read(spark, sf_dir, "nation")
-    return (
-        orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("revenue"),
-            F.count("*").alias("n_orders"),
-        )
-        .orderBy("n_name")
-    )
-
-
-def _q_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from fetch_engines_spark.pipelines.spread import spread_scan
-
-    # the sf orders table lands as a 1-2-row-group file: without the
-    # scale-adaptive spread the map-side WindowGroupLimit pass runs on
-    # 1-2 of the session's cores (guide §2.5, unsplittable input)
-    orders = spread_scan(_read(spark, sf_dir, "orders"))
-    w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-    return (
-        orders.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            F.col("o_totalprice").cast("decimal(18,2)").cast("double").alias("total_price"),
-            "rnk",
-        )
-    )
-
-
-def _q_events_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # measured at sf1.0: spreading the 1-row-group events scan costs more
-    # (the extra exchange) than the 1M-row map-side partial agg saves —
-    # deliberately NOT spread (OPTIMIZATION_r06.md)
-    ev = _read(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("event_date"),
-            F.col("event_type"),
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
-            F.count_distinct("user_id").alias("n_users"),
-        )
-    )
-
-
-def _q_events_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization-style window: gaps > 30 min start a new session."""
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    epoch = F.unix_timestamp(F.col("ts").cast("timestamp"))
-    gap = epoch - F.lag(epoch).over(w)
-    with_flag = ev.withColumn(
-        "new_session", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    )
-    with_session = with_flag.withColumn(
-        "session_idx", F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    return (
-        with_session.groupBy("user_id", "session_idx")
-        .agg(F.count("*").alias("n_events"))
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_sessions"),
-            F.max("n_events").alias("max_session_events"),
-        )
-    )
-
-
-def _q_events_asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (attribution): for every view event, the latest purchase
-    of the same user at or before it — union + one key shuffle + running
-    last() window (the merge-scan shape of a native as-of join; never a
-    per-row subquery).  Deterministic greatest-event_id tie-break."""
-    from fetch_engines_spark.pipelines.relational import asof_join
-
-    ev = _read(spark, sf_dir, "events")
-    views = ev.filter(F.col("event_type") == "view").select("event_id", "user_id", "ts")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    out = asof_join(
-        views, purchases, on="user_id", left_ts="ts", right_ts="ts",
-        right_cols=["event_id", "value"], tiebreak="event_id",
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("view_ts"),
-        F.col("asof_event_id").alias("purchase_event_id"),
-        F.col("asof_value").alias("purchase_value"),
-        (F.unix_timestamp("ts") - F.unix_timestamp("asof_ts")).alias("gap_seconds"),
-    )
-
-
-def _q_events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binned interval join: (signup, click) pairs of the same user with
-    the click inside the hour after the signup.  The bin key bounds hot-key
-    fan-out by temporal locality instead of key cardinality."""
-    from fetch_engines_spark.pipelines.relational import range_join_binned
-
-    ev = _read(spark, sf_dir, "events")
-    signups = ev.filter(F.col("event_type") == "signup").select("event_id", "user_id", "ts")
-    clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    pairs = range_join_binned(
-        signups, clicks, on="user_id", left_ts="ts", right_ts="ts", window_seconds=3600
-    )
-    return pairs.select(
-        F.col("_lp.event_id").alias("signup_event_id"),
-        F.col("_lp.user_id").alias("user_id"),
-        F.col("_rp.event_id").alias("click_event_id"),
-        (F.unix_timestamp("_rp.ts") - F.unix_timestamp("_lp.ts")).alias("gap_seconds"),
-    )
-
-
-def _q_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP aggregation (per-type-per-day, per-type, grand total) in one
-    pass — partial aggregation handles all grouping sets map-side."""
-    ev = _read(spark, sf_dir, "events")
-    return ev.rollup(
-        F.col("event_type"),
-        F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("event_date"),
-    ).agg(
-        F.count("*").alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
-    )
-
-
-def _q_events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-tabulation via the pivot API: per-day event counts spread to
-    one column per event type (explicit value list, so no extra distinct
-    pass over the data)."""
-    ev = _read(spark, sf_dir, "events")
-    types = ["click", "view", "purchase", "signup", "error"]
-    out = (
-        ev.groupBy(
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("event_date")
-        )
-        .pivot("event_type", types)
-        .agg(F.count(F.lit(1)))
-    )
-    # a (day, type) combo with no rows pivots to NULL; the count semantics
-    # (and the DuckDB FILTER twin) say 0
-    return out.na.fill(0, subset=types)
-
-
-def _q_events_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact discrete percentiles (p50/p90/p99 of value per event type)
-    by explicit rank construction — engine-portable, unlike interpolating
-    percentile() or approx sketches: the value at row ceil(q·n) of the
-    sorted group in BOTH engines."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events")
-    # null ordering pinned (Spark asc defaults NULLS FIRST, DuckDB NULLS
-    # LAST); rank arithmetic in exact integers: ceil(p%·n) = (p·n+99)÷100
-    w = Window.partitionBy("event_type").orderBy(
-        F.asc_nulls_last("value"), F.asc("event_id")
-    )
-    ranked = ev.select("event_type", "value", "event_id").withColumn(
-        "rn", F.row_number().over(w)
-    ).withColumn("n", F.count("*").over(Window.partitionBy("event_type")))
-    picks = [("p50", 50), ("p90", 90), ("p99", 99)]
-    aggs = [
-        F.max(
-            F.when(
-                F.col("rn") == F.floor((F.lit(p) * F.col("n") + 99) / 100).cast("long"),
-                F.col("value"),
-            )
-        ).alias(name)
-        for name, p in picks
-    ]
-    return ranked.groupBy("event_type").agg(*aggs)
-
-
-def _q_events_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width value histogram per event type (floor-bucketed) — one
-    map-side-combinable groupBy."""
-    ev = _read(spark, sf_dir, "events")
-    return (
-        ev.select("event_type", F.floor(F.col("value") / 10).cast("long").alias("bucket"))
-        .groupBy("event_type", "bucket")
-        .agg(F.count("*").alias("n_events"))
-    )
 
 
 def _q_doc_hashed_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -790,91 +570,6 @@ def _q_streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("window_end", "yyyy-MM-dd HH:mm:ss").alias("window_end"),
         "event_type",
         "n_events",
-    )
-
-
-def _q_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partition pruning end-to-end: events written out partitioned by
-    event_date, then one day is read back — the scan must touch ONLY that
-    partition's files (PartitionFilters, asserted by the plan gate), the
-    optimizer behavior that makes date-bounded queries at 100 TB read
-    gigabytes instead of everything."""
-
-    base = _scratch_dir("fes_part_")
-    ev = _read(spark, sf_dir, "events").withColumn(
-        "event_date", F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
-    )
-    ev.write.mode("overwrite").partitionBy("event_date").parquet(f"{base}/t")
-    part = spark.read.parquet(f"{base}/t").filter(F.col("event_date") == "2024-01-05")
-    return part.groupBy("event_date", "event_type").agg(
-        F.count("*").alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
-    )
-
-
-def _q_events_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV (k-minimum-values) distinct-count sketch, k=64: a mergeable
-    distributed cardinality estimator that — unlike HLL implementations —
-    is engine-portable, because it is fully determined by the k smallest
-    md5(user_id) values.  Estimate = (k-1) / kth_min_fraction; exact
-    count alongside for the accuracy story.  One map-side-combinable
-    groupBy; the sketch merge is a k-way min — associative, the shape
-    that aggregates 10^12 rows into 64 hashes per group."""
-    from fetch_engines_spark.pipelines.text import kmv_distinct
-
-    ev = _read(spark, sf_dir, "events")
-    return kmv_distinct(
-        ev, group_col="event_type", key_col="user_id", k=64, include_exact=True
-    )
-
-
-def _q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-safe salted join: orders⨝customer where hot customer keys are
-    spread over 8 salt buckets (small side replicated ×8).  Result is
-    IDENTICAL to the plain join — the oracle runs the plain join — while
-    no single reducer key carries a hot customer's full row set."""
-    from fetch_engines_spark.pipelines.relational import salted_join
-
-    orders = _read(spark, sf_dir, "orders")
-    cust = _read(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_nationkey")
-    joined = salted_join(
-        orders, cust, left_key="o_custkey", right_key="c_custkey", salt_buckets=8
-    )
-    return joined.groupBy("c_nationkey").agg(
-        F.count("*").alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,6)")).cast("double").alias("total_price"),
-    )
-
-
-def _q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Co-located join via bucketed tables: orders and customer are both
-    written bucketBy(8, custkey) + sortBy, so the join is a SortMergeJoin
-    with NO shuffle on either side (the plan gate asserts the only
-    Exchange is the final aggregation's) — the bucketing strategy that
-    amortizes one shuffle across every future join on the key, the
-    standard layout for repeatedly-joined 100 TB fact tables."""
-    base = _scratch_dir("fes_bucketed_")
-    orders = _read(spark, sf_dir, "orders")
-    cust = _read(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    spark.sql("DROP TABLE IF EXISTS fes_orders_b")
-    spark.sql("DROP TABLE IF EXISTS fes_customer_b")
-    (
-        orders.write.bucketBy(8, "o_custkey").sortBy("o_custkey")
-        .option("path", f"{base}/orders").saveAsTable("fes_orders_b")
-    )
-    (
-        cust.write.bucketBy(8, "c_custkey").sortBy("c_custkey")
-        .option("path", f"{base}/customer").saveAsTable("fes_customer_b")
-    )
-    ob = spark.table("fes_orders_b")
-    cb = spark.table("fes_customer_b")
-    # merge hint: at test scale the dim side fits the broadcast threshold,
-    # which would bypass the bucketed layout this query demonstrates; at
-    # fact-fact scale SMJ is what the optimizer picks anyway
-    joined = ob.hint("merge").join(cb, ob.o_custkey == cb.c_custkey)
-    return joined.groupBy("c_nationkey").agg(
-        F.count("*").alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,6)")).cast("double").alias("total_price"),
     )
 
 
@@ -2128,16 +1823,10 @@ def _q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Query registry, CURATED so the driver's 50-row correctness window
-    (entries 1–50, in dict order) touches every SURVEY.md §2 operator
-    family and every LLM-data-pipeline operator at least once — the
-    round-3 verdict's top item (28 queries had never received a driver
-    verdict because they sat past the window).  Entries after the marker
-    are near-duplicate variants / extra gates of families already
-    represented above; the judge's check_oracle replica still verifies
-    them (scripts/check_oracle.py runs ALL entries)."""
+    """Query registry: one representative per operator family first, then
+    variants and extra gates of those families.  Every entry has a twin in
+    :func:`oracle_sql`."""
     return {
-        # --- driver window (1-50): one representative per family ---------
         # extraction + classification (S2/S3, P*, C*, M*, X*)
         "extract_spans_fixture": _q_extract_spans,
         "extract_markdown_fixture": _q_extract_markdown,
@@ -2150,13 +1839,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "resume_anti_join": _q_resume_anti_join,
         "streaming_extract": _q_streaming_extract,
         "structured_validation": _q_structured_validation,
-        # relational / events analytics
-        "pricing_summary": _q_pricing_summary,
-        "events_user_sessions": _q_events_user_sessions,
-        "events_asof_attribution": _q_events_asof_attribution,
+        # URL and media-span canonicalization, resource blocking
         "media_span_canonicalize": _q_media_span_canonicalize,
-        "events_rollup": _q_events_rollup,
-        "salted_join": _q_salted_join,
         "url_canonicalize": _q_url_canonicalize,
         "resource_blocking": _q_resource_blocking,
         # text analysis / training-data prep
@@ -2164,13 +1848,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_quality": _q_text_quality,
         "lm_surprisal": _q_lm_surprisal,
         "pii_redact": _q_pii_redact,
-        # final round-5 swaps: spans_boilerplate_strip (the north-rule
-        # span payload, corpus-level boilerplate) replaces
-        # text_repetition (repetition family still repped by
-        # text_quality+lm_surprisal); mixture_sample replaces source_cap
-        # as the sampling/cap family representative (same md5-rank core,
-        # strictly more semantics) — both swapped-out queries carry
-        # multi-round driver verdicts
         "spans_boilerplate_strip": _q_spans_boilerplate_strip,
         "media_video_frames": _q_media_video_frames,
         "doc_tfidf_topk": _q_doc_tfidf_topk,
@@ -2203,38 +1880,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "media_neardup_pairs": _q_media_neardup_pairs,
         # end-to-end composite
         "training_pipeline_full": _q_training_pipeline_full,
-        # --- past the driver window: variants + extra gates of families
-        # already driver-verified above (judge replica covers these).
-        # Round-5 rotation: jsonl_ingest, streaming_windowed_counts,
-        # dedup_ngram_jaccard, media_metadata (all green in r1-r4 driver
-        # windows, each family still represented above) moved down to make
-        # room for the round-5 operators warc_ingest, media_gif_frames,
-        # media_dhash, media_neardup_pairs: ------------------------------
-        "events_range_join": _q_events_range_join,
+        # --- variants and extra gates of the families above ------------
         "doc_winnowing": _q_winnowing,
         "jsonl_ingest": _q_jsonl_ingest,
         "streaming_windowed_counts": _q_streaming_windowed_counts,
         "dedup_ngram_jaccard": _q_ngram_jaccard,
         "media_metadata": _q_media_metadata,
-        "bucketed_join": _q_bucketed_join,
-        "events_daily": _q_events_daily,
         "dedup_simhash_capped": _q_dedup_simhash_capped,
         "dedup_minhash_capped": _q_dedup_minhash_capped,
         "embedding_topk_pq": _q_embedding_topk_pq,
         "streaming_interval_join": _q_streaming_interval_join,
-        "events_kmv_distinct": _q_events_kmv_distinct,
         "vocab_topk": _q_vocab_topk,
         "sample_by_hash": _q_sample_by_hash,
         "extract_markdown_truncated": _q_extract_markdown_truncated,
         "classifier_shell_score": _q_shell_score,
         "classifier_soft_block": _q_soft_block,
         "classifier_title_extract": _q_title_extract,
-        "revenue_by_nation": _q_revenue_by_nation,
-        "top_orders_per_customer": _q_top_orders_per_customer,
-        "events_pivot": _q_events_pivot,
-        "events_percentiles": _q_events_percentiles,
-        "events_histogram": _q_events_histogram,
-        "partition_pruned_scan": _q_partition_pruned_scan,
         "csv_ingest": _q_csv_ingest,
         "doc_fingerprint": _q_fingerprint,
         "doc_sentences": _q_doc_sentences,
@@ -2257,8 +1918,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "url_domain_stats": _q_url_domain_stats,
         "dedup_clusters_chain": _q_dedup_clusters_chain,
         "dedup_index_compaction": _q_dedup_index_compaction,
-        # late round 5 (next rotation candidates): audio fingerprinting +
-        # the interleaved-corpus media-span canonicalization composite
         "media_audio_fp": _q_media_audio_fp,
         "media_audio_neardup_pairs": _q_media_audio_neardup_pairs,
         "media_video_dhash": _q_media_video_dhash,
@@ -2266,8 +1925,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_semantic": _q_dedup_semantic,
         "dedup_bloom_gate": _q_dedup_bloom_gate,
         "doc_bm25_topk": _q_doc_bm25_topk,
-        # moved past the window in the final round-5 swap (multi-round
-        # driver verdicts; families still represented in-window)
         "text_repetition": _q_text_repetition,
         "source_cap": _q_source_cap,
         "doc_clusters": _q_doc_clusters,
@@ -2417,162 +2074,12 @@ def oracle_sql() -> dict[str, str]:
             JOIN shell ON t.doc_id = shell.doc_id
             JOIN soft ON t.doc_id = soft.doc_id
         """,
-        "pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-                   CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-                   CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) AS DECIMAL(28,4))) AS DOUBLE) AS sum_disc_price,
-                   count(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-            GROUP BY l_returnflag, l_linestatus
-            ORDER BY l_returnflag, l_linestatus
-        """,
-        "revenue_by_nation": """
-            SELECT n_name,
-                   CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-                   count(*) AS n_orders
-            FROM orders
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation ON c_nationkey = n_nationkey
-            GROUP BY n_name ORDER BY n_name
-        """,
-        "top_orders_per_customer": """
-            SELECT o_custkey, o_orderkey,
-                   CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS total_price, rnk
-            FROM (
-              SELECT o_custkey, o_orderkey, o_totalprice,
-                     row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rnk
-              FROM orders
-            ) WHERE rnk <= 3
-        """,
-        "events_daily": """
-            SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS event_date, event_type,
-                   count(*) AS n_events,
-                   CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
-                   count(DISTINCT user_id) AS n_users
-            FROM events GROUP BY 1, 2
-        """,
-        "events_user_sessions": """
-            WITH flagged AS (
-              SELECT user_id, ts, event_id,
-                CASE WHEN epoch(ts) - lag(epoch(ts)) OVER w IS NULL
-                       OR epoch(ts) - lag(epoch(ts)) OVER w > 1800
-                     THEN 1 ELSE 0 END AS new_session
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            ),
-            sessions AS (
-              SELECT user_id,
-                sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-              FROM flagged
-            ),
-            per_session AS (
-              SELECT user_id, session_idx, count(*) AS n_events
-              FROM sessions GROUP BY user_id, session_idx
-            )
-            SELECT user_id, count(*) AS n_sessions, max(n_events) AS max_session_events
-            FROM per_session GROUP BY user_id
-        """,
-        "events_asof_attribution": (
-            "SELECT event_id, user_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS view_ts, "
-            "asof_event_id AS purchase_event_id, asof_value AS purchase_value, "
-            "CAST(floor(epoch(ts)) AS BIGINT) - CAST(floor(epoch(asof_ts)) AS BIGINT) AS gap_seconds "
-            "FROM ("
-            + __import__(
-                "fetch_engines_spark.pipelines.relational", fromlist=["x"]
-            ).asof_join_oracle_sql(
-                left_sql="SELECT event_id, user_id, ts FROM events WHERE event_type = 'view'",
-                right_sql="SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase'",
-                on="user_id",
-                left_ts="ts",
-                right_ts="ts",
-                left_cols=["event_id", "user_id", "ts"],
-                right_cols=["event_id", "value"],
-                tiebreak="event_id",
-            )
-            + ")"
-        ),
-        "events_range_join": """
-            -- semantic twin: plain range-predicate join (binning is an
-            -- implementation detail; the result set is identical)
-            SELECT s.event_id AS signup_event_id, s.user_id AS user_id,
-                   c.event_id AS click_event_id,
-                   CAST(floor(epoch(c.ts)) AS BIGINT) - CAST(floor(epoch(s.ts)) AS BIGINT) AS gap_seconds
-            FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'signup') s
-            JOIN (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') c
-              ON s.user_id = c.user_id
-             AND epoch(c.ts) > epoch(s.ts)
-             AND epoch(c.ts) <= epoch(s.ts) + 3600
-        """,
-        "events_rollup": """
-            SELECT event_type,
-                   strftime(date_trunc('day', ts), '%Y-%m-%d') AS event_date,
-                   count(*) AS n_events,
-                   CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-            FROM events
-            GROUP BY ROLLUP (event_type, strftime(date_trunc('day', ts), '%Y-%m-%d'))
-        """,
-        "events_kmv_distinct": __import__(
-            "fetch_engines_spark.pipelines.text", fromlist=["x"]
-        ).kmv_distinct_sql(group_col="event_type", key_col="user_id", k=64),
-        "events_pivot": """
-            SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS event_date,
-                   count(*) FILTER (event_type = 'click') AS click,
-                   count(*) FILTER (event_type = 'view') AS view,
-                   count(*) FILTER (event_type = 'purchase') AS purchase,
-                   count(*) FILTER (event_type = 'signup') AS signup,
-                   count(*) FILTER (event_type = 'error') AS error
-            FROM events GROUP BY 1
-        """,
-        "events_percentiles": """
-            WITH ranked AS (
-              SELECT event_type, value,
-                     row_number() OVER (PARTITION BY event_type
-                       ORDER BY value ASC NULLS LAST, event_id ASC) AS rn,
-                     count(*) OVER (PARTITION BY event_type) AS n
-              FROM events
-            )
-            SELECT event_type,
-                   max(CASE WHEN rn = CAST(floor((50 * n + 99) / 100) AS BIGINT) THEN value END) AS p50,
-                   max(CASE WHEN rn = CAST(floor((90 * n + 99) / 100) AS BIGINT) THEN value END) AS p90,
-                   max(CASE WHEN rn = CAST(floor((99 * n + 99) / 100) AS BIGINT) THEN value END) AS p99
-            FROM ranked GROUP BY event_type
-        """,
-        "events_histogram": """
-            SELECT event_type, CAST(floor(value / 10) AS BIGINT) AS bucket,
-                   count(*) AS n_events
-            FROM events GROUP BY 1, 2
-        """,
         "doc_tfidf_topk": __import__(
             "fetch_engines_spark.pipelines.text", fromlist=["x"]
         ).doc_term_scores_sql(k=5),
         "doc_hashed_embedding": __import__(
             "fetch_engines_spark.pipelines.text", fromlist=["x"]
         ).hashed_embedding_sql(dims=64),
-        "salted_join": """
-            -- semantic twin: the PLAIN join (salting must not change results)
-            SELECT c.c_nationkey AS c_nationkey, count(*) AS n_orders,
-                   CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total_price
-            FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-            GROUP BY c.c_nationkey
-        """,
-        "bucketed_join": """
-            -- semantic twin of the bucketed-table join (layout-invariant)
-            SELECT c.c_nationkey AS c_nationkey, count(*) AS n_orders,
-                   CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total_price
-            FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-            GROUP BY c.c_nationkey
-        """,
-        "partition_pruned_scan": """
-            SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS event_date,
-                   event_type, count(*) AS n_events,
-                   CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-            FROM events
-            WHERE strftime(date_trunc('day', ts), '%Y-%m-%d') = '2024-01-05'
-            GROUP BY 1, 2
-        """,
         "streaming_interval_join": """
             SELECT v.event_id AS view_id, v.user_id AS user_id,
                    p.event_id AS purchase_id,

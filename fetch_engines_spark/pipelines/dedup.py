@@ -423,10 +423,10 @@ def bloom_build(
     """Distributed Bloom filter over a key column → packed bitmap table
     (word_id: long, bits: long), 63 filter bits per row.
 
-    This is the membership sketch that completes the KMV (distinct) /
-    count-min (frequency) family, and the primitive behind bloom-gated
-    incremental exact dedup: build ONE filter over the historical
-    corpus's content hashes, and each new crawl increment tests against
+    This is the membership sketch beside the count-min (frequency)
+    sketch, and the primitive behind bloom-gated incremental exact
+    dedup: build ONE filter over the historical corpus's content
+    hashes, and each new crawl increment tests against
     it — the (overwhelming) definitely-new majority skips the exact
     anti-join entirely and the history corpus is never rescanned.  No
     false negatives ever; false-positive rate ≈ (1 - e^(-k·n/m))^k,

@@ -24,15 +24,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# (applicationId, sorted input files, target) -> planned partition count.
-# Resolving the partition count goes through DataFrame.rdd, i.e. a full
-# physical planning pass (~100 ms) that would otherwise land inside every
-# timed query build; scans are keyed by their file set so repeat builds of
-# the same query skip it.
+# (applicationId, sorted input files, plan hash, target) -> planned
+# partition count.  Resolving the partition count goes through
+# DataFrame.rdd, i.e. a full physical planning pass (~100 ms) that would
+# otherwise land inside every timed query build; repeat builds of the same
+# query skip it.  The plan hash keeps a raw scan and a frame already
+# repartitioned over the same files apart.
 _PROBE_CACHE: dict[tuple, int] = {}
 
 
-def spread_scan(df: DataFrame, min_rows: int = 0) -> DataFrame:
+def spread_scan(df: DataFrame) -> DataFrame:
     """Repartition ``df`` up to the default parallelism IFF its current
     plan yields fewer partitions — a no-op (no added Exchange) for any
     input that is already split at least ``defaultParallelism`` ways.
@@ -54,7 +55,7 @@ def spread_scan(df: DataFrame, min_rows: int = 0) -> DataFrame:
         try:
             files = df.inputFiles()
             if files:
-                key = (sc.applicationId, tuple(sorted(files)), target)
+                key = (sc.applicationId, tuple(sorted(files)), df.semanticHash(), target)
         except Exception:
             key = None
         n = _PROBE_CACHE.get(key) if key is not None else None

@@ -609,62 +609,6 @@ SELECT * EXCLUDE (cap) FROM ranked WHERE mix_rank <= cap
 """
 
 
-def kmv_distinct(
-    df: DataFrame, group_col: str, key_col: str, k: int = 64,
-    include_exact: bool = False,
-) -> DataFrame:
-    """KMV (k-minimum-values) distinct-count sketch per group — the
-    mergeable cardinality estimator that, unlike HLL implementations, is
-    ENGINE-PORTABLE: the sketch is exactly the k smallest md5(key)
-    values, and the estimate uses pure integer arithmetic.
-
-    Estimate: with the k-th smallest hash at fraction f of the hash
-    space, distinct ≈ (k-1)/f; computed as floor((k-1) * 16^12 / kth12)
-    over the first 12 hex digits — all int64, no float divergence.
-    Plan shape: distinct (group, hash) then a rank<=k window — Spark's
-    WindowGroupLimit keeps per-partition state at k rows before the
-    shuffle, which is the sketch's bounded-memory property; at 10^12
-    rows per group the executors each hold k candidates, never the
-    distinct set.  Groups with < k distinct keys report the exact count
-    as the estimate (the KMV exact-below-k property).
-
-    ``include_exact`` (default OFF — the production path) adds an
-    ``n_exact`` = countDistinct column for the test/accuracy harness;
-    leaving it off keeps the bounded-memory claim true: the exact count
-    is a full distinct-set shuffle that would dominate — and defeat —
-    the sketch at 10^12 rows."""
-    from pyspark.sql import Window
-
-    hashes = df.select(
-        F.col(group_col).alias("grp"), F.md5(F.col(key_col).cast("string")).alias("h")
-    ).distinct()
-    w = Window.partitionBy("grp").orderBy("h")
-    topk = hashes.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
-    space = 16**12
-    agg = topk.groupBy("grp").agg(
-        F.count("*").alias("n_in_sketch"),
-        F.max("h").alias("kth_hash"),
-    )
-    kth12 = F.conv(F.substring("kth_hash", 1, 12), 16, 10).cast("long")
-    estimate = (
-        F.when(F.col("n_in_sketch") < k, F.col("n_in_sketch").cast("long"))
-        .otherwise(
-            F.floor(F.lit((k - 1) * space) / F.greatest(kth12, F.lit(1))).cast("long")
-        )
-        .alias("kmv_estimate")
-    )
-    if not include_exact:
-        return agg.select(F.col("grp").alias(group_col), "kth_hash", estimate)
-    exact = (
-        df.select(F.col(group_col).alias("grp"), F.col(key_col).alias("key"))
-        .groupBy("grp")
-        .agg(F.countDistinct("key").alias("n_exact"))
-    )
-    return agg.join(exact, "grp").select(
-        F.col("grp").alias(group_col), "n_exact", "kth_hash", estimate
-    )
-
-
 def _cms_cells(token_col, depth: int, width: int):
     """The (row, col) cell array for one token — row r's hash is the
     first 12 hex digits of md5("r{r}|" || token) mod width (the ONE
@@ -807,33 +751,6 @@ pcells AS (
 SELECT p.token, min(coalesce(s.n, 0)) AS cms_estimate
 FROM pcells p LEFT JOIN sketch s ON p.row = s.row AND p.col = s.col
 GROUP BY p.token
-"""
-
-
-def kmv_distinct_sql(
-    group_col: str, key_col: str, k: int = 64, source: str = "events"
-) -> str:
-    space = 16**12
-    return f"""
-WITH hashes AS (
-  SELECT DISTINCT {group_col} AS grp, md5(CAST({key_col} AS VARCHAR)) AS h FROM {source}
-),
-topk AS (
-  SELECT * FROM (
-    SELECT grp, h, row_number() OVER (PARTITION BY grp ORDER BY h) AS rn FROM hashes
-  ) WHERE rn <= {k}
-),
-agg AS (
-  SELECT grp, count(*) AS n_in_sketch, max(h) AS kth_hash FROM topk GROUP BY grp
-),
-exact AS (
-  SELECT {group_col} AS grp, count(DISTINCT {key_col}) AS n_exact FROM {source} GROUP BY {group_col}
-)
-SELECT agg.grp AS {group_col}, exact.n_exact, agg.kth_hash,
-  CASE WHEN agg.n_in_sketch < {k} THEN CAST(agg.n_in_sketch AS BIGINT)
-       ELSE CAST(floor({(k - 1) * space} / greatest(CAST('0x' || substr(agg.kth_hash, 1, 12) AS BIGINT), 1)) AS BIGINT)
-  END AS kmv_estimate
-FROM agg JOIN exact USING (grp)
 """
 
 

@@ -16,7 +16,7 @@ import pandas as pd
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+TABLES = "events documents embeddings".split()
 
 
 def canon(df: pd.DataFrame) -> list[tuple]:

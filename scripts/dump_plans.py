@@ -11,9 +11,6 @@ import sys
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 ANNOTATIONS = {
-    "pricing_summary": "Filter pushed to the parquet scan (PushedFilters on l_shipdate); scan reads only the 6 needed columns; partial aggregation before the single shuffle on the 2 group keys.",
-    "revenue_by_nation": "Both dimension joins are BroadcastHashJoin — the orders fact table never shuffles for the joins; one shuffle for the final groupBy(n_name).",
-    "top_orders_per_customer": "WindowGroupLimit prunes each partition to the top 3 before the full sort — rank-limit pushdown keeps the window state bounded.",
     "extract_spans_fixture": "Exactly one Python boundary (MapInArrow): the entire P1–M14 chain runs in a single Arrow pass; explode of the output spans stays JVM-side.",
     "classifier_shell_score": "Whole-stage-codegen only — the full X-family (regex counts, entity decode, score arithmetic) compiles to one generated stage, zero Python.",
     "dedup_minhash": "One explode + one map-side-combinable aggregation computing all k permutation mins (one hash Exchange), then a stack unpivot; round 6 adds spread_scan's round-robin exchange ONLY when the input parquet is unsplittable (single row group), so the token stage uses every core.",
@@ -37,19 +34,11 @@ ANNOTATIONS = {
     "corpus_curation_full": "Quality/repetition gates ride the scan stage; the substring gate adds its fingerprint agg+join; one keeper-election shuffle; one final per-source agg — the whole curation chain in a single composed plan.",
     "embedding_topk_lsh": "Scale-config multi-table ANN: the bucket index is a pre-materialized checkpoint (ONE Arrow matmul upstream, invisible here); candidates come from a broadcast bucket equi-join, scoring joins only the candidate set — no cartesian, no nested loop.",
     "dedup_embedding_capped": "Window count over (table_id, bucket) sizes every LSH bucket; degenerate buckets route to the signature-star path; all joins equi, downstream plan Python-free (bucket matmul pre-materialized).",
-    "events_asof_attribution": "As-of join as union + ONE shuffle on the key + running last-ignorenulls window — the merge-scan a native as-of implementation performs; no per-row subquery, no range join.",
-    "events_range_join": "Interval join with the time bin in the equi-join key: per-key fan-out bounded by temporal locality; the exact range predicate filters after the bounded join.",
-    "events_kmv_distinct": "The sketch's rank<=k filter compiles to WindowGroupLimit — per-partition state bounded at k rows before the shuffle (the KMV bounded-memory property, optimizer-enforced).",
-    "salted_join": "The salt is part of the join key: a hot customer's orders spread over 8 reducer keys; the dim side is replicated, the fact side shuffles once.",
-    "partition_pruned_scan": "The date filter lands in PartitionFilters — the scan lists one partition directory; at 100 TB this is the difference between reading a day and reading the corpus.",
     "decontaminate": "Benchmark window fingerprints broadcast (BroadcastHashJoin, LEFT); one map-side-combinable per-doc aggregation — the training corpus never shuffles for the decontamination check.",
     "doc_tfidf_topk": "One token explode feeds both the tf and document-frequency aggregations; corpus count broadcast; rank-k via WindowGroupLimit.",
-    "bucketed_join": "Both tables bucketBy(8, custkey): the SortMergeJoin reads the bucket layout with ZERO join-side Exchange — the only shuffle is the final aggregation's.",
     "dedup_clusters_chain": "Large-star/small-star contraction over chain-shaped dup graphs: O(log n) groupBy-min + join rounds (plain propagation would need O(diameter)).",
     "training_pipeline_full": "Extraction (one Arrow stage) + quality columns + chunk window + joins in a single composed plan — the whole engine end-to-end.",
     "doc_hashed_embedding": "Signed hashing-trick embedding: one token explode + one map-side-combinable groupBy on (doc, bucket) — integer weights, engine-exact.",
-    "events_rollup": "All three grouping sets (type×day, type, total) computed in one pass with partial aggregation map-side.",
-    "events_percentiles": "Exact discrete percentiles: one rank window per type + conditional aggregation — no interpolation, no approximation.",
     "decontaminate_fuzzy": "Every join broadcast (bench band index, candidate-id semi-join, candidate pairs, bench shingles) — zero SortMergeJoin, so the corpus never shuffles on doc_id for the benchmark-bounded candidate set; best-match via row_number over the tiny scored set.",
     "dedup_incremental": "The persisted history index joins the new increment's band keys — broadcast/bucket equi-joins only; the historical corpus is never rescanned, only its ~n_bands-rows-per-doc index participates.",
     "dedup_index_compaction": "Union + combinable distinct over N per-increment index row sets, materialized via localCheckpoint (the returned plan reads the compacted table); the corpora behind the indexes are never rescanned.",

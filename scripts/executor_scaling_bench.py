@@ -60,7 +60,7 @@ while not os.path.exists(go):
     time.sleep(0.05)
 
 best, errs = None, 0
-for _ in range(3):  # best-of-3, same protocol as scripts/scaling_bench.py
+for _ in range(3):  # best-of-3
     t0 = time.time()
     stats = (
         extract_spans(shard, num_partitions=None, keep_markdown=False)
@@ -78,23 +78,62 @@ print("RESULT " + json.dumps({{"exec_id": exec_id, "docs": n, "sec": round(best,
 """
 
 
+def extraction_corpus(spark, n_docs: int):
+    """Deterministic replicated fixture corpus with a skew tail: every
+    500th replica carries its page body ×40 (multi-hundred-KB documents),
+    so the run exercises the salted repartition's straggler behavior
+    (FIXTURES.md synthesis rule)."""
+    from pyspark.sql import functions as F
+
+    from fetch_engines_spark.extract import INPUT_SCHEMA
+    from fetch_engines_spark.fixtures import EXTRACTION_FIXTURE_IDS, fixture_document_rows
+
+    replicas = max(1, n_docs // len(EXTRACTION_FIXTURE_IDS))
+    base = spark.createDataFrame(
+        [r for r in fixture_document_rows() if r["doc_id"] in EXTRACTION_FIXTURE_IDS],
+        INPUT_SCHEMA,
+    )
+    # cross join with a replica index → n_docs rows, same page content;
+    # skewed replicas repeat the html span text 40 times
+    idx = spark.range(replicas).select(F.col("id").alias("replica"))
+    spans = F.when(
+        F.col("replica") % 500 == 0,
+        F.transform(
+            F.col("spans"),
+            lambda s: F.struct(
+                s["kind"].alias("kind"),
+                F.when(
+                    s["kind"] == "html", F.repeat(s["text"], 40)
+                ).otherwise(s["text"]).alias("text"),
+                s["media_ref"].alias("media_ref"),
+                s["offset"].alias("offset"),
+            ),
+        ),
+    ).otherwise(F.col("spans"))
+    return base.crossJoin(idx).select(
+        F.concat_ws("#", "doc_id", "replica").alias("doc_id"),
+        "base_url",
+        "canonical_url",
+        spans.alias("spans"),
+    )
+
+
 def build_corpus(n_docs: int, n_shards: int) -> str:
-    """Materialize the bench corpus once, pre-sharded into per-executor
+    """Materialize the corpus once, pre-sharded into per-executor
     input splits (directory partitions → partition pruning), exactly like
     a cluster handing each executor its own splits."""
     sys.path.insert(0, REPO)
-    from bench import _fixture_fingerprint
+    from perfbench.corpus import fixture_content_hash
 
     base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+    # keyed by fixture content: a stale corpus must not survive a fixture edit
     path = os.path.join(
-        base, f"fes_exec_corpus_{n_docs}_{n_shards}_{_fixture_fingerprint()}"
+        base, f"fes_exec_corpus_{n_docs}_{n_shards}_{fixture_content_hash()[:10]}"
     )
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return path
-    sys.path.insert(0, REPO)
     from pyspark.sql import functions as F
 
-    from bench import extraction_corpus
     from fetch_engines_spark.session import get_spark
 
     spark = get_spark(app_name="corpus-build", master="local[16]", shuffle_partitions=32)

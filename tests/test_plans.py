@@ -14,32 +14,10 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_pricing_summary_pushes_filter_and_prunes_columns(spark):
-    df = entrymod.queries()["pricing_summary"](spark, SF)
-    plan = plan_of(df)
-    assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
-    # column pruning: the scan must not read unused lineitem columns
-    assert "l_partkey" not in plan.split("ReadSchema")[-1]
-
-
-def test_revenue_by_nation_broadcasts_dims(spark):
-    df = entrymod.queries()["revenue_by_nation"](spark, SF)
-    plan = plan_of(df)
-    assert plan.count("BroadcastHashJoin") == 2
-    assert "SortMergeJoin" not in plan
-
-
 def test_resume_anti_join_is_broadcast(spark):
     df = entrymod.queries()["resume_anti_join"](spark, SF)
     plan = plan_of(df)
     assert "LeftAnti" in plan
-
-
-def test_topk_window_has_rank_limit_pushdown(spark):
-    df = entrymod.queries()["top_orders_per_customer"](spark, SF)
-    plan = plan_of(df)
-    # Spark turns row_number()<=k into WindowGroupLimit before the sort
-    assert "WindowGroupLimit" in plan
 
 
 def test_extraction_plan_is_single_python_stage(spark):
@@ -113,45 +91,6 @@ def test_lsh_topk_multi_candidates_are_equi_joins(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BroadcastHashJoin" in plan
-
-
-def test_partition_pruned_scan_reads_one_partition(spark):
-    """The date filter must land in PartitionFilters (directory pruning),
-    not a post-scan Filter — the behavior that turns a 100 TB date-bounded
-    query into a one-partition read."""
-    df = entrymod.queries()["partition_pruned_scan"](spark, SF)
-    plan = plan_of(df)
-    assert "PartitionFilters: [isnotnull(event_date" in plan.replace("#", " #").replace(
-        "event_date#", "event_date"
-    ) or "PartitionFilters: [isnotnull(event_date" in plan or "PartitionFilters" in plan
-    seg = plan.split("PartitionFilters:")[1].split("]")[0]
-    assert "event_date" in seg and "2024-01-05" in seg
-
-
-def test_kmv_sketch_uses_window_group_limit(spark):
-    """The rank<=k filter must compile to WindowGroupLimit — per-partition
-    state bounded at k rows before the shuffle (the sketch property)."""
-    df = entrymod.queries()["events_kmv_distinct"](spark, SF)
-    plan = plan_of(df)
-    assert "WindowGroupLimit" in plan
-
-
-def test_bucketed_join_has_no_join_shuffle(spark):
-    """Both sides bucketed on the key: the SortMergeJoin must read the
-    bucket layout directly — the ONLY Exchange in the plan is the final
-    aggregation's, never the join's."""
-    df = entrymod.queries()["bucketed_join"](spark, SF)
-    plan = plan_of(df)
-    assert "SortMergeJoin" in plan
-    assert plan.count("Exchange") == 1, plan
-    assert "SelectedBucketsCount" in plan
-
-
-def test_salted_join_joins_on_salt(spark):
-    df = entrymod.queries()["salted_join"](spark, SF)
-    plan = plan_of(df)
-    assert "_salt" in plan  # the salt is part of the join key
-    assert "CartesianProduct" not in plan
 
 
 def test_minhash_fast_signatures_single_shuffle(spark):
@@ -429,3 +368,24 @@ def test_mixture_sample_bucketed_rank_no_stratum_wide_window(spark):
     assert m and "__mix_bucket" in m.group(1), plan[:2000]
     for marker in ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
         assert marker not in plan
+
+
+def test_spread_scan_probe_cache_keys_on_plan(spark, tmp_path):
+    """A raw single-file scan and the same scan already repartitioned to
+    defaultParallelism read the same files; the probe cache must not hand
+    the raw scan's partition count to the repartitioned frame, or
+    spread_scan stacks a second Exchange on it."""
+    from fetch_engines_spark.pipelines.spread import spread_scan
+
+    path = str(tmp_path / "one_file")
+    spark.range(64).coalesce(1).write.parquet(path)
+    raw = spark.read.parquet(path)
+    target = spark.sparkContext.defaultParallelism
+    assert raw.rdd.getNumPartitions() < target
+
+    def n_exchanges(df):
+        # a probed (materialized) AQE plan prints final and initial plans
+        return plan_of(df).split("== Initial Plan ==")[-1].count("Exchange")
+
+    assert n_exchanges(spread_scan(raw)) == 1  # probes the raw scan
+    assert n_exchanges(spread_scan(raw.repartition(target))) == 1
