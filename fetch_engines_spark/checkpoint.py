@@ -15,14 +15,14 @@ logic is format-agnostic).
 Layout under ``<root>/``:
 - ``outputs/``           extracted spans, parquet, partitioned by bucket
 - ``partition_ledger/``  one row per completed (run_id, bucket)
-- ``metrics/``           per-Spark-partition lineage rows per wave
+- ``metrics/``           per-Spark-partition lineage rows per (run_id, bucket)
 """
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -123,7 +123,8 @@ def run_extraction_job(
     max_content_length: int | None = None,
 ) -> dict:
     """Resumable extraction: bucket the corpus, anti-join completed buckets,
-    process remaining buckets in waves, append outputs + ledger + metrics.
+    ledger the remaining empty buckets in one append, then commit each
+    remaining non-empty bucket as outputs + metrics + one ledger row.
 
     Returns summary dict {processed_buckets, skipped_buckets, doc_count}.
     """
@@ -132,48 +133,58 @@ def run_extraction_job(
     done_set = {r.bucket for r in done.collect()}  # tiny: one int per bucket
     todo = sorted(set(range(n_buckets)) - done_set)
 
-    processed = 0
+    def append_ledger(rows):
+        spark.createDataFrame(rows, LEDGER_SCHEMA).write.mode("append").format(
+            table_format
+        ).save(f"{root}/partition_ledger")
+
+    def overwrite_bucket(df, table):
+        # dynamic partition overwrite makes bucket writes idempotent: if a
+        # run crashed AFTER writing outputs or metrics but BEFORE the ledger
+        # append, the rerun replaces that (run_id, bucket) partition instead
+        # of appending duplicates; other runs' partitions are untouched
+        with _dynamic_partition_overwrite(spark):
+            df.write.mode("overwrite").partitionBy("run_id", "bucket").format(
+                table_format
+            ).save(f"{root}/{table}")
+
+    occupied = set()
+    if todo:
+        # one pass over doc_id finds the buckets that hold documents; every
+        # other remaining bucket is done with zero counts, in one append
+        occupied = {r.bucket for r in docs.select("bucket").distinct().collect()}
+        now = int(time.time() * 1000)
+        empty = [(run_id, b, n_buckets, 0, 0, 0, "done", now) for b in todo if b not in occupied]
+        if empty:
+            append_ledger(empty)
+
     total_docs = 0
-    for bucket in todo:
+    for bucket in (b for b in todo if b in occupied):
         t0 = time.time()
-        chunk = docs.filter(F.col("bucket") == bucket).drop("bucket")
-        if chunk.isEmpty():
-            # Empty buckets write no parquet files, so the read-back below
-            # would fail (UNABLE_TO_INFER_SCHEMA on a fresh root); ledger
-            # them as done with zero counts and move on.
-            wall_ms = int((time.time() - t0) * 1000)
-            spark.createDataFrame(
-                [(run_id, bucket, n_buckets, 0, 0, wall_ms, "done", int(time.time() * 1000))],
-                LEDGER_SCHEMA,
-            ).write.mode("append").format(table_format).save(f"{root}/partition_ledger")
-            processed += 1
-            continue
         out = extract_spans(
-            chunk,
+            docs.filter(F.col("bucket") == bucket).drop("bucket"),
             num_partitions=num_partitions,
             keep_markdown=keep_markdown,
             max_content_length=max_content_length,
         )
-        out = (
+        totals = Observation()  # the ledger's counts, taken from the write
+        overwrite_bucket(
             out.withColumn("run_id", F.lit(run_id))
             .withColumn("bucket", F.lit(bucket))
             .withColumn("partition_id", F.spark_partition_id())
+            .observe(
+                totals,
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(F.sum("out_bytes"), F.lit(0)).alias("b"),
+            ),
+            "outputs",
         )
-        # dynamic partition overwrite makes bucket writes idempotent: if a
-        # run crashed AFTER writing outputs but BEFORE the ledger append,
-        # the rerun replaces that (run_id, bucket) partition instead of
-        # appending duplicates; other runs' outputs are untouched
-        with _dynamic_partition_overwrite(spark):
-            out.write.mode("overwrite").partitionBy("run_id", "bucket").format(
-                table_format
-            ).save(f"{root}/outputs")
-
         written = (
             spark.read.format(table_format)
             .load(f"{root}/outputs")
             .filter((F.col("bucket") == bucket) & (F.col("run_id") == run_id))
         )
-        metrics = (
+        overwrite_bucket(
             written.groupBy("run_id", "bucket", "partition_id")
             .agg(
                 F.count("*").alias("doc_count"),
@@ -181,40 +192,18 @@ def run_extraction_job(
                 F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("error_count"),
                 F.sum("wall_us").alias("wall_us_sum"),
             )
-            .select([f.name for f in METRICS_SCHEMA.fields])
+            .select([f.name for f in METRICS_SCHEMA.fields]),
+            "metrics",
         )
-        # same idempotence as outputs: a crash after this write but before
-        # the ledger append must not double-count lineage on rerun, so the
-        # (run_id, bucket) metrics partition is overwritten, not appended
-        with _dynamic_partition_overwrite(spark):
-            metrics.write.mode("overwrite").partitionBy("run_id", "bucket").format(
-                table_format
-            ).save(f"{root}/metrics")
-
-        # ledger totals come from the just-written METRICS partition (one
-        # tiny row per task partition) — re-aggregating `written` here
-        # cost a second full read of the bucket's output per wave
-        stats = (
-            spark.read.format(table_format)
-            .load(f"{root}/metrics")
-            .filter((F.col("bucket") == bucket) & (F.col("run_id") == run_id))
-            .agg(
-                F.coalesce(F.sum("doc_count"), F.lit(0)).alias("n"),
-                F.coalesce(F.sum("byte_count"), F.lit(0)).alias("b"),
-            )
-            .collect()[0]
-        )
+        stats = totals.get
         wall_ms = int((time.time() - t0) * 1000)
-        ledger_row = spark.createDataFrame(
-            [(run_id, bucket, n_buckets, stats.n, stats.b, wall_ms, "done", int(time.time() * 1000))],
-            LEDGER_SCHEMA,
+        append_ledger(
+            [(run_id, bucket, n_buckets, stats["n"], stats["b"], wall_ms, "done", int(time.time() * 1000))]
         )
-        ledger_row.write.mode("append").format(table_format).save(f"{root}/partition_ledger")
-        processed += 1
-        total_docs += stats.n
+        total_docs += stats["n"]
 
     return {
-        "processed_buckets": processed,
+        "processed_buckets": len(todo),
         "skipped_buckets": len(done_set),
         "doc_count": total_docs,
     }

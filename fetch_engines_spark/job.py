@@ -7,7 +7,7 @@ Deploy (north_rule packaging):
         -- fetch_engines_spark/job.py \
         --input  <documents parquet/iceberg path> \
         --output <checkpoint root> \
-        --run-id <run id> [--n-buckets 64] [--partitions 256] [--resume]
+        --run-id <run id> [--n-buckets 64] [--partitions 256]
 
 The job is idempotent per (run_id, bucket): re-running after a failure
 anti-joins the ledger and only processes missing buckets (checkpoint.py).
@@ -621,12 +621,13 @@ def main(argv: list[str] | None = None) -> int:
                 from .warc import read_warc, warc_html_documents
 
                 # Stage the parsed documents to parquet BEFORE the bucket
-                # loop: run_extraction_job re-evaluates its input per
-                # bucket (filter + isEmpty), and bucket pruning cannot
-                # push below mapInPandas — feeding the lazy WARC plan in
-                # directly would re-read, re-gunzip and re-parse the whole
-                # crawl ~2x per bucket.  The underscore prefix keeps the
-                # staging dir invisible to parquet readers of the root.
+                # loop: run_extraction_job evaluates its input once to find
+                # the non-empty buckets and once more per non-empty bucket,
+                # and bucket pruning cannot push below mapInPandas — feeding
+                # the lazy WARC plan in directly would re-read, re-gunzip
+                # and re-parse the whole crawl each time.  The underscore
+                # prefix keeps the staging dir invisible to parquet readers
+                # of the root.
                 staged = f"{args.output.rstrip('/')}/_staged_documents"
                 warc_html_documents(read_warc(spark, args.input)).write.mode(
                     "overwrite"

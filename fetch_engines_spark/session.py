@@ -21,8 +21,6 @@ def get_spark(
     app_name: str = "fetch-engines-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch: int = DEFAULT_ARROW_BATCH,
-    ship_package: bool = True,
 ) -> SparkSession:
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
     # Scan-parallelism floor (guide §6): FileSourceScan computes its split
@@ -45,7 +43,7 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(DEFAULT_ARROW_BATCH))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # InferFiltersFromGenerate synthesizes `size(gen_child)>0 AND
@@ -84,11 +82,10 @@ def get_spark(
     else:
         builder = builder.config("spark.sql.shuffle.partitions", "32")
     spark = builder.getOrCreate()
-    if ship_package:
-        # Workers may run with a different cwd/sys.path than the driver;
-        # ship the package zip so the extraction UDF always unpickles
-        # (same mechanism as spark-submit --py-files).
-        from .packaging import ship_package as _ship
+    # Workers may run with a different cwd/sys.path than the driver; ship
+    # the package zip so the extraction UDF always unpickles (same
+    # mechanism as spark-submit --py-files).
+    from .packaging import ship_package
 
-        _ship(spark)
+    ship_package(spark)
     return spark

@@ -108,18 +108,30 @@ def test_crash_between_outputs_and_ledger_does_not_duplicate(spark, documents, t
     assert metrics.agg(F.sum("doc_count")).collect()[0][0] == documents.count()
 
 
-def test_empty_buckets_on_fresh_root_complete(spark, documents, tmp_path):
+@pytest.mark.parametrize("n_docs", [3, 0])
+def test_empty_buckets_on_fresh_root_complete(spark, documents, tmp_path, n_docs):
     """ADVICE repro: a tiny corpus with n_buckets >> docs used to crash with
     UNABLE_TO_INFER_SCHEMA when the first bucket was empty on a fresh root;
     empty buckets must ledger as done with zero counts and the job must
-    finish."""
+    finish.  Empty buckets cost no Spark job of their own, so the run
+    issues fewer Spark jobs than it has buckets."""
     root = str(tmp_path / "ckpt")
-    tiny = documents.limit(3)
-    summary = run_extraction_job(spark, tiny, root, run_id="tiny", n_buckets=64)
+    tiny = documents.limit(n_docs)
+    sc = spark.sparkContext
+    group = f"empty-buckets-{n_docs}"
+    sc.setJobGroup(group, "64 buckets over a tiny corpus")
+    try:
+        summary = run_extraction_job(spark, tiny, root, run_id="tiny", n_buckets=64)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) < 64
     assert summary["processed_buckets"] == 64
     ledger = spark.read.parquet(f"{root}/partition_ledger")
     assert ledger.filter("status = 'done'").count() == 64
-    assert ledger.agg(F.sum("doc_count")).collect()[0][0] == 3
+    assert ledger.agg(F.sum("doc_count")).collect()[0][0] == n_docs
+    occupied = with_bucket(tiny, 64).select("bucket").distinct().count()
+    assert ledger.filter("doc_count = 0 AND byte_count = 0").count() == 64 - occupied
     # rerun resumes cleanly: everything already done
     summary2 = run_extraction_job(spark, tiny, root, run_id="tiny", n_buckets=64)
     assert summary2["processed_buckets"] == 0
