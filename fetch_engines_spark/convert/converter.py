@@ -216,17 +216,6 @@ def _is_likely_consent_or_interstitial(el: Element) -> bool:
     )
 
 
-def _link_text_length(el: Element) -> int:
-    """Sum of text length over non-nested <a> descendants (parity:
-    markdown-converter.ts:575-582 — a link counts iff its closest('a') is
-    itself, i.e. it is not inside another link)."""
-    total = 0
-    for link in el.query_selector_all("a"):
-        if link.closest("a") is link:
-            total += len(link.text_content)
-    return total
-
-
 def _has_high_link_density_stats(st, threshold: float) -> bool:
     """Parity: hasHighLinkDensity (markdown-converter.ts:877-897)."""
     if st.raw_text_len < MIN_LINK_DENSITY_TEXT_LENGTH:
@@ -236,10 +225,6 @@ def _has_high_link_density_stats(st, threshold: float) -> bool:
     if st.raw_text_len == 0:
         return False
     return st.outer_link_text_len / st.raw_text_len > threshold
-
-
-def _has_high_link_density(el: Element, threshold: float) -> bool:
-    return _has_high_link_density_stats(subtree_stats(el), threshold)
 
 
 _LINK_DENSITY_CANDIDATE_SELECTOR = (

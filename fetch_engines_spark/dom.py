@@ -422,12 +422,6 @@ def _matches_compound(el: Element, compound) -> bool:
     return True
 
 
-def _matches_any(el: Element, sl) -> bool:
-    if isinstance(sl, SelectorList):
-        return sl.matches(el)
-    return any(_matches_compound(el, c) for c in sl)
-
-
 # --------------------------------------------------------------------------
 # Parser
 # --------------------------------------------------------------------------

@@ -18,8 +18,6 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from .dom import parse_html
-
 # --------------------------------------------------------------------------
 # F01–F09: extraction fixtures (test/MarkdownConverter.test.ts)
 # --------------------------------------------------------------------------
@@ -704,8 +702,3 @@ def fixture_document_rows(replicas: int = 1, skew_ids: dict[str, int] | None = N
                 }
             )
     return rows
-
-
-def count_fixture_media_refs(html: str) -> int:
-    root = parse_html(html)
-    return len(root.query_selector_all("img[src], video[src], iframe[title]"))

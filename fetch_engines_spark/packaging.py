@@ -25,8 +25,10 @@ def package_root() -> Path:
 def build_pyfiles_zip(dest: str | None = None) -> str:
     """Zip the package for --py-files; returns the zip path.
 
-    Deterministic content ordering; rebuilt only when a source file is
-    newer than the existing zip.
+    Deterministic content ordering; rebuilt when a source file is newer
+    than the existing zip or when the zip's member list differs from the
+    current source list (a deleted or renamed module must not keep
+    shipping).
     """
     root = package_root()
     # Already running from a --py-files zip (e.g. inside spark-submit):
@@ -43,16 +45,26 @@ def build_pyfiles_zip(dest: str | None = None) -> str:
     sources = sorted(p for p in root.rglob("*.py") if "__pycache__" not in p.parts)
     if not sources:
         raise FileNotFoundError(f"no package sources under {root}")
+    arcnames = [str(Path("fetch_engines_spark") / p.relative_to(root)) for p in sources]
     if os.path.exists(dest):
         newest = max(p.stat().st_mtime for p in sources)
-        if os.path.getmtime(dest) >= newest:
+        if os.path.getmtime(dest) >= newest and _zip_members(dest) == sorted(arcnames):
             return dest
     tmp = dest + ".tmp"
     with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-        for p in sources:
-            zf.write(p, arcname=str(Path("fetch_engines_spark") / p.relative_to(root)))
+        for p, arcname in zip(sources, arcnames):
+            zf.write(p, arcname=arcname)
     os.replace(tmp, dest)
     return dest
+
+
+def _zip_members(path: str) -> list[str] | None:
+    """Sorted member names of the zip at ``path``; None if unreadable."""
+    try:
+        with zipfile.ZipFile(path) as zf:
+            return sorted(zf.namelist())
+    except zipfile.BadZipFile:
+        return None
 
 
 def ship_package(spark: SparkSession) -> str:

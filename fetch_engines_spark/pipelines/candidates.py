@@ -3,7 +3,7 @@
 Every bucketed near-duplicate candidate generator in this engine — MinHash
 LSH bands (``dedup._pairs_from_buckets``), embedding hyperplane LSH
 (``similarity.embedding_candidate_pairs``), and SimHash pigeonhole blocks
-(``dedup.simhash_candidate_pairs``) — reduces to the same primitive: a
+(``dedup.simhash_candidate_pairs64``) — reduces to the same primitive: a
 self-equi-join inside (bucket-key) groups, emitting ordered id pairs.  And
 every one of them has the same 100 TB failure mode: a single degenerate
 bucket (thousands of byte-identical boilerplate docs, zero/constant
@@ -194,47 +194,3 @@ def cross_bucket_pairs(
     r_rep = rb.groupBy(*key_cols).agg(F.min(id_col).alias(id_col))
     rep_pairs = _ids(l_rep.alias("l").join(r_rep.alias("r"), cond))
     return small_pairs.unionByName(sig_pairs).unionByName(rep_pairs).distinct()
-
-
-def capped_pairs_sql_ctes(
-    src_cte: str,
-    key_cols: list[str],
-    id_col: str,
-    sig_col: str,
-    max_bucket_size: int,
-    out_a: str,
-    out_b: str,
-) -> str:
-    """DuckDB twin of the capped branch of :func:`bucket_pairs`, as a CTE
-    chain ending in ``pairs({out_a}, {out_b})`` — splice after a
-    ``{src_cte}({id_col}, *key_cols, {sig_col})`` CTE.  ONE generator
-    for every capped oracle twin (MinHash bands, embedding LSH, SimHash
-    blocks), so the SQL guard cannot drift from the shared Spark guard
-    per-caller — the same lockstep rationale as the Spark-side
-    factoring."""
-    keys = ", ".join(key_cols)
-    eq = " AND ".join(f"l.{k} = r.{k}" for k in key_cols)
-    return f"""sized AS (
-  SELECT *, count(*) OVER (PARTITION BY {keys}) AS bucket_n FROM {src_cte}
-),
-small AS (SELECT * FROM sized WHERE bucket_n <= {max_bucket_size}),
-small_pairs AS (
-  SELECT l.{id_col} AS {out_a}, r.{id_col} AS {out_b}
-  FROM small l JOIN small r
-    ON {eq} AND l.{id_col} < r.{id_col}
-),
-big AS (SELECT * FROM sized WHERE bucket_n > {max_bucket_size}),
-reps AS (
-  SELECT {keys}, {sig_col}, min({id_col}) AS rep
-  FROM big GROUP BY {keys}, {sig_col}
-),
-star_pairs AS (
-  SELECT r.rep AS {out_a}, g.{id_col} AS {out_b}
-  FROM big g JOIN reps r USING ({keys}, {sig_col})
-  WHERE g.{id_col} <> r.rep
-),
-pairs AS (
-  SELECT DISTINCT {out_a}, {out_b} FROM (
-    SELECT * FROM small_pairs UNION ALL SELECT * FROM star_pairs
-  )
-)"""

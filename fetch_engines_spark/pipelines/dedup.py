@@ -102,8 +102,7 @@ def _minhash_fast_wide(df: DataFrame, text_col: str, num_hashes: int) -> DataFra
     31-bit integer, then k affine permutations (a_i*h + b_i mod 2^31-1) —
     k× cheaper than k independent md5s, the only viable shape at 128
     permutations over 10^12 documents.  All arithmetic stays in signed
-    64-bit (a, h < 2^31 → a*h + b < 2^62) and is engine-portable
-    (DuckDB twin: minhash_fast_oracle_sql)."""
+    64-bit (a, h < 2^31 → a*h + b < 2^62) and is engine-portable."""
     from .spread import spread_scan
 
     sh = shingles(F.col(text_col)).alias("shingles")
@@ -568,49 +567,6 @@ def bloom_gate(
     )
 
 
-def bloom_gate_oracle_sql(
-    source: str = "documents",
-    n_history: int = 250,
-    m_bits: int = 2048,
-    k_hashes: int = 3,
-) -> str:
-    """DuckDB twin of the bloom-gated incremental dedup query: same md5
-    positions, same 63-bit packed words, same all-positions-set test."""
-    w = BLOOM_BITS_PER_WORD
-    pos = (
-        "CAST('0x' || substr(md5('bf' || r.i || '|' || key), 1, 15) AS BIGINT)"
-        f" % {m_bits}"
-    )
-    return f"""
-WITH hist AS (
-  SELECT md5(text) AS key FROM {source} WHERE doc_id < {n_history}
-),
-hpos AS (
-  SELECT DISTINCT key, {pos} AS pos FROM hist, range(0, {k_hashes}) r(i)
-),
-bloom AS (
-  SELECT pos // {w} AS word_id, bit_or(1::BIGINT << CAST(pos % {w} AS INT)) AS bits
-  FROM (SELECT DISTINCT pos FROM hpos) GROUP BY 1
-),
-q AS (SELECT doc_id, md5(text) AS key FROM {source}),
-qpos AS (
-  SELECT DISTINCT doc_id, key, {pos} AS pos FROM q, range(0, {k_hashes}) r(i)
-),
-tested AS (
-  SELECT p.doc_id,
-         CASE WHEN b.bits IS NOT NULL
-               AND (b.bits & (1::BIGINT << CAST(p.pos % {w} AS INT)))
-                   = (1::BIGINT << CAST(p.pos % {w} AS INT))
-              THEN 1 ELSE 0 END AS hit
-  FROM qpos p LEFT JOIN bloom b ON p.pos // {w} = b.word_id
-)
-SELECT doc_id,
-       CAST(CASE WHEN doc_id < {n_history} THEN 1 ELSE 0 END AS INT) AS in_history,
-       CAST(CASE WHEN sum(hit) = count(*) THEN 1 ELSE 0 END AS INT) AS maybe_present
-FROM tested GROUP BY doc_id
-"""
-
-
 def candidate_pairs_from_index(
     buckets: DataFrame, max_bucket_size: int | None = None
 ) -> DataFrame:
@@ -620,54 +576,6 @@ def candidate_pairs_from_index(
     incremental CLI path computes the increment's index once and feeds
     every downstream join from it)."""
     return _pairs_from_buckets(buckets, max_bucket_size)
-
-
-def incremental_pairs_oracle_sql(
-    old_source: str,
-    new_source: str,
-    num_hashes: int = 4,
-    band_size: int = 2,
-) -> str:
-    """DuckDB twin of incremental_candidate_pairs (uncapped): the index
-    side recomputed from ``old_source`` with the same banding."""
-
-    def bands(src: str, name: str) -> str:
-        sigs = minhash_oracle_sql(num_hashes, src)
-        return f"""{name}_sigs AS ({sigs}),
-{name}_bands AS (
-  SELECT doc_id, CAST(floor(hash_idx / {band_size}) AS BIGINT) AS band_id,
-         md5(array_to_string(list_sort(list(minhash)), '|')) AS band_key
-  FROM {name}_sigs GROUP BY doc_id, floor(hash_idx / {band_size})
-)"""
-
-    return f"""
-WITH {bands(old_source, 'old')},
-{bands(new_source, 'new')}
-SELECT DISTINCT o.doc_id AS doc_a, n.doc_id AS doc_b, true AS vs_index
-FROM old_bands o JOIN new_bands n
-  ON o.band_id = n.band_id AND o.band_key = n.band_key AND o.doc_id <> n.doc_id
-UNION ALL
-SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b, false AS vs_index
-FROM new_bands l JOIN new_bands r
-  ON l.band_id = r.band_id AND l.band_key = r.band_key AND l.doc_id < r.doc_id
-"""
-
-
-def minhash_index_oracle_sql(
-    source: str = "documents", num_hashes: int = 4, band_size: int = 2
-) -> str:
-    """DuckDB twin of a COMPACTED index (:func:`compact_minhash_indexes`):
-    the monolithic index built from the full corpus in one shot — any
-    increment split (plus byte-identical re-crawls) of the same corpus
-    must compact to exactly these rows, so the twin doubles as the
-    merge-then-query equivalence proof."""
-    sigs = minhash_oracle_sql(num_hashes, source)
-    return f"""
-WITH sigs AS ({sigs})
-SELECT doc_id, CAST(floor(hash_idx / {band_size}) AS BIGINT) AS band_id,
-       md5(array_to_string(list_sort(list(minhash)), '|')) AS band_key
-FROM sigs GROUP BY doc_id, floor(hash_idx / {band_size})
-"""
 
 
 def duplicated_ngram_stats(df: DataFrame, text_col: str = "text", n: int = 8) -> DataFrame:
@@ -855,85 +763,6 @@ def decontaminate_fuzzy(
         .filter(F.col("rn") == 1)
         .select("doc_id", "bench_id", "jaccard_bp")
     )
-
-
-def decontaminate_fuzzy_oracle_sql(
-    docs_sql: str, benchmark_sql: str, num_hashes: int = 4, band_size: int = 2,
-    threshold_bp: int = 5000,
-) -> str:
-    """DuckDB twin of decontaminate_fuzzy: same banding, same candidate
-    join, same Jaccard, same best-match (max jaccard, lowest bench_id)."""
-    sh = (
-        "list_distinct(CASE WHEN len(string_split(text,' ')) >= 3 THEN "
-        "list_transform(range(0, len(string_split(text,' ')) - 3 + 1), "
-        "i -> array_to_string(list_slice(string_split(text,' '), i + 1, i + 3), ' ')) "
-        "ELSE [array_to_string(string_split(text,' '), ' ')] END)"
-    )
-
-    def bands(src_cte: str, name: str) -> str:
-        sigs = minhash_oracle_sql(num_hashes, src_cte)
-        return f"""{name}_sigs AS ({sigs}),
-{name}_bands AS (
-  SELECT doc_id, CAST(floor(hash_idx / {band_size}) AS BIGINT) AS band_id,
-         md5(array_to_string(list_sort(list(minhash)), '|')) AS band_key
-  FROM {name}_sigs GROUP BY doc_id, floor(hash_idx / {band_size})
-)"""
-
-    return f"""
-WITH bench AS ({benchmark_sql}),
-corpus AS ({docs_sql}),
-{bands('bench', 'b')},
-{bands('corpus', 'c')},
-cand AS (
-  SELECT DISTINCT c.doc_id, b.doc_id AS bench_id
-  FROM c_bands c JOIN b_bands b ON c.band_id = b.band_id AND c.band_key = b.band_key
-),
-dsh AS (SELECT doc_id, {sh} AS s FROM corpus),
-bsh AS (SELECT doc_id AS bench_id, {sh} AS s FROM bench),
-scored AS (
-  SELECT cand.doc_id, cand.bench_id,
-         CAST(floor(len(list_intersect(d.s, b.s)) * 10000
-              / greatest(len(list_distinct(list_concat(d.s, b.s))), 1)) AS BIGINT) AS jaccard_bp
-  FROM cand JOIN dsh d ON cand.doc_id = d.doc_id JOIN bsh b ON cand.bench_id = b.bench_id
-  WHERE CAST(floor(len(list_intersect(d.s, b.s)) * 10000
-        / greatest(len(list_distinct(list_concat(d.s, b.s))), 1)) AS BIGINT) >= {threshold_bp}
-)
-SELECT doc_id, bench_id, jaccard_bp FROM (
-  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY jaccard_bp DESC, bench_id ASC) AS rn
-  FROM scored
-) WHERE rn = 1
-"""
-
-
-def decontaminate_oracle_sql(
-    docs_sql: str, benchmark_sql: str, n: int = 8
-) -> str:
-    """DuckDB twin of decontaminate(): same shingle rule, same per-doc
-    distinct windows, same overlap counting."""
-    win = (
-        "list_distinct(list_transform("
-        "CASE WHEN len(string_split(text,' ')) >= {n} THEN "
-        "list_transform(range(0, len(string_split(text,' ')) - {n} + 1), "
-        "i -> array_to_string(list_slice(string_split(text,' '), i + 1, i + {n}), ' ')) "
-        "ELSE [array_to_string(string_split(text,' '), ' ')] END, s -> md5(s)))"
-    ).format(n=n)
-    return f"""
-WITH bench AS ({benchmark_sql}),
-docs AS ({docs_sql}),
-bw AS (SELECT DISTINCT unnest({win}) AS w FROM bench),
-dw AS (SELECT doc_id, unnest({win}) AS w FROM docs),
-agg AS (
-  SELECT dw.doc_id,
-         count(*) AS n_windows,
-         CAST(sum(CASE WHEN bw.w IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_contaminated
-  FROM dw LEFT JOIN bw ON dw.w = bw.w
-  GROUP BY dw.doc_id
-)
-SELECT doc_id, n_windows, n_contaminated,
-       CAST(floor(n_contaminated * 10000 / greatest(n_windows, 1)) AS BIGINT) AS contamination_bp,
-       n_contaminated > 0 AS is_contaminated
-FROM agg
-"""
 
 
 def connected_components(
@@ -1133,26 +962,6 @@ def connected_components_star(
     )
 
 
-def connected_components_oracle_sql(pairs_sql: str) -> str:
-    """DuckDB twin: transitive closure by recursive CTE, component label =
-    min reachable node (UNION dedups rows, so the recursion terminates)."""
-    return f"""
-WITH RECURSIVE pairs AS ({pairs_sql}),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION
-  SELECT doc_b AS src, doc_a AS dst FROM pairs
-),
-reach(node, r) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.src, rr.r FROM edges e JOIN reach rr ON e.dst = rr.node
-)
-SELECT node AS doc_id, min(r) AS component, node = min(r) AS is_keeper
-FROM reach GROUP BY node
-"""
-
-
 def _pair_shingle_join(df: DataFrame, pairs: DataFrame, text_col: str) -> DataFrame:
     """Shared scaffold for the pair-set verify metrics: per-doc distinct
     shingle sets joined onto the candidate pairs as a.sh / b.sh (two
@@ -1206,34 +1015,14 @@ def ngram_containment(
     )
 
 
-def ngram_containment_oracle_sql(pairs_sql: str, source: str = "documents") -> str:
-    """DuckDB twin of ngram_containment over an arbitrary pair query."""
-    sh = (
-        "list_distinct(CASE WHEN len(string_split(text,' ')) >= 3 THEN "
-        "list_transform(range(0, len(string_split(text,' ')) - 3 + 1), "
-        "i -> array_to_string(list_slice(string_split(text,' '), i + 1, i + 3), ' ')) "
-        "ELSE [array_to_string(string_split(text,' '), ' ')] END)"
-    )
-    return f"""
-WITH pairs AS ({pairs_sql}),
-docs AS (SELECT doc_id, {sh} AS sh FROM {source})
-SELECT p.doc_a, p.doc_b,
-       CAST(floor(len(list_intersect(a.sh, b.sh)) * 10000
-            / greatest(least(len(a.sh), len(b.sh)), 1)) AS BIGINT) AS containment_bp
-FROM pairs p
-JOIN docs a ON p.doc_a = a.doc_id
-JOIN docs b ON p.doc_b = b.doc_id
-"""
-
-
 def simhash(df: DataFrame, text_col: str = "text", bits: int = 16) -> DataFrame:
     """SimHash document fingerprint (bit-majority over token hashes).
 
     Bit ``i`` of a token's hash is the high bit of hex digit ``i`` of its
-    md5 (digit >= '8') — portable across engines, so the DuckDB oracle can
-    verify values exactly (``simhash_oracle_sql``), unlike xxhash64.  One
-    md5 per token covers up to 32 bits.  One explode + one
-    map-side-combinable groupBy: the scale-safe shape at 10^12 docs.
+    md5 (digit >= '8') — portable across engines, so another engine can
+    replay the values exactly, unlike xxhash64.  One md5 per token covers
+    up to 32 bits.  One explode + one map-side-combinable groupBy: the
+    scale-safe shape at 10^12 docs.
     """
     if bits > 32:
         raise ValueError("md5-hex simhash supports at most 32 bits")
@@ -1537,219 +1326,6 @@ def simhash64_vectorized(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _simhash_pairs_grouped_twolevel(
-    sig: DataFrame, bits: int, n_blocks: int, max_hamming: int
-) -> DataFrame:
-    """Uncapped SimHash pairs via DISTINCT-signature candidates and a
-    two-level pigeonhole, expanded back to doc pairs exactly once.
-
-    The doc-level block join evaluates C(bucket,2) per bucket; with a
-    clustered corpus most of that work compares byte-identical
-    signatures over and over (measured at sf1.0: 50k docs → 28,385
-    distinct signatures, 758M doc-level candidates but only 52.9M
-    sig-level two-level candidates — 14×).  Guide §8's rule applied to
-    the pair join itself: decide on the small proxy (the distinct
-    signature), then move the heavy part (the 43M emitted doc pairs)
-    exactly once:
-
-    - **Group:** one row per distinct signature with its doc-id list
-      (combinable collect_list; ids ride the candidate join as carry
-      columns, so no join-back).
-    - **Two-level pigeonhole:** any pair within hamming ≤ n_blocks−1
-      shares an untouched block b, and — since its ≤ max_hamming
-      differing bits all live in the residual bits−block bits — also an
-      untouched sub-block s of that residual (n_sub = n_blocks
-      sub-blocks).  Joining on (b, s, block_val, sub_val) is therefore
-      still EXACT for recall while cutting expected bucket size by
-      another 2^sub.
-    - **Exactly-once:** a qualifying signature pair is kept only at its
-      minimal (b, s) — all earlier blocks differ, and all earlier
-      sub-blocks of b's residual differ (pure bitwise predicates on the
-      xor).  Same-signature doc pairs (hamming 0) are emitted separately
-      per group via posexplode × suffix-slice, one row per unordered
-      pair.  No distinct anywhere.
-
-    Identical result set to the plain block join + distinct: every doc
-    pair within the hamming bound appears exactly once as
-    (least, greatest, hamming)."""
-    block = bits // n_blocks
-    n_sub = n_blocks
-    sub = (bits - block) // n_sub
-    groups = sig.groupBy("simhash").agg(F.collect_list("doc_id").alias("ids"))
-
-    def _residual_sql(col: str, b: int) -> str:
-        if b == 0:
-            return f"shiftright({col}, {block})"
-        return (
-            f"(shiftleft(shiftright({col}, {(b + 1) * block}), {b * block})"
-            f" + pmod({col}, {1 << (b * block)}))"
-        )
-
-    entries = []
-    for b in range(n_blocks):
-        blk = f"CAST(shiftright(simhash, {b * block}) % {1 << block} AS BIGINT)"
-        res = _residual_sql("simhash", b)
-        for s in range(n_sub):
-            entries.append(
-                f"{b}, {s}, {blk}, "
-                f"CAST(shiftright({res}, {s * sub}) % {1 << sub} AS BIGINT)"
-            )
-    stacked = groups.select(
-        "simhash",
-        "ids",
-        F.expr(
-            f"stack({n_blocks * n_sub}, "
-            + ", ".join(entries)
-            + ") as (b, s, block_val, sub_val)"
-        ),
-    )
-    sig_pairs = _salted_self_pairs(
-        stacked,
-        key_cols=["b", "s", "block_val", "sub_val"],
-        id_col="simhash",
-        carry=["ids"],
-        keep_cols=["b", "s"],
-        out_a="sig_a",
-        out_b="sig_b",
-    )
-    x = F.col("sig_a").bitwiseXOR(F.col("sig_b"))
-    keep = F.lit(True)
-    for bp in range(n_blocks - 1):
-        keep = keep & (
-            (F.col("b") <= bp)
-            | (F.shiftright(x, bp * block).bitwiseAND(F.lit((1 << block) - 1)) != 0)
-        )
-    rx = None
-    for b in range(n_blocks - 1, -1, -1):
-        e = F.expr(_residual_sql(f"(sig_a ^ sig_b)", b))
-        rx = e if rx is None else F.when(F.col("b") == b, e).otherwise(rx)
-    for sp in range(n_sub - 1):
-        keep = keep & (
-            (F.col("s") <= sp)
-            | (F.shiftright(rx, sp * sub).bitwiseAND(F.lit((1 << sub) - 1)) != 0)
-        )
-    qual = (
-        sig_pairs.filter(keep)
-        .withColumn("hamming", F.bit_count(x))
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    cross = (
-        qual.select(F.explode("ids_a").alias("ida"), "ids_b", "hamming")
-        .select("ida", F.explode("ids_b").alias("idb"), "hamming")
-        .select(
-            F.least("ida", "idb").alias("doc_a"),
-            F.greatest("ida", "idb").alias("doc_b"),
-            "hamming",
-        )
-    )
-    same = (
-        groups.filter(F.size("ids") > 1)
-        .select("ids", F.posexplode("ids").alias("i", "ida"))
-        .select(
-            "ida",
-            F.explode(F.slice("ids", F.col("i") + 2, F.size("ids"))).alias("idb"),
-        )
-        .select(
-            F.least("ida", "idb").alias("doc_a"),
-            F.greatest("ida", "idb").alias("doc_b"),
-            F.lit(0).cast("integer").alias("hamming"),
-        )
-    )
-    return cross.unionByName(same)
-
-
-def simhash_candidate_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    bits: int = 32,
-    n_blocks: int = 4,
-    max_hamming: int = 3,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """SimHash near-duplicate pairs via the pigeonhole block construction
-    (Manku et al., "Detecting Near-Duplicates for Web Crawling"): split
-    the ``bits``-bit signature into ``n_blocks`` blocks and join on
-    (block_id, block_value) — any pair within ``max_hamming`` ≤
-    n_blocks−1 differing bits shares at least one untouched block, so
-    candidate recall is EXACT by pigeonhole; an integer bit_count(xor)
-    filter then verifies the distance.  Shuffle cost: one n_blocks-way
-    stack + one equi-join — never all-pairs.
-
-    ``max_bucket_size`` is the shared degenerate-bucket skew guard
-    (pipelines.candidates.bucket_pairs): identical/boilerplate documents
-    share every block value, so without a cap one hot (block_id,
-    block_val) key makes the self-join quadratic; capped, those buckets
-    take the linear signature-star path.  At web scale ALWAYS set it, and
-    prefer :func:`simhash_candidate_pairs64` (64-bit signatures, 16-bit
-    blocks) — 32-bit/8-bit-block buckets hold ~N/256 docs each, which is
-    itself quadratic at 10^9+ docs even without skew.
-    Returns (doc_a, doc_b, hamming)."""
-    if max_hamming >= n_blocks:
-        raise ValueError("pigeonhole guarantee needs max_hamming < n_blocks")
-    from .candidates import bucket_pairs
-
-    block = bits // n_blocks
-    # Arrow-vectorized signature stage for both paths (see
-    # simhash_candidate_pairs64 for the rationale; unique doc_id is the
-    # pair-generation contract)
-    sig = simhash_vectorized(df, text_col, bits=bits).localCheckpoint(eager=True)
-    if max_bucket_size is None:
-        if (bits - block) % n_blocks == 0 and (bits - block) // n_blocks > 0:
-            return _simhash_pairs_grouped_twolevel(sig, bits, n_blocks, max_hamming)
-        mask = (1 << block) - 1
-
-        def _differs(bp: int):
-            x = F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
-            return (F.shiftright(x, bp * block).bitwiseAND(F.lit(mask))) != 0
-
-        stacked_plain = sig.select(
-            "doc_id",
-            "simhash",
-            F.expr(
-                "stack({n}, {args}) as (block_id, block_val)".format(
-                    n=n_blocks,
-                    args=", ".join(
-                        f"{b}, CAST(shiftright(simhash, {b * block}) % {1 << block} AS BIGINT)"
-                        for b in range(n_blocks)
-                    ),
-                )
-            ),
-        )
-        pairs = _pigeonhole_pairs_uncapped(
-            stacked_plain, n_blocks, _differs, carry=["simhash"]
-        )
-    else:
-        stacked = sig.select(
-            "doc_id",
-            "simhash",
-            F.md5(F.col("simhash").cast("string")).alias("sig_key"),
-            F.expr(
-                "stack({n}, {args}) as (block_id, block_val)".format(
-                    n=n_blocks,
-                    args=", ".join(
-                        f"{b}, CAST(shiftright(simhash, {b * block}) % {1 << block} AS BIGINT)"
-                        for b in range(n_blocks)
-                    ),
-                )
-            ),
-        )
-        pairs = bucket_pairs(
-            stacked,
-            ["block_id", "block_val"],
-            "doc_id",
-            sig_col="sig_key",
-            max_bucket_size=max_bucket_size,
-            out_a="doc_a",
-            out_b="doc_b",
-            carry_cols=["simhash"],  # hamming verify without a join back
-        )
-    return pairs.select(
-        "doc_a",
-        "doc_b",
-        F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)
-
-
 def simhash64(df: DataFrame, text_col: str = "text") -> DataFrame:
     """64-bit SimHash as two 32-bit halves (doc_id, sim_lo, sim_hi).
 
@@ -1811,18 +1387,35 @@ def simhash_candidate_pairs64(
     to the linear signature-star path via the shared
     pipelines.candidates.bucket_pairs guard.  Candidate recall for
     hamming ≤ ``max_hamming`` (< 4) is exact by pigeonhole across the
-    two halves.  Returns (doc_a, doc_b, hamming)."""
+    two halves.  Returns (doc_a, doc_b, hamming).  Raises ValueError when
+    ``doc_id`` is null or repeated among rows with non-null text."""
     if max_hamming >= 4:
         raise ValueError("pigeonhole guarantee needs max_hamming < 4 blocks")
     from .candidates import bucket_pairs
 
-    # Arrow-vectorized signature stage for BOTH paths (the unique doc_id
-    # contract is inherent to pair generation; differential-tested equal
-    # to the simhash64 expression reference).  Beyond planning ~130
+    # Arrow-vectorized signature stage for BOTH paths (differential-tested
+    # equal to the simhash64 expression reference).  Beyond planning ~130
     # aggregate expressions per build (~0.75 s of driver time the bench
     # pays on every run), the vote aggregate was also the slowest stage —
     # the one-node Arrow plan removes both.
     sig = simhash64_vectorized(df, text_col).localCheckpoint(eager=True)
+    # pair generation needs a unique, non-null doc_id: one aggregate over
+    # the checkpointed signatures checks it before any join
+    ids = sig.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.count("doc_id").alias("non_null"),
+        F.count_distinct("doc_id").alias("distinct"),
+    ).first()
+    if ids["non_null"] < ids["rows"]:
+        raise ValueError(
+            f"simhash_candidate_pairs64: {ids['rows'] - ids['non_null']} rows "
+            "with a null doc_id; pairs need a unique, non-null doc_id"
+        )
+    if ids["distinct"] < ids["non_null"]:
+        raise ValueError(
+            f"simhash_candidate_pairs64: duplicate doc_id ({ids['non_null']} rows, "
+            f"{ids['distinct']} distinct ids); pairs need a unique, non-null doc_id"
+        )
     sig_cols = (
         [F.md5(F.concat_ws("|", F.col("sim_lo"), F.col("sim_hi"))).alias("sig_key")]
         if max_bucket_size is not None
@@ -1872,269 +1465,3 @@ def simhash_candidate_pairs64(
             + F.bit_count(F.col("sim_hi_a").bitwiseXOR(F.col("sim_hi_b")))
         ).alias("hamming"),
     ).filter(F.col("hamming") <= max_hamming)
-
-
-def simhash_pairs_oracle_sql(
-    source: str = "documents",
-    bits: int = 32,
-    n_blocks: int = 4,
-    max_hamming: int = 3,
-) -> str:
-    """DuckDB twin of simhash_candidate_pairs: same signature, same block
-    split, same bit_count verify."""
-    block = bits // n_blocks
-    sig = simhash_oracle_sql(bits=bits, source=source)
-    branches = "\nUNION ALL\n".join(
-        f"SELECT doc_id, simhash, {b} AS block_id, "
-        f"CAST((simhash >> {b * block}) % {1 << block} AS BIGINT) AS block_val FROM sigs"
-        for b in range(n_blocks)
-    )
-    return f"""
-WITH sigs AS ({sig}),
-stacked AS (
-  {branches}
-)
-SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
-       bit_count(xor(l.simhash, r.simhash)) AS hamming
-FROM stacked l JOIN stacked r
-  ON l.block_id = r.block_id AND l.block_val = r.block_val AND l.doc_id < r.doc_id
-WHERE bit_count(xor(l.simhash, r.simhash)) <= {max_hamming}
-"""
-
-
-def simhash64_oracle_sql(source: str = "documents") -> str:
-    """DuckDB twin of simhash64(): two salted md5s per token, same
-    hex-digit majority rule, two 32-bit halves."""
-    votes = ",\n    ".join(
-        f"sum(CASE WHEN substr(h1, {i + 1}, 1) >= '8' THEN 1 ELSE -1 END) AS lo{i},\n"
-        f"    sum(CASE WHEN substr(h2, {i + 1}, 1) >= '8' THEN 1 ELSE -1 END) AS hi{i}"
-        for i in range(32)
-    )
-    lo = " + ".join(f"CASE WHEN lo{i} > 0 THEN {1 << i} ELSE 0 END" for i in range(32))
-    hi = " + ".join(f"CASE WHEN hi{i} > 0 THEN {1 << i} ELSE 0 END" for i in range(32))
-    return f"""
-WITH toks AS (
-  SELECT doc_id, md5(tok) AS h1, md5('hi|' || tok) AS h2
-  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM {source})
-),
-votes AS (
-  SELECT doc_id,
-    {votes}
-  FROM toks GROUP BY doc_id
-)
-SELECT doc_id, CAST({lo} AS BIGINT) AS sim_lo, CAST({hi} AS BIGINT) AS sim_hi FROM votes
-"""
-
-
-def simhash_pairs64_oracle_sql(
-    source: str = "documents",
-    max_hamming: int = 3,
-    max_bucket_size: int | None = None,
-) -> str:
-    """DuckDB twin of simhash_candidate_pairs64: same 4 × 16-bit block
-    split, same bucket cap + signature-star routing, same two-half
-    bit_count verify."""
-    sig = simhash64_oracle_sql(source)
-    branches = "\nUNION ALL\n".join(
-        f"SELECT doc_id, sig_key, {b} AS block_id, CAST({expr} AS BIGINT) AS block_val FROM keyed"
-        for b, expr in enumerate(
-            [
-                "sim_lo % 65536",
-                "sim_lo >> 16",
-                "sim_hi % 65536",
-                "sim_hi >> 16",
-            ]
-        )
-    )
-    if max_bucket_size is None:
-        pair_cte = """
-pairs AS (
-  SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
-  FROM stacked l JOIN stacked r
-    ON l.block_id = r.block_id AND l.block_val = r.block_val AND l.doc_id < r.doc_id
-)"""
-    else:
-        from .candidates import capped_pairs_sql_ctes
-
-        pair_cte = "\n" + capped_pairs_sql_ctes(
-            "stacked",
-            ["block_id", "block_val"],
-            "doc_id",
-            "sig_key",
-            max_bucket_size,
-            "doc_a",
-            "doc_b",
-        )
-    return f"""
-WITH sigs AS ({sig}),
-keyed AS (
-  SELECT doc_id, sim_lo, sim_hi,
-         md5(CAST(sim_lo AS VARCHAR) || '|' || CAST(sim_hi AS VARCHAR)) AS sig_key
-  FROM sigs
-),
-stacked AS (
-  {branches}
-),{pair_cte}
-SELECT p.doc_a, p.doc_b,
-       bit_count(xor(a.sim_lo, b.sim_lo)) + bit_count(xor(a.sim_hi, b.sim_hi)) AS hamming
-FROM pairs p
-JOIN sigs a ON p.doc_a = a.doc_id
-JOIN sigs b ON p.doc_b = b.doc_id
-WHERE bit_count(xor(a.sim_lo, b.sim_lo)) + bit_count(xor(a.sim_hi, b.sim_hi)) <= {max_hamming}
-"""
-
-
-# --- DuckDB oracle twins -----------------------------------------------------
-
-EXACT_DUP_SQL = """
-SELECT md5(text) AS content_hash, count(*) AS group_size, min(doc_id) AS keeper_doc_id
-FROM documents
-GROUP BY md5(text)
-HAVING count(*) > 1
-"""
-
-# Shingle construction twin: words[i+1 .. i+3] (1-based list slicing in
-# DuckDB; list_transform over range 0..len-3).
-MINHASH_SQL_TEMPLATE = """
-WITH sh AS (
-  SELECT doc_id,
-    unnest(list_transform(
-      range(0, greatest(len(string_split(text,' ')) - 3, 0) + 1),
-      i -> array_to_string(list_slice(string_split(text,' '), i + 1, i + 3), ' ')
-    )) AS shingle
-  FROM {source}
-)
-SELECT doc_id, hash_idx, minhash FROM (
-  {unions}
-)
-"""
-
-
-def minhash_oracle_sql(num_hashes: int = 4, source: str = "documents") -> str:
-    unions = "\nUNION ALL\n".join(
-        f"SELECT doc_id, {k} AS hash_idx, min(md5('s{k}|' || shingle)) AS minhash FROM sh GROUP BY doc_id"
-        for k in range(num_hashes)
-    )
-    return MINHASH_SQL_TEMPLATE.format(unions=unions, source=source)
-
-
-def minhash_fast_pairs_oracle_sql(
-    source: str, num_hashes: int = 128, band_size: int = 8
-) -> str:
-    """DuckDB twin of minhash_candidate_pairs_fast (uncapped): single-pass
-    wide aggregation of all k affine permutations, band keys from the wide
-    row, bucket-local pairwise join."""
-    m = MERSENNE_31
-    min_cols = ",\n    ".join(
-        f"min(({a} * h + {b}) % {m}) AS mh{i}"
-        for i, (a, b) in ((i, _affine_params(i)) for i in range(num_hashes))
-    )
-    n_bands = -(-num_hashes // band_size)
-    band_branches = "\nUNION ALL\n".join(
-        "SELECT doc_id, CAST({b} AS BIGINT) AS band_id, "
-        "md5(array_to_string(list_sort([{cols}]), '|')) AS band_key FROM mins".format(
-            b=b,
-            cols=", ".join(
-                f"mh{i}" for i in range(b * band_size, min((b + 1) * band_size, num_hashes))
-            ),
-        )
-        for b in range(n_bands)
-    )
-    return f"""
-WITH sh AS (
-  SELECT doc_id,
-    unnest(list_transform(
-      range(0, greatest(len(string_split(text,' ')) - 3, 0) + 1),
-      i -> array_to_string(list_slice(string_split(text,' '), i + 1, i + 3), ' ')
-    )) AS shingle
-  FROM {source}
-),
-hs AS (
-  SELECT doc_id, CAST('0x' || substr(md5(shingle), 1, 15) AS BIGINT) % {m} AS h FROM sh
-),
-mins AS (
-  SELECT doc_id,
-    {min_cols}
-  FROM hs GROUP BY doc_id
-),
-bands AS (
-  {band_branches}
-)
-SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
-FROM bands l JOIN bands r
-  ON l.band_id = r.band_id AND l.band_key = r.band_key AND l.doc_id < r.doc_id
-"""
-
-
-def capped_candidate_pairs_oracle_sql(
-    source: str, num_hashes: int = 4, band_size: int = 2, max_bucket_size: int = 50
-) -> str:
-    """Full SQL twin of minhash_candidate_pairs(max_bucket_size=...);
-    the guard CTEs come from the ONE shared generator
-    (candidates.capped_pairs_sql_ctes)."""
-    from .candidates import capped_pairs_sql_ctes
-
-    sigs = minhash_oracle_sql(num_hashes, source)
-    guard = capped_pairs_sql_ctes(
-        "keyed_bands",
-        ["band_id", "band_key"],
-        "doc_id",
-        "sig_key",
-        max_bucket_size,
-        "doc_a",
-        "doc_b",
-    )
-    return f"""
-WITH sigs AS ({sigs}),
-keys AS (
-  SELECT doc_id, md5(array_to_string(list(minhash ORDER BY hash_idx), '|')) AS sig_key
-  FROM sigs GROUP BY doc_id
-),
-bands AS (
-  SELECT doc_id, CAST(floor(hash_idx / {band_size}) AS BIGINT) AS band_id,
-         md5(array_to_string(list_sort(list(minhash)), '|')) AS band_key
-  FROM sigs GROUP BY doc_id, floor(hash_idx / {band_size})
-),
-keyed_bands AS (
-  SELECT b.doc_id, b.band_id, b.band_key, k.sig_key
-  FROM bands b JOIN keys k USING (doc_id)
-),
-{guard}
-SELECT doc_a, doc_b FROM pairs
-"""
-
-
-def simhash_oracle_sql(bits: int = 16, source: str = "documents") -> str:
-    """DuckDB twin of simhash(): same md5 hex digits, same majority rule."""
-    votes = ",\n    ".join(
-        f"sum(CASE WHEN substr(h, {i + 1}, 1) >= '8' THEN 1 ELSE -1 END) AS b{i}"
-        for i in range(bits)
-    )
-    sig = " + ".join(f"CASE WHEN b{i} > 0 THEN {1 << i} ELSE 0 END" for i in range(bits))
-    return f"""
-WITH toks AS (
-  SELECT doc_id, md5(unnest(string_split(text, ' '))) AS h FROM {source}
-),
-votes AS (
-  SELECT doc_id,
-    {votes}
-  FROM toks GROUP BY doc_id
-)
-SELECT doc_id, CAST({sig} AS BIGINT) AS simhash FROM votes
-"""
-
-
-def candidate_pairs_oracle_sql(source: str, num_hashes: int = 4, band_size: int = 2) -> str:
-    """Full SQL twin of minhash_candidate_pairs over an arbitrary source."""
-    sigs = minhash_oracle_sql(num_hashes, source)
-    return f"""
-WITH sigs AS ({sigs}),
-bands AS (
-  SELECT doc_id, CAST(floor(hash_idx / {band_size}) AS BIGINT) AS band_id,
-         md5(array_to_string(list_sort(list(minhash)), '|')) AS band_key
-  FROM sigs GROUP BY doc_id, floor(hash_idx / {band_size})
-)
-SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
-FROM bands l JOIN bands r
-  ON l.band_id = r.band_id AND l.band_key = r.band_key AND l.doc_id < r.doc_id
-"""

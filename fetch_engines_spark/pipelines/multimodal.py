@@ -1320,55 +1320,6 @@ def resize_nearest(
     return a[ys][:, xs].tobytes()
 
 
-RESIZE_STATS_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("resized_sum", LongType()),
-        StructField("error", StringType()),
-    ]
-)
-
-
-def image_resize_stats(media: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame:
-    """media(media_id, payload) → decode (PNG/GIF/JPEG by signature) +
-    nearest-neighbor resize to (out_w, out_h) + integer pixel sum of the
-    thumbnail; one Arrow-batched stage, never-fail contract.  The
-    resize step of a multimodal training pipeline (thumbnail features,
-    vision-encoder pre-crops) with the decode fused into the same
-    pass — pixels never leave the worker."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {k: [] for k in RESIZE_STATS_SCHEMA.names}
-            for row in pdf.itertuples(index=False):
-                width = height = channels = rsum = None
-                err = None
-                try:
-                    img, channels = _decode_image(row.payload)
-                    width, height = img["width"], img["height"]
-                    rsum = sum(
-                        resize_nearest(
-                            img["pixels"], width, height, channels, out_w, out_h
-                        )
-                    )
-                except Exception as exc:
-                    err = f"ERR_IMG: {type(exc).__name__}: {exc}"[:200]
-                out["media_id"].append(row.media_id)
-                out["width"].append(width)
-                out["height"].append(height)
-                out["channels"].append(channels)
-                out["resized_sum"].append(rsum)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "payload").mapInPandas(
-        batches, schema=RESIZE_STATS_SCHEMA
-    )
-
-
 def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         out: dict[str, list] = {k: [] for k in MEDIA_META_SCHEMA.names}

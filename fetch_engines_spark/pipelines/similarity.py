@@ -139,22 +139,6 @@ def lsh_bucket_expr(vec_col, num_planes: int, dims: int, plane_offset: int = 0):
     return bucket
 
 
-def lsh_bucket_sql(vec: str, num_planes: int, dims: int, plane_offset: int = 0) -> str:
-    """DuckDB twin of lsh_bucket_expr: same weights, same exact integer
-    quantization (floor(x * 2^20) * w summed in integers), same sign test."""
-    terms = []
-    for p in range(num_planes):
-        weights = ", ".join(
-            str(int(hyperplane_weight(plane_offset + p, d))) for d in range(dims)
-        )
-        proj = (
-            f"list_sum(list_transform(range(1, {dims} + 1), "
-            f"i -> CAST(floor(CAST({vec}[i] AS DOUBLE) * {LSH_SCALE}) AS BIGINT) * ([{weights}])[i]))"
-        )
-        terms.append(f"CASE WHEN {proj} > 0 THEN {1 << p} ELSE 0 END")
-    return "(" + " + ".join(terms) + ")"
-
-
 def _weight_matrix(num_tables: int, planes_per_table: int, dims: int):
     """dims × (num_tables * planes_per_table) int64 hyperplane matrix,
     plane families disjoint per table (same weights as lsh_bucket_expr)."""
@@ -476,8 +460,7 @@ def kmeans_codebook(
     ``n_centroids`` vectors by id, assignment = integer squared-L2 argmin
     with lowest-id tiebreak, update = floor(componentwise sum / count)
     (empty cells keep their previous centroid) — every step is exact
-    int64 arithmetic the DuckDB twin replays verbatim
-    (``kmeans_cents_sql``).  Scale shape per iteration: the codebook is
+    int64 arithmetic.  Scale shape per iteration: the codebook is
     ONE broadcast row, assignment is a shuffle-free map, and the update
     is a posexplode + map-side-combinable (cell, dim) aggregation whose
     output is n_centroids×dims partials — the corpus itself never
@@ -748,7 +731,7 @@ def ivfpq_topk(
 
     All in the floor(x·1024) integer domain end-to-end (coarse Lloyd,
     residuals, per-subspace residual sub-codebooks, ADC sums), so the
-    DuckDB twin (``ivfpq_topk_sql``) replays it exactly.  Scale shape:
+    result is exact and engine-portable.  Scale shape:
     codebooks are broadcast rows, assignment/encoding/probing are
     shuffle-free argmin expressions over the scan, the corpus is stored
     as (cell, m byte codes) — ~dims·4/m compression — and scoring is
@@ -943,540 +926,3 @@ def doc_kmeans_clusters(
         F.col("vid").alias("doc_id"),
         _nearest(F.col("cb"), F.col("vq"))["cent_id"].alias("cell"),
     )
-
-
-# --- DuckDB oracle twin -------------------------------------------------------
-
-def cosine_bp_sql(a: str, b: str) -> str:
-    """DuckDB twin of cosine_bp (same fold order → same floored bp)."""
-    return (
-        f"CAST(floor(list_sum(list_transform(range(1, len({a}) + 1), "
-        f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE))) * 10000 "
-        f"/ greatest(sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) "
-        f"* sqrt(list_sum(list_transform({b}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 1e-12)) AS BIGINT)"
-    )
-
-
-def lsh_topk_sql(
-    k: int = 5, num_planes: int = 3, dims: int = 64, nq: int = 10
-) -> str:
-    """DuckDB twin of lsh_topk: same buckets, same cosine_bp, same ranking."""
-    bucket = lsh_bucket_sql("embedding", num_planes, dims)
-    return f"""
-WITH b AS (
-  SELECT vec_id AS vid, embedding AS vec, {bucket} AS bucket FROM embeddings
-),
-q AS (SELECT vid AS query_id, vec AS qv, bucket FROM b WHERE vid < {nq}),
-scored AS (
-  SELECT q.query_id, c.vid AS neighbor_id,
-         {cosine_bp_sql('q.qv', 'c.vec')} AS cosine_bp
-  FROM q JOIN b c ON q.bucket = c.bucket
-  WHERE c.vid <> q.query_id
-)
-SELECT query_id, neighbor_id, cosine_bp, rnk FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine_bp DESC, neighbor_id ASC) AS rnk
-  FROM scored
-) WHERE rnk <= {k}
-"""
-
-
-def embedding_pairs_oracle_sql(
-    source: str,
-    num_tables: int = 8,
-    planes_per_table: int = 8,
-    dims: int = 64,
-    threshold_bp: int | None = None,
-) -> str:
-    """DuckDB twin of embedding_candidate_pairs over an arbitrary source."""
-    per_table = "\nUNION ALL\n".join(
-        f"SELECT {t} AS table_id, vec_id AS vid, "
-        + lsh_bucket_sql("embedding", planes_per_table, dims, plane_offset=t * planes_per_table)
-        + f" AS bucket FROM {source}"
-        for t in range(num_tables)
-    )
-    thresh = f"WHERE cosine_bp >= {threshold_bp}" if threshold_bp is not None else ""
-    return f"""
-WITH tabled AS (
-  {per_table}
-),
-pairs AS (
-  SELECT DISTINCT l.vid AS vec_a, r.vid AS vec_b
-  FROM tabled l JOIN tabled r
-    ON l.table_id = r.table_id AND l.bucket = r.bucket AND l.vid < r.vid
-),
-verified AS (
-  SELECT p.vec_a, p.vec_b, {cosine_bp_sql('a.embedding', 'b.embedding')} AS cosine_bp
-  FROM pairs p
-  JOIN {source} a ON p.vec_a = a.vec_id
-  JOIN {source} b ON p.vec_b = b.vec_id
-)
-SELECT vec_a, vec_b, cosine_bp FROM verified {thresh}
-"""
-
-
-def lsh_topk_multi_sql(
-    k: int = 5,
-    num_tables: int = 8,
-    planes_per_table: int = 16,
-    dims: int = 64,
-    nq: int = 10,
-    source: str = "embeddings",
-) -> str:
-    """DuckDB twin of lsh_topk_multi: same disjoint plane families, same
-    any-table candidate union, same cosine_bp scoring and ranking."""
-    bucket_cols = ",\n    ".join(
-        lsh_bucket_sql("embedding", planes_per_table, dims, plane_offset=t * planes_per_table)
-        + f" AS t{t}"
-        for t in range(num_tables)
-    )
-    tabled = "\nUNION ALL\n".join(
-        f"SELECT vid, {t} AS table_id, t{t} AS bucket FROM wide"
-        for t in range(num_tables)
-    )
-    return f"""
-WITH wide AS (
-  SELECT vec_id AS vid,
-    {bucket_cols}
-  FROM {source}
-),
-tabled AS (
-  {tabled}
-),
-q AS (SELECT vid AS query_id, table_id, bucket FROM tabled WHERE vid < {nq}),
-cand AS (
-  SELECT DISTINCT q.query_id, c.vid AS neighbor_id
-  FROM q JOIN tabled c ON q.table_id = c.table_id AND q.bucket = c.bucket
-  WHERE c.vid <> q.query_id
-),
-scored AS (
-  SELECT cand.query_id, cand.neighbor_id,
-         {cosine_bp_sql('a.embedding', 'b.embedding')} AS cosine_bp
-  FROM cand
-  JOIN {source} a ON cand.query_id = a.vec_id
-  JOIN {source} b ON cand.neighbor_id = b.vec_id
-)
-SELECT query_id, neighbor_id, cosine_bp, rnk FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine_bp DESC, neighbor_id ASC) AS rnk
-  FROM scored
-) WHERE rnk <= {k}
-"""
-
-
-def embedding_pairs_capped_oracle_sql(
-    source: str,
-    num_tables: int = 8,
-    planes_per_table: int = 8,
-    dims: int = 64,
-    threshold_bp: int | None = None,
-    max_bucket_size: int = 50,
-) -> str:
-    """DuckDB twin of embedding_candidate_pairs(max_bucket_size=...): same
-    window sizing, same signature-star routing for degenerate buckets."""
-    bucket_cols = ",\n    ".join(
-        lsh_bucket_sql("embedding", planes_per_table, dims, plane_offset=t * planes_per_table)
-        + f" AS t{t}"
-        for t in range(num_tables)
-    )
-    sig = (
-        "md5(concat_ws('|', "
-        + ", ".join(f"CAST(t{t} AS VARCHAR)" for t in range(num_tables))
-        + "))"
-    )
-    tabled = "\nUNION ALL\n".join(
-        f"SELECT vid, sig_key, {t} AS table_id, t{t} AS bucket FROM wide"
-        for t in range(num_tables)
-    )
-    t_cols = ", ".join(f"t{t}" for t in range(num_tables))
-    thresh = f"WHERE cosine_bp >= {threshold_bp}" if threshold_bp is not None else ""
-    from .candidates import capped_pairs_sql_ctes
-
-    guard = capped_pairs_sql_ctes(
-        "tabled",
-        ["table_id", "bucket"],
-        "vid",
-        "sig_key",
-        max_bucket_size,
-        "vec_a",
-        "vec_b",
-    )
-    return f"""
-WITH base AS (
-  SELECT vec_id AS vid,
-    {bucket_cols}
-  FROM {source}
-),
-wide AS (
-  SELECT vid, {sig} AS sig_key, {t_cols} FROM base
-),
-tabled AS (
-  {tabled}
-),
-{guard},
-verified AS (
-  SELECT p.vec_a, p.vec_b, {cosine_bp_sql('a.embedding', 'b.embedding')} AS cosine_bp
-  FROM pairs p
-  JOIN {source} a ON p.vec_a = a.vec_id
-  JOIN {source} b ON p.vec_b = b.vec_id
-)
-SELECT vec_a, vec_b, cosine_bp FROM verified {thresh}
-"""
-
-
-def _quant_sql(vec_expr: str, dims: int, lo: int = 1, width: int | None = None) -> str:
-    """DuckDB twin of _quantize_vec over a slice: floor(x * 1024) int64."""
-    w = width if width is not None else dims
-    return (
-        f"list_transform(range(1, {w} + 1), "
-        f"i -> CAST(floor(CAST({vec_expr}[{lo} + i - 1] AS DOUBLE) * {KMEANS_SCALE}) AS BIGINT))"
-    )
-
-
-def _int_l2_sql(a: str, b: str, width: int) -> str:
-    """DuckDB twin of _int_l2 (order-free integer sum)."""
-    return (
-        f"list_sum(list_transform(range(1, {width} + 1), "
-        f"i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
-    )
-
-
-def kmeans_ctes(
-    vq_cte: str, n_centroids: int, n_iter: int, dims: int, prefix: str = ""
-) -> str:
-    """DuckDB twin of kmeans_codebook as a chain of CTE definitions (to
-    splice after a `{vq_cte}(vid, vq)` CTE): unrolled Lloyd iterations —
-    integer-L2 assignment with lowest-id tiebreak, floor(sum/count)
-    centroid update, empty cells carrying the previous centroid.  The
-    final centroid table is `{prefix}c{n_iter}`."""
-    d = _int_l2_sql("v.vq", "c.cv", dims)
-    comps = ", ".join(
-        f"CAST(floor(CAST(sum(vq[{i + 1}]) AS DOUBLE) / count(*)) AS BIGINT)"
-        for i in range(dims)
-    )
-    ctes = [
-        f"{prefix}c0 AS (SELECT vid AS cent_id, vq AS cv FROM {vq_cte} WHERE vid < {n_centroids})"
-    ]
-    for it in range(1, n_iter + 1):
-        ctes.append(
-            f"""{prefix}a{it} AS (
-  SELECT vid, vq, cell FROM (
-    SELECT v.vid, v.vq, c.cent_id AS cell,
-           row_number() OVER (PARTITION BY v.vid ORDER BY {d} ASC, c.cent_id ASC) AS rn
-    FROM {vq_cte} v CROSS JOIN {prefix}c{it - 1} c
-  ) WHERE rn = 1
-)"""
-        )
-        ctes.append(
-            f"{prefix}u{it} AS (SELECT cell, [{comps}] AS cv_new FROM {prefix}a{it} GROUP BY cell)"
-        )
-        ctes.append(
-            f"{prefix}c{it} AS (SELECT p.cent_id, coalesce(u.cv_new, p.cv) AS cv "
-            f"FROM {prefix}c{it - 1} p LEFT JOIN {prefix}u{it} u ON p.cent_id = u.cell)"
-        )
-    return ",\n".join(ctes)
-
-
-def ivf_topk_sql(
-    k: int = 5,
-    n_centroids: int = 8,
-    n_probe: int = 2,
-    nq: int = 10,
-    dims: int = 64,
-    n_iter: int = 2,
-) -> str:
-    """DuckDB twin of ivf_topk: same integer-exact k-means codebook, same
-    integer-L2 cell assignment/probing, same float cosine_bp scoring."""
-    d = _int_l2_sql("v.vq", "c.cv", dims)
-    return f"""
-WITH e AS (SELECT vec_id, embedding FROM embeddings),
-vq AS (SELECT vec_id AS vid, embedding AS vec, {_quant_sql('embedding', dims)} AS vq FROM e),
-{kmeans_ctes('vq', n_centroids, n_iter, dims)},
-assigned AS (
-  SELECT vid, vec, cell FROM (
-    SELECT v.vid, v.vec, c.cent_id AS cell,
-           row_number() OVER (PARTITION BY v.vid ORDER BY {d} ASC, c.cent_id ASC) AS rn
-    FROM vq v CROSS JOIN c{n_iter} c
-  ) WHERE rn = 1
-),
-q_cells AS (
-  SELECT query_id, qv, cell FROM (
-    SELECT v.vid AS query_id, v.vec AS qv, c.cent_id AS cell,
-           row_number() OVER (PARTITION BY v.vid ORDER BY {d} ASC, c.cent_id ASC) AS rn
-    FROM vq v CROSS JOIN c{n_iter} c
-    WHERE v.vid < {nq}
-  ) WHERE rn <= {n_probe}
-),
-candidates AS (
-  SELECT DISTINCT q.query_id, a.vid AS neighbor_id,
-         {cosine_bp_sql('q.qv', 'a.vec')} AS cosine_bp
-  FROM q_cells q JOIN assigned a ON q.cell = a.cell
-  WHERE a.vid <> q.query_id
-)
-SELECT query_id, neighbor_id, cosine_bp, rnk FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine_bp DESC, neighbor_id ASC) AS rnk
-  FROM candidates
-) WHERE rnk <= {k}
-"""
-
-
-BRUTE_FORCE_TOPK_SQL = """
-WITH q AS (
-  SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < {nq}
-),
-scored AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-    CAST(floor(
-      list_sum(list_transform(range(1, len(qv) + 1), i -> CAST(qv[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE))) * 10000
-      / greatest(
-          sqrt(list_sum(list_transform(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-          * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))),
-          1e-12)
-    ) AS BIGINT) AS cosine_bp
-  FROM q, embeddings e
-  WHERE e.vec_id <> q.query_id
-),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine_bp,
-         row_number() OVER (PARTITION BY query_id ORDER BY cosine_bp DESC, neighbor_id ASC) AS rnk
-  FROM scored
-)
-SELECT query_id, neighbor_id, cosine_bp, rnk FROM ranked WHERE rnk <= {k}
-"""
-
-
-def ivfpq_topk_sql(
-    k: int = 5,
-    n_centroids: int = 8,
-    n_probe: int = 2,
-    m: int = 4,
-    ks: int = 8,
-    dims: int = 64,
-    nq: int = 10,
-    n_iter: int = 2,
-) -> str:
-    """DuckDB twin of ivfpq_topk: same integer coarse k-means, same
-    residuals, same per-subspace residual sub-codebooks (unrolled Lloyd
-    chains), same (cell ∩ probed-cells, code) scoring joins."""
-    width = dims // m
-    d_coarse = _int_l2_sql("v.vq", "c.cv", dims)
-    cte_parts = [
-        f"vq AS (SELECT vec_id AS vid, {_quant_sql('embedding', dims)} AS vq FROM embeddings)",
-        kmeans_ctes("vq", n_centroids, n_iter, dims, prefix="g"),
-        f"""assigned AS (
-  SELECT vid, vq, cell FROM (
-    SELECT v.vid, v.vq, c.cent_id AS cell,
-           row_number() OVER (PARTITION BY v.vid ORDER BY {d_coarse} ASC, c.cent_id ASC) AS rn
-    FROM vq v CROSS JOIN gc{n_iter} c
-  ) WHERE rn = 1
-)""",
-        f"""resid AS (
-  SELECT a.vid, a.cell,
-         list_transform(range(1, {dims} + 1), i -> a.vq[i] - c.cv[i]) AS res
-  FROM assigned a JOIN gc{n_iter} c ON a.cell = c.cent_id
-)""",
-        f"""q_cells AS (
-  SELECT query_id, cell FROM (
-    SELECT v.vid AS query_id, c.cent_id AS cell,
-           row_number() OVER (PARTITION BY v.vid ORDER BY {d_coarse} ASC, c.cent_id ASC) AS rn
-    FROM vq v CROSS JOIN gc{n_iter} c
-    WHERE v.vid < {nq}
-  ) WHERE rn <= {n_probe}
-)""",
-        f"""qres AS (
-  SELECT q.query_id, q.cell,
-         list_transform(range(1, {dims} + 1), i -> v.vq[i] - c.cv[i]) AS res
-  FROM q_cells q
-  JOIN gc{n_iter} c ON q.cell = c.cent_id
-  JOIN vq v ON v.vid = q.query_id
-)""",
-    ]
-    for j in range(m):
-        lo = j * width + 1
-        slice_expr = (
-            f"list_transform(range(1, {width} + 1), i -> res[{lo} + i - 1])"
-        )
-        cte_parts.append(
-            f"s{j}res AS (SELECT vid, {slice_expr} AS vq FROM resid)"
-        )
-        cte_parts.append(kmeans_ctes(f"s{j}res", ks, n_iter, width, prefix=f"s{j}"))
-        d = _int_l2_sql("v.vq", "c.cv", width)
-        cte_parts.append(
-            f"""enc{j} AS (
-  SELECT vid, cent_id AS code{j} FROM (
-    SELECT v.vid, c.cent_id,
-           row_number() OVER (PARTITION BY v.vid ORDER BY {d} ASC, c.cent_id ASC) AS rn
-    FROM s{j}res v CROSS JOIN s{j}c{n_iter} c
-  ) WHERE rn = 1
-)"""
-        )
-        dq = _int_l2_sql("qs.vq", "c.cv", width)
-        cte_parts.append(
-            f"""qd{j} AS (
-  SELECT qs.query_id, qs.cell, c.cent_id, CAST({dq} AS BIGINT) AS d{j}
-  FROM (SELECT query_id, cell, {slice_expr} AS vq FROM qres) qs
-  CROSS JOIN s{j}c{n_iter} c
-)"""
-        )
-    enc_join = " ".join(f"JOIN enc{j} USING (vid)" for j in range(1, m))
-    code_cols = ", ".join(f"code{j}" for j in range(m))
-    qd_joins = "\n  ".join(
-        f"JOIN qd{j} q{j} ON q{j}.query_id = q0.query_id AND q{j}.cell = enc.cell AND q{j}.cent_id = enc.code{j}"
-        for j in range(1, m)
-    )
-    adc = " + ".join(f"q{j}.d{j}" for j in range(m))
-    ctes = ",\n".join(cte_parts)
-    return f"""
-WITH {ctes},
-enc AS (
-  SELECT r.vid, r.cell, {code_cols}
-  FROM resid r JOIN enc0 USING (vid) {enc_join}
-),
-scored AS (
-  SELECT q0.query_id, enc.vid AS neighbor_id,
-    CAST({adc} AS BIGINT) AS adc_dist
-  FROM enc
-  JOIN qd0 q0 ON q0.cell = enc.cell AND q0.cent_id = enc.code0
-  {qd_joins}
-  WHERE enc.vid <> q0.query_id
-)
-SELECT query_id, neighbor_id, adc_dist, rnk FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adc_dist ASC, neighbor_id ASC) AS rnk
-  FROM scored
-) WHERE rnk <= {k}
-"""
-
-
-def pq_topk_sql(
-    k: int = 5,
-    m: int = 4,
-    ks: int = 8,
-    dims: int = 64,
-    nq: int = 10,
-    n_iter: int = 2,
-) -> str:
-    """DuckDB twin of pq_topk: same per-subspace integer k-means
-    codebooks, same integer-L2 argmin encoding (lowest-id tiebreak), same
-    ADC sum, same ranking."""
-    width = dims // m
-    cte_parts = []
-    for j in range(m):
-        cte_parts.append(
-            f"s{j}vq AS (SELECT vec_id AS vid, "
-            f"{_quant_sql('embedding', dims, lo=j * width + 1, width=width)} AS vq "
-            f"FROM embeddings)"
-        )
-        cte_parts.append(kmeans_ctes(f"s{j}vq", ks, n_iter, width, prefix=f"s{j}"))
-        d = _int_l2_sql("v.vq", "c.cv", width)
-        cte_parts.append(
-            f"""enc{j} AS (
-  SELECT vid, cent_id AS code{j} FROM (
-    SELECT v.vid, c.cent_id,
-           row_number() OVER (PARTITION BY v.vid ORDER BY {d} ASC, c.cent_id ASC) AS rn
-    FROM s{j}vq v CROSS JOIN s{j}c{n_iter} c
-  ) WHERE rn = 1
-)"""
-        )
-        cte_parts.append(
-            f"qd{j} AS (SELECT v.vid AS query_id, c.cent_id, CAST({d} AS BIGINT) AS d{j} "
-            f"FROM s{j}vq v CROSS JOIN s{j}c{n_iter} c WHERE v.vid < {nq})"
-        )
-    enc_join = " ".join(f"JOIN enc{j} USING (vid)" for j in range(1, m))
-    code_cols = ", ".join(f"code{j}" for j in range(m))
-    qd_joins = "\n  ".join(
-        f"JOIN qd{j} q{j} ON q{j}.query_id = q0.query_id AND q{j}.cent_id = enc.code{j}"
-        for j in range(1, m)
-    )
-    adc = " + ".join(f"q{j}.d{j}" for j in range(m))
-    ctes = ",\n".join(cte_parts)
-    return f"""
-WITH {ctes},
-enc AS (SELECT enc0.vid, {code_cols} FROM enc0 {enc_join}),
-scored AS (
-  SELECT q0.query_id, enc.vid AS neighbor_id,
-    CAST({adc} AS BIGINT) AS adc_dist
-  FROM enc
-  JOIN qd0 q0 ON q0.cent_id = enc.code0
-  {qd_joins}
-  WHERE enc.vid <> q0.query_id
-)
-SELECT query_id, neighbor_id, adc_dist, rnk FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adc_dist ASC, neighbor_id ASC) AS rnk
-  FROM scored
-) WHERE rnk <= {k}
-"""
-
-
-def semantic_dedup_sql(
-    source: str,
-    n_centroids: int = 8,
-    threshold_bp: int = 9500,
-    n_iter: int = 2,
-    dims: int = 64,
-) -> str:
-    """DuckDB twin of semantic_dedup: same integer-exact k-means codebook
-    and cell assignment, same within-cluster cosine_bp compare, same
-    keep-the-lowest-id rule."""
-    d = _int_l2_sql("v.vq", "c.cv", dims)
-    return f"""
-WITH e AS (SELECT vec_id, embedding FROM {source}),
-vq AS (SELECT vec_id AS vid, embedding AS vec, {_quant_sql('embedding', dims)} AS vq FROM e),
-{kmeans_ctes('vq', n_centroids, n_iter, dims)},
-assigned AS (
-  SELECT vid, vec, cell FROM (
-    SELECT v.vid, v.vec, c.cent_id AS cell,
-           row_number() OVER (PARTITION BY v.vid ORDER BY {d} ASC, c.cent_id ASC) AS rn
-    FROM vq v CROSS JOIN c{n_iter} c
-  ) WHERE rn = 1
-),
-close AS (
-  SELECT a.vid AS id_a, b.vid AS id_b
-  FROM assigned a JOIN assigned b ON a.cell = b.cell AND a.vid < b.vid
-  WHERE {cosine_bp_sql('a.vec', 'b.vec')} >= {threshold_bp}
-),
-drops AS (SELECT id_b AS vid, CAST(count(*) AS BIGINT) AS n_close FROM close GROUP BY id_b)
-SELECT a.vid AS vec_id, a.cell,
-       coalesce(d.n_close, CAST(0 AS BIGINT)) AS n_close,
-       CAST(CASE WHEN d.vid IS NULL THEN 1 ELSE 0 END AS INT) AS keep
-FROM assigned a LEFT JOIN drops d ON a.vid = d.vid
-"""
-
-
-def doc_kmeans_clusters_sql(
-    n_centroids: int = 8,
-    n_iter: int = 2,
-    dims: int = 64,
-    source: str = "documents",
-    text_col: str = "text",
-) -> str:
-    """DuckDB twin of doc_kmeans_clusters: same signed-hashing embedding
-    (integer weights, zero-filled buckets), same unrolled Lloyd, same
-    integer-L2 assignment with lowest-id tiebreak."""
-    d = _int_l2_sql("v.vq", "c.cv", dims)
-    dense_cols = ", ".join(
-        f"CAST(coalesce(sum(CASE WHEN bucket = {i} THEN weight END), 0) AS DOUBLE)"
-        for i in range(dims)
-    )
-    return f"""
-WITH toks AS (
-  SELECT doc_id, unnest(string_split({text_col}, ' ')) AS tok FROM {source}
-),
-he AS (
-  SELECT doc_id,
-         CAST('0x' || substr(md5(tok), 1, 8) AS BIGINT) % {dims} AS bucket,
-         CASE WHEN substr(md5(tok), 9, 1) >= '8' THEN 1 ELSE -1 END AS s
-  FROM toks WHERE tok <> ''
-),
-weights AS (
-  SELECT doc_id, bucket, CAST(sum(s) AS BIGINT) AS weight
-  FROM he GROUP BY doc_id, bucket
-),
-dense AS (
-  SELECT doc_id, [{dense_cols}] AS vecd FROM weights GROUP BY doc_id
-),
-vq AS (SELECT doc_id AS vid, {_quant_sql('vecd', dims)} AS vq FROM dense),
-{kmeans_ctes('vq', n_centroids, n_iter, dims)}
-SELECT vid AS doc_id, cell FROM (
-  SELECT v.vid, c.cent_id AS cell,
-         row_number() OVER (PARTITION BY v.vid ORDER BY {d} ASC, c.cent_id ASC) AS rn
-  FROM vq v CROSS JOIN c{n_iter} c
-) WHERE rn = 1
-"""

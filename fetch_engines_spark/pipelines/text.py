@@ -2,10 +2,11 @@
 
 All operators are pure native-Column expressions (JVM-side, whole-stage
 codegen) over a ``documents(doc_id, text, ...)`` table: language-ID
-(stopword n-gram heuristic), quality scoring, token counting, and document
-fingerprinting.  Every operator has an exact ANSI-SQL twin used by the
-DuckDB oracle (``__spark_entry__.oracle_sql``), so arithmetic is kept
-integer/deterministic.
+(stopword n-gram heuristic), quality and repetition scoring, token
+counting, sampling, chunking and training-mix selection.  Arithmetic is
+kept integer/deterministic so results are portable across engines; the
+tests compare ``mixture_sample`` and ``lm_surprisal`` against their
+DuckDB twins (``mixture_sample_sql``, ``lm_surprisal_sql``).
 """
 
 from __future__ import annotations
@@ -280,46 +281,6 @@ def repetition_columns(text_col: str = "text") -> dict:
     }
 
 
-def vocab_topk(df: DataFrame, text_col: str = "text", k: int = 100) -> DataFrame:
-    """Corpus-wide vocabulary: top-k tokens by total frequency with
-    document frequency — the tokenizer-/vocab-building aggregation.
-
-    Scale shape: one explode, ONE map-side-combinable groupBy on the token
-    (count + approx-free distinct-doc count), then a distributed
-    TakeOrdered top-k (orderBy+limit compiles to per-partition heaps + a
-    k-row merge — no single-partition window over the full vocabulary).
-    Ties break to the lexicographically smaller token."""
-    from pyspark.sql import Window
-
-    toks = df.select(
-        F.col("doc_id"), F.explode(F.split(F.col(text_col), " ")).alias("token")
-    ).filter(F.col("token") != "")
-    counts = toks.groupBy("token").agg(
-        F.count("*").alias("freq"),
-        F.countDistinct("doc_id").alias("doc_freq"),
-    )
-    top = counts.orderBy(F.desc("freq"), F.asc("token")).limit(k)
-    w = Window.orderBy(F.desc("freq"), F.asc("token"))  # k rows only
-    return top.withColumn("rank", F.row_number().over(w))
-
-
-VOCAB_TOPK_SQL = """
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
-),
-counts AS (
-  SELECT token, CAST(count(*) AS BIGINT) AS freq,
-         CAST(count(DISTINCT doc_id) AS BIGINT) AS doc_freq
-  FROM toks WHERE token <> '' GROUP BY token
-)
-SELECT token, freq, doc_freq,
-       CAST(row_number() OVER (ORDER BY freq DESC, token ASC) AS INTEGER) AS rank
-FROM counts
-ORDER BY freq DESC, token ASC
-LIMIT {k}
-"""
-
-
 def sample_by_hash(df: DataFrame, rate_bp: int, key_col: str = "doc_id") -> DataFrame:
     """Deterministic, engine-portable corpus sampling: keep a row iff the
     first 8 hex digits of md5(key) fall under rate_bp/10000 of the 32-bit
@@ -333,14 +294,6 @@ def sample_by_hash(df: DataFrame, rate_bp: int, key_col: str = "doc_id") -> Data
         "long"
     )
     return df.filter(h < threshold)
-
-
-def sample_by_hash_sql(rate_bp: int, key_col: str = "doc_id", source: str = "documents") -> str:
-    threshold = (rate_bp * (1 << 32)) // 10000
-    return (
-        f"SELECT * FROM {source} WHERE "
-        f"CAST('0x' || substr(md5(CAST({key_col} AS VARCHAR)), 1, 8) AS BIGINT) < {threshold}"
-    )
 
 
 # Sentence boundary: after . ! or ? followed by whitespace.  Implemented
@@ -364,24 +317,6 @@ def doc_sentences(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.select(
         "doc_id", "sent_idx", "sentence", F.length("sentence").alias("n_chars")
     )
-
-
-def doc_sentences_sql(source: str = "documents", text_col: str = "text") -> str:
-    return rf"""
-WITH arr AS (
-  SELECT doc_id,
-    string_split(regexp_replace({text_col}, '([.!?])\s+', '\1' || chr(1), 'g'), chr(1)) AS sents
-  FROM {source}
-),
-s AS (
-  SELECT doc_id, unnest(sents) AS sentence,
-         generate_subscripts(sents, 1) - 1 AS sent_idx
-  FROM arr
-)
-SELECT doc_id, CAST(sent_idx AS INTEGER) AS sent_idx, sentence,
-       CAST(length(sentence) AS INTEGER) AS n_chars
-FROM s WHERE sentence <> ''
-"""
 
 
 def doc_chunks(df: DataFrame, max_tokens: int = 64, text_col: str = "text") -> DataFrame:
@@ -423,26 +358,6 @@ def doc_chunks(df: DataFrame, max_tokens: int = 64, text_col: str = "text") -> D
             " ",
         ).alias("chunk_text"),
     )
-
-
-def doc_chunks_sql(max_tokens: int = 64, source: str = "documents", text_col: str = "text") -> str:
-    sents = doc_sentences_sql(source, text_col)
-    return f"""
-WITH sents AS ({sents}),
-tok AS (
-  SELECT *, len(string_split_regex(trim(sentence), '\\s+')) AS n_tokens FROM sents
-),
-chunked AS (
-  SELECT *, CAST(floor((sum(n_tokens) OVER (PARTITION BY doc_id ORDER BY sent_idx
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens) / {max_tokens}) AS BIGINT) AS chunk_id
-  FROM tok
-)
-SELECT doc_id, chunk_id,
-       CAST(count(*) AS BIGINT) AS n_sentences,
-       CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-       string_agg(sentence, ' ' ORDER BY sent_idx) AS chunk_text
-FROM chunked GROUP BY doc_id, chunk_id
-"""
 
 
 def cap_per_stratum(
@@ -648,8 +563,7 @@ def count_min_sketch(
     into never-populated cells and report 0 — breaking the
     never-underestimate guarantee without an error).
 
-    Engine-portable hashing (``_cms_cells``) both engines replay exactly
-    (``count_min_estimate_sql``).  Plan shape: one token explode → one
+    Engine-portable hashing (``_cms_cells``).  Plan shape: one token explode → one
     map-side-combinable groupBy on (row, col); the combine collapses to
     ≤ depth·width partial cells per task, which is the sketch's
     bounded-memory property realized in the shuffle."""
@@ -720,108 +634,6 @@ def cms_estimate(sketch: DataFrame, tokens: list[str]) -> DataFrame:
         .groupBy("token")
         .agg(F.min(F.coalesce(F.col("n"), F.lit(0))).alias("cms_estimate"))
     )
-
-
-def count_min_estimate_sql(
-    tokens: list[str],
-    source: str = "documents",
-    depth: int = 4,
-    width: int = 1024,
-) -> str:
-    """DuckDB twin of count_min_sketch + cms_estimate for a probe set."""
-    probe_rows = ", ".join("('{}')".format(t.replace("'", "''")) for t in tokens)
-    row_branches = "\nUNION ALL\n".join(
-        f"SELECT {r} AS row, CAST('0x' || substr(md5('r{r}|' || tok), 1, 12) AS BIGINT) % {width} AS col FROM toks"
-        for r in range(depth)
-    )
-    probe_branches = "\nUNION ALL\n".join(
-        f"SELECT token, {r} AS row, CAST('0x' || substr(md5('r{r}|' || token), 1, 12) AS BIGINT) % {width} AS col FROM probes"
-        for r in range(depth)
-    )
-    return f"""
-WITH toks AS (SELECT unnest(string_split(text, ' ')) AS tok FROM {source}),
-cells AS (
-  {row_branches}
-),
-sketch AS (SELECT row, col, count(*) AS n FROM cells GROUP BY row, col),
-probes AS (SELECT * FROM (VALUES {probe_rows}) AS t(token)),
-pcells AS (
-  {probe_branches}
-)
-SELECT p.token, min(coalesce(s.n, 0)) AS cms_estimate
-FROM pcells p LEFT JOIN sketch s ON p.row = s.row AND p.col = s.col
-GROUP BY p.token
-"""
-
-
-def doc_term_scores(df: DataFrame, k: int = 5, text_col: str = "text") -> DataFrame:
-    """Per-document top-k salient terms by tf×idf — the keyword-extraction
-    step of corpus curation — using the LOG-FREE rational idf variant
-    (score_bp = floor(tf · N · 10000 / (df · doc_len))) so the value is
-    exact integer arithmetic in every engine; classic log-idf damping is a
-    one-line swap where cross-engine hash equality is not required.
-
-    Shape: one token explode feeding BOTH the tf aggregation and the
-    document-frequency aggregation, a broadcast of the (tiny) corpus
-    count, one join tf⨝df on the token, and a rank-k window (compiled to
-    WindowGroupLimit).  No full-vocab materialization on the driver."""
-    from pyspark.sql import Window
-
-    toks = df.select(
-        F.col("doc_id"), F.explode(F.split(F.col(text_col), " ")).alias("tok")
-    ).filter(F.col("tok") != "")
-    tf = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
-    doc_len = toks.groupBy("doc_id").agg(F.count("*").alias("doc_len"))
-    dfreq = (
-        toks.select("doc_id", "tok").distinct().groupBy("tok").agg(F.count("*").alias("df"))
-    )
-    n_docs = df.select(F.countDistinct("doc_id").alias("n_docs"))
-    scored = (
-        tf.join(dfreq, "tok")
-        .join(doc_len, "doc_id")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "doc_id",
-            "tok",
-            "tf",
-            "df",
-            F.floor(
-                F.col("tf") * F.col("n_docs") * 10000 / (F.col("df") * F.col("doc_len"))
-            )
-            .cast("long")
-            .alias("score_bp"),
-        )
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("score_bp"), F.asc("tok"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("doc_id", "tok", "tf", "df", "score_bp", "rnk")
-    )
-
-
-def doc_term_scores_sql(k: int = 5, source: str = "documents", text_col: str = "text") -> str:
-    return f"""
-WITH toks AS (
-  SELECT doc_id, unnest(string_split({text_col}, ' ')) AS tok FROM {source}
-),
-toks_f AS (SELECT * FROM toks WHERE tok <> ''),
-tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks_f GROUP BY doc_id, tok),
-doc_len AS (SELECT doc_id, count(*) AS doc_len FROM toks_f GROUP BY doc_id),
-dfreq AS (
-  SELECT tok, count(*) AS df FROM (SELECT DISTINCT doc_id, tok FROM toks_f) GROUP BY tok
-),
-n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM {source}),
-scored AS (
-  SELECT tf.doc_id, tf.tok, tf.tf, dfreq.df,
-         CAST(floor(tf.tf * n.n_docs * 10000 / (dfreq.df * doc_len.doc_len)) AS BIGINT) AS score_bp
-  FROM tf JOIN dfreq USING (tok) JOIN doc_len USING (doc_id) CROSS JOIN n
-)
-SELECT doc_id, tok, tf, df, score_bp, rnk FROM (
-  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score_bp DESC, tok ASC) AS rnk
-  FROM scored
-) WHERE rnk <= {k}
-"""
 
 
 def bm25_topk(
@@ -913,51 +725,6 @@ def bm25_topk(
     )
 
 
-def bm25_topk_sql(
-    query_terms: list[str],
-    k: int = 10,
-    source: str = "documents",
-    text_col: str = "text",
-) -> str:
-    """DuckDB twin of bm25_topk: same integer milli-scaled score, same
-    bin()-based idf quantization, same (score desc, doc_id) order."""
-    terms = [t.replace("'", "''") for t in query_terms]  # SQL-escape
-    tf_defs = ",\n        ".join(
-        f"len(list_filter(toks, x -> x = '{t}')) AS tf{i}"
-        for i, t in enumerate(terms)
-    )
-    df_defs = ",\n        ".join(
-        f"sum(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS df{i}"
-        for i in range(len(query_terms))
-    )
-    score_terms = " + ".join(
-        f"(CASE WHEN tf{i} > 0 THEN "
-        f"(length(bin((256 * (2 * n_docs + 2)) // (2 * df{i} + 1))) - 1)"
-        f" * ((2200000 * tf{i} * a) // (1000 * tf{i} * a + 300 * a + 900000 * dl))"
-        f" ELSE 0 END)"
-        for i in range(len(query_terms))
-    )
-    return f"""
-WITH d AS (
-  SELECT doc_id, list_filter(string_split({text_col}, ' '), x -> x <> '') AS toks
-  FROM {source}
-),
-pd AS (SELECT doc_id, len(toks) AS dl,
-        {tf_defs}
-  FROM d),
-st AS (SELECT count(*) AS n_docs, sum(dl) AS t_total,
-        {df_defs}
-  FROM pd),
-sc AS (
-  SELECT doc_id, CAST({score_terms} AS BIGINT) AS score_milli
-  FROM (SELECT pd.*, st.*, (1000 * st.t_total) // st.n_docs AS a FROM pd CROSS JOIN st)
-)
-SELECT doc_id, score_milli, rnk FROM (
-  SELECT *, row_number() OVER (ORDER BY score_milli DESC, doc_id ASC) AS rnk FROM sc
-) WHERE rnk <= {k}
-"""
-
-
 def hashed_embedding_entries(
     df: DataFrame, dims: int = 64, text_col: str = "text"
 ) -> DataFrame:
@@ -1005,100 +772,6 @@ def assemble_embedding_array(entries: DataFrame, dims: int = 64) -> DataFrame:
             ),
         ).alias("embedding"),
     )
-
-
-def hashed_embedding_sql(dims: int = 64, source: str = "documents", text_col: str = "text") -> str:
-    return f"""
-WITH toks AS (
-  SELECT doc_id, unnest(string_split({text_col}, ' ')) AS tok FROM {source}
-),
-hashed AS (
-  SELECT doc_id,
-         CAST('0x' || substr(md5(tok), 1, 8) AS BIGINT) % {dims} AS bucket,
-         CASE WHEN substr(md5(tok), 9, 1) >= '8' THEN 1 ELSE -1 END AS s
-  FROM toks WHERE tok <> ''
-)
-SELECT doc_id, bucket, CAST(sum(s) AS BIGINT) AS weight
-FROM hashed GROUP BY doc_id, bucket
-"""
-
-
-def fingerprint(text: Column) -> Column:
-    """Normalization fingerprint: md5 of the lowercased text with all
-    non-alphanumerics removed — a cheap canonical-form document hash for
-    exact-after-normalization dedup."""
-    return F.md5(F.lower(F.regexp_replace(text, r"[^A-Za-z0-9]", "")))
-
-
-# --- matching DuckDB SQL fragments (oracle twins) ---------------------------
-
-def _markers_in(lang: str) -> str:
-    """IN-list fragment GENERATED from LANG_MARKERS — the twins below must
-    not hand-copy the marker words (edits to the tuple would silently
-    desynchronize the oracle; see urls.registered_domain_sql for the
-    governing pattern)."""
-    return ",".join(f"'{w}'" for w in LANG_MARKERS[lang])
-
-
-LANG_ID_SQL = f"""
-WITH hits AS (
-  SELECT doc_id, lang, text,
-    len(list_filter(string_split(text, ' '), w -> w IN ({_markers_in('en')}))) AS hits_en,
-    len(list_filter(string_split(text, ' '), w -> w IN ({_markers_in('de')}))) AS hits_de,
-    len(list_filter(string_split(text, ' '), w -> w IN ({_markers_in('es')}))) AS hits_es,
-    len(list_filter(string_split(text, ' '), w -> w IN ({_markers_in('fr')}))) AS hits_fr
-  FROM documents
-)
-SELECT doc_id, hits_en, hits_de, hits_es, hits_fr,
-  CASE
-    WHEN greatest(hits_en, hits_de, hits_es, hits_fr) = 0 THEN 'unknown'
-    WHEN hits_en = greatest(hits_en, hits_de, hits_es, hits_fr) THEN 'en'
-    WHEN hits_de = greatest(hits_en, hits_de, hits_es, hits_fr) THEN 'de'
-    WHEN hits_es = greatest(hits_en, hits_de, hits_es, hits_fr) THEN 'es'
-    ELSE 'fr'
-  END AS lang_guess
-FROM hits
-"""
-
-QUALITY_SQL = f"""
-WITH f AS (
-  SELECT doc_id,
-    length(text) AS n_chars_computed,
-    len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
-    len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\\s]')) AS n_tokens_bpe,
-    len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct,
-    len(list_filter(string_split(text, ' '), w -> w IN ({_markers_in('en')}))) AS n_stop
-  FROM documents
-)
-SELECT doc_id, n_chars_computed, n_tokens, n_tokens_bpe, n_punct,
-  CAST(floor(n_punct * 10000 / greatest(n_chars_computed, 1)) AS BIGINT) AS punct_ratio_bp,
-  CAST(floor(n_stop * 10000 / greatest(n_tokens, 1)) AS BIGINT) AS stop_ratio_bp,
-  CAST(floor(n_chars_computed * 100 / greatest(n_tokens, 1)) AS BIGINT) AS mean_token_len_cp,
-  least(5, CAST(floor(n_tokens / 100) AS BIGINT))
-    + CASE WHEN CAST(floor(n_stop * 10000 / greatest(n_tokens, 1)) AS BIGINT) BETWEEN 100 AND 6000 THEN 2 ELSE 0 END
-    + CASE WHEN CAST(floor(n_punct * 10000 / greatest(n_chars_computed, 1)) AS BIGINT) <= 2000 THEN 1 ELSE 0 END
-    + CASE WHEN CAST(floor(n_chars_computed * 100 / greatest(n_tokens, 1)) AS BIGINT) BETWEEN 300 AND 1200 THEN 2 ELSE 0 END
-    AS quality_score
-FROM f
-"""
-
-
-WINNOWING_SQL = """
-WITH h AS (
-  SELECT doc_id,
-    list_transform(
-      range(0, greatest(len(string_split(text,' ')) - 3, 0) + 1),
-      i -> md5(array_to_string(list_slice(string_split(text,' '), i + 1, i + 3), ' '))
-    ) AS hashes
-  FROM documents
-)
-SELECT doc_id,
-  list_distinct(list_transform(
-    range(0, greatest(len(hashes) - 4, 0) + 1),
-    i -> list_min(list_slice(hashes, i + 1, i + 4))
-  )) AS fp_set
-FROM h
-"""
 
 
 # --- bigram-LM surprisal scoring (perplexity-style quality filter) ----------

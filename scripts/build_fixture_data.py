@@ -22,7 +22,6 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 from fetch_engines_spark.extract import convert_document
 from fetch_engines_spark.fixtures import FIXTURES, fixture_document_rows
-from fetch_engines_spark.pipelines.multimodal import encode_payload
 
 OUT = os.path.join(os.path.dirname(__file__), "..", "data", "fixtures")
 
@@ -105,69 +104,6 @@ def build_expected() -> None:
             }
         ),
         os.path.join(OUT, "expected_spans.parquet"),
-    )
-
-
-def build_media() -> None:
-    rows = []
-    for i in range(24):
-        kind = (i % 3) + 1  # 1=image 2=audio 3=video
-        width = 0 if kind == 2 else 160 + 16 * i
-        height = 0 if kind == 2 else 90 + 9 * i
-        n_frames = 1 if kind == 1 else 100 + i
-        body = bytes((j * 7 + i) % 256 for j in range(64 + i))
-        payload = encode_payload(kind, width, height, n_frames, body)
-        rows.append((f"m{i:03d}", payload, {1: "image", 2: "audio", 3: "video"}[kind], width, height, n_frames, len(payload)))
-    # one malformed payload to exercise the error path
-    rows.append(("m_bad", b"NOPE" + bytes(20), None, None, None, None, None))
-    pq.write_table(
-        pa.table(
-            {
-                "media_id": [r[0] for r in rows],
-                "payload": pa.array([r[1] for r in rows], pa.binary()),
-                "exp_kind": [r[2] for r in rows],
-                "exp_width": pa.array([r[3] for r in rows], pa.int32()),
-                "exp_height": pa.array([r[4] for r in rows], pa.int32()),
-                "exp_n_frames": pa.array([r[5] for r in rows], pa.int32()),
-                "exp_payload_bytes": pa.array([r[6] for r in rows], pa.int64()),
-            }
-        ),
-        os.path.join(OUT, "media.parquet"),
-    )
-
-
-def build_raw_content() -> None:
-    """S2 fixture: raw fetched payloads with MIME types, including non-UTF-8
-    charsets.  ``exp_text`` is the build-time Python-codec decode (the
-    charset declared in the MIME parameter), giving the DuckDB oracle an
-    engine-independent expected value — JVM decode vs Python codecs."""
-    rows = [
-        # (id, payload bytes, mime, charset for expected decode or None=binary)
-        ("r0", b"<html><body>hello</body></html>", "text/html; charset=utf-8", "utf-8"),
-        ("r1", b'{"k": 1}', "application/json", "utf-8"),
-        ("r2", b"PNGBYTES-0", "image/png", None),
-        ("r3", b"<svg><path d='M0 0'/></svg>", "image/svg+xml", "utf-8"),
-        ("r4", b"PDFBYTES-1", "application/pdf", None),
-        ("r5", b"<feed/>", "application/atom+xml", "utf-8"),
-        ("r6", b"plain text body", "text/plain", "utf-8"),
-        ("r7", b"AUDIOBYTES", "audio/mpeg", None),
-        ("r8", "café résumé ©1999".encode("latin-1"), "text/html; charset=ISO-8859-1", "iso-8859-1"),
-        ("r9", "naïve ±2°".encode("latin-1"), "text/plain; charset=latin-1", "iso-8859-1"),
-        ("r10", "utf16 павло ü".encode("utf-16"), "text/plain; charset=utf-16", "utf-16"),
-        ("r11", b"plain ascii only", "text/plain; charset=us-ascii", "us-ascii"),
-    ]
-    pq.write_table(
-        pa.table(
-            {
-                "content_id": [r[0] for r in rows],
-                "payload": pa.array([r[1] for r in rows], pa.binary()),
-                "mime": [r[2] for r in rows],
-                "exp_text": [
-                    (r[1].decode(r[3]) if r[3] else None) for r in rows
-                ],
-            }
-        ),
-        os.path.join(OUT, "raw_content.parquet"),
     )
 
 
@@ -431,124 +367,6 @@ def build_pdfs() -> None:
             }
         ),
         os.path.join(OUT, "pdfs.parquet"),
-    )
-
-
-def build_mixed_content() -> None:
-    """Mixed-format crawl slice for the end-to-end dispatch query: HTML
-    pages, text-PDFs, a JSON text payload, and an opaque binary, with the
-    expected route and span count recorded per row."""
-    from fetch_engines_spark.fixtures import FIXTURES_BY_ID
-    from fetch_engines_spark.pdf import parse_pdf_spans  # count check below
-
-    rows = []  # (content_id, mime, payload, exp_route, exp_n_spans)
-    for fid in ("F01", "F03", "F22"):
-        f = FIXTURES_BY_ID[fid]
-        n_spans = len(convert_document(f.html, f.base_url)[3])
-        rows.append(
-            (f"html-{fid}", "text/html; charset=utf-8", f.html.encode(), "html", n_spans)
-        )
-    # two text-PDFs (single-page and compressed), span counts per generator
-    s0 = b"\n".join(
-        [
-            _pdf_line(18, 72, 720, "Mixed Corpus Report"),
-            _pdf_line(11, 72, 690, "A pdf routed through the dispatcher."),
-        ]
-    )
-    pdf0 = _pdf_bytes([s0])
-    pdf1 = _pdf_bytes([s0], compress=True)
-    for i, payload in enumerate((pdf0, pdf1)):
-        assert len(parse_pdf_spans(payload)[0]) == 2
-        rows.append((f"pdf-{i}", "application/pdf", payload, "pdf", 2))
-    rows.append(("json-0", "application/json", b'{"k": [1, 2]}', "text", 0))
-    rows.append(("bin-0", "image/png", b"\x89PNG-fake", "binary", 0))
-
-    pq.write_table(
-        pa.table(
-            {
-                "content_id": [r[0] for r in rows],
-                "mime": [r[1] for r in rows],
-                "payload": pa.array([r[2] for r in rows], pa.binary()),
-                "exp_route": [r[3] for r in rows],
-                "exp_n_spans": pa.array([r[4] for r in rows], pa.int32()),
-            }
-        ),
-        os.path.join(OUT, "mixed_content.parquet"),
-    )
-
-
-def build_documents_jsonl() -> None:
-    """JSONL twin of documents_spans plus two corrupt lines (malformed
-    JSON; a record with no doc_id) to exercise reject routing."""
-    import json
-
-    rows = fixture_document_rows()
-    lines = [
-        json.dumps(
-            {
-                "doc_id": r["doc_id"],
-                "base_url": r["base_url"],
-                "canonical_url": r["canonical_url"],
-                "spans": r["spans"],
-            },
-            ensure_ascii=False,
-        )
-        for r in rows
-    ]
-    lines.insert(3, '{"doc_id": "BROKEN", "spans": [oops')  # malformed JSON
-    lines.append(json.dumps({"base_url": "https://x.example/", "spans": []}))  # no doc_id
-    with open(os.path.join(OUT, "documents_spans.jsonl"), "w") as f:
-        f.write("\n".join(lines) + "\n")
-
-
-def build_eval_cases() -> None:
-    """Release-gate eval matrix as a table (parity: the reference's
-    auto-render eval cases), so the gate itself is driver-oracle-checked."""
-    from fetch_engines_spark.evals import fixture_eval_cases
-
-    rows = fixture_eval_cases()
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": [r[0] for r in rows],
-                "name": [r[1] for r in rows],
-                "category": [r[2] for r in rows],
-                "archetype": [r[3] for r in rows],
-                "required_any": pa.array([r[4] for r in rows], pa.list_(pa.string())),
-                "min_text_length": pa.array([r[5] for r in rows], pa.int32()),
-                "gate": [r[6] for r in rows],
-            }
-        ),
-        os.path.join(OUT, "eval_cases.parquet"),
-    )
-
-
-def build_llm_responses() -> None:
-    """O7 fixture: raw structured-extraction model responses covering the
-    reference's NoObjectGenerated failure taxonomy (valid object, non-JSON
-    prose, JSON array, dot/space-prefixed keys, unknown keys, missing
-    fields, number-as-string, bool-as-string, truncated generation)."""
-    rows = [
-        ("d0", '{"title": "Widget", "price": 19.99, "in_stock": true}', "stop"),
-        ("d1", "Sure! Here is the data you asked for: title=Widget", "stop"),
-        ("d2", "[1, 2, 3]", "stop"),
-        ("d3", '{".title": "Widget", "price ": 3.5, "in_stock": true}', "stop"),
-        ("d4", '{"title": "W", "price": 1.5, "in_stock": false, "color": "red"}', "stop"),
-        ("d5", '{"title": "W"}', "stop"),
-        ("d6", '{"title": "W", "price": "$19.99", "in_stock": true}', "stop"),
-        ("d7", '{"title": "W", "price": 2.0, "in_stock": "yes"}', "stop"),
-        ("d8", '{"title": "W", "price": 2.0, "in_st', "length"),
-        ("d9", '{"title": "Gadget", "price": 5, "in_stock": false}', None),
-    ]
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": [r[0] for r in rows],
-                "response": [r[1] for r in rows],
-                "finish_reason": [r[2] for r in rows],
-            }
-        ),
-        os.path.join(OUT, "llm_responses.parquet"),
     )
 
 
@@ -2512,20 +2330,6 @@ def build_warc() -> None:
     )
 
 
-def build_events_csv() -> None:
-    """CSV crawl-dump slice with 2 planted corrupt lines (bad numeric,
-    truncated row) for the schema-enforced CSV source's reject routing."""
-    lines = []
-    for i in range(60):
-        ts = f"2024-01-{(i % 28) + 1:02d} {(i * 7) % 24:02d}:{(i * 13) % 60:02d}:{(i * 29) % 60:02d}"
-        etype = ["click", "view", "purchase", "signup", "error"][i % 5]
-        lines.append(f"{i},{ts},{i % 15},{etype},{(i * 37) % 1000}.{i % 100:02d}")
-    lines.insert(20, "not-a-number,2024-01-01 00:00:00,3,click,1.5")  # bad event_id
-    lines.insert(41, "9999")  # truncated row
-    with open(os.path.join(OUT, "events_dump.csv"), "w") as f:
-        f.write("\n".join(lines) + "\n")
-
-
 def build_skewed_embeddings() -> None:
     """Adversarial embedding corpus for the LSH bucket-cap guard: the
     neardup_embeddings layout (40 planted families + noise) PLUS two
@@ -2575,7 +2379,6 @@ def build_skewed_embeddings() -> None:
     )
 
 
-
 def build_spans_boilerplate() -> None:
     """Interleaved span docs with PLANTED corpus-level boilerplate for
     strip_boilerplate_spans: a nav span in all 40 docs, a footer in the
@@ -2621,13 +2424,7 @@ if __name__ == "__main__":
     build_pages()
     build_documents_spans()
     build_expected()
-    build_media()
     build_pdfs()
-    build_mixed_content()
-    build_raw_content()
-    build_eval_cases()
-    build_documents_jsonl()
-    build_llm_responses()
     build_neardup_corpus()
     build_neardup_hi_corpus()
     build_adversarial_corpus()
@@ -2644,6 +2441,5 @@ if __name__ == "__main__":
     build_documents_media()
     build_avi_videos()
     build_avi_neardup()
-    build_events_csv()
     build_spans_boilerplate()
     print(f"wrote fixture data to {OUT}")

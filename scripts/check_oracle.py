@@ -16,7 +16,7 @@ import pandas as pd
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-TABLES = "events documents embeddings".split()
+TABLES = ["documents"]
 
 
 def canon(df: pd.DataFrame) -> list[tuple]:

@@ -188,60 +188,6 @@ def test_salted_repartition_spreads_hot_doc_id(spark):
     assert parts > 1
 
 
-def test_jsonl_ingest_routes_rejects(spark):
-    """JSONL source: valid docs equal the parquet rows; the 2 planted
-    corrupt lines (malformed JSON, record without doc_id) land in rejects."""
-    import os
-
-    from fetch_engines_spark.sources import read_documents_jsonl
-
-    fixtures = os.path.join(os.path.dirname(__file__), "..", "data", "fixtures")
-    docs, rejects = read_documents_jsonl(
-        spark, os.path.join(fixtures, "documents_spans.jsonl")
-    )
-    pq = spark.read.parquet(os.path.join(fixtures, "documents_spans.parquet"))
-    assert docs.count() == pq.count()
-    bad = rejects.collect()
-    assert len(bad) == 2
-    assert any("oops" in r.raw_line for r in bad)
-    # spans survive the JSON round-trip exactly
-    j = {r.doc_id: r.spans for r in docs.collect()}
-    p = {r.doc_id: r.spans for r in pq.collect()}
-    assert j == p
-
-
-def test_csv_ingest_routes_rejects(spark):
-    """CSV source: 60 valid rows pass; the 2 planted corrupt lines (bad
-    numeric in a required field, truncated row) land in rejects with the
-    raw line preserved."""
-    import os
-
-    from fetch_engines_spark.sources import read_events_csv
-
-    fixtures = os.path.join(os.path.dirname(__file__), "..", "data", "fixtures")
-    events, rejects = read_events_csv(spark, os.path.join(fixtures, "events_dump.csv"))
-    assert events.count() == 60
-    assert events.filter("event_id IS NULL OR ts IS NULL").count() == 0
-    bad = sorted(r.raw_line for r in rejects.collect())
-    assert len(bad) == 2
-    assert bad[0] == "9999"
-    assert bad[1].startswith("not-a-number")
-
-
-def test_csv_schema_ddl_with_parameterized_types(spark, tmp_path):
-    """DDL column-name parsing must survive commas inside type params."""
-    from fetch_engines_spark.sources import read_events_csv
-
-    p = tmp_path / "d.csv"
-    p.write_text("1,10.25,x\n2,3.50,y\nbad,1.00,z\n")
-    rows, rejects = read_events_csv(
-        spark, str(p), schema_ddl="id BIGINT, amount DECIMAL(18,2), tag STRING"
-    )
-    got = {r.id: (str(r.amount), r.tag) for r in rows.collect()}
-    assert got == {1: ("10.25", "x"), 2: ("3.50", "y")}
-    assert rejects.count() == 1
-
-
 def test_html_assembly_edge_shapes(spark):
     """The native span→html assembly on contract-edge documents: null and
     empty span arrays, media-only docs, empty-text html spans, out-of-order
@@ -419,3 +365,31 @@ def test_drop_zip_importers_keeps_archive_imports_working(tmp_path):
         sys.modules.update(saved_modules)
         sys.path_importer_cache.clear()
         sys.path_importer_cache.update(saved_cache)
+
+
+def test_pyfiles_zip_drops_deleted_module(tmp_path, monkeypatch):
+    """A module deleted from the package must leave the --py-files zip on
+    the next build, even though no remaining source is newer than the
+    cached zip; otherwise workers keep importing the deleted code."""
+    import zipfile
+
+    from fetch_engines_spark import packaging
+
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "a.py").write_text("A = 1\n")
+    (pkg / "b.py").write_text("B = 2\n")
+    monkeypatch.setattr(packaging, "package_root", lambda: pkg)
+    dest = str(tmp_path / "out.zip")
+
+    assert packaging.build_pyfiles_zip(dest) == dest
+    with zipfile.ZipFile(dest) as zf:
+        assert "fetch_engines_spark/b.py" in zf.namelist()
+
+    (pkg / "b.py").unlink()
+    packaging.build_pyfiles_zip(dest)
+    with zipfile.ZipFile(dest) as zf:
+        names = zf.namelist()
+    assert "fetch_engines_spark/b.py" not in names
+    assert sorted(names) == ["fetch_engines_spark/__init__.py", "fetch_engines_spark/a.py"]

@@ -3,11 +3,12 @@
 100 TB behavior, checked at tiny scale.
 """
 
-import pytest
+import os
 
 import __spark_entry__ as entrymod
 
 SF = "/root/testdata/sf0.001"
+FIXTURES = os.path.join(os.path.dirname(__file__), "..", "data", "fixtures")
 
 
 def plan_of(df) -> str:
@@ -44,7 +45,10 @@ def test_classifier_queries_have_no_python(spark):
 
 
 def test_embedding_topk_broadcasts_queries(spark):
-    df = entrymod.queries()["embedding_topk"](spark, SF)
+    from fetch_engines_spark.pipelines.similarity import brute_force_topk
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    df = brute_force_topk(emb, k=5, query_ids=list(range(10)))
     plan = plan_of(df)
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
@@ -53,7 +57,12 @@ def test_embedding_candidate_pairs_has_no_cartesian(spark):
     """Multi-table LSH dedup must candidate via bucket equi-joins — never a
     cross/nested-loop join over the corpus (the all-pairs anti-pattern that
     cannot survive 10^9 vectors)."""
-    df = entrymod.queries()["dedup_embedding"](spark, SF)
+    from fetch_engines_spark.pipelines.similarity import embedding_candidate_pairs
+
+    emb = spark.read.parquet(f"{FIXTURES}/neardup_embeddings.parquet")
+    df = embedding_candidate_pairs(
+        emb, num_tables=8, planes_per_table=8, dims=64, threshold_bp=9500
+    )
     plan = plan_of(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -64,7 +73,13 @@ def test_embedding_capped_pairs_no_cartesian_single_arrow(spark):
     shape: no cross/nested-loop joins, and the bucket matmul runs ONCE —
     the materialized index feeds every branch (the downstream plan reads
     the checkpointed RDD; without it the Arrow stage appeared 4x)."""
-    df = entrymod.queries()["dedup_embedding_capped"](spark, SF)
+    from fetch_engines_spark.pipelines.similarity import embedding_candidate_pairs
+
+    emb = spark.read.parquet(f"{FIXTURES}/skewed_embeddings.parquet")
+    df = embedding_candidate_pairs(
+        emb, num_tables=8, planes_per_table=8, dims=64, threshold_bp=9500,
+        max_bucket_size=50,
+    )
     plan = plan_of(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -86,7 +101,12 @@ def test_lsh_topk_multi_candidates_are_equi_joins(spark):
     equi-joins with the query side broadcast — never a corpus-wide
     nested-loop — and scoring happens on the candidate set, not L copies
     of the corpus."""
-    df = entrymod.queries()["embedding_topk_lsh"](spark, SF)
+    from fetch_engines_spark.pipelines.similarity import lsh_topk_multi
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    df = lsh_topk_multi(
+        emb, k=5, num_tables=8, planes_per_table=16, dims=64, query_ids=list(range(10))
+    )
     plan = plan_of(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -112,7 +132,10 @@ def test_minhash_fast_signatures_single_shuffle(spark):
 
 
 def test_capped_pairs_no_python_and_no_cartesian(spark):
-    df = entrymod.queries()["dedup_minhash_capped"](spark, SF)
+    from fetch_engines_spark.pipelines.dedup import minhash_candidate_pairs
+
+    docs = spark.read.parquet(f"{FIXTURES}/adversarial.parquet")
+    df = minhash_candidate_pairs(docs, num_hashes=4, band_size=2, max_bucket_size=50)
     plan = plan_of(df)
     assert "CartesianProduct" not in plan
     for marker in ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
@@ -128,7 +151,10 @@ def test_simhash_capped_pairs_no_python_and_no_cartesian(spark):
     checkpoint-materialized so the join/verify plan itself is pure JVM
     (the checkpointed RDD feeds both join sides and the hamming
     verify)."""
-    df = entrymod.queries()["dedup_simhash_capped"](spark, SF)
+    from fetch_engines_spark.pipelines.dedup import simhash_candidate_pairs64
+
+    docs = spark.read.parquet(f"{FIXTURES}/adversarial.parquet")
+    df = simhash_candidate_pairs64(docs, max_hamming=3, max_bucket_size=50)
     plan = plan_of(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -139,27 +165,12 @@ def test_simhash_capped_pairs_no_python_and_no_cartesian(spark):
     assert "ExistingRDD" in plan  # localCheckpoint-materialized signatures
 
 
-def test_structured_validation_is_native_columns(spark):
-    """The NoObjectGenerated taxonomy must be pure JVM columns (from_json
-    twice) — no Python stage."""
-    df = entrymod.queries()["structured_validation"](spark, SF)
-    plan = plan_of(df)
-    for marker in ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert marker not in plan
-
-
-def test_jsonl_ingest_single_scan_no_inference(spark):
-    """Schema-enforced JSONL: one text scan + from_json — no sampling/
-    inference pass (a second full read at 100 TB)."""
-    df = entrymod.queries()["jsonl_ingest"](spark, SF)
-    plan = plan_of(df)
-    assert plan.count("FileScan") == 1, plan
-
-
 def test_repetition_features_is_shuffle_free_native(spark):
     """Gopher repetition signals must run inside the scan stage: zero
     exchanges, zero Python — pure higher-order functions per document."""
-    df = entrymod.queries()["text_repetition"](spark, SF)
+    from fetch_engines_spark.pipelines.text import repetition_features
+
+    df = repetition_features(spark.read.parquet(f"{SF}/documents.parquet"))
     plan = plan_of(df)
     assert "Exchange" not in plan, plan
     for marker in ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
@@ -170,7 +181,9 @@ def test_dedup_substring_shape(spark):
     """Substring dedup: per-doc distinct windows BEFORE the explode (no
     dedup shuffle), one partial-agg'd count, one equi-join — and no
     cartesian/python anywhere."""
-    df = entrymod.queries()["dedup_substring"](spark, SF)
+    from fetch_engines_spark.pipelines.dedup import duplicated_ngram_stats
+
+    df = duplicated_ngram_stats(spark.read.parquet(f"{SF}/documents.parquet"), n=8)
     plan = plan_of(df)
     assert "CartesianProduct" not in plan
     assert "partial_count" in plan  # map-side combine on the window freq
@@ -178,20 +191,13 @@ def test_dedup_substring_shape(spark):
         assert marker not in plan
 
 
-def test_url_queries_native_single_agg(spark):
-    """URL canonicalization is pure native columns; domain stats is one
-    map-side-combinable aggregation."""
-    plan = plan_of(entrymod.queries()["url_canonicalize"](spark, SF))
-    assert "Exchange" not in plan and "Python" not in plan, plan
-    plan2 = plan_of(entrymod.queries()["url_domain_stats"](spark, SF))
-    for marker in ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert marker not in plan2
-
-
 def test_pq_topk_broadcast_lookups_no_cartesian(spark):
     """PQ ADC scoring must be broadcast equi-joins on the code columns —
     the corpus never shuffles and there is no cartesian/python stage."""
-    df = entrymod.queries()["embedding_topk_pq"](spark, SF)
+    from fetch_engines_spark.pipelines.similarity import pq_topk
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    df = pq_topk(emb, k=5, m=4, ks=8, query_ids=list(range(10)))
     plan = plan_of(df)
     assert "CartesianProduct" not in plan
     for marker in ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
@@ -204,7 +210,16 @@ def test_fuzzy_decontamination_corpus_never_sort_merge_joins(spark):
     (bench band index, candidate-id semi-join, candidate pairs, bench
     shingles): a SortMergeJoin here means the 10^12-doc corpus shuffles
     on doc_id just to keep a benchmark-bounded candidate set."""
-    df = entrymod.queries()["decontaminate_fuzzy"](spark, SF)
+    from pyspark.sql import functions as F
+
+    from fetch_engines_spark.pipelines.dedup import decontaminate_fuzzy
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    bench = docs.filter(F.col("doc_id") % 25 == 0).select(
+        "doc_id",
+        F.expr("substring(text, 1, greatest(length(text) - 30, 50))").alias("text"),
+    )
+    df = decontaminate_fuzzy(docs, bench, threshold_bp=5000, max_bucket_size=2000)
     plan = plan_of(df)
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") >= 4
@@ -229,17 +244,6 @@ def test_lsh_topk_allpairs_does_not_broadcast_corpus(spark):
     bounded = lsh_topk(emb, k=3, num_planes=2, dims=8, query_ids=[0, 1])
     assert "hint" in analyzed(bounded).lower()
     assert "BroadcastHashJoin" in plan_of(bounded)
-
-
-def test_resource_blocking_is_shuffle_free_native(spark):
-    """S5 blocking verdicts are one compiled rlike + isin riding the
-    scan: zero Exchange, zero Python — the blocklist never becomes a
-    join."""
-    df = entrymod.queries()["resource_blocking"](spark, SF)
-    plan = plan_of(df)
-    assert "Exchange" not in plan, plan
-    for marker in ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert marker not in plan
 
 
 def test_banded_hamming_pairs_no_cartesian_jvm_verify(spark):
@@ -300,7 +304,10 @@ def test_semantic_dedup_no_python_and_codebook_broadcast(spark):
     expressions over a broadcast 1-row codebook (the only cross join is
     that broadcast), the within-cell compare is the shared capped
     equi-join — no Python stages, no cartesian/nested-loop pair join."""
-    df = entrymod.queries()["dedup_semantic"](spark, SF)
+    from fetch_engines_spark.pipelines.similarity import semantic_dedup
+
+    emb = spark.read.parquet(f"{FIXTURES}/neardup_embeddings.parquet")
+    df = semantic_dedup(emb, n_centroids=8, threshold_bp=9500, n_iter=2)
     plan = plan_of(df)
     assert "CartesianProduct" not in plan
     for marker in ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
@@ -315,7 +322,19 @@ def test_bloom_gate_is_native_equi_join(spark):
     """The bloom membership test is one equi-join on word_id + one
     combinable groupBy — no Python stages, no cartesian, and the literal
     mask array is constant-folded into the projection."""
-    df = entrymod.queries()["dedup_bloom_gate"](spark, SF)
+    from pyspark.sql import functions as F
+
+    from fetch_engines_spark.pipelines.dedup import bloom_build, bloom_gate
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    hist = docs.filter(F.col("doc_id") < 250).select(F.md5("text").alias("key"))
+    bloom = bloom_build(hist, "key", m_bits=2048, k_hashes=3)
+    q = docs.select("doc_id", F.md5("text").alias("key"))
+    df = bloom_gate(q, bloom, "key", "doc_id", m_bits=2048, k_hashes=3).select(
+        "doc_id",
+        (F.col("doc_id") < 250).cast("int").alias("in_history"),
+        "maybe_present",
+    )
     plan = plan_of(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -328,7 +347,10 @@ def test_bm25_topk_is_take_ordered_no_shuffle_scoring(spark):
     size(filter(...)) — no explode, no shuffle); stats are a 1-row
     broadcast; the top-k compiles to TakeOrderedAndProject, so the
     corpus is never globally sorted."""
-    df = entrymod.queries()["doc_bm25_topk"](spark, SF)
+    from fetch_engines_spark.pipelines.text import bm25_topk
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    df = bm25_topk(docs, ["customer", "scan", "dup"], k=10)
     plan = plan_of(df)
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
@@ -341,7 +363,24 @@ def test_boilerplate_strip_is_native_equi_join(spark):
     """Boilerplate-span removal: explode + combinable distinct-doc count +
     one equi-join on the text hash + one reassembly groupBy — no Python
     stages, no cartesian."""
-    df = entrymod.queries()["spans_boilerplate_strip"](spark, SF)
+    from pyspark.sql import functions as F
+
+    from fetch_engines_spark.pipelines.curation import strip_boilerplate_spans
+
+    docs = spark.read.parquet(f"{FIXTURES}/spans_boilerplate.parquet")
+    out = strip_boilerplate_spans(docs, min_docs=3)
+    ex = out.select(
+        "doc_id", "n_text_removed", F.posexplode("spans").alias("new_pos", "s")
+    )
+    df = ex.select(
+        "doc_id",
+        F.col("new_pos").cast("int").alias("new_pos"),
+        F.col("s.kind").alias("kind"),
+        F.col("s.text").alias("text"),
+        F.col("s.media_ref").alias("media_ref"),
+        F.col("s.offset").alias("offset"),
+        "n_text_removed",
+    )
     plan = plan_of(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -356,7 +395,12 @@ def test_mixture_sample_bucketed_rank_no_stratum_wide_window(spark):
     stratum at 100 TB).  Bucket offsets + caps ride as a
     BroadcastHashJoin build side; the corpus shuffles once for the
     bucketed window."""
-    df = entrymod.queries()["mixture_sample"](spark, SF)
+    from fetch_engines_spark.pipelines.text import mixture_sample
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    df = mixture_sample(docs, {"src0": 5000, "src1": 3000, "src2": 2000}).select(
+        "doc_id", "source", "mix_rank"
+    )
     plan = plan_of(df)
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
