@@ -73,6 +73,35 @@ METRICS_SCHEMA = StructType(
 )
 
 
+def _ledger_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """``LEDGER_SCHEMA`` rows as a DataFrame decoded JVM-side from Arrow.
+
+    ``createDataFrame`` over a list of rows runs Python tasks, which start a
+    Python worker for nothing more than a ledger row; an Arrow table is
+    decoded by the JVM, so the extract stage runs Python only in its
+    ``mapInArrow``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(LEDGER_SCHEMA)
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=schema)
+    return spark.createDataFrame(table, LEDGER_SCHEMA)
+
+
+def _holds_data(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists and lists an entry that is not hidden (names
+    starting with ``_`` or ``.``, which Spark's file listing skips)."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(hpath):
+        return False
+    return any(
+        not st.getPath().getName().startswith(("_", ".")) for st in fs.listStatus(hpath)
+    )
+
+
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn("bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
 
@@ -86,15 +115,20 @@ def completed_buckets(
 ) -> DataFrame:
     """Buckets already marked done for this run (empty df if no ledger yet).
 
+    A ledger directory that is missing, or holds only hidden entries (a
+    crash during the first append leaves just ``_temporary/``), means no
+    ledger yet; any other load error propagates, so a corrupt ledger stops
+    the job instead of making it redo every bucket.
+
     When ``n_buckets`` is given, fail fast if the ledger recorded a
     different bucketing for this run_id: bucket ids from a different
     n_buckets denote different document sets, so silently reusing them
     would skip or double-process documents.
     """
-    try:
-        ledger = spark.read.format(table_format).load(f"{root}/partition_ledger")
-    except Exception:
-        return spark.createDataFrame([], "bucket int")
+    path = f"{root}/partition_ledger"
+    if not _holds_data(spark, path):
+        return _ledger_frame(spark, []).select("bucket")
+    ledger = spark.read.format(table_format).load(path)
     mine = ledger.filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
     if n_buckets is not None and "n_buckets" in ledger.columns:
         mismatched = (
@@ -134,7 +168,7 @@ def run_extraction_job(
     todo = sorted(set(range(n_buckets)) - done_set)
 
     def append_ledger(rows):
-        spark.createDataFrame(rows, LEDGER_SCHEMA).write.mode("append").format(
+        _ledger_frame(spark, rows).write.mode("append").format(
             table_format
         ).save(f"{root}/partition_ledger")
 

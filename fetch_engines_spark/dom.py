@@ -54,10 +54,6 @@ class TextNode:
         self.parent = parent
 
     @property
-    def is_element(self) -> bool:
-        return False
-
-    @property
     def text_content(self) -> str:
         return self.text
 
@@ -78,10 +74,6 @@ class Element:
         self.parent: Element | None = None
 
     # --- basic tree ops -------------------------------------------------
-    @property
-    def is_element(self) -> bool:
-        return True
-
     def append_child(self, node: "Element | TextNode") -> None:
         node.parent = self
         self.children.append(node)
@@ -145,15 +137,6 @@ class Element:
         return "".join(out)
 
     # --- traversal ---------------------------------------------------------
-    def iter_elements(self):
-        """Yield descendant elements in document (pre-)order, excluding self."""
-        stack: list[Element | TextNode] = list(reversed(self.children))
-        while stack:
-            n = stack.pop()
-            if isinstance(n, Element):
-                yield n
-                stack.extend(reversed(n.children))
-
     def query_selector_all(self, selector: str) -> list["Element"]:
         sl = parse_selector_list(selector)
         out: list[Element] = []

@@ -61,6 +61,14 @@ def get_spark(
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
         .config("spark.sql.session.timeZone", "UTC")
+        # One Python worker pool per executor: PySpark starts a daemon and
+        # its workers per distinct worker env, and SQL runners (mapInArrow)
+        # add SPARK_SIMPLIFIED_TRACEBACK=1 where RDD-side Python
+        # (createDataFrame from rows) would not.  The value must match what
+        # SQL runners add ("1").  Side effect: worker tracebacks stay
+        # simplified even with
+        # spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled off.
+        .config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # Shuffle/spill to tmpfs when available: on this single-node sandbox

@@ -2,9 +2,11 @@
 per-partition lineage + metrics)."""
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from fetch_engines_spark.checkpoint import (
+    LEDGER_SCHEMA,
     completed_buckets,
     run_extraction_job,
     with_bucket,
@@ -26,6 +28,7 @@ def test_full_run_writes_outputs_ledger_metrics(spark, documents, tmp_path):
     out = spark.read.parquet(f"{root}/outputs")
     assert out.count() == documents.count()
     ledger = spark.read.parquet(f"{root}/partition_ledger")
+    assert ledger.schema == LEDGER_SCHEMA
     assert ledger.filter("status = 'done'").count() == 4
     assert ledger.agg(F.sum("doc_count")).collect()[0][0] == documents.count()
     metrics = spark.read.parquet(f"{root}/metrics")
@@ -136,6 +139,30 @@ def test_empty_buckets_on_fresh_root_complete(spark, documents, tmp_path, n_docs
     summary2 = run_extraction_job(spark, tiny, root, run_id="tiny", n_buckets=64)
     assert summary2["processed_buckets"] == 0
     assert summary2["skipped_buckets"] == 64
+
+
+@pytest.mark.parametrize("layout", ["missing", "hidden_only"])
+def test_completed_buckets_without_ledger_data_is_empty(spark, tmp_path, layout):
+    """A missing ledger, or one holding only hidden entries (a crash during
+    the first append leaves just ``_temporary/``), reads as no bucket done."""
+    root = tmp_path / "ckpt"
+    if layout == "hidden_only":
+        (root / "partition_ledger" / "_temporary" / "0").mkdir(parents=True)
+        (root / "partition_ledger" / "_SUCCESS").write_bytes(b"")
+    done = completed_buckets(spark, str(root), "r", n_buckets=4)
+    assert done.columns == ["bucket"]
+    assert done.collect() == []
+
+
+def test_corrupt_ledger_fails_the_job(spark, documents, tmp_path):
+    """A ledger that exists but cannot be read stops the job; it is not
+    taken for "nothing done yet", which would redo every bucket."""
+    root = tmp_path / "ckpt"
+    (root / "partition_ledger").mkdir(parents=True)
+    (root / "partition_ledger" / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Py4JJavaError, match="CANNOT_READ_FILE_FOOTER"):
+        run_extraction_job(spark, documents, str(root), run_id="bad", n_buckets=4)
+    assert not (root / "outputs").exists()
 
 
 def test_resume_with_mismatched_n_buckets_fails_fast(spark, documents, tmp_path):
