@@ -17,10 +17,13 @@ this stage via :func:`salted_repartition`; Arrow batch size is bounded by
 from __future__ import annotations
 
 import functools
+import itertools
 import re
 import sys
 import time
 import zipimport
+from array import array
+from operator import itemgetter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -213,6 +216,58 @@ def convert_document(
     return title, markdown, error, out_spans, in_bytes
 
 
+def _offsets_buffer(lengths):
+    """int32 Arrow offsets (``0`` then the running sums of ``lengths``);
+    raises ``OverflowError`` once a sum passes the int32 range."""
+    import pyarrow as pa
+
+    return pa.py_buffer(array("i", itertools.accumulate(lengths, initial=0)))
+
+
+def _arrow_array(values: list, type_):
+    """One Arrow array of ``type_`` from a list of Python values.
+
+    Builds the buffers itself and hands them to ``pa.Array.from_buffers``:
+    in pyarrow 16, ``pa.array`` and ``RecordBatch.from_pydict`` import
+    pandas (+41 MB per worker, unused by the extraction stage).  Covers
+    ``OUTPUT_SCHEMA``'s Arrow types (string, int32, int64, list and struct
+    of those); ``None`` is null, and a validity bitmap is built only for a
+    column that holds one.  Raises ``TypeError`` on any other type and
+    ``OverflowError`` when a string or list column's offsets pass int32.
+    """
+    import pyarrow as pa
+
+    n = len(values)
+    null_count = values.count(None)
+    validity = None
+    if null_count:
+        # LSB-first bitmap: value i is bit i of a little-endian integer
+        bits = "".join("0" if v is None else "1" for v in reversed(values))
+        validity = pa.py_buffer(int(bits, 2).to_bytes((n + 7) // 8, "little"))
+    if pa.types.is_string(type_):
+        data = [b"" if v is None else v.encode() for v in values]
+        buffers = [validity, _offsets_buffer(map(len, data)), pa.py_buffer(b"".join(data))]
+        return pa.Array.from_buffers(type_, n, buffers, null_count=null_count)
+    if pa.types.is_int32(type_) or pa.types.is_int64(type_):
+        ints = [0 if v is None else v for v in values] if null_count else values
+        data = pa.py_buffer(array("i" if pa.types.is_int32(type_) else "q", ints))
+        return pa.Array.from_buffers(type_, n, [validity, data], null_count=null_count)
+    if pa.types.is_list(type_):
+        lists = [() if v is None else v for v in values]
+        child = _arrow_array([x for v in lists for x in v], type_.value_type)
+        buffers = [validity, _offsets_buffer(map(len, lists))]
+        return pa.Array.from_buffers(type_, n, buffers, null_count=null_count, children=[child])
+    if pa.types.is_struct(type_):
+        if null_count:
+            empty = dict.fromkeys(f.name for f in type_)
+            values = [empty if v is None else v for v in values]
+        children = [_arrow_array(list(map(itemgetter(f.name), values)), f.type) for f in type_]
+        return pa.Array.from_buffers(
+            type_, n, [validity], null_count=null_count, children=children
+        )
+    raise TypeError(f"no Arrow builder for {type_}")
+
+
 def _extract_arrow_batches(
     batches, emit_markdown: bool = True, max_content_length: int | None = None
 ):
@@ -249,7 +304,9 @@ def _extract_arrow_batches(
             out["in_bytes"].append(in_bytes)
             out["out_bytes"].append(len(markdown.encode("utf-8", "ignore")))
             out["wall_us"].append(int((time.perf_counter() - t0) * 1_000_000))
-        yield pa.RecordBatch.from_pydict(out, schema=out_schema)
+        yield pa.RecordBatch.from_arrays(
+            [_arrow_array(out[f.name], f.type) for f in out_schema], schema=out_schema
+        )
 
 
 def salted_repartition(df: DataFrame, num_partitions: int, salt_buckets: int = 16) -> DataFrame:
@@ -282,21 +339,23 @@ def html_assembly_expr(spans_col: str = "spans"):
 
     Null offsets (contract-violating but tolerated) order LAST, stable
     among themselves.  Null or empty span arrays and documents without
-    html text yield an empty string (or null), never an error."""
-    filtered = F.filter(
-        F.col(spans_col),
-        lambda s: (s["kind"] == "html") & s["text"].isNotNull() & (s["text"] != ""),
+    html text yield an empty string (or null), never an error.
+
+    Written as one SQL string: the ``F.filter``/``F.array_sort`` lambda
+    builders cost 0.1–0.2 s of py4j round trips per call, paid on every
+    ``extract_spans`` plan."""
+    spans = "`" + spans_col.replace("`", "``") + "`"
+    return F.expr(
+        f"""array_join(transform(array_sort(
+              filter({spans}, s -> s.kind = 'html' AND s.text IS NOT NULL AND s.text != ''),
+              (l, r) -> CASE WHEN l.`offset` IS NULL AND r.`offset` IS NULL THEN 0
+                             WHEN l.`offset` IS NULL THEN 1
+                             WHEN r.`offset` IS NULL THEN -1
+                             WHEN l.`offset` < r.`offset` THEN -1
+                             WHEN l.`offset` > r.`offset` THEN 1
+                             ELSE 0 END),
+            s -> s.text), '')"""
     )
-    ordered = F.array_sort(
-        filtered,
-        lambda l, r: F.when(l["offset"].isNull() & r["offset"].isNull(), 0)
-        .when(l["offset"].isNull(), 1)
-        .when(r["offset"].isNull(), -1)
-        .when(l["offset"] < r["offset"], -1)
-        .when(l["offset"] > r["offset"], 1)
-        .otherwise(0),
-    )
-    return F.array_join(F.transform(ordered, lambda s: s["text"]), "")
 
 
 def extract_spans(

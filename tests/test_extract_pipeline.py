@@ -11,6 +11,7 @@ from fetch_engines_spark.convert import converter as converter_mod
 from fetch_engines_spark.convert import serialize as serialize_mod
 from fetch_engines_spark.extract import (
     INPUT_SCHEMA,
+    OUTPUT_SCHEMA,
     convert_document,
     extract_spans,
     html_assembly_expr,
@@ -393,3 +394,134 @@ def test_pyfiles_zip_drops_deleted_module(tmp_path, monkeypatch):
         names = zf.namelist()
     assert "fetch_engines_spark/b.py" not in names
     assert sorted(names) == ["fetch_engines_spark/__init__.py", "fetch_engines_spark/a.py"]
+
+
+_OUTPUT_ROW_CASES = {
+    "zero_rows": [],
+    "mixed": [
+        {
+            "doc_id": "multi-byte",
+            "title": "Über — 日本語 🙂",
+            "spans": [
+                {"kind": "heading", "text": "# Ünïcode 🙂", "media_ref": None, "offset": 0},
+                {
+                    "kind": "image",
+                    "text": "![é](https://e.com/é.png)",
+                    "media_ref": "https://e.com/é.png",
+                    "offset": 1,
+                },
+                {"kind": "text", "text": "", "media_ref": None, "offset": 2},
+            ],
+            "markdown": None,
+            "error": None,
+            "in_bytes": 2**40,
+            "out_bytes": 0,
+            "wall_us": 17,
+        },
+        {
+            "doc_id": "empty-spans",
+            "title": None,
+            "spans": [],
+            "markdown": None,
+            "error": "ERR_EXTRACTION: ValueError: x",
+            "in_bytes": 0,
+            "out_bytes": 0,
+            "wall_us": 0,
+        },
+        {
+            "doc_id": "null-spans",
+            "title": "",
+            "spans": None,
+            "markdown": None,
+            "error": None,
+            "in_bytes": None,
+            "out_bytes": -1,
+            "wall_us": 3,
+        },
+        {
+            "doc_id": None,
+            "title": "one",
+            "spans": [{"kind": "text", "text": "one span", "media_ref": None, "offset": 0}, None],
+            "markdown": None,
+            "error": None,
+            "in_bytes": 9,
+            "out_bytes": 8,
+            "wall_us": 5,
+        },
+    ],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_OUTPUT_ROW_CASES))
+def test_arrow_builder_equals_from_pydict(case):
+    """The worker's buffer-level Arrow builder gives the batch
+    ``RecordBatch.from_pydict`` gives for the same values: zero rows, an
+    all-null column, multi-byte text, empty/null/multi-span lists, and
+    null strings, integers and list elements."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from fetch_engines_spark.extract import _arrow_array
+
+    schema = to_arrow_schema(OUTPUT_SCHEMA)
+    rows = _OUTPUT_ROW_CASES[case]
+    cols = {name: [r[name] for r in rows] for name in schema.names}
+    built = pa.RecordBatch.from_arrays(
+        [_arrow_array(cols[f.name], f.type) for f in schema], schema=schema
+    )
+    built.validate(full=True)
+    assert built.equals(pa.RecordBatch.from_pydict(cols, schema=schema))
+
+
+def test_arrow_builder_rejects_other_types_and_offset_overflow():
+    import pyarrow as pa
+
+    from fetch_engines_spark.extract import _arrow_array, _offsets_buffer
+
+    with pytest.raises(TypeError):
+        _arrow_array([1.5], pa.float64())
+    with pytest.raises(OverflowError):
+        _offsets_buffer([2**31 - 1, 1])
+
+
+def test_extraction_worker_never_imports_pandas(tmp_path):
+    """``_extract_arrow_batches`` in a fresh interpreter, fed fixture html
+    plus null, empty and non-ASCII pages, with and without markdown, leaves
+    pandas unimported (it would cost every extraction worker ~41 MB)."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    import pyarrow as pa
+
+    html = [f.html for f in FIXTURES_BY_ID.values()]
+    html += [None, "", "<p>Ünïcode — 日本語 🙂</p>"]
+    batch = pa.RecordBatch.from_pydict(
+        {
+            "doc_id": [f"d{i}" for i in range(len(html))],
+            "base_url": ["https://e.com/"] * len(html),
+            "html": html,
+        }
+    )
+    stream = tmp_path / "in.arrows"
+    with pa.OSFile(str(stream), "wb") as sink, pa.ipc.new_stream(sink, batch.schema) as writer:
+        writer.write_batch(batch)
+    script = f"""
+import sys
+sys.path.insert(0, {str(Path(__file__).resolve().parents[1])!r})
+import pyarrow as pa
+from fetch_engines_spark.extract import OUTPUT_SCHEMA, _extract_arrow_batches
+for emit_markdown in (True, False):
+    with pa.OSFile({str(stream)!r}) as source:
+        out = list(_extract_arrow_batches(pa.ipc.open_stream(source), emit_markdown))
+    assert sum(b.num_rows for b in out) == {len(html)}, out
+    assert all(b.column("error").null_count == {len(html)} for b in out)
+    n_null = 0 if emit_markdown else {len(html)}
+    assert all(b.column("markdown").null_count == n_null for b in out)
+print("pandas" in sys.modules)
+"""
+    result = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True, timeout=300
+    )
+    assert result.returncode == 0, result.stderr
+    assert result.stdout.strip() == "False"
