@@ -23,7 +23,7 @@ from __future__ import annotations
 import re
 from urllib.parse import urljoin, urlparse
 
-from ..dom import Element, collect_first_matches, collect_matches, parse_html, subtree_stats
+from ..dom import MAIN_LIKE_SELECTOR, DocIndex, Element, collect_matches, parse_html
 
 # --- constants (parity: markdown-converter.ts:27-113) -----------------------
 
@@ -128,6 +128,10 @@ def _norm(s: str | None) -> str:
     return _WSRUN.sub(" ", (s or "")).strip()
 
 
+def _norm_len(s: str) -> int:
+    return len(_norm(s))
+
+
 def cleanup_html(html: str) -> str:
     """P1 regex scrub (parity: markdown-converter.ts:444-455)."""
     for rx, rep in _CLEANUP_HTML:
@@ -188,122 +192,102 @@ def _element_matches_boilerplate(el: Element) -> bool:
     return False
 
 
-def _is_attached(el: Element, root: Element) -> bool:
-    """True iff walking parents from ``el`` reaches ``root``."""
-    node = el.parent
-    while node is not None:
-        if node is root:
-            return True
-        node = node.parent
-    return False
-
-
-def _is_within_protected_main_content(el: Element) -> bool:
-    return el.closest("main, article, [role='main'], [role='article']") is not None
-
-
-def _is_likely_consent_or_interstitial(el: Element) -> bool:
+def _is_likely_consent_or_interstitial(idx: DocIndex, i: int) -> bool:
+    el = idx.els[i]
     eid = (el.get_attribute("id") or "").lower()
     cls = (el.get_attribute("class") or "").lower()
     if "cookie" in eid or "cookie" in cls or "consent" in cls:
         return True
-    text = el.text_content.lower()
-    return (
-        "manage preferences" in text
-        or "agree to all" in text
-        or "refuse all" in text
-        or "accept cookies" in text
-    )
+    return idx.lower_text_contains(i, _CONSENT_PHRASES)
 
 
-def _has_high_link_density_stats(st, threshold: float) -> bool:
+_CONSENT_PHRASES = ("manage preferences", "agree to all", "refuse all", "accept cookies")
+
+
+def _has_high_link_density(idx: DocIndex, i: int, threshold: float) -> bool:
     """Parity: hasHighLinkDensity (markdown-converter.ts:877-897)."""
-    if st.raw_text_len < MIN_LINK_DENSITY_TEXT_LENGTH:
+    text_len = idx.text_len(i)
+    if text_len < MIN_LINK_DENSITY_TEXT_LENGTH:
         return False
-    if st.n_links < 3:
+    if idx.count("a", i) < 3:
         return False
-    if st.raw_text_len == 0:
-        return False
-    return st.outer_link_text_len / st.raw_text_len > threshold
+    return idx.outer_link_text_len(i) / text_len > threshold
 
 
 _LINK_DENSITY_CANDIDATE_SELECTOR = (
     "div, nav, ul, aside, section, .sidebar, .widget, .menu, [role='navigation'], [role='menubar']"
 )
+_H16 = ("h1", "h2", "h3", "h4", "h5", "h6")
+_H13 = ("h1", "h2", "h3")
+_VISUAL_MEDIA = ("img", "figure", "video")
+_MEDIA = ("img", "video", "iframe", "figure")
 
 
-def remove_high_link_density_elements(
-    element: Element, threshold: float, candidates: list[Element] | None = None
-) -> None:
+def remove_high_link_density_elements(idx: DocIndex, threshold: float) -> None:
     """P7 global link-density prune (parity: markdown-converter.ts:554-605).
 
-    Single stats walk per candidate (raw textContent lengths, non-nested
-    link text) instead of repeated selector passes."""
-    if candidates is None:
-        candidates = element.query_selector_all(_LINK_DENSITY_CANDIDATE_SELECTOR)
-    for el in candidates:
-        if _is_within_protected_main_content(el):
+    Candidates come from ``idx`` in document order, as the reference
+    collects them; one inside a subtree pruned before it is skipped, since
+    it could only touch detached nodes.  The index gives each one's raw
+    textContent length, non-nested link text and protected-main-content
+    ancestor fact without a walk."""
+    for i in idx.matches(_LINK_DENSITY_CANDIDATE_SELECTOR):
+        if idx.is_removed(i) or idx.in_main_like(i):
             continue
-        if _is_likely_consent_or_interstitial(el):
-            el.remove()
+        if _is_likely_consent_or_interstitial(idx, i):
+            idx.remove(i)
             continue
-        st = subtree_stats(el)
-        text_len = st.raw_text_len
+        text_len = idx.text_len(i)
         if text_len < MIN_LINK_DENSITY_TEXT_LENGTH:
             continue
-        if st.n_links < 3:
+        if idx.count("a", i) < 3:
             continue
-        link_text_len = st.outer_link_text_len
-        if text_len == 0:
-            continue
+        link_text_len = idx.outer_link_text_len(i)
         density = link_text_len / text_len
         if density > threshold:
-            if st.n_main_like > 0:
+            if idx.count_main_like(i) > 0:
                 continue
-            if _element_matches_main_content(el):
+            if _element_matches_main_content(idx.els[i]):
                 continue
             non_link = max(0, text_len - link_text_len)
-            if non_link > 200 and (st.n_h16 > 0 or st.n_p > 0):
+            if non_link > 200 and (idx.count(_H16, i) > 0 or idx.count("p", i) > 0):
                 continue
-            el.remove()
+            idx.remove(i)
 
 
-def remove_high_link_density_in_selected_content(content: Element) -> None:
-    """C-G in-content prune (parity: markdown-converter.ts:306-359)."""
-    for candidate in content.query_selector_all("div, section, nav, ul, ol, aside"):
-        if candidate is content:
+_CONTENT_LINK_DENSITY_CANDIDATE_SELECTOR = "div, section, nav, ul, ol, aside"
+_NORM_PREFIX = 512
+
+
+def remove_high_link_density_in_selected_content(idx: DocIndex, content: int) -> None:
+    """C-G in-content prune (parity: markdown-converter.ts:306-359) below
+    position ``content`` of ``idx``, in document order as in P7.
+
+    The reference also requires no paragraph of 140+ characters; that
+    cannot fail once there is no paragraph at all, so it is not computed.
+    The cheap count tests run first: every test only skips the candidate."""
+    for i in idx.matches(_CONTENT_LINK_DENSITY_CANDIDATE_SELECTOR, content):
+        if idx.is_removed(i):
             continue
-        st = subtree_stats(candidate)
-        text = _norm(st.text)
-        if len(text) < MIN_LINK_DENSITY_TEXT_LENGTH:
+        n_links = idx.count("a", i)
+        if n_links < 2 or idx.count(_H16, i) > 0 or idx.count("p", i) > 0:
             continue
-        if st.n_links < 2:
+        raw_len = idx.text_len(i)
+        if raw_len < MIN_LINK_DENSITY_TEXT_LENGTH:
+            continue  # normalizing never lengthens a text
+        # a prefix's normalized length bounds the whole text's from below
+        text_len = len(_norm(idx.text_of(i, _NORM_PREFIX)))
+        if text_len <= 320 and raw_len > _NORM_PREFIX:
+            text_len = len(_norm(idx.text_of(i)))
+        if text_len < MIN_LINK_DENSITY_TEXT_LENGTH or text_len > 320:
             continue
-        heading_count = st.n_h16
-        has_paragraph = st.n_p > 0
-        has_long_paragraph = any(len(_norm(t)) >= 140 for t in st.p_texts)
-        link_text_len = sum(len(_norm(t)) for t in st.outer_link_texts)
-        density = link_text_len / max(1, len(text))
-        non_link = max(0, len(text) - link_text_len)
-        likely_utility = (
-            density > 0.78
-            and heading_count == 0
-            and not has_paragraph
-            and not has_long_paragraph
-            and len(text) <= 260
-            and non_link < 120
-        )
-        likely_related_links = (
-            st.n_links >= 4
-            and density > 0.82
-            and heading_count == 0
-            and not has_paragraph
-            and not has_long_paragraph
-            and len(text) <= 320
-            and non_link < 80
-        )
+        link_text_len = idx.outer_link_text_len(i, _norm_len)
+        density = link_text_len / text_len
+        non_link = max(0, text_len - link_text_len)
+        likely_utility = density > 0.78 and text_len <= 260 and non_link < 120
+        likely_related_links = n_links >= 4 and density > 0.82 and non_link < 80
         if likely_utility or likely_related_links:
-            candidate.remove()
+            idx.remove(i)
 
 
 def remove_svg_image_refs(root: Element, els: list[Element] | None = None) -> None:
@@ -324,10 +308,15 @@ def remove_breadcrumbs(root: Element, els: list[Element] | None = None) -> None:
         (nav or el).remove()
 
 
-def remove_content_subtree_boilerplate(content: Element) -> None:
-    """C-F (parity: markdown-converter.ts:294-304)."""
-    for el in content.query_selector_all(",".join(CONTENT_SUBTREE_REMOVE_SELECTORS)):
-        el.remove()
+_CONTENT_SUBTREE_REMOVE = ",".join(CONTENT_SUBTREE_REMOVE_SELECTORS)
+
+
+def remove_content_subtree_boilerplate(idx: DocIndex, content: int) -> None:
+    """C-F (parity: markdown-converter.ts:294-304) below position
+    ``content`` of ``idx``."""
+    for i in idx.matches(_CONTENT_SUBTREE_REMOVE, content):
+        if not idx.is_removed(i):
+            idx.remove(i)
 
 
 _ABSOLUTIZE_SELECTOR = "a[href], img[src], source[src], video[src], audio[src], track[src]"
@@ -345,18 +334,35 @@ def absolutize_relative_urls(
             return
     except ValueError:
         return
+    origin = _http_origin(base_url)
     if els is None:
         els = root.query_selector_all(_ABSOLUTIZE_SELECTOR)
     for el in els:
         for attr in ("href", "src"):
             raw = el.get_attribute(attr)
             if raw:
-                resolved = _resolve_url(raw, base_url)
+                resolved = _resolve_url(raw, base_url, origin)
                 if resolved:
                     el.set_attribute(attr, resolved)
 
 
-def _resolve_url(raw: str, base_url: str) -> str | None:
+def _http_origin(base_url: str) -> str | None:
+    """``scheme://netloc`` of an http(s) base URL with a host, else None."""
+    parsed = urlparse(base_url)
+    if parsed.scheme in ("http", "https") and parsed.netloc:
+        return f"{parsed.scheme}://{parsed.netloc}"
+    return None
+
+
+# what urljoin reads in an absolute-path reference beyond its path: query,
+# fragment and params delimiters, the tab/CR/LF it deletes, dot segments
+_NOT_PLAIN_PATH = re.compile(r"[?#;\t\r\n]|/\.")
+
+
+def _resolve_url(raw: str, base_url: str, origin: str | None = None) -> str | None:
+    """``raw`` resolved against ``base_url``.  ``origin`` is the base's
+    ``scheme://netloc`` for an http(s) base: a plain absolute path
+    (``/a/b.png``) resolves to ``origin + path``, as ``urljoin`` gives."""
     value = raw.strip()
     if not value:
         return None
@@ -364,21 +370,22 @@ def _resolve_url(raw: str, base_url: str) -> str | None:
         return value
     if _ABSOLUTE_SCHEME.match(value):
         return value
+    if origin and value[0] == "/" and value[1:2] != "/" and not _NOT_PLAIN_PATH.search(value):
+        return origin + value
     try:
         return urljoin(base_url, value)
     except ValueError:
         return value
 
 
-def find_semantic_main_content(root: Element) -> Element | None:
+def find_semantic_main_content(idx: DocIndex) -> int | None:
     """C-B (parity: findSemanticMainContent, markdown-converter.ts:607-635)."""
     best, best_score = None, -1.0
-    for el in root.query_selector_all("main, article, [role='main'], [role='article']"):
-        st = subtree_stats(el)
-        text_len = len(st.text.strip())
-        heading_count = st.n_h13
-        image_count = st.n_img + st.n_figure + st.n_video
-        paragraph_count = st.n_p
+    for i in idx.matches(MAIN_LIKE_SELECTOR):
+        text_len = len(idx.text_of(i).strip())
+        heading_count = idx.count(_H13, i)
+        image_count = idx.count(_VISUAL_MEDIA, i)
+        paragraph_count = idx.count("p", i)
         if text_len < 120 and heading_count == 0 and image_count == 0:
             continue
         score = float(text_len)
@@ -389,35 +396,33 @@ def find_semantic_main_content(root: Element) -> Element | None:
         if image_count > 0:
             score += 40
         if score > best_score:
-            best_score, best = score, el
+            best_score, best = score, i
     return best
 
 
-def detect_forum_page(root: Element) -> bool:
-    """C-A (parity: detectForumPage, markdown-converter.ts:637-692)."""
+_FORUM_INDICATOR_SELECTORS = (
+    FORUM_COMMENT_SELECTORS + FORUM_THREAD_SELECTORS + FORUM_VOTE_SELECTORS
+)
+_CANONICAL_SELECTORS = ["link[rel='canonical']", "meta[property='og:url']"]
 
-    all_sels = (
-        list(FORUM_COMMENT_SELECTORS)
-        + list(FORUM_THREAD_SELECTORS)
-        + list(FORUM_VOTE_SELECTORS)
-        # canonical-URL sources folded into the same walk (first match in
-        # document order == query_selector)
-        + ["link[rel='canonical']", "meta[property='og:url']"]
-    )
-    matches = collect_matches(root, all_sels)
-    nc, nt = len(FORUM_COMMENT_SELECTORS), len(FORUM_THREAD_SELECTORS)
-    nv = len(FORUM_VOTE_SELECTORS)
-    comment_count = sum(len(m) for m in matches[:nc])
-    thread_count = sum(len(m) for m in matches[nc : nc + nt])
-    vote_count = sum(len(m) for m in matches[nc + nt : nc + nt + nv])
+
+def detect_forum_page(idx: DocIndex) -> bool:
+    """C-A (parity: detectForumPage, markdown-converter.ts:637-692)."""
+    comment_count = thread_count = vote_count = 0
+    for s in FORUM_COMMENT_SELECTORS:
+        comment_count += len(idx.matches(s))
+    for s in FORUM_THREAD_SELECTORS:
+        thread_count += len(idx.matches(s))
+    for s in FORUM_VOTE_SELECTORS:
+        vote_count += len(idx.matches(s))
 
     is_known_forum_host = False
     canonical = None
-    links, ogs = matches[nc + nt + nv], matches[nc + nt + nv + 1]
+    links, ogs = (idx.matches(s) for s in _CANONICAL_SELECTORS)
     if links:
-        canonical = links[0].get_attribute("href")
+        canonical = idx.els[links[0]].get_attribute("href")
     if not canonical and ogs:
-        canonical = ogs[0].get_attribute("content")
+        canonical = idx.els[ogs[0]].get_attribute("content")
     if canonical:
         try:
             hostname = (urlparse(urljoin("http://example.com", canonical)).hostname or "").lower()
@@ -436,11 +441,11 @@ def detect_forum_page(root: Element) -> bool:
     )
 
 
-def _calculate_element_score(el: Element, current_max: float) -> float:
+def _calculate_element_score(idx: DocIndex, i: int, current_max: float) -> float:
     """Parity: _calculateElementScore (markdown-converter.ts:703-743)."""
-    st = subtree_stats(el)
-    text_len = len(st.text.strip())
-    has_media = (st.n_img + st.n_video + st.n_iframe + st.n_figure) > 0
+    el = idx.els[i]
+    text_len = len(idx.text_of(i).strip())
+    has_media = idx.count(_MEDIA, i) > 0
     if text_len < 100 and not has_media:
         return -1.0
     score = float(text_len)
@@ -452,71 +457,77 @@ def _calculate_element_score(el: Element, current_max: float) -> float:
         score *= 0.3
     if _element_matches_boilerplate(el):
         score *= 0.2
-    if _has_high_link_density_stats(st, 0.6):
+    if _has_high_link_density(idx, i, 0.6):
         score *= 0.5
-    if st.n_p > 2:
+    if idx.count("p", i) > 2:
         score *= 1.2
     if el.tag == "body" and current_max > 200:
         return -1.0
     return score
 
 
-def extract_article_content_element(root: Element) -> Element:
+def extract_article_content_element(idx: DocIndex) -> Element:
     """C-C (parity: extractArticleContentElement, markdown-converter.ts:750-784)."""
-    semantic = find_semantic_main_content(root)
+    semantic = find_semantic_main_content(idx)
     if semantic is not None:
-        return semantic
-    best, max_score = None, -1.0
-    for els in collect_matches(root, list(MAIN_CONTENT_SELECTORS)):
-        for el in els:
-            score = _calculate_element_score(el, max_score)
+        return idx.els[semantic]
+    best, max_score = 0, -1.0
+    for sel in MAIN_CONTENT_SELECTORS:
+        for i in idx.matches(sel):
+            score = _calculate_element_score(idx, i, max_score)
             if score > max_score:
-                max_score, best = score, el
-    return best if best is not None else root
+                max_score, best = score, i
+    return idx.els[best]
 
 
-def extract_forum_content_element(root: Element) -> Element:
+_FORUM_OBVIOUS_NON_CONTENT = ",".join(FORUM_OBVIOUS_NON_CONTENT_SELECTORS)
+
+
+def extract_forum_content_element(idx: DocIndex) -> Element:
     """C-E (parity: extractForumContentElement, markdown-converter.ts:790-872)."""
     temp = Element("div")
 
-    firsts = collect_first_matches(
-        root, list(FORUM_MAIN_POST_SELECTORS) + list(FORUM_COMMENTS_CONTAINER_SELECTORS)
-    )
-    main_firsts = firsts[: len(FORUM_MAIN_POST_SELECTORS)]
-    comment_firsts = firsts[len(FORUM_MAIN_POST_SELECTORS) :]
-    main_post = next((el for el in main_firsts if el is not None), None)
-    if main_post is not None:
-        temp.append_child(main_post.clone())
+    def first_of(selectors: list[str]) -> int | None:
+        # the first selector (in list order) that matches, at its first match
+        return next((p for p in map(idx.first, selectors) if p is not None), None)
 
-    comments = next((el for el in comment_firsts if el is not None), None)
+    main_post = first_of(FORUM_MAIN_POST_SELECTORS)
+    if main_post is not None:
+        temp.append_child(idx.els[main_post].clone())
+
+    comments = first_of(FORUM_COMMENTS_CONTAINER_SELECTORS)
     if comments is not None:
-        cloned = comments.clone()
-        for sel in FORUM_OBVIOUS_NON_CONTENT_SELECTORS:
-            for el in cloned.query_selector_all(sel):
-                el.remove()
+        cloned = idx.els[comments].clone()
+        for el in cloned.query_selector_all(_FORUM_OBVIOUS_NON_CONTENT):
+            el.remove()
         temp.append_child(cloned)
 
     if temp.children:
         return temp
 
-    body = root.query_selector("body")
+    body = idx.first("body")
     if body is not None:
-        cloned_body = body.clone()
-        for sel in FORUM_OBVIOUS_NON_CONTENT_SELECTORS:
-            for el in cloned_body.query_selector_all(sel):
-                el.remove()
-        remove_high_link_density_elements(cloned_body, DEFAULT_LINK_DENSITY_THRESHOLD)
+        cloned_body = idx.els[body].clone()
+        for el in cloned_body.query_selector_all(_FORUM_OBVIOUS_NON_CONTENT):
+            el.remove()
+        remove_high_link_density_elements(
+            DocIndex(cloned_body, (_LINK_DENSITY_CANDIDATE_SELECTOR,)),
+            DEFAULT_LINK_DENSITY_THRESHOLD,
+        )
         return cloned_body
-    return root
+    return idx.els[0]
 
 
-def ensure_primary_heading(content: Element, provided_title: str | None) -> None:
-    """C-H (parity: ensurePrimaryHeading, markdown-converter.ts:410-442)."""
+_HEADINGS = "h1, h2, h3, h4, h5, h6"
+
+
+def ensure_primary_heading(idx: DocIndex, content: int, provided_title: str | None) -> None:
+    """C-H (parity: ensurePrimaryHeading, markdown-converter.ts:410-442)
+    below position ``content`` of ``idx``."""
     title_norm = _norm(provided_title)
-    first_h1, first_heading = collect_first_matches(
-        content, ["h1", "h1, h2, h3, h4, h5, h6"]
-    )
-    h1_text = _norm(first_h1.text_content if first_h1 is not None else "")
+    first_h1 = idx.first("h1", content)
+    first_heading = idx.first(_HEADINGS, content)
+    h1_text = _norm(idx.text_of(first_h1) if first_h1 is not None else "")
 
     if first_h1 is not None:
         if (
@@ -527,38 +538,38 @@ def ensure_primary_heading(content: Element, provided_title: str | None) -> None
                 or title_norm.split("|")[0].strip() in h1_text
             )
         ):
-            first_h1.set_text(provided_title or "")
+            idx.els[first_h1].set_text(provided_title or "")
         return
 
     if title_norm:
         h1 = Element("h1")
         h1.set_text(provided_title or "")
-        content.prepend(h1)
+        idx.els[content].prepend(h1)
         return
 
     if first_heading is not None:
-        first_heading.tag = "h1"
+        idx.els[first_heading].tag = "h1"
 
 
-def elect_title(root: Element) -> str:
-    """P8 title election (parity: markdown-converter.ts:200-205).
-    One walk for all four candidate selectors (priority = list order)."""
-    og, tw, dc, t = collect_first_matches(
-        root,
-        [
-            "meta[property='og:title']",
-            "meta[name='twitter:title']",
-            "meta[name='DC.title']",
-            "title",
-        ],
-    )
-    for el in (og, tw, dc):
-        if el is not None:
-            v = el.get_attribute("content")
+_TITLE_META_SELECTORS = [
+    "meta[property='og:title']",
+    "meta[name='twitter:title']",
+    "meta[name='DC.title']",
+]
+
+
+def elect_title(idx: DocIndex) -> str:
+    """P8 title election (parity: markdown-converter.ts:200-205): the first
+    of each meta selector in priority order, then ``title``."""
+    for sel in _TITLE_META_SELECTORS:
+        i = idx.first(sel)
+        if i is not None:
+            v = idx.els[i].get_attribute("content")
             if v is not None:
                 return v
-    if t is not None:
-        return t.text_content
+    i = idx.first("title")
+    if i is not None:
+        return idx.text_of(i)
     return ""
 
 
@@ -596,7 +607,6 @@ _M4_EMPTY_IMG = re.compile(r"!\[\]\([^)]*\)")
 _M5_PROTO_REL = re.compile(r"(!?\[[^\]]*\]\()(//)")
 _M6_ADJ_LINK = re.compile(r"(\]\([^)]+\))(?=\[)")
 _M8_NEWLINES = re.compile(r"\n{3,}")
-_M9_LINE_TRIM = re.compile(r"^[ \t]+|[ \t]+$", re.M)
 _M10_CODE = re.compile(r"^(\s*\n)?(```(.*)\n[\s\S]*?\n```)(\s*\n)?", re.M)
 _M11_DUP_LINE = re.compile(r"^(.{30,})$(\n\1)+", re.M)
 _M12_META_SEP = re.compile(r"(\n---\n)(\S)")
@@ -608,8 +618,7 @@ def _split_dense_adjacent_link_runs(markdown: str) -> str:
     """M7 (parity: splitDenseAdjacentLinkRuns, markdown-converter.ts:960-969)."""
     out = []
     for line in markdown.split("\n"):
-        runs = _LINK_RUN.findall(line)
-        if len(runs) < 3 or len(line) < 180:
+        if len(line) < 180 or len(_LINK_RUN.findall(line)) < 3:
             out.append(line)
         else:
             out.append(_LINK_SPLIT.sub(r"\1\n", line))
@@ -617,20 +626,32 @@ def _split_dense_adjacent_link_runs(markdown: str) -> str:
 
 
 def postprocess_markdown(markdown: str, max_content_length: int | None = None) -> str:
+    """M2–M13.  A step whose pattern needs a substring the text lacks is
+    skipped (its substitution would be the identity), and M9 strips each
+    line, which is what its regex does."""
     p = markdown
-    p = _M2_HEADING.sub(r"\n\n\2\n\n", p)
+    if "#" in p:
+        p = _M2_HEADING.sub(r"\n\n\2\n\n", p)
     p = _M3_LIST.sub(r"\n\n\2", p)
-    p = _M4_EMPTY_LINK.sub("", p)
-    p = _M4_EMPTY_IMG.sub("", p)
-    p = _M5_PROTO_REL.sub(r"\1https://", p)
-    p = _M6_ADJ_LINK.sub(r"\1 ", p)
-    p = _split_dense_adjacent_link_runs(p)
-    p = _M8_NEWLINES.sub("\n" * POSTPROCESSING_MAX_CONSECUTIVE_NEWLINES, p)
-    p = _M9_LINE_TRIM.sub("", p)
-    p = _M10_CODE.sub(r"\n\n\2\n\n", p)
-    p = _M8_NEWLINES.sub("\n" * POSTPROCESSING_MAX_CONSECUTIVE_NEWLINES, p)
+    if "[]" in p:
+        p = _M4_EMPTY_LINK.sub("", p)
+        p = _M4_EMPTY_IMG.sub("", p)
+    if "](//" in p:
+        p = _M5_PROTO_REL.sub(r"\1https://", p)
+    if ")[" in p:
+        p = _M6_ADJ_LINK.sub(r"\1 ", p)
+    if len(p) >= 180:
+        p = _split_dense_adjacent_link_runs(p)
+    if "\n\n\n" in p:
+        p = _M8_NEWLINES.sub("\n" * POSTPROCESSING_MAX_CONSECUTIVE_NEWLINES, p)
+    p = "\n".join([line.strip(" \t") for line in p.split("\n")])  # M9
+    if "```" in p:
+        p = _M10_CODE.sub(r"\n\n\2\n\n", p)
+    if "\n\n\n" in p:
+        p = _M8_NEWLINES.sub("\n" * POSTPROCESSING_MAX_CONSECUTIVE_NEWLINES, p)
     p = _M11_DUP_LINE.sub(r"\1", p)
-    p = _M12_META_SEP.sub(r"\1\n\2", p)
+    if "\n---\n" in p:
+        p = _M12_META_SEP.sub(r"\1\n\2", p)
     if max_content_length and len(p) > max_content_length:
         truncated_point = p.rfind(".", 0, max(0, max_content_length - 15))
         slice_end = (
@@ -669,58 +690,83 @@ class MarkdownConverter:
     def preprocess(
         self, html: str, base_url: str | None = None
     ) -> tuple[Element | str, str]:
-        """Run P1–C-H; returns (content element | fallback string, title)."""
+        """Run P1–C-H; returns (content element | fallback string, title).
+
+        P3–P6 take their elements from one ``collect_matches`` walk.  Every
+        later stage queries one ``DocIndex`` built after P6, which tracks
+        the removals of P7, P9, C-F and C-G; forum content (a clone) gets
+        an index of its own."""
         try:
             html = cleanup_html(html)
             root = parse_html(html)
 
-            # P3–P7 candidates in ONE tree walk.  Application order is the
-            # reference's; the only timing delta vs per-pass collection is
-            # that later passes may see elements an earlier pass detached —
-            # unobservable for P4/P5/P6 (rewriting or re-removing a detached
-            # node never reaches the output; a detached node's closest()
-            # chain stays inside its detached subtree), and P7 re-snapshots
-            # attachment explicitly below, exactly reproducing a fresh
-            # post-P6 collection.
-            pre_els, abs_els, svg_els, bc_els, density_els = collect_matches(
+            # P3–P6 elements from ONE walk, applied in the reference's
+            # order.  A later pass may see an element an earlier pass
+            # detached; rewriting or re-removing it never reaches the
+            # output, and its closest() chain stays inside its detached
+            # subtree.
+            pre_els, abs_els, svg_els, bc_els = collect_matches(
                 root,
                 [
-                    ",".join(PREPROCESSING_REMOVE_SELECTORS),
+                    _PREPROCESSING_REMOVE,
                     _ABSOLUTIZE_SELECTOR,
                     "img[src]",
-                    ",".join(_BREADCRUMB_SELECTORS),
-                    _LINK_DENSITY_CANDIDATE_SELECTOR,
+                    _BREADCRUMBS,
                 ],
             )
             for el in pre_els:
                 el.remove()
-
             absolutize_relative_urls(root, base_url, els=abs_els)
             remove_svg_image_refs(root, els=svg_els)
             remove_breadcrumbs(root, els=bc_els)
-            attached = [el for el in density_els if _is_attached(el, root)]
-            remove_high_link_density_elements(
-                root, DEFAULT_LINK_DENSITY_THRESHOLD, candidates=attached
-            )
 
-            best_title = elect_title(root)
-            head = root.query_selector("head")
+            idx = DocIndex(root, _DOCUMENT_SELECTORS)
+            remove_high_link_density_elements(idx, DEFAULT_LINK_DENSITY_THRESHOLD)
+            best_title = elect_title(idx)
+            head = idx.first("head")
             if head is not None:
-                head.remove()
+                idx.remove(head)
 
-            if detect_forum_page(root):
-                content = extract_forum_content_element(root)
+            if detect_forum_page(idx):
+                content = extract_forum_content_element(idx)
             else:
-                content = extract_article_content_element(root)
+                content = extract_article_content_element(idx)
 
             if content.tag == "html":
-                body = root.query_selector("body")
+                body = idx.first("body")
                 if body is not None:
-                    content = body
+                    content = idx.els[body]
 
-            remove_content_subtree_boilerplate(content)
-            remove_high_link_density_in_selected_content(content)
-            ensure_primary_heading(content, best_title)
+            pos = idx.position(content)
+            if pos is None:
+                idx, pos = DocIndex(content, _CONTENT_SELECTORS), 0
+            remove_content_subtree_boilerplate(idx, pos)
+            remove_high_link_density_in_selected_content(idx, pos)
+            ensure_primary_heading(idx, pos, best_title)
             return content, best_title
         except Exception:
             return cleanup_content_html(cleanup_html(html)), ""
+
+
+_PREPROCESSING_REMOVE = ",".join(PREPROCESSING_REMOVE_SELECTORS)
+_BREADCRUMBS = ",".join(_BREADCRUMB_SELECTORS)
+# the selector lists the content stages (C-F, C-G, C-H) query
+_CONTENT_SELECTORS = (
+    _CONTENT_SUBTREE_REMOVE,
+    _CONTENT_LINK_DENSITY_CANDIDATE_SELECTOR,
+    "h1",
+    _HEADINGS,
+)
+# the selector lists every stage from P7 on queries
+_DOCUMENT_SELECTORS = tuple(
+    dict.fromkeys(
+        [_LINK_DENSITY_CANDIDATE_SELECTOR, *_TITLE_META_SELECTORS, "title", "head"]
+        + _FORUM_INDICATOR_SELECTORS
+        + _CANONICAL_SELECTORS
+        + [MAIN_LIKE_SELECTOR]
+        + MAIN_CONTENT_SELECTORS
+        + FORUM_MAIN_POST_SELECTORS
+        + FORUM_COMMENTS_CONTAINER_SELECTORS
+        + list(_CONTENT_SELECTORS)
+    )
+)

@@ -29,6 +29,10 @@ if sys.getrecursionlimit() < 25000:
     sys.setrecursionlimit(25000)
 
 _WS = re.compile(r"\s+")
+_SPACE_RUN = re.compile(r"[ \t]{2,}")
+_SPACED_NEWLINE = re.compile(r" ?\n ?")
+_LEADING_NEWLINES = re.compile(r"^\n+")
+_TRAILING_SPACE = re.compile(r"\s+$")
 
 # NOTE: img is deliberately NOT inline at block level — each image becomes
 # its own block so media spans interleave with text spans and carry
@@ -108,8 +112,9 @@ def _render_children_inline(el: Element) -> str:
 
 def _squeeze(s: str) -> str:
     # collapse runs of spaces but keep explicit newlines from <br>
-    s = re.sub(r"[ \t]{2,}", " ", s)
-    s = re.sub(r" ?\n ?", "\n", s)
+    s = _SPACE_RUN.sub(" ", s)
+    if "\n" in s:
+        s = _SPACED_NEWLINE.sub("\n", s)
     return s
 
 
@@ -179,8 +184,8 @@ def _render_block(el: Element, blocks: list[str]) -> None:
         return
     if tag == "pre":
         text = el.text_content
-        text = re.sub(r"^\n+", "", text)
-        text = re.sub(r"\s+$", "", text)
+        text = _LEADING_NEWLINES.sub("", text)
+        text = _TRAILING_SPACE.sub("", text)
         lang = ""
         code = el.query_selector("code")
         if code is not None:

@@ -5,8 +5,11 @@ The reference extraction engine parses HTML with ``node-html-parser``
 compound selectors — tag, ``.class``, ``#id``, ``[attr]``, ``[attr='v']``,
 ``[attr*='v']``, ``[attr^='v']`` and ``iframe:not([title])`` — never
 descendant combinators.  This module provides exactly that surface on top of
-``html.parser.HTMLParser`` so the whole DOM pipeline can run inside an
-Arrow-batched pandas UDF with no native dependencies.
+``html.parser.HTMLParser`` so the whole DOM pipeline can run inside the
+extraction stage's ``mapInArrow`` function with no native dependencies.
+``DocIndex`` indexes a parsed tree once so that content selection answers
+its per-element questions (subtree text, counts, enclosing elements) without
+walking the tree again.
 
 Design notes for parity with node-html-parser:
 - ``text_content`` preserves source whitespace verbatim (the reference's
@@ -19,6 +22,8 @@ Design notes for parity with node-html-parser:
 from __future__ import annotations
 
 import re
+from bisect import bisect_left, bisect_right
+from collections import defaultdict
 from html import escape
 from html.parser import HTMLParser
 
@@ -576,20 +581,31 @@ class _SelectorGroup:
     regardless of how many selector lists (or compounds) the group holds —
     the multi-pattern analog of SelectorList's keyed dispatch.  Every
     entry carries the index of the selector list it belongs to.
+
+    ``attr_names`` holds every attribute name a non-tag-keyed compound is
+    keyed by, so a walk calls :meth:`hits` only for elements that carry
+    one.  ``attr_screens`` maps an attribute name to one regex over the
+    values its compounds test (``=``, ``*=``, ``^=``, ``$=`` all need the
+    value as a substring): when it finds none, no compound keyed by that
+    name can match.
     """
 
     __slots__ = (
         "n",
+        "slot",
         "tag_buckets",
         "tag_keyed",
         "class_keyed",
         "id_keyed",
         "attr_keyed",
+        "attr_screens",
+        "attr_names",
         "rest",
     )
 
     def __init__(self, selectors: tuple[str, ...]):
         self.n = len(selectors)
+        self.slot = {s: i for i, s in enumerate(selectors)}
         tag_buckets: dict[str, list[int]] = {}
         tag_keyed: dict[str, list] = {}
         class_keyed: dict[str, list] = {}
@@ -600,35 +616,57 @@ class _SelectorGroup:
             for c in parse_selector_list(s).compounds:
                 tag, preds = c
                 if tag is not None and not preds:
-                    tag_buckets.setdefault(tag, []).append(i)
+                    bucket = tag_buckets.setdefault(tag, [])
+                    if i not in bucket:
+                        bucket.append(i)
+                    continue
+                # key each compound by its most selective predicate: a class
+                # token, an id, an attribute value (screened), the tag, then
+                # a bare attribute name
+                cls_key = next((p[1] for p in preds if p[0] == "class"), None)
+                if cls_key is not None:
+                    class_keyed.setdefault(cls_key, []).append((i, c))
+                    continue
+                id_key = next((p[1] for p in preds if p[0] == "id"), None)
+                if id_key is not None:
+                    id_keyed.setdefault(id_key, []).append((i, c))
+                    continue
+                attrs = [p for p in preds if p[0] == "attr"]
+                valued = next((p[1] for p in attrs if p[2] is not None and p[3]), None)
+                if valued is not None:
+                    attr_keyed.setdefault(valued, []).append((i, c))
                 elif tag is not None:
                     tag_keyed.setdefault(tag, []).append((i, c))
+                elif attrs:
+                    attr_keyed.setdefault(attrs[0][1], []).append((i, c))
                 else:
-                    cls_key = next((p[1] for p in preds if p[0] == "class"), None)
-                    if cls_key is not None:
-                        class_keyed.setdefault(cls_key, []).append((i, c))
-                        continue
-                    id_key = next((p[1] for p in preds if p[0] == "id"), None)
-                    if id_key is not None:
-                        id_keyed.setdefault(id_key, []).append((i, c))
-                        continue
-                    attr_key = next((p[1] for p in preds if p[0] == "attr"), None)
-                    if attr_key is not None:
-                        attr_keyed.setdefault(attr_key, []).append((i, c))
-                    else:
-                        rest.append((i, c))  # :not-only compounds (rare)
+                    rest.append((i, c))  # :not-only compounds (rare)
         self.tag_buckets = tag_buckets
         self.tag_keyed = tag_keyed
         self.class_keyed = class_keyed
         self.id_keyed = id_keyed
         self.attr_keyed = attr_keyed
         self.rest = rest
+        screens = {}
+        for name, entries in attr_keyed.items():
+            needles = [
+                [p for p in c[1] if p[0] == "attr" and p[1] == name and p[2] is not None and p[3]]
+                for _, c in entries
+            ]
+            if all(needles):
+                values = sorted({ps[0][3] for ps in needles})
+                screens[name] = re.compile("|".join(map(re.escape, values)))
+        self.attr_screens = screens
+        self.attr_names = frozenset(
+            (["class"] if class_keyed else []) + (["id"] if id_keyed else []) + list(attr_keyed)
+        )
 
     def hits(self, el: Element) -> list[int]:
         """Deduped indexes of the selector lists this element matches."""
         tag = el.tag
         base = self.tag_buckets.get(tag)
         out: list[int] = list(base) if base else []
+        n_base = len(out)
         for i, c in self.tag_keyed.get(tag, _EMPTY_TOKENS):
             if _matches_compound(el, c):
                 out.append(i)
@@ -647,14 +685,21 @@ class _SelectorGroup:
                         out.append(i)
             attr_keyed = self.attr_keyed
             if attr_keyed:
+                screens = self.attr_screens
                 for name in attrs:
-                    for i, c in attr_keyed.get(name, _EMPTY_TOKENS):
+                    entries = attr_keyed.get(name)
+                    if entries is None:
+                        continue
+                    screen = screens.get(name)
+                    if screen is not None and screen.search(attrs[name]) is None:
+                        continue
+                    for i, c in entries:
                         if _matches_compound(el, c):
                             out.append(i)
         for i, c in self.rest:
             if _matches_compound(el, c):
                 out.append(i)
-        if len(out) > 1:
+        if len(out) > n_base and len(out) > 1:
             seen: set[int] = set()
             out = [i for i in out if not (i in seen or seen.add(i))]
         return out
@@ -680,20 +725,18 @@ def collect_matches(root: Element, selectors: list[str]) -> list[list[Element]]:
     buckets: list[list[Element]] = [[] for _ in range(g.n)]
     tag_buckets = g.tag_buckets
     tag_keyed = g.tag_keyed
-    has_attr_preds = bool(g.class_keyed or g.id_keyed or g.attr_keyed)
+    attr_names = g.attr_names
     rest = g.rest
     hits = g.hits
-    stack: list[Element | TextNode] = list(reversed(root.children))
-    while stack:
-        n = stack.pop()
-        if isinstance(n, Element):
+    iters = [iter(root.children)]  # one child iterator per open element
+    while iters:
+        for n in iters[-1]:
+            if n.__class__ is TextNode:
+                continue
             tag = n.tag
             # fast paths: most elements hit nothing; pure tag hits with no
             # complex compound in play skip the hits() call entirely
-            maybe_complex = (
-                tag in tag_keyed or (has_attr_preds and n.attrs) or rest
-            )
-            if maybe_complex:
+            if tag in tag_keyed or rest or not attr_names.isdisjoint(n.attrs):
                 for i in hits(n):
                     buckets[i].append(n)
             else:
@@ -701,160 +744,374 @@ def collect_matches(root: Element, selectors: list[str]) -> list[list[Element]]:
                 if base is not None:
                     for i in base:
                         buckets[i].append(n)
-            stack.extend(reversed(n.children))
+            if n.children:
+                iters.append(iter(n.children))
+                break
+        else:
+            iters.pop()
     return buckets
 
 
-def collect_first_matches(root: Element, selectors: list[str]) -> list["Element | None"]:
-    """One traversal, N selector lists → first document-order match per
-    selector (or None).  Equivalent to
-    ``[root.query_selector(s) for s in selectors]`` with early exit once
-    every selector has matched."""
-    g = _selector_group(tuple(selectors))
-    out: list[Element | None] = [None] * g.n
-    remaining = g.n
-    tag_buckets = g.tag_buckets
-    tag_keyed = g.tag_keyed
-    has_attr_preds = bool(g.class_keyed or g.id_keyed or g.attr_keyed)
-    rest = g.rest
-    hits = g.hits
-    stack: list[Element | TextNode] = list(reversed(root.children))
-    while stack and remaining:
-        n = stack.pop()
-        if isinstance(n, Element):
-            tag = n.tag
-            if tag in tag_keyed or (has_attr_preds and n.attrs) or rest:
-                for i in hits(n):
-                    if out[i] is None:
-                        out[i] = n
-                        remaining -= 1
-            else:
-                base = tag_buckets.get(tag)
-                if base is not None:
-                    for i in base:
-                        if out[i] is None:
-                            out[i] = n
-                            remaining -= 1
-            stack.extend(reversed(n.children))
-    return out
+_MAIN_LIKE_TAGS = frozenset(("main", "article"))
+_MAIN_LIKE_ROLES = frozenset(("main", "article"))
+MAIN_LIKE_SELECTOR = "main, article, [role='main'], [role='article']"
+_NO_POSITIONS: list[int] = []
 
 
-class SubtreeStats:
-    """Single-walk statistics over an element's subtree — everything the
-    link-density pruners and content scorers need, without re-traversal.
+class DocIndex:
+    """Document-order index of the tree under ``root``, built by one
+    iterative pre-order walk, so that per-element queries need no further
+    walk.
 
-    Parity notes: ``text`` is the raw textContent (whitespace preserved);
-    ``outer_link_texts`` are the textContents of links whose closest('a')
-    is themselves (nested links fold into the outer one, matching the
-    reference's non-nested link-text accounting,
-    markdown-converter.ts:575-582); ``p_texts`` are raw per-<p> texts.
+    Position 0 is ``root``; every element below it gets the next position
+    in document order.  For each position the index records the subtree end
+    (``end[i]``: one past its last descendant, so a subtree is the position
+    range ``[i, end[i])``) and its character range in ``text``, the
+    document's text nodes joined in order.  It also records, for each
+    selector list given, the positions below ``root`` that match it
+    (``root`` itself never matches, as with ``query_selector_all``).
+    Subtree counts, the enclosing-main-content fact and link-text sums are
+    answered from sorted position lists, built on first use.
+
+    :meth:`remove` detaches an element and records its position range.
+    Removed ranges are kept disjoint, and every query answers for the tree
+    as it is now: match lists skip elements inside a removed range, and
+    counts, text and link-text sums leave out the removed ranges inside the
+    queried subtree.  Attribute edits are not tracked, and the tree must not
+    change other than through :meth:`remove` while the index is in use.
     """
 
     __slots__ = (
+        "els",
+        "end",
+        "tstart",
+        "tend",
         "text",
-        "n_links",
-        "outer_link_texts",
-        "n_h16",
-        "n_h13",
-        "n_p",
-        "p_texts",
-        "n_img",
-        "n_figure",
-        "n_video",
-        "n_iframe",
-        "n_main_like",
+        "_slot",
+        "_matches",
+        "_by_tag",
+        "_merged",
+        "_main_like",
+        "_main_cover",
+        "_links",
+        "_link_sums",
+        "_needles",
+        "_rm_starts",
+        "_rm_ends",
     )
 
-    def __init__(self):
-        self.text = ""
-        self.n_links = 0
-        self.outer_link_texts: list[str] = []
-        self.n_h16 = 0
-        self.n_h13 = 0
-        self.n_p = 0
-        self.p_texts: list[str] = []
-        self.n_img = 0
-        self.n_figure = 0
-        self.n_video = 0
-        self.n_iframe = 0
-        self.n_main_like = 0  # main/article tags or role=main/article
+    def __init__(self, root: Element, selectors: tuple[str, ...]):
+        """Index the tree under ``root``, recording the matches of each
+        selector list in ``selectors`` (a tuple, the cache key of its
+        compiled dispatch)."""
+        if MAIN_LIKE_SELECTOR not in selectors:  # the main-content queries read it
+            selectors += (MAIN_LIKE_SELECTOR,)
+        g = _selector_group(selectors)
+        buckets: defaultdict[int, list[int]] = defaultdict(list)
+        tag_buckets = g.tag_buckets
+        tag_keyed = g.tag_keyed
+        attr_names = g.attr_names
+        rest = g.rest
+        hits = g.hits
+        els: list[Element] = [root]
+        end = [0]
+        tstart = [0]
+        tend = [0]
+        by_tag: dict[str, list[int]] = {root.tag: [0]}
+        parts: list[str] = []
+        off = 0
+        # one child iterator per open element; a loop that runs out of
+        # children closes its element's subtree
+        iters = [iter(root.children)]
+        open_pos = [0]
+        while iters:
+            for n in iters[-1]:
+                if n.__class__ is TextNode:
+                    t = n.text
+                    parts.append(t)
+                    off += len(t)
+                    continue
+                i = len(els)
+                els.append(n)
+                tstart.append(off)
+                tag = n.tag
+                bt = by_tag.get(tag)
+                if bt is None:
+                    by_tag[tag] = [i]
+                else:
+                    bt.append(i)
+                if tag in tag_keyed or rest or not attr_names.isdisjoint(n.attrs):
+                    for k in hits(n):
+                        buckets[k].append(i)
+                else:
+                    base = tag_buckets.get(tag)
+                    if base is not None:
+                        for k in base:
+                            buckets[k].append(i)
+                if n.children:
+                    end.append(0)
+                    tend.append(0)
+                    iters.append(iter(n.children))
+                    open_pos.append(i)
+                    break
+                end.append(i + 1)
+                tend.append(off)
+            else:
+                iters.pop()
+                i = open_pos.pop()
+                end[i] = len(els)
+                tend[i] = off
+        self.els = els
+        self.end = end
+        self.tstart = tstart
+        self.tend = tend
+        self.text = "".join(parts)
+        self._slot = g.slot
+        self._matches = buckets
+        self._by_tag = by_tag
+        self._merged: dict[tuple[str, ...], list[int]] = {}
+        self._main_like: list[int] | None = None
+        self._main_cover: tuple[list[int], list[int], bool] | None = None
+        self._links: tuple[list[int], dict[int, list[int]]] | None = None
+        self._needles: dict[tuple[str, ...], list[list[int]] | None] = {}
+        self._link_sums: dict = {}
+        self._rm_starts: list[int] = []
+        self._rm_ends: list[int] = []
 
-    @property
-    def raw_text_len(self) -> int:
-        return len(self.text)
+    # --- selector matches ----------------------------------------------------
+    def matches(self, selector: str, within: int = 0) -> list[int]:
+        """Positions matching ``selector`` (one of the indexed lists) strictly
+        inside ``within``'s subtree and not removed, in document order."""
+        m = self._matches.get(self._slot[selector])
+        if not m:
+            return _NO_POSITIONS
+        if within:
+            m = m[bisect_right(m, within) : bisect_left(m, self.end[within])]
+        if self._rm_starts:
+            return [i for i in m if not self.is_removed(i)]
+        return m
 
-    @property
-    def outer_link_text_len(self) -> int:
-        return sum(len(t) for t in self.outer_link_texts)
+    def first(self, selector: str, within: int = 0) -> int | None:
+        """First position that :meth:`matches` would list, or None."""
+        m = self._matches.get(self._slot[selector])
+        if not m:
+            return None
+        lo = bisect_right(m, within) if within else 0
+        stop = self.end[within]
+        for i in m[lo:]:
+            if i >= stop:
+                break
+            if not self.is_removed(i):
+                return i
+        return None
 
+    def position(self, el: Element) -> int | None:
+        """Position of ``el``, or None if it is not in the indexed tree."""
+        try:
+            return self.els.index(el)
+        except ValueError:
+            return None
 
-_H16 = frozenset(("h1", "h2", "h3", "h4", "h5", "h6"))
-_H13 = frozenset(("h1", "h2", "h3"))
+    # --- removal ----------------------------------------------------------------
+    def remove(self, i: int) -> None:
+        """Detach the element at (unremoved) position ``i`` and record its
+        range, absorbing the removed ranges inside it."""
+        self.els[i].remove()
+        starts, ends = self._rm_starts, self._rm_ends
+        lo, hi = self._removed_inside(i)
+        starts[lo:hi] = [i]
+        ends[lo:hi] = [self.end[i]]
 
+    def is_removed(self, i: int) -> bool:
+        """True iff ``i`` lies in a removed range."""
+        k = bisect_right(self._rm_starts, i) - 1
+        return k >= 0 and i < self._rm_ends[k]
 
-def subtree_stats(el: Element) -> SubtreeStats:
-    st = SubtreeStats()
-    text_parts: list[str] = []
-    link_parts: list[str] | None = None
-    p_parts: list[str] | None = None
-    link_depth = 0
-    p_depth = 0
-    EXIT = object()
-    stack: list = [el]
-    first = True
-    while stack:
-        n = stack.pop()
-        if n is EXIT:
-            tag = stack.pop()
-            if tag == "a":
-                link_depth -= 1
-                if link_depth == 0 and link_parts is not None:
-                    st.outer_link_texts.append("".join(link_parts))
-                    link_parts = None
-            elif tag == "p":
-                p_depth -= 1
-                if p_depth == 0 and p_parts is not None:
-                    st.p_texts.append("".join(p_parts))
-                    p_parts = None
-            continue
-        if isinstance(n, TextNode):
-            text_parts.append(n.text)
-            if link_parts is not None:
-                link_parts.append(n.text)
-            if p_parts is not None:
-                p_parts.append(n.text)
-            continue
-        tag = n.tag
-        if not first:
-            if tag == "a":
-                st.n_links += 1
-                if link_depth == 0:
-                    link_parts = []
-                link_depth += 1
-                stack.append("a")
-                stack.append(EXIT)
-            elif tag == "p":
-                st.n_p += 1
-                if p_depth == 0:
-                    p_parts = []
-                p_depth += 1
-                stack.append("p")
-                stack.append(EXIT)
-            elif tag in _H16:
-                st.n_h16 += 1
-                if tag in _H13:
-                    st.n_h13 += 1
-            elif tag == "img":
-                st.n_img += 1
-            elif tag == "figure":
-                st.n_figure += 1
-            elif tag == "video":
-                st.n_video += 1
-            elif tag == "iframe":
-                st.n_iframe += 1
-            if tag in ("main", "article") or n.attrs.get("role") in ("main", "article"):
-                st.n_main_like += 1
-        first = False
-        stack.extend(reversed(n.children))
-    st.text = "".join(text_parts)
-    return st
+    def _removed_inside(self, i: int) -> tuple[int, int]:
+        """Slice bounds of the removed ranges strictly inside ``i``'s
+        subtree (``i`` itself not removed)."""
+        starts = self._rm_starts
+        if not starts:
+            return 0, 0
+        return bisect_right(starts, i), bisect_left(starts, self.end[i])
+
+    # --- text ---------------------------------------------------------------------
+    def text_len(self, i: int) -> int:
+        """``len(text_of(i))``."""
+        n = self.tend[i] - self.tstart[i]
+        lo, hi = self._removed_inside(i)
+        for r in self._rm_starts[lo:hi]:
+            n -= self.tend[r] - self.tstart[r]
+        return n
+
+    def text_of(self, i: int, limit: int | None = None) -> str:
+        """``text_content`` of the element at ``i`` (its first ``limit``
+        characters, if given)."""
+        lo, hi = self._removed_inside(i)
+        stop = self.tend[i] if limit is None else self.tstart[i] + limit
+        if lo == hi:
+            return self.text[self.tstart[i] : min(stop, self.tend[i])]
+        text, tstart, tend = self.text, self.tstart, self.tend
+        pieces = []
+        at = tstart[i]
+        for r in self._rm_starts[lo:hi]:
+            if tstart[r] >= stop:
+                break
+            pieces.append(text[at : tstart[r]])
+            stop += tend[r] - tstart[r]
+            at = tend[r]
+        pieces.append(text[at : min(stop, tend[i])])
+        return "".join(pieces)
+
+    def lower_text_contains(self, i: int, needles: tuple[str, ...]) -> bool:
+        """True iff ``text_of(i).lower()`` contains one of ``needles``
+        (lowercase ASCII strings).
+
+        Each needle's occurrences in the lowercased document text are found
+        once.  That text lines up with ``text`` character for character
+        unless some character lowercases to two (U+0130); then, and for a
+        subtree with removed ranges inside, the subtree's text is
+        lowercased instead."""
+        occurrences = self._needles.get(needles, False)
+        if occurrences is False:
+            low = self.text.lower()
+            occurrences = None
+            if len(low) == len(self.text):
+                occurrences = []
+                for needle in needles:
+                    starts = []
+                    k = low.find(needle)
+                    while k >= 0:
+                        starts.append(k)
+                        k = low.find(needle, k + 1)
+                    occurrences.append(starts)
+            self._needles[needles] = occurrences
+        lo, hi = self._removed_inside(i)
+        if occurrences is None or lo != hi:
+            text = self.text_of(i).lower()
+            return any(needle in text for needle in needles)
+        a, b = self.tstart[i], self.tend[i]
+        for needle, starts in zip(needles, occurrences):
+            k = bisect_left(starts, a)
+            if k < len(starts) and starts[k] + len(needle) <= b:
+                return True
+        return False
+
+    # --- subtree counts -------------------------------------------------------------
+    def _count(self, pos: list[int], i: int) -> int:
+        end = self.end[i]
+        n = bisect_left(pos, end) - bisect_right(pos, i)
+        if n:
+            lo, hi = self._removed_inside(i)
+            for k in range(lo, hi):
+                n -= bisect_left(pos, self._rm_ends[k]) - bisect_left(pos, self._rm_starts[k])
+        return n
+
+    def _tag_positions(self, tags: str | tuple[str, ...]) -> list[int]:
+        if isinstance(tags, str):
+            return self._by_tag.get(tags, _NO_POSITIONS)
+        merged = self._merged.get(tags)
+        if merged is None:
+            merged = sorted(p for t in tags for p in self._by_tag.get(t, _NO_POSITIONS))
+            self._merged[tags] = merged
+        return merged
+
+    def count(self, tags: str | tuple[str, ...], i: int) -> int:
+        """Elements with tag ``tags`` (or any of them, for a tuple) strictly
+        inside ``i``'s subtree."""
+        return self._count(self._tag_positions(tags), i)
+
+    def _main_like_positions(self) -> list[int]:
+        if self._main_like is None:
+            root = self.els[0]
+            main_like = root.tag in _MAIN_LIKE_TAGS or root.attrs.get("role") in _MAIN_LIKE_ROLES
+            below = self._matches.get(self._slot[MAIN_LIKE_SELECTOR], _NO_POSITIONS)
+            self._main_like = [0, *below] if main_like else below
+        return self._main_like
+
+    def count_main_like(self, i: int) -> int:
+        """main/article elements or ``[role=main|article]`` strictly inside
+        ``i``'s subtree."""
+        return self._count(self._main_like_positions(), i)
+
+    def in_main_like(self, i: int) -> bool:
+        """True iff ``i`` or an ancestor (above ``root`` too) is main/article
+        or ``[role=main|article]``: ``closest()`` of that selector."""
+        if self._main_cover is None:
+            starts: list[int] = []
+            ends: list[int] = []
+            for j in self._main_like_positions():
+                if not ends or j >= ends[-1]:
+                    starts.append(j)
+                    ends.append(self.end[j])
+            above = self.els[0].parent
+            outer = above is not None and above.closest(MAIN_LIKE_SELECTOR) is not None
+            self._main_cover = (starts, ends, outer)
+        starts, ends, outer = self._main_cover
+        if outer:
+            return True
+        k = bisect_right(starts, i) - 1
+        return k >= 0 and i < ends[k]
+
+    # --- link text --------------------------------------------------------------------
+    def _link_levels(self) -> tuple[list[int], dict[int, list[int]]]:
+        """Per position, the number of links enclosing it (itself included);
+        per such level, the sorted positions of the links at that level."""
+        if self._links is None:
+            els, end = self.els, self.end
+            depth = [0] * len(els)
+            by_level: dict[int, list[int]] = {}
+            open_ends: list[int] = []
+            for j in range(len(els)):
+                while open_ends and open_ends[-1] <= j:
+                    open_ends.pop()
+                if els[j].tag == "a":
+                    open_ends.append(end[j])
+                    by_level.setdefault(len(open_ends), []).append(j)
+                depth[j] = len(open_ends)
+            self._links = (depth, by_level)
+        return self._links
+
+    def _outer_links_sum(self, i: int, lv: int, measure) -> int:
+        """Sum of ``measure`` over the original text of the level ``lv + 1``
+        links inside ``i``'s subtree, removals ignored."""
+        pos = self._links[1].get(lv + 1)
+        if not pos:
+            return 0
+        key = (lv + 1, measure)
+        sums = self._link_sums.get(key)
+        if sums is None:
+            text, tstart, tend = self.text, self.tstart, self.tend
+            sums = [0]
+            acc = 0
+            for p in pos:
+                acc += measure(text[tstart[p] : tend[p]])
+                sums.append(acc)
+            self._link_sums[key] = sums
+        return sums[bisect_left(pos, self.end[i])] - sums[bisect_right(pos, i)]
+
+    def outer_link_text_len(self, i: int, measure=len) -> int:
+        """Sum of ``measure(text)`` over the outermost links strictly inside
+        ``i``'s subtree (a link nested in another counts as part of it; a
+        link enclosing ``i`` does not make ``i``'s links nested)."""
+        depth = self._link_levels()[0]
+        lv = depth[i]
+        lo, hi = self._removed_inside(i)
+        if lo == hi:
+            return self._outer_links_sum(i, lv, measure)
+        if measure is len:
+            # drop each removed range's share: all of its text when it lies
+            # inside one of the counted links, else its own outer links
+            total = self._outer_links_sum(i, lv, len)
+            for r in self._rm_starts[lo:hi]:
+                if depth[r] > lv:
+                    total -= self.tend[r] - self.tstart[r]
+                else:
+                    total -= self._outer_links_sum(r, lv, len)
+            return total
+        pos = self._links[1].get(lv + 1, _NO_POSITIONS)
+        return sum(
+            measure(self.text_of(p))
+            for p in pos[bisect_right(pos, i) : bisect_left(pos, self.end[i])]
+            if not self.is_removed(p)
+        )

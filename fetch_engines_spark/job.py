@@ -3,7 +3,7 @@
 Deploy (north_rule packaging):
 
     python -c "from fetch_engines_spark.packaging import build_pyfiles_zip as b; print(b())"
-    spark-submit --py-files /tmp/fetch_engines_spark-0.1.0.zip \
+    spark-submit --py-files <the zip path printed above> \
         -- fetch_engines_spark/job.py \
         --input  <documents parquet/iceberg path> \
         --output <checkpoint root> \

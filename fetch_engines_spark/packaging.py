@@ -9,6 +9,7 @@ package").
 
 from __future__ import annotations
 
+import hashlib
 import os
 import zipfile
 from pathlib import Path
@@ -25,10 +26,12 @@ def package_root() -> Path:
 def build_pyfiles_zip(dest: str | None = None) -> str:
     """Zip the package for --py-files; returns the zip path.
 
-    Deterministic content ordering; rebuilt when a source file is newer
-    than the existing zip or when the zip's member list differs from the
-    current source list (a deleted or renamed module must not keep
-    shipping).
+    Deterministic content ordering.  The zip is keyed on a hash of the
+    sources' names and bytes: the default path is
+    ``$TMPDIR/fetch_engines_spark-<version>-<hash>.zip``, and a zip at
+    ``dest`` is reused only when its stored hash matches.  Two checkouts
+    sharing a ``TMPDIR`` therefore never ship each other's code, whatever
+    their file times, and a deleted or renamed module stops shipping.
     """
     root = package_root()
     # Already running from a --py-files zip (e.g. inside spark-submit):
@@ -38,31 +41,37 @@ def build_pyfiles_zip(dest: str | None = None) -> str:
     )
     if zip_ancestor and os.path.isfile(zip_ancestor):
         return zip_ancestor
-    dest = dest or os.path.join(
-        os.environ.get("TMPDIR", "/tmp"),
-        f"fetch_engines_spark-{fetch_engines_spark.__version__}.zip",
-    )
     sources = sorted(p for p in root.rglob("*.py") if "__pycache__" not in p.parts)
     if not sources:
         raise FileNotFoundError(f"no package sources under {root}")
     arcnames = [str(Path("fetch_engines_spark") / p.relative_to(root)) for p in sources]
-    if os.path.exists(dest):
-        newest = max(p.stat().st_mtime for p in sources)
-        if os.path.getmtime(dest) >= newest and _zip_members(dest) == sorted(arcnames):
-            return dest
-    tmp = dest + ".tmp"
+    contents = [p.read_bytes() for p in sources]
+    digest = hashlib.sha256()
+    for arcname, data in zip(arcnames, contents):
+        digest.update(f"{arcname}\0{len(data)}\0".encode())
+        digest.update(data)
+    key = digest.hexdigest()[:16].encode()
+    dest = dest or os.path.join(
+        os.environ.get("TMPDIR", "/tmp"),
+        f"fetch_engines_spark-{fetch_engines_spark.__version__}-{key.decode()}.zip",
+    )
+    if os.path.exists(dest) and _zip_comment(dest) == key:
+        return dest
+    tmp = f"{dest}.{os.getpid()}.tmp"
     with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-        for p, arcname in zip(sources, arcnames):
-            zf.write(p, arcname=arcname)
+        for arcname, data in zip(arcnames, contents):
+            zf.writestr(arcname, data)
+        zf.comment = key
     os.replace(tmp, dest)
     return dest
 
 
-def _zip_members(path: str) -> list[str] | None:
-    """Sorted member names of the zip at ``path``; None if unreadable."""
+def _zip_comment(path: str) -> bytes | None:
+    """The comment of the zip at ``path`` (its source hash); None if
+    unreadable."""
     try:
         with zipfile.ZipFile(path) as zf:
-            return sorted(zf.namelist())
+            return zf.comment
     except zipfile.BadZipFile:
         return None
 

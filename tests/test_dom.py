@@ -162,3 +162,124 @@ def test_fast_parser_matches_stdlib_fuzz():
         assert d is None, (html[:120], d)
 
     check()
+
+
+# --- DocIndex: every query equals the brute-force answer on the live tree ---
+
+
+def _index_pages():
+    """Parsed pages with links nested in links and in link-density
+    candidates, main-like wrappers, headings, media and odd-case text."""
+    import random
+
+    from fetch_engines_spark.fixtures import FIXTURES
+
+    rng = random.Random(7)
+    words = ["Accept cookies", "refuse all", "İ", "K", " ", "  x  ", "text", "\n"]
+
+    def block(depth):
+        tag = rng.choice(["div", "section", "ul", "nav", "a", "p", "main", "article",
+                          "h1", "h3", "span", "img", "figure", "video", "iframe"])
+        attrs = rng.choice(["", " class='sidebar'", " role='main'", " role='article'",
+                            " id='c_1'", " class='post x'", " href='/h'"])
+        inner = "".join(
+            rng.choice(words) if rng.random() < 0.5 or depth > 4 else block(depth + 1)
+            for _ in range(rng.randint(0, 4))
+        )
+        return f"<{tag}{attrs}>{inner}</{tag}>"
+
+    pages = [f.html for f in FIXTURES]
+    pages += ["<body>" + "".join(block(0) for _ in range(rng.randint(1, 6))) + "</body>" for _ in range(60)]
+    return [parse_html(h) for h in pages], rng
+
+
+def _live_stats(el):
+    """The index's subtree figures computed by walking the live subtree:
+    counts exclude ``el``; outer links are those with no link between
+    them and ``el``."""
+    from fetch_engines_spark.dom import TextNode
+
+    counts: dict = {}
+    outer: list = []
+    stack = [(ch, False) for ch in reversed(el.children)]
+    while stack:
+        n, in_link = stack.pop()
+        if isinstance(n, TextNode):
+            continue
+        counts[n.tag] = counts.get(n.tag, 0) + 1
+        if n.tag in ("main", "article") or n.attrs.get("role") in ("main", "article"):
+            counts["main-like"] = counts.get("main-like", 0) + 1
+        if n.tag == "a" and not in_link:
+            outer.append(n.text_content)
+        stack.extend((ch, in_link or n.tag == "a") for ch in reversed(n.children))
+    return counts, outer
+
+
+def test_doc_index_answers_match_the_live_tree():
+    """Removals in random order (not only document order), then every
+    position's figures against a walk of the live tree."""
+    from fetch_engines_spark.dom import DocIndex, collect_matches
+
+    norm = lambda s: len(" ".join(s.split()))  # noqa: E731
+    needles = ("accept cookies", "refuse all")
+    sels = ("div, section", "a", "h1, h3", "[role='main']", ".sidebar", "div[id^='c_']")
+    roots, rng = _index_pages()
+    for root in roots:
+        idx = DocIndex(root, sels)
+        n = len(idx.els)
+        assert [[idx.els[i] for i in idx.matches(s)] for s in sels] == collect_matches(root, list(sels))
+        order = list(range(1, n))
+        rng.shuffle(order)
+        for i in order[: rng.randint(0, max(1, n // 3))]:
+            if not idx.is_removed(i):
+                idx.remove(i)
+        live = [i for i in range(n) if not idx.is_removed(i)]
+        attached = set()
+        stack = [root]
+        while stack:
+            e = stack.pop()
+            attached.add(id(e))
+            stack.extend(c for c in e.children if hasattr(c, "tag"))
+        assert {id(idx.els[i]) for i in live} == attached
+        for s in sels:
+            assert [idx.els[i] for i in idx.matches(s)] == root.query_selector_all(s)
+        for i in live:
+            el = idx.els[i]
+            counts, outer = _live_stats(el)
+            text = el.text_content
+            assert idx.text_of(i) == text
+            assert idx.text_of(i, 7) == text[:7]
+            assert idx.text_len(i) == len(text)
+            for tags in ("a", "p", ("h1", "h3"), ("img", "figure", "video")):
+                want = sum(counts.get(t, 0) for t in ((tags,) if isinstance(tags, str) else tags))
+                assert idx.count(tags, i) == want, (i, tags)
+            assert idx.count_main_like(i) == counts.get("main-like", 0)
+            assert idx.outer_link_text_len(i) == sum(map(len, outer))
+            assert idx.outer_link_text_len(i, norm) == sum(map(norm, outer))
+            closest = el.closest("main, article, [role='main'], [role='article']")
+            assert idx.in_main_like(i) == (closest is not None and bool(closest.tag))
+            assert idx.lower_text_contains(i, needles) == any(x in text.lower() for x in needles)
+            for s in sels:
+                assert [idx.els[j] for j in idx.matches(s, i)] == el.query_selector_all(s)
+                first = idx.first(s, i)
+                assert (None if first is None else idx.els[first]) == el.query_selector(s)
+
+
+def test_selector_groups_match_query_selector_all():
+    """The keyed dispatch of every selector list the converter indexes or
+    collects gives ``query_selector_all``'s answer."""
+    from fetch_engines_spark.convert import converter as c
+    from fetch_engines_spark.dom import DocIndex, collect_matches
+
+    groups = [
+        c._DOCUMENT_SELECTORS,
+        c._CONTENT_SELECTORS,
+        (c._PREPROCESSING_REMOVE, c._ABSOLUTIZE_SELECTOR, "img[src]", c._BREADCRUMBS),
+    ]
+    roots, _ = _index_pages()
+    for root in roots:
+        for sels in groups:
+            want = [root.query_selector_all(s) for s in sels]
+            assert collect_matches(root, list(sels)) == want
+            idx = DocIndex(root, sels)
+            assert [[idx.els[i] for i in idx.matches(s)] for s in sels] == want

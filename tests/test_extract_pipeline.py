@@ -4,6 +4,8 @@ This is the span-sequence-equality layer (BASELINE.json invariant:
 (kind, text, media_ref, order) per document vs the reference fixtures).
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -394,6 +396,44 @@ def test_pyfiles_zip_drops_deleted_module(tmp_path, monkeypatch):
         names = zf.namelist()
     assert "fetch_engines_spark/b.py" not in names
     assert sorted(names) == ["fetch_engines_spark/__init__.py", "fetch_engines_spark/a.py"]
+
+
+def test_pyfiles_zip_keyed_on_source_bytes(tmp_path, monkeypatch):
+    """Two checkouts of the same version sharing a TMPDIR: the second has
+    other bytes and OLDER file times, and its zip must still carry its own
+    bytes, not the first checkout's cached zip."""
+    import zipfile
+
+    from fetch_engines_spark import packaging
+
+    def checkout(name: str, body: str, mtime: float):
+        pkg = tmp_path / name
+        pkg.mkdir()
+        for rel, text in (("__init__.py", ""), ("a.py", body)):
+            (pkg / rel).write_text(text)
+            os.utime(pkg / rel, (mtime, mtime))
+        return pkg
+
+    first = checkout("first", "A = 'first'\n", 2_000_000_000)
+    second = checkout("second", "A = 'second'\n", 1_000_000_000)
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    monkeypatch.setenv("TMPDIR", str(tmpdir))
+
+    zips = {}
+    for pkg in (first, second):
+        monkeypatch.setattr(packaging, "package_root", lambda pkg=pkg: pkg)
+        zips[pkg.name] = packaging.build_pyfiles_zip()
+    for name, path in zips.items():
+        with zipfile.ZipFile(path) as zf:
+            assert zf.read("fetch_engines_spark/a.py") == f"A = '{name}'\n".encode()
+    # an explicit destination is rebuilt when its stored hash differs
+    dest = str(tmp_path / "out.zip")
+    for pkg in (first, second):
+        monkeypatch.setattr(packaging, "package_root", lambda pkg=pkg: pkg)
+        assert packaging.build_pyfiles_zip(dest) == dest
+        with zipfile.ZipFile(dest) as zf:
+            assert zf.read("fetch_engines_spark/a.py") == f"A = '{pkg.name}'\n".encode()
 
 
 _OUTPUT_ROW_CASES = {

@@ -3,6 +3,7 @@ throw on arbitrary input, and span segmentation must round-trip."""
 
 import string
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -89,6 +90,134 @@ def test_deeply_nested_html_does_not_crash():
     _, md, error, _, _ = convert_document(html)
     assert isinstance(md, str)
     assert not (error or "").startswith("ERR_EXTRACTION"), error
+
+
+def _doubling_ratios(pages: dict, rounds: int = 5) -> list:
+    """How much the conversion time grows per doubling of nesting depth:
+    ``pages`` maps depths, each twice the one before, to html.
+
+    Each round times every page in turn, a page of depth d converted
+    ``deepest // d`` times so that all timings span about the same interval,
+    and takes the ratios of neighbouring depths.  A shared host has slow
+    spells lasting seconds, and a round is short enough to fall mostly in
+    one; the median over rounds drops the rounds a spell cut through.
+    Timings are CPU time, with the cyclic collector paused."""
+    import gc
+    import statistics
+    import time
+
+    depths = sorted(pages)
+    per_round = []
+    for _ in range(rounds):
+        t = {}
+        for depth in depths:
+            repeats = max(1, depths[-1] // depth)
+            gc.collect()
+            gc.disable()
+            try:
+                start = time.process_time()
+                for _ in range(repeats):
+                    convert_document(pages[depth])
+                t[depth] = (time.process_time() - start) / repeats
+            finally:
+                gc.enable()
+        per_round.append([t[b] / t[a] for a, b in zip(depths, depths[1:])])
+    return [statistics.median(r) for r in zip(*per_round)]
+
+
+NESTS = {
+    "div": lambda d: "<div>" * d + "deep content here" + "</div>" * d,
+    "div+text": lambda d: "<div>some words here " * d + "</div>" * d,
+    "div+links": lambda d: "<div><a href='/a'>link</a> text " * d + "</div>" * d,
+}
+
+
+@pytest.mark.parametrize(
+    "shape, depths",
+    [("div", (1000, 2000, 4000, 8000)), ("div+text", (500, 1000, 2000, 4000)), ("div+links", (500, 1000, 2000, 4000))],
+)
+def test_conversion_time_linear_in_nesting_depth(shape, depths):
+    """Each doubling of a nest's depth at most multiplies the conversion
+    time by 2.5 (per-candidate subtree walks made it ×4)."""
+    ratios = _doubling_ratios({d: NESTS[shape](d) for d in depths})
+    assert max(ratios) <= 2.5, ratios
+
+
+def test_20k_deep_page_converts_within_seconds():
+    import time
+
+    html = NESTS["div"](20000)
+    start = time.perf_counter()
+    _, md, error, _, _ = convert_document(html)
+    assert time.perf_counter() - start < 5
+    assert isinstance(md, str)
+    assert not (error or "").startswith("ERR_EXTRACTION"), error
+
+
+def _postprocess_every_step(markdown: str) -> str:
+    """M2–M12 with every substitution applied unconditionally (the chain
+    ``postprocess_markdown`` short-cuts)."""
+    import re
+
+    from fetch_engines_spark.convert import converter as c
+
+    p = markdown
+    p = c._M2_HEADING.sub(r"\n\n\2\n\n", p)
+    p = c._M3_LIST.sub(r"\n\n\2", p)
+    p = c._M4_EMPTY_LINK.sub("", p)
+    p = c._M4_EMPTY_IMG.sub("", p)
+    p = c._M5_PROTO_REL.sub(r"\1https://", p)
+    p = c._M6_ADJ_LINK.sub(r"\1 ", p)
+    p = "\n".join(
+        c._LINK_SPLIT.sub(r"\1\n", line)
+        if len(c._LINK_RUN.findall(line)) >= 3 and len(line) >= 180
+        else line
+        for line in p.split("\n")
+    )
+    p = c._M8_NEWLINES.sub("\n\n", p)
+    p = re.sub(r"^[ \t]+|[ \t]+$", "", p, flags=re.M)
+    p = c._M10_CODE.sub(r"\n\n\2\n\n", p)
+    p = c._M8_NEWLINES.sub("\n\n", p)
+    p = c._M11_DUP_LINE.sub(r"\1", p)
+    p = c._M12_META_SEP.sub(r"\1\n\2", p)
+    return p.strip()
+
+
+_MD_PIECES = ["#", " ", "\t", "\n", "[", "]", "(", ")", "!", "/", "`", "```", "-", "---",
+              "a", "1.", "*", ">", "](//", ")[", "[]", "x" * 30, "[link](https://e.com/p)"]
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(st.sampled_from(_MD_PIECES), max_size=120).map("".join))
+def test_postprocess_shortcuts_change_nothing(md):
+    assert postprocess_markdown(md) == _postprocess_every_step(md)
+
+
+_URL_PIECES = ["/", "a", ".", "..", "?", "#", ";", "\t", "\n", " ", "%20", ":", "@", "é", "//", "x.png"]
+
+
+@settings(max_examples=400, deadline=None)
+@given(
+    st.sampled_from(["https://Ex.example:8080/dir/page.html?q=1#f", "HTTP://ex.example", "https://ex.example/a/b/",
+                     "ftp://ex.example/x", "https:no-netloc/x", "http://u@[::1]/x;p"]),
+    st.lists(st.sampled_from(_URL_PIECES), max_size=10).map("".join),
+)
+def test_absolute_path_shortcut_matches_urljoin(base, path):
+    """P4 resolves a plain absolute path without ``urljoin``; every other
+    reference still goes through it.  Both give urljoin's answer."""
+    from urllib.parse import urljoin
+
+    from fetch_engines_spark.convert import converter as c
+
+    for raw in ("/" + path, path):
+        want = raw.strip()
+        if want and not (c._NON_HTTP_SCHEME.match(want) or c._ABSOLUTE_SCHEME.match(want)):
+            try:
+                want = urljoin(base, want)
+            except ValueError:
+                pass
+        got = c._resolve_url(raw, base, c._http_origin(base))
+        assert got == (want or None), (base, raw)
 
 
 from hypothesis import given, settings
