@@ -334,35 +334,18 @@ def absolutize_relative_urls(
             return
     except ValueError:
         return
-    origin = _http_origin(base_url)
     if els is None:
         els = root.query_selector_all(_ABSOLUTIZE_SELECTOR)
     for el in els:
         for attr in ("href", "src"):
             raw = el.get_attribute(attr)
             if raw:
-                resolved = _resolve_url(raw, base_url, origin)
+                resolved = _resolve_url(raw, base_url)
                 if resolved:
                     el.set_attribute(attr, resolved)
 
 
-def _http_origin(base_url: str) -> str | None:
-    """``scheme://netloc`` of an http(s) base URL with a host, else None."""
-    parsed = urlparse(base_url)
-    if parsed.scheme in ("http", "https") and parsed.netloc:
-        return f"{parsed.scheme}://{parsed.netloc}"
-    return None
-
-
-# what urljoin reads in an absolute-path reference beyond its path: query,
-# fragment and params delimiters, the tab/CR/LF it deletes, dot segments
-_NOT_PLAIN_PATH = re.compile(r"[?#;\t\r\n]|/\.")
-
-
-def _resolve_url(raw: str, base_url: str, origin: str | None = None) -> str | None:
-    """``raw`` resolved against ``base_url``.  ``origin`` is the base's
-    ``scheme://netloc`` for an http(s) base: a plain absolute path
-    (``/a/b.png``) resolves to ``origin + path``, as ``urljoin`` gives."""
+def _resolve_url(raw: str, base_url: str) -> str | None:
     value = raw.strip()
     if not value:
         return None
@@ -370,8 +353,6 @@ def _resolve_url(raw: str, base_url: str, origin: str | None = None) -> str | No
         return value
     if _ABSOLUTE_SCHEME.match(value):
         return value
-    if origin and value[0] == "/" and value[1:2] != "/" and not _NOT_PLAIN_PATH.search(value):
-        return origin + value
     try:
         return urljoin(base_url, value)
     except ValueError:
@@ -693,9 +674,14 @@ class MarkdownConverter:
         """Run P1–C-H; returns (content element | fallback string, title).
 
         P3–P6 take their elements from one ``collect_matches`` walk.  Every
-        later stage queries one ``DocIndex`` built after P6, which tracks
-        the removals of P7, P9, C-F and C-G; forum content (a clone) gets
-        an index of its own."""
+        later stage queries a ``DocIndex``: one built after P6, rebuilt
+        after P9 if P7 pruned anything and over the content after C-F if
+        anything inside it is gone; forum content (a clone) gets an index
+        of its own.  An index answers for removed elements too, but a
+        subtree query steps over each removed range inside the subtree, so
+        the stages that score every candidate (P7, C-A–C-C, C-G) start on
+        an index with none: P7 and C-G prune in document order, and a
+        candidate is reached before anything inside it is removed."""
         try:
             html = cleanup_html(html)
             root = parse_html(html)
@@ -723,9 +709,12 @@ class MarkdownConverter:
             idx = DocIndex(root, _DOCUMENT_SELECTORS)
             remove_high_link_density_elements(idx, DEFAULT_LINK_DENSITY_THRESHOLD)
             best_title = elect_title(idx)
+            pruned = idx.has_removed_inside(0)
             head = idx.first("head")
             if head is not None:
                 idx.remove(head)
+            if pruned:
+                idx = DocIndex(root, _DOCUMENT_SELECTORS)
 
             if detect_forum_page(idx):
                 content = extract_forum_content_element(idx)
@@ -741,6 +730,8 @@ class MarkdownConverter:
             if pos is None:
                 idx, pos = DocIndex(content, _CONTENT_SELECTORS), 0
             remove_content_subtree_boilerplate(idx, pos)
+            if idx.has_removed_inside(pos):
+                idx, pos = DocIndex(content, _CONTENT_SELECTORS), 0
             remove_high_link_density_in_selected_content(idx, pos)
             ensure_primary_heading(idx, pos, best_title)
             return content, best_title

@@ -580,14 +580,8 @@ class _SelectorGroup:
     Per element the walk does O(1) dict lookups + O(class tokens) work
     regardless of how many selector lists (or compounds) the group holds —
     the multi-pattern analog of SelectorList's keyed dispatch.  Every
-    entry carries the index of the selector list it belongs to.
-
-    ``attr_names`` holds every attribute name a non-tag-keyed compound is
-    keyed by, so a walk calls :meth:`hits` only for elements that carry
-    one.  ``attr_screens`` maps an attribute name to one regex over the
-    values its compounds test (``=``, ``*=``, ``^=``, ``$=`` all need the
-    value as a substring): when it finds none, no compound keyed by that
-    name can match.
+    entry carries the index of the selector list it belongs to, and
+    ``slot`` maps each selector list to that index.
     """
 
     __slots__ = (
@@ -598,8 +592,6 @@ class _SelectorGroup:
         "class_keyed",
         "id_keyed",
         "attr_keyed",
-        "attr_screens",
-        "attr_names",
         "rest",
     )
 
@@ -616,57 +608,35 @@ class _SelectorGroup:
             for c in parse_selector_list(s).compounds:
                 tag, preds = c
                 if tag is not None and not preds:
-                    bucket = tag_buckets.setdefault(tag, [])
-                    if i not in bucket:
-                        bucket.append(i)
-                    continue
-                # key each compound by its most selective predicate: a class
-                # token, an id, an attribute value (screened), the tag, then
-                # a bare attribute name
-                cls_key = next((p[1] for p in preds if p[0] == "class"), None)
-                if cls_key is not None:
-                    class_keyed.setdefault(cls_key, []).append((i, c))
-                    continue
-                id_key = next((p[1] for p in preds if p[0] == "id"), None)
-                if id_key is not None:
-                    id_keyed.setdefault(id_key, []).append((i, c))
-                    continue
-                attrs = [p for p in preds if p[0] == "attr"]
-                valued = next((p[1] for p in attrs if p[2] is not None and p[3]), None)
-                if valued is not None:
-                    attr_keyed.setdefault(valued, []).append((i, c))
+                    tag_buckets.setdefault(tag, []).append(i)
                 elif tag is not None:
                     tag_keyed.setdefault(tag, []).append((i, c))
-                elif attrs:
-                    attr_keyed.setdefault(attrs[0][1], []).append((i, c))
                 else:
-                    rest.append((i, c))  # :not-only compounds (rare)
+                    cls_key = next((p[1] for p in preds if p[0] == "class"), None)
+                    if cls_key is not None:
+                        class_keyed.setdefault(cls_key, []).append((i, c))
+                        continue
+                    id_key = next((p[1] for p in preds if p[0] == "id"), None)
+                    if id_key is not None:
+                        id_keyed.setdefault(id_key, []).append((i, c))
+                        continue
+                    attr_key = next((p[1] for p in preds if p[0] == "attr"), None)
+                    if attr_key is not None:
+                        attr_keyed.setdefault(attr_key, []).append((i, c))
+                    else:
+                        rest.append((i, c))  # :not-only compounds (rare)
         self.tag_buckets = tag_buckets
         self.tag_keyed = tag_keyed
         self.class_keyed = class_keyed
         self.id_keyed = id_keyed
         self.attr_keyed = attr_keyed
         self.rest = rest
-        screens = {}
-        for name, entries in attr_keyed.items():
-            needles = [
-                [p for p in c[1] if p[0] == "attr" and p[1] == name and p[2] is not None and p[3]]
-                for _, c in entries
-            ]
-            if all(needles):
-                values = sorted({ps[0][3] for ps in needles})
-                screens[name] = re.compile("|".join(map(re.escape, values)))
-        self.attr_screens = screens
-        self.attr_names = frozenset(
-            (["class"] if class_keyed else []) + (["id"] if id_keyed else []) + list(attr_keyed)
-        )
 
     def hits(self, el: Element) -> list[int]:
         """Deduped indexes of the selector lists this element matches."""
         tag = el.tag
         base = self.tag_buckets.get(tag)
         out: list[int] = list(base) if base else []
-        n_base = len(out)
         for i, c in self.tag_keyed.get(tag, _EMPTY_TOKENS):
             if _matches_compound(el, c):
                 out.append(i)
@@ -685,21 +655,14 @@ class _SelectorGroup:
                         out.append(i)
             attr_keyed = self.attr_keyed
             if attr_keyed:
-                screens = self.attr_screens
                 for name in attrs:
-                    entries = attr_keyed.get(name)
-                    if entries is None:
-                        continue
-                    screen = screens.get(name)
-                    if screen is not None and screen.search(attrs[name]) is None:
-                        continue
-                    for i, c in entries:
+                    for i, c in attr_keyed.get(name, _EMPTY_TOKENS):
                         if _matches_compound(el, c):
                             out.append(i)
         for i, c in self.rest:
             if _matches_compound(el, c):
                 out.append(i)
-        if len(out) > n_base and len(out) > 1:
+        if len(out) > 1:
             seen: set[int] = set()
             out = [i for i in out if not (i in seen or seen.add(i))]
         return out
@@ -725,7 +688,7 @@ def collect_matches(root: Element, selectors: list[str]) -> list[list[Element]]:
     buckets: list[list[Element]] = [[] for _ in range(g.n)]
     tag_buckets = g.tag_buckets
     tag_keyed = g.tag_keyed
-    attr_names = g.attr_names
+    has_attr_preds = bool(g.class_keyed or g.id_keyed or g.attr_keyed)
     rest = g.rest
     hits = g.hits
     iters = [iter(root.children)]  # one child iterator per open element
@@ -736,7 +699,7 @@ def collect_matches(root: Element, selectors: list[str]) -> list[list[Element]]:
             tag = n.tag
             # fast paths: most elements hit nothing; pure tag hits with no
             # complex compound in play skip the hits() call entirely
-            if tag in tag_keyed or rest or not attr_names.isdisjoint(n.attrs):
+            if tag in tag_keyed or (has_attr_preds and n.attrs) or rest:
                 for i in hits(n):
                     buckets[i].append(n)
             else:
@@ -777,8 +740,10 @@ class DocIndex:
     Removed ranges are kept disjoint, and every query answers for the tree
     as it is now: match lists skip elements inside a removed range, and
     counts, text and link-text sums leave out the removed ranges inside the
-    queried subtree.  Attribute edits are not tracked, and the tree must not
-    change other than through :meth:`remove` while the index is in use.
+    queried subtree, one step per such range (index the pruned tree afresh
+    before querying many subtrees that hold many removed ranges).  Attribute
+    edits are not tracked, and the tree must not change other than through
+    :meth:`remove` while the index is in use.
     """
 
     __slots__ = (
@@ -810,7 +775,7 @@ class DocIndex:
         buckets: defaultdict[int, list[int]] = defaultdict(list)
         tag_buckets = g.tag_buckets
         tag_keyed = g.tag_keyed
-        attr_names = g.attr_names
+        has_attr_preds = bool(g.class_keyed or g.id_keyed or g.attr_keyed)
         rest = g.rest
         hits = g.hits
         els: list[Element] = [root]
@@ -840,7 +805,7 @@ class DocIndex:
                     by_tag[tag] = [i]
                 else:
                     bt.append(i)
-                if tag in tag_keyed or rest or not attr_names.isdisjoint(n.attrs):
+                if tag in tag_keyed or (has_attr_preds and n.attrs) or rest:
                     for k in hits(n):
                         buckets[k].append(i)
                 else:
@@ -926,6 +891,11 @@ class DocIndex:
         """True iff ``i`` lies in a removed range."""
         k = bisect_right(self._rm_starts, i) - 1
         return k >= 0 and i < self._rm_ends[k]
+
+    def has_removed_inside(self, i: int) -> bool:
+        """True iff an element strictly inside ``i``'s subtree was removed."""
+        lo, hi = self._removed_inside(i)
+        return lo != hi
 
     def _removed_inside(self, i: int) -> tuple[int, int]:
         """Slice bounds of the removed ranges strictly inside ``i``'s

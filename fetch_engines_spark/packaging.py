@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import time
 import zipfile
 from pathlib import Path
 
@@ -32,6 +33,9 @@ def build_pyfiles_zip(dest: str | None = None) -> str:
     ``dest`` is reused only when its stored hash matches.  Two checkouts
     sharing a ``TMPDIR`` therefore never ship each other's code, whatever
     their file times, and a deleted or renamed module stops shipping.
+    Building a default-path zip deletes the default-path zips that no
+    build has returned for a day (a returned zip has its time refreshed),
+    so source edits do not pile zips up in ``TMPDIR``.
     """
     root = package_root()
     # Already running from a --py-files zip (e.g. inside spark-submit):
@@ -51,11 +55,14 @@ def build_pyfiles_zip(dest: str | None = None) -> str:
         digest.update(f"{arcname}\0{len(data)}\0".encode())
         digest.update(data)
     key = digest.hexdigest()[:16].encode()
+    default = dest is None
     dest = dest or os.path.join(
         os.environ.get("TMPDIR", "/tmp"),
         f"fetch_engines_spark-{fetch_engines_spark.__version__}-{key.decode()}.zip",
     )
     if os.path.exists(dest) and _zip_comment(dest) == key:
+        if default:
+            os.utime(dest)
         return dest
     tmp = f"{dest}.{os.getpid()}.tmp"
     with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
@@ -63,7 +70,25 @@ def build_pyfiles_zip(dest: str | None = None) -> str:
             zf.writestr(arcname, data)
         zf.comment = key
     os.replace(tmp, dest)
+    if default:
+        _remove_stale_zips(Path(dest))
     return dest
+
+
+_STALE_ZIP_AGE_S = 24 * 3600
+
+
+def _remove_stale_zips(keep: Path) -> None:
+    """Delete the default-path zips beside ``keep`` that no build has
+    returned for ``_STALE_ZIP_AGE_S``.  A younger one may belong to a live
+    session of another checkout, whose executors fetch it by path."""
+    cutoff = time.time() - _STALE_ZIP_AGE_S
+    for old in keep.parent.glob("fetch_engines_spark-*.zip"):
+        try:
+            if old != keep and old.stat().st_mtime < cutoff:
+                old.unlink()
+        except OSError:
+            pass  # another build removed or replaced it first
 
 
 def _zip_comment(path: str) -> bytes | None:

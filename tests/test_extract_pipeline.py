@@ -436,6 +436,40 @@ def test_pyfiles_zip_keyed_on_source_bytes(tmp_path, monkeypatch):
             assert zf.read("fetch_engines_spark/a.py") == f"A = '{pkg.name}'\n".encode()
 
 
+def test_pyfiles_zip_build_removes_only_stale_zips(tmp_path, monkeypatch):
+    """A new default-path zip deletes the zips beside it that no build has
+    returned for a day, and keeps younger ones (another checkout's live
+    session may still need them); returning a cached zip refreshes its
+    time."""
+    import time
+
+    from fetch_engines_spark import packaging
+
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    monkeypatch.setattr(packaging, "package_root", lambda: pkg)
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    monkeypatch.setenv("TMPDIR", str(tmpdir))
+    two_days_ago = time.time() - 2 * 24 * 3600
+    stale = tmpdir / "fetch_engines_spark-0.0-stale.zip"
+    young = tmpdir / "fetch_engines_spark-0.0-young.zip"
+    other = tmpdir / "other.zip"
+    for path in (stale, young, other):
+        path.write_bytes(b"")
+    for path in (stale, other):
+        os.utime(path, (two_days_ago, two_days_ago))
+
+    built = packaging.build_pyfiles_zip()
+    assert not stale.exists()
+    assert young.exists() and other.exists() and os.path.exists(built)
+
+    os.utime(built, (two_days_ago, two_days_ago))
+    assert packaging.build_pyfiles_zip() == built
+    assert os.path.getmtime(built) > two_days_ago + 3600
+
+
 _OUTPUT_ROW_CASES = {
     "zero_rows": [],
     "mixed": [
