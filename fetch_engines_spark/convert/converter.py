@@ -363,7 +363,7 @@ def find_semantic_main_content(idx: DocIndex) -> int | None:
     """C-B (parity: findSemanticMainContent, markdown-converter.ts:607-635)."""
     best, best_score = None, -1.0
     for i in idx.matches(MAIN_LIKE_SELECTOR):
-        text_len = len(idx.text_of(i).strip())
+        text_len = idx.stripped_len(i)
         heading_count = idx.count(_H13, i)
         image_count = idx.count(_VISUAL_MEDIA, i)
         paragraph_count = idx.count("p", i)
@@ -425,7 +425,7 @@ def detect_forum_page(idx: DocIndex) -> bool:
 def _calculate_element_score(idx: DocIndex, i: int, current_max: float) -> float:
     """Parity: _calculateElementScore (markdown-converter.ts:703-743)."""
     el = idx.els[i]
-    text_len = len(idx.text_of(i).strip())
+    text_len = idx.stripped_len(i)
     has_media = idx.count(_MEDIA, i) > 0
     if text_len < 100 and not has_media:
         return -1.0

@@ -719,6 +719,7 @@ _MAIN_LIKE_TAGS = frozenset(("main", "article"))
 _MAIN_LIKE_ROLES = frozenset(("main", "article"))
 MAIN_LIKE_SELECTOR = "main, article, [role='main'], [role='article']"
 _NO_POSITIONS: list[int] = []
+_NON_SPACE = re.compile(r"\S")  # the characters str.strip() keeps
 
 
 class DocIndex:
@@ -932,6 +933,25 @@ class DocIndex:
             at = tend[r]
         pieces.append(text[at : min(stop, tend[i])])
         return "".join(pieces)
+
+    def stripped_len(self, i: int) -> int:
+        """``len(text_of(i).strip())``.  With no removed range inside the
+        subtree it reads only the whitespace at both ends of the text."""
+        a, b = self.tstart[i], self.tend[i]
+        lo, hi = self._removed_inside(i)
+        if lo != hi:
+            return len(self.text_of(i).strip())
+        text = self.text
+        m = _NON_SPACE.search(text, a, b)
+        if m is None:
+            return 0
+        a = m.start()
+        while True:  # text[a] is not whitespace: some chunk keeps a character
+            start = max(a, b - 64)
+            tail = text[start:b].rstrip()
+            if tail:
+                return start + len(tail) - a
+            b = start
 
     def lower_text_contains(self, i: int, needles: tuple[str, ...]) -> bool:
         """True iff ``text_of(i).lower()`` contains one of ``needles``

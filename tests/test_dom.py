@@ -175,7 +175,7 @@ def _index_pages():
     from fetch_engines_spark.fixtures import FIXTURES
 
     rng = random.Random(7)
-    words = ["Accept cookies", "refuse all", "İ", "K", " ", "  x  ", "text", "\n"]
+    words = ["Accept cookies", "refuse all", "İ", "K", " ", "  x  ", "text", "\n", "\u00a0\u2003", " \t" * 50]
 
     def block(depth):
         tag = rng.choice(["div", "section", "ul", "nav", "a", "p", "main", "article",
@@ -250,6 +250,7 @@ def test_doc_index_answers_match_the_live_tree():
             assert idx.text_of(i) == text
             assert idx.text_of(i, 7) == text[:7]
             assert idx.text_len(i) == len(text)
+            assert idx.stripped_len(i) == len(text.strip())
             for tags in ("a", "p", ("h1", "h3"), ("img", "figure", "video")):
                 want = sum(counts.get(t, 0) for t in ((tags,) if isinstance(tags, str) else tags))
                 assert idx.count(tags, i) == want, (i, tags)

@@ -133,6 +133,8 @@ NESTS = {
     "div+links+footer": lambda d: (
         "<div><a href='/a'>x</a><a href='/b'>y</a> plain words " * d + "<footer>f</footer></div>" * d
     ),
+    # C-B scores every article
+    "article": lambda d: "<article><p>some words in a paragraph</p> " * d + "</article>" * d,
     # P7 removes every aside before C-C scores each .post
     "post+aside": lambda d: (
         "<div class='post'><aside><a href='/a'>related article one</a> <a href='/b'>related article"
@@ -149,6 +151,7 @@ NESTS = {
         ("div+text", (500, 1000, 2000, 4000)),
         ("div+links", (500, 1000, 2000, 4000)),
         ("div+links+footer", (500, 1000, 2000, 4000)),
+        ("article", (500, 1000, 2000, 4000)),
         ("post+aside", (500, 1000, 2000, 4000)),
     ],
 )
