@@ -92,15 +92,16 @@ def test_deeply_nested_html_does_not_crash():
     assert not (error or "").startswith("ERR_EXTRACTION"), error
 
 
-def _doubling_ratios(pages: dict, rounds: int = 5) -> list:
+def _doubling_ratios(pages: dict, rounds: int = 9) -> list:
     """How much the conversion time grows per doubling of nesting depth:
     ``pages`` maps depths, each twice the one before, to html.
 
     Each round times every page in turn, a page of depth d converted
     ``deepest // d`` times so that all timings span about the same interval,
     and takes the ratios of neighbouring depths.  A shared host has slow
-    spells lasting seconds, and a round is short enough to fall mostly in
-    one; the median over rounds drops the rounds a spell cut through.
+    and fast spells lasting seconds, and a round is short enough to fall
+    mostly in one; the median over rounds drops the rounds a spell cut
+    through (five rounds let one spell covering three of them through).
     Timings are CPU time, with the cyclic collector paused."""
     import gc
     import statistics
