@@ -92,26 +92,28 @@ def test_deeply_nested_html_does_not_crash():
     assert not (error or "").startswith("ERR_EXTRACTION"), error
 
 
-def _doubling_ratios(pages: dict, rounds: int = 9) -> list:
+def _growth_per_doubling(pages: dict, rounds: int = 9) -> float:
     """How much the conversion time grows per doubling of nesting depth:
-    ``pages`` maps depths, each twice the one before, to html.
+    ``pages`` maps depths to html.
 
-    Each round times every page in turn, a page of depth d converted
+    Each round times every page, a page of depth d converted
     ``deepest // d`` times so that all timings span about the same interval,
-    and takes the ratios of neighbouring depths.  A shared host has slow
-    and fast spells lasting seconds, and a round is short enough to fall
-    mostly in one; the median over rounds drops the rounds a spell cut
-    through (five rounds let one spell covering three of them through).
-    Timings are CPU time, with the cyclic collector paused."""
+    in ascending depth order on even rounds and descending order on odd
+    ones, so that a drift in speed during a round favours neither end.  The
+    growth is 2 ** the slope of the least-squares line through every
+    (log2 depth, log2 time).  A shared host's CPU speed swings by a third
+    within a second, which moves the ratio of two single timings by a half;
+    the fit over all timings averages that out.  Timings are CPU time, with
+    the cyclic collector paused."""
     import gc
+    import math
     import statistics
     import time
 
     depths = sorted(pages)
-    per_round = []
-    for _ in range(rounds):
-        t = {}
-        for depth in depths:
+    xs, ys = [], []
+    for r in range(rounds):
+        for depth in depths if r % 2 == 0 else depths[::-1]:
             repeats = max(1, depths[-1] // depth)
             gc.collect()
             gc.disable()
@@ -119,11 +121,12 @@ def _doubling_ratios(pages: dict, rounds: int = 9) -> list:
                 start = time.process_time()
                 for _ in range(repeats):
                     convert_document(pages[depth])
-                t[depth] = (time.process_time() - start) / repeats
+                elapsed = (time.process_time() - start) / repeats
             finally:
                 gc.enable()
-        per_round.append([t[b] / t[a] for a, b in zip(depths, depths[1:])])
-    return [statistics.median(r) for r in zip(*per_round)]
+            xs.append(math.log2(depth))
+            ys.append(math.log2(elapsed))
+    return 2 ** statistics.linear_regression(xs, ys).slope
 
 
 NESTS = {
@@ -161,8 +164,8 @@ def test_conversion_time_linear_in_nesting_depth(shape, depths):
     time by 2.5 (per-candidate subtree walks made it ×4, and so did queries
     that stepped over every element an earlier stage removed inside the
     candidate)."""
-    ratios = _doubling_ratios({d: NESTS[shape](d) for d in depths})
-    assert max(ratios) <= 2.5, ratios
+    growth = _growth_per_doubling({d: NESTS[shape](d) for d in depths})
+    assert growth <= 2.5, growth
 
 
 def test_20k_deep_page_converts_within_seconds():
