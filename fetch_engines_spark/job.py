@@ -48,7 +48,7 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument(
         "--stage",
         default="extract",
-        choices=("extract", "curate", "dedup", "compact-index", "media-dedup", "semdedup", "mix"),
+        choices=("extract", "curate", "dedup", "compact-index", "media-dedup", "mix"),
         help="extract: spans→markdown with checkpoint/resume; curate: the "
         "quality/repetition/substring-gate + exact-dup-keeper chain over a "
         "documents(doc_id, text, source) table, writing kept corpus + stats; "
@@ -63,9 +63,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
         "writing signatures/pairs/canonical_map — with --docs, also "
         "rewrites every media span's media_ref to its cluster-canonical "
         "id across the interleaved documents; "
-        "semdedup: SemDeDup semantic dedup over an embeddings(vec_id, "
-        "embedding) table — k-means cells, within-cell cosine prune, "
-        "writing semantic/ (vec_id, cell, n_close, keep); "
         "mix: deterministic training-mix construction at exact "
         "--mix-targets source ratios, writing mix/",
     )
@@ -79,22 +76,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument(
         "--mix-stratum-col", default="source",
         help="--stage mix: stratum column (default: source)",
-    )
-    p.add_argument(
-        "--semdedup-centroids",
-        type=int,
-        default=8,
-        help="--stage semdedup: k-means cells; scale ~ N/target_cluster_size",
-    )
-    p.add_argument(
-        "--semdedup-threshold-bp",
-        type=int,
-        default=9500,
-        help="--stage semdedup: within-cell cosine drop threshold (basis points)",
-    )
-    p.add_argument(
-        "--semdedup-iters", type=int, default=2,
-        help="--stage semdedup: Lloyd iterations",
     )
     p.add_argument(
         "--media-kind",
@@ -375,35 +356,6 @@ def _run_media_dedup(spark, args) -> dict:
     return summary
 
 
-def _run_semdedup(spark, args) -> dict:
-    """SemDeDup over an embeddings table: k-means cells + within-cell
-    cosine prune (pipelines.similarity.semantic_dedup).  The
-    --max-bucket-size flag is the degenerate-cell cap (same guard as
-    every other bucketed generator)."""
-    from .pipelines.similarity import semantic_dedup
-
-    emb = spark.read.parquet(args.input)
-    out = semantic_dedup(
-        emb,
-        n_centroids=args.semdedup_centroids,
-        threshold_bp=args.semdedup_threshold_bp,
-        n_iter=args.semdedup_iters,
-        max_cluster_size=args.max_bucket_size,
-    )
-    out.write.mode("overwrite").parquet(f"{args.output}/semantic")
-    sem = spark.read.parquet(f"{args.output}/semantic")
-    n_in = sem.count()
-    n_kept = sem.filter("keep = 1").count()
-    return {
-        "stage": "semdedup",
-        "n_input": n_in,
-        "n_kept": n_kept,
-        "n_dropped": n_in - n_kept,
-        "n_centroids": args.semdedup_centroids,
-        "threshold_bp": args.semdedup_threshold_bp,
-    }
-
-
 def _run_mix(spark, args) -> dict:
     """Training-mix construction (pipelines.text.mixture_sample): the
     largest subcorpus at exactly the --mix-targets ratios, selected by
@@ -612,8 +564,6 @@ def main(argv: list[str] | None = None) -> int:
             summary = _run_compact_index(spark, args)
         elif args.stage == "media-dedup":
             summary = _run_media_dedup(spark, args)
-        elif args.stage == "semdedup":
-            summary = _run_semdedup(spark, args)
         elif args.stage == "mix":
             summary = _run_mix(spark, args)
         else:

@@ -1,14 +1,13 @@
 """Shared bucketed candidate-pair join with the degenerate-bucket skew guard.
 
 Every bucketed near-duplicate candidate generator in this engine — MinHash
-LSH bands (``dedup._pairs_from_buckets``), embedding hyperplane LSH
-(``similarity.embedding_candidate_pairs``), and SimHash pigeonhole blocks
+LSH bands (``dedup._pairs_from_buckets``) and SimHash pigeonhole blocks
 (``dedup.simhash_candidate_pairs64``) — reduces to the same primitive: a
 self-equi-join inside (bucket-key) groups, emitting ordered id pairs.  And
 every one of them has the same 100 TB failure mode: a single degenerate
-bucket (thousands of byte-identical boilerplate docs, zero/constant
-embedding vectors, empty documents) makes the in-bucket join quadratic on
-ONE key, which no amount of cluster parallelism survives.
+bucket (thousands of byte-identical boilerplate docs, blank images, empty
+documents) makes the in-bucket join quadratic on ONE key, which no amount
+of cluster parallelism survives.
 
 This module is the one shared implementation of that join plus its guard,
 so a new bucketed generator cannot ship without the cap again (the defect
@@ -48,7 +47,6 @@ def bucket_pairs(
     out_a: str = "id_a",
     out_b: str = "id_b",
     carry_cols: list[str] | None = None,
-    distinct_pairs: bool = True,
 ) -> DataFrame:
     """Distinct ordered id pairs co-bucketed on ``key_cols``.
 
@@ -70,18 +68,8 @@ def bucket_pairs(
     Scale shape: one shuffle on the bucket key for the join (plus one
     window count over the same key when capped — same partitioning, reused
     by AQE); never all-pairs.
-
-    ``distinct_pairs=False`` skips the final pair-dedup shuffle — correct
-    ONLY for single-assignment generators where each id contributes
-    exactly one bucket row (e.g. k-means cells), so the join cannot emit
-    a pair twice; multi-bucket generators (LSH tables, SimHash blocks,
-    MinHash bands) must keep the default, a pair colliding in two buckets
-    would otherwise double-count downstream.
     """
     carry = carry_cols or []
-
-    def _dedup(pairs):
-        return pairs.distinct() if distinct_pairs else pairs
 
     def _sides(joined):
         return joined.select(
@@ -92,7 +80,7 @@ def bucket_pairs(
         )
 
     if max_bucket_size is None:
-        return _dedup(_sides(_in_bucket_join(buckets, key_cols, id_col)))
+        return _sides(_in_bucket_join(buckets, key_cols, id_col)).distinct()
     if sig_col is None:
         raise ValueError(
             "max_bucket_size requires sig_col (full-signature digest) for the star path"
@@ -118,7 +106,7 @@ def bucket_pairs(
             *[F.col(c).alias(f"{c}_b") for c in carry],
         )
     )
-    return _dedup(small_pairs.unionByName(star_pairs))
+    return small_pairs.unionByName(star_pairs).distinct()
 
 
 def cross_bucket_pairs(

@@ -1186,13 +1186,12 @@ def simhash_vectorized(
     corpora: ONE batched map stage computes the whole signature per
     document — no explode, no aggregation exchange.
 
-    Same pattern (and the same reference/hot-path contract) as
-    ``similarity.lsh_buckets_vectorized``: the JVM expression pipeline in
-    :func:`simhash` is the REFERENCE evaluation; this path is
-    differential-tested equal (tests/test_pipelines.py::
-    test_simhash_vectorized_matches_expr).  The per-token md5 vote of the
-    spec is integer-exact here by construction: bit i of the signature is
-    the top bit of hex digit i of md5(token) — i.e. bit 4·i of the
+    The JVM expression pipeline in :func:`simhash` is the REFERENCE
+    evaluation; this path is differential-tested equal
+    (tests/test_pipelines.py::test_simhash_vectorized_matches_expr).
+    The per-token md5 vote of the spec is integer-exact here by
+    construction: bit i of the signature is the top bit of hex digit i
+    of md5(token) — i.e. bit 4·i of the
     digest's MSB-first bit string — and the majority vote v_i>0 is
     2·ones_i>n, identical to the aggregate form.  Unique tokens are
     hashed once per task (dictionary cache; guide §4.5), then per-doc

@@ -725,55 +725,6 @@ def bm25_topk(
     )
 
 
-def hashed_embedding_entries(
-    df: DataFrame, dims: int = 64, text_col: str = "text"
-) -> DataFrame:
-    """Text → sparse embedding by the signed hashing trick (Weinberger et
-    al. feature hashing, the Vowpal-Wabbit representation): each token
-    maps to bucket md5(tok)[0:8] mod dims with sign from the next hex
-    digit; per-doc bucket weights are the signed counts — INTEGER, so the
-    DuckDB twin matches exactly, and the only shuffle is one map-side-
-    combinable groupBy.
-
-    Emitted in long form (doc_id, bucket, weight); assemble_embedding_array
-    densifies for the ANN operators, giving a complete text→embedding→
-    retrieval stack with no external model (and the plumbing a learned-
-    embedding UDF drops into)."""
-    toks = df.select(
-        F.col("doc_id"), F.explode(F.split(F.col(text_col), " ")).alias("tok")
-    ).filter(F.col("tok") != "")
-    h = F.md5("tok")
-    return (
-        toks.select(
-            "doc_id",
-            (F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % dims).alias("bucket"),
-            F.when(F.substring(h, 9, 1) >= "8", F.lit(1)).otherwise(F.lit(-1)).alias("s"),
-        )
-        .groupBy("doc_id", "bucket")
-        .agg(F.sum("s").cast("long").alias("weight"))
-    )
-
-
-def assemble_embedding_array(entries: DataFrame, dims: int = 64) -> DataFrame:
-    """(doc_id, bucket, weight) long form → (doc_id, embedding
-    array<float>) dense form for the similarity operators (zero-filled
-    missing buckets; one groupBy)."""
-    m = entries.groupBy("doc_id").agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("bucket"), F.col("weight")))
-        ).alias("m")
-    )
-    return m.select(
-        "doc_id",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(dims - 1)),
-            lambda i: F.coalesce(F.element_at("m", i.cast("long")), F.lit(0)).cast(
-                "float"
-            ),
-        ).alias("embedding"),
-    )
-
-
 # --- bigram-LM surprisal scoring (perplexity-style quality filter) ----------
 
 

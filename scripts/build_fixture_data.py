@@ -472,48 +472,6 @@ def build_adversarial_corpus() -> None:
     )
 
 
-def build_neardup_embeddings() -> None:
-    """Planted embedding near-duplicates for ANN-dedup recall gating:
-    40 base unit vectors (dim 64); each base gets an exact copy and a near
-    copy (~0.97 cosine: base tilted 0.25 rad toward an orthogonal
-    direction), plus 120 unrelated vectors.  Deterministic: fixed-seed
-    numpy RandomState (seeded RNG, no wall clock)."""
-    import numpy as np
-
-    rng = np.random.RandomState(20260816)
-    dim = 64
-    rows: list[tuple[int, int, str, list[float]]] = []
-    vid = 0
-
-    def unit(v):
-        return v / np.linalg.norm(v)
-
-    for fam in range(40):
-        v = unit(rng.randn(dim))
-        rows.append((vid, fam, "base", v)); vid += 1
-        rows.append((vid, fam, "exact", v.copy())); vid += 1
-        n = rng.randn(dim)
-        n = unit(n - n.dot(v) * v)  # orthogonal noise direction
-        rows.append((vid, fam, "near", unit(v + 0.25 * n))); vid += 1
-    for _ in range(120):
-        rows.append((vid, -1, "noise", unit(rng.randn(dim)))); vid += 1
-
-    pq.write_table(
-        pa.table(
-            {
-                "vec_id": pa.array([r[0] for r in rows], pa.int64()),
-                "family": pa.array([r[1] for r in rows], pa.int32()),
-                "role": [r[2] for r in rows],
-                "embedding": pa.array(
-                    [[float(x) for x in r[3].astype("float32")] for r in rows],
-                    pa.list_(pa.float32()),
-                ),
-            }
-        ),
-        os.path.join(OUT, "neardup_embeddings.parquet"),
-    )
-
-
 def _png_chunk(ctype: bytes, data: bytes) -> bytes:
     import struct as _s
     import zlib as _z
@@ -2330,55 +2288,6 @@ def build_warc() -> None:
     )
 
 
-def build_skewed_embeddings() -> None:
-    """Adversarial embedding corpus for the LSH bucket-cap guard: the
-    neardup_embeddings layout (40 planted families + noise) PLUS two
-    degenerate blocks — 300 identical constant vectors and 60 zero
-    vectors — which land in one bucket of EVERY LSH table.  Without a
-    bucket-size cap the candidate self-join is quadratic on those keys
-    (C(300,2) = 44,850 pairs from one block); with the cap the star path
-    emits 299.  Deterministic (fixed-seed RandomState)."""
-    import numpy as np
-
-    rng = np.random.RandomState(20260816)  # same families as neardup_embeddings
-    dim = 64
-    rows: list[tuple[int, int, str, list[float]]] = []
-    vid = 0
-
-    def unit(v):
-        return v / np.linalg.norm(v)
-
-    for fam in range(40):
-        v = unit(rng.randn(dim))
-        rows.append((vid, fam, "base", v)); vid += 1
-        rows.append((vid, fam, "exact", v.copy())); vid += 1
-        n = rng.randn(dim)
-        n = unit(n - n.dot(v) * v)
-        rows.append((vid, fam, "near", unit(v + 0.25 * n))); vid += 1
-    for _ in range(120):
-        rows.append((vid, -1, "noise", unit(rng.randn(dim)))); vid += 1
-    hot = unit(np.ones(dim))
-    for _ in range(300):
-        rows.append((vid, -2, "hot", hot.copy())); vid += 1
-    for _ in range(60):
-        rows.append((vid, -3, "zero", np.zeros(dim))); vid += 1
-
-    pq.write_table(
-        pa.table(
-            {
-                "vec_id": pa.array([r[0] for r in rows], pa.int64()),
-                "family": pa.array([r[1] for r in rows], pa.int32()),
-                "role": [r[2] for r in rows],
-                "embedding": pa.array(
-                    [[float(x) for x in r[3].astype("float32")] for r in rows],
-                    pa.list_(pa.float32()),
-                ),
-            }
-        ),
-        os.path.join(OUT, "skewed_embeddings.parquet"),
-    )
-
-
 def build_spans_boilerplate() -> None:
     """Interleaved span docs with PLANTED corpus-level boilerplate for
     strip_boilerplate_spans: a nav span in all 40 docs, a footer in the
@@ -2428,8 +2337,6 @@ if __name__ == "__main__":
     build_neardup_corpus()
     build_neardup_hi_corpus()
     build_adversarial_corpus()
-    build_neardup_embeddings()
-    build_skewed_embeddings()
     build_pngs()
     build_gifs()
     build_jpegs()

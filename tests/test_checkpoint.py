@@ -450,35 +450,6 @@ def test_media_dedup_stage_video(spark, tmp_path):
         )
 
 
-def test_semdedup_stage_cli(spark, tmp_path):
-    """The --stage semdedup CLI over the planted embedding corpus: every
-    family base survives, family members co-celled with an earlier
-    member drop, and the summary accounts exactly."""
-    import os
-
-    from fetch_engines_spark import job
-
-    src = os.path.join(
-        os.path.dirname(__file__), "..", "data", "fixtures", "neardup_embeddings.parquet"
-    )
-    args = job.parse_args(
-        [
-            "--input", src,
-            "--output", str(tmp_path / "sem"),
-            "--run-id", "t",
-            "--stage", "semdedup",
-            "--semdedup-centroids", "8",
-            "--semdedup-threshold-bp", "9500",
-        ]
-    )
-    summary = job._run_semdedup(spark, args)
-    assert summary["n_input"] == 240
-    assert summary["n_kept"] == 161  # matches test_semantic_dedup_planted_families
-    assert summary["n_dropped"] == 79
-    sem = spark.read.parquet(str(tmp_path / "sem" / "semantic"))
-    assert sem.filter("keep = 0 and n_close = 0").count() == 0
-
-
 def test_mix_stage_cli(spark, tmp_path):
     """The --stage mix CLI: parses source:share_bp targets, writes mix/,
     and the summary's per-stratum counts hit the exact ratios."""

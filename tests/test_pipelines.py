@@ -71,38 +71,6 @@ def test_simhash_near_dups_close(docs):
     assert hamming(sh[1], sh[3]) <= hamming(sh[1], sh[6])
 
 
-def test_brute_force_topk_self_similarity_excluded(spark):
-    from fetch_engines_spark.pipelines.similarity import brute_force_topk
-
-    rows = [
-        (0, [1.0, 0.0, 0.0]),
-        (1, [0.9, 0.1, 0.0]),
-        (2, [0.0, 1.0, 0.0]),
-        (3, [0.0, 0.0, 1.0]),
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    res = brute_force_topk(emb, k=2, query_ids=[0]).collect()
-    assert [r.neighbor_id for r in res] == [1, 2]
-    assert all(r.query_id == 0 for r in res)
-    assert res[0].cosine_bp > 9900  # ~0.994 cosine
-
-
-def test_lsh_topk_is_subset_of_bruteforce(spark):
-    from fetch_engines_spark.pipelines.similarity import brute_force_topk, lsh_topk
-
-    import math
-
-    rows = [
-        (i, [math.cos(i * 0.37 + d) for d in range(8)])
-        for i in range(40)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    bf = {(r.query_id, r.neighbor_id) for r in brute_force_topk(emb, k=40, query_ids=[0, 1]).collect()}
-    lsh = {(r.query_id, r.neighbor_id) for r in lsh_topk(emb, k=5, num_planes=2, dims=8, query_ids=[0, 1]).collect()}
-    assert lsh  # non-empty buckets
-    assert lsh.issubset(bf)
-
-
 def test_media_metadata_roundtrip(spark):
     from fetch_engines_spark.pipelines.multimodal import (
         encode_payload,
@@ -362,31 +330,6 @@ def test_lang_id_and_quality(spark):
     assert q[1].quality_score >= q[3].quality_score
 
 
-def test_ivf_topk_subset_and_exhaustive_probe_equals_bruteforce(spark):
-    import math
-
-    from fetch_engines_spark.pipelines.similarity import brute_force_topk, ivf_topk
-
-    rows = [(i, [math.cos(i * 0.31 + d * 0.7) for d in range(8)]) for i in range(60)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    bf = brute_force_topk(emb, k=5, query_ids=[10, 11]).collect()
-    bf_pairs = {(r.query_id, r.neighbor_id, r.cosine_bp) for r in bf}
-
-    # probing ALL cells == exact search
-    ivf_all = ivf_topk(emb, k=5, n_centroids=4, n_probe=4, query_ids=[10, 11]).collect()
-    assert {(r.query_id, r.neighbor_id, r.cosine_bp) for r in ivf_all} == bf_pairs
-
-    # partial probe: results are a subset of the full candidate space with
-    # correct local ranking (dense rnk per query)
-    ivf_partial = ivf_topk(emb, k=5, n_centroids=4, n_probe=1, query_ids=[10, 11]).collect()
-    by_q = {}
-    for r in ivf_partial:
-        by_q.setdefault(r.query_id, []).append(r.rnk)
-    for q, rnks in by_q.items():
-        assert sorted(rnks) == list(range(1, len(rnks) + 1))
-
-
 def test_planted_neardup_recall(spark):
     """The committed planted corpus: LSH must find every exact pair and
     most near pairs; jaccard verification separates them from noise."""
@@ -434,130 +377,6 @@ def test_winnowing_fingerprints_robust_to_insertion(spark):
     overlap = len(fps[1] & fps[2]) / len(fps[1] | fps[2])
     assert overlap >= 0.5, overlap
     assert not (fps[1] & fps[3])
-
-
-def test_embedding_dedup_recall(spark):
-    """ANN-dedup recall gate on the planted embedding corpus: multi-table
-    hyperplane LSH must recover every exact pair and >=95% of all true
-    pairs (cosine >= 9500 bp), with zero false positives after the exact
-    verify stage."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from fetch_engines_spark.pipelines.similarity import (
-        cosine_bp,
-        embedding_candidate_pairs,
-    )
-
-    path = os.path.join(
-        os.path.dirname(__file__), "..", "data", "fixtures", "neardup_embeddings.parquet"
-    )
-    emb = spark.read.parquet(path)
-
-    a = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("va"))
-    b = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("vb"))
-    truth = (
-        a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b", cosine_bp(F.col("va"), F.col("vb")).alias("cbp"))
-        .filter(F.col("cbp") >= 9500)
-    )
-    truth_pairs = {(r.vec_a, r.vec_b) for r in truth.collect()}
-    assert len(truth_pairs) == 120  # 40 families x (base-exact, base-near, exact-near)
-
-    found = embedding_candidate_pairs(
-        emb, num_tables=8, planes_per_table=8, dims=64, threshold_bp=9500
-    )
-    found_pairs = {(r.vec_a, r.vec_b) for r in found.collect()}
-
-    assert found_pairs <= truth_pairs  # verify stage admits no false positives
-    exact_pairs = {p for p in truth_pairs}  # all true pairs
-    recall = len(found_pairs & truth_pairs) / len(truth_pairs)
-    assert recall >= 0.95, f"recall {recall:.3f}"
-    # exact duplicates (identical vectors share every bucket) must all be found
-    exact_truth = (
-        truth.join(emb.select(F.col("vec_id").alias("vec_a"), F.col("role").alias("ra")), "vec_a")
-        .join(emb.select(F.col("vec_id").alias("vec_b"), F.col("role").alias("rb")), "vec_b")
-        .filter((F.col("cbp") >= 9999))
-    )
-    for r in exact_truth.collect():
-        assert (r.vec_a, r.vec_b) in found_pairs
-
-
-def test_lsh_topk_multi_recall_vs_bruteforce(spark):
-    """Recall gate for the scale-config ANN flagship (8 tables x 16
-    planes): on the planted corpus, every query's exact twin (identical
-    vector — collides in all tables by construction) must be retrieved,
-    and mean top-2 recall vs brute force must clear 0.85 (theory: near
-    twin at ~0.97 cosine collides with prob 1-(1-p^16)^8 ~ 0.92)."""
-    import os
-
-    from fetch_engines_spark.pipelines.similarity import brute_force_topk, lsh_topk_multi
-
-    path = os.path.join(
-        os.path.dirname(__file__), "..", "data", "fixtures", "neardup_embeddings.parquet"
-    )
-    emb = spark.read.parquet(path)
-    base_ids = [r.vec_id for r in emb.filter("role = 'base'").select("vec_id").collect()]
-    assert len(base_ids) == 40
-
-    bf = brute_force_topk(emb, k=2, query_ids=base_ids)
-    truth = {}
-    for r in bf.collect():
-        truth.setdefault(r.query_id, set()).add(r.neighbor_id)
-
-    ann = lsh_topk_multi(
-        emb, k=2, num_tables=8, planes_per_table=16, dims=64, query_ids=base_ids
-    )
-    got = {}
-    for r in ann.collect():
-        got.setdefault(r.query_id, set()).add(r.neighbor_id)
-
-    # exact twin is always vec_id = base + 1 (cosine 10000): recall 1.0
-    for q in base_ids:
-        assert q + 1 in got.get(q, set()), f"exact twin of {q} missed"
-    recalls = [len(got.get(q, set()) & truth[q]) / len(truth[q]) for q in base_ids]
-    mean_recall = sum(recalls) / len(recalls)
-    assert mean_recall >= 0.85, f"mean top-2 recall {mean_recall:.3f}"
-
-
-def test_embedding_capped_no_quadratic_bucket(spark):
-    """Degenerate-bucket guard: 300 identical vectors (one bucket in EVERY
-    table) must come out of the capped candidate stage as a 299-pair star,
-    not a 44,850-pair clique, and the planted families must still be
-    recovered."""
-    import os
-
-    from fetch_engines_spark.pipelines.similarity import embedding_candidate_pairs
-
-    path = os.path.join(
-        os.path.dirname(__file__), "..", "data", "fixtures", "skewed_embeddings.parquet"
-    )
-    emb = spark.read.parquet(path)
-
-    # candidate stage (no threshold): bounded pair count proves no n² bucket
-    cand = embedding_candidate_pairs(
-        emb, num_tables=8, planes_per_table=8, dims=64, max_bucket_size=50
-    )
-    n_cand = cand.count()
-    assert n_cand < 5000, f"{n_cand} candidate pairs — quadratic bucket leaked through"
-
-    verified = embedding_candidate_pairs(
-        emb, num_tables=8, planes_per_table=8, dims=64,
-        threshold_bp=9500, max_bucket_size=50,
-    ).collect()
-    pairs = {(r.vec_a, r.vec_b) for r in verified}
-
-    hot_ids = sorted(r.vec_id for r in emb.filter("role = 'hot'").select("vec_id").collect())
-    hot_pairs = {p for p in pairs if p[0] in set(hot_ids) or p[1] in set(hot_ids)}
-    # star shape: rep (min hot id) paired with each of the other 299
-    assert hot_pairs == {(hot_ids[0], v) for v in hot_ids[1:]}
-    # zero vectors: cosine 0 — filtered by the verify threshold
-    zero_ids = {r.vec_id for r in emb.filter("role = 'zero'").select("vec_id").collect()}
-    assert not any(a in zero_ids or b in zero_ids for a, b in pairs)
-    # planted families still recovered (small buckets unaffected by the cap)
-    fam_pairs = {p for p in pairs - hot_pairs}
-    assert len(fam_pairs) >= int(120 * 0.95), f"only {len(fam_pairs)} planted pairs"
 
 
 def test_connected_components_nonconvergence_detected(spark):
@@ -922,42 +741,6 @@ def test_curate_corpus_gates_and_keeper_election(spark):
     assert kept == {1}
 
 
-def test_text_to_ann_retrieval_end_to_end(spark):
-    """The full in-engine retrieval stack on text alone: documents →
-    signed-hashing-trick embeddings → dense arrays → multi-table LSH
-    top-k.  A near-verbatim copy of a doc must retrieve its source as
-    the top hit (identical text ⇒ identical vector ⇒ every bucket
-    collides)."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from fetch_engines_spark.pipelines.similarity import lsh_topk_multi
-    from fetch_engines_spark.pipelines.text import (
-        assemble_embedding_array,
-        hashed_embedding_entries,
-    )
-
-    base = [
-        (i, " ".join(f"tok{(i * 17 + j * 3) % 50}" for j in range(40)))
-        for i in range(30)
-    ]
-    dups = [(100 + i, t) for i, t in base[:5]]  # verbatim copies
-    docs = spark.createDataFrame(base + dups, "doc_id long, text string")
-    entries = hashed_embedding_entries(docs, dims=64)
-    emb = assemble_embedding_array(entries, dims=64).withColumnRenamed(
-        "doc_id", "vec_id"
-    )
-    top = lsh_topk_multi(
-        emb, k=1, num_tables=4, planes_per_table=12, dims=64,
-        query_ids=[100 + i for i in range(5)],
-    )
-    got = {r.query_id: (r.neighbor_id, r.cosine_bp) for r in top.collect()}
-    for i in range(5):
-        nid, bp = got[100 + i]
-        # identical vectors: cosine 1.0 floors to 9999/10000 bp depending
-        # on sqrt rounding — either means an exact-duplicate hit
-        assert nid == i and bp >= 9999, (i, nid, bp)
-
-
 def test_star_cc_handles_chains_plain_cc_cannot(spark):
     """Large-star/small-star contraction: a diameter-120 chain converges
     in O(log n) rounds where plain propagation raises at max_iter=25; on
@@ -984,48 +767,6 @@ def test_star_cc_handles_chains_plain_cc_cannot(spark):
     plain = {r.doc_id: r.component for r in connected_components(df, max_iter=50).collect()}
     starr = {r.doc_id: r.component for r in connected_components_star(df).collect()}
     assert plain == starr
-
-
-def test_lsh_buckets_vectorized_matches_expr(spark):
-    """The Arrow-matmul bucket fast path must equal the JVM reference
-    expression bit-for-bit on every fixture vector — guaranteed by the
-    integer quantization spec (int64 sums are order-free), checked here."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from fetch_engines_spark.pipelines.similarity import (
-        lsh_bucket_expr,
-        lsh_buckets_vectorized,
-    )
-
-    path = os.path.join(
-        os.path.dirname(__file__), "..", "data", "fixtures", "skewed_embeddings.parquet"
-    )
-    emb = spark.read.parquet(path)
-    T, B, D = 4, 16, 64
-    fast = {
-        r.vid: tuple(r[f"t{t}"] for t in range(T))
-        for r in lsh_buckets_vectorized(emb, T, B, D).collect()
-    }
-    ref = {
-        r.vid: tuple(r[f"t{t}"] for t in range(T))
-        for r in emb.select(
-            F.col("vec_id").alias("vid"),
-            *[lsh_bucket_expr(F.col("embedding"), B, D, plane_offset=t * B).alias(f"t{t}") for t in range(T)],
-        ).collect()
-    }
-    assert fast == ref
-
-
-def test_lsh_tables_are_genuinely_distinct():
-    """Regression for the period-7 hyperplane bug: distinct plane indices
-    must give distinct weight vectors (the old formula made planes p and
-    p+7 identical, voiding multi-table recall amplification)."""
-    from fetch_engines_spark.pipelines.similarity import hyperplane_weight
-
-    rows = [tuple(hyperplane_weight(p, d) for d in range(16)) for p in range(64)]
-    assert len(set(rows)) == 64
 
 
 def test_capped_candidate_pairs_skew_guard(spark):
@@ -1199,139 +940,6 @@ def test_duplicated_ngram_stats_planted_substring(spark):
     assert out2[1].shared_window_bp == 10000 and out2[1].substring_dup
 
 
-def test_pq_topk_recall_vs_bruteforce(spark):
-    """PQ-ADC top-5 must substantially overlap the exact cosine top-5 on a
-    clustered corpus (quantization is lossy; demand >=60% mean recall and
-    exact self-cluster hits)."""
-    import numpy as np
-
-    from fetch_engines_spark.pipelines.similarity import brute_force_topk, pq_topk
-
-    rng = np.random.RandomState(7)
-    centers = rng.randn(8, 64)
-    rows = []
-    for i in range(80):
-        c = centers[i % 8]
-        rows.append((i, (c + 0.15 * rng.randn(64)).astype(float).tolist()))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    exact = brute_force_topk(emb, k=5, query_ids=list(range(8))).collect()
-    # finer quantization than the oracle query's m=4/ks=8: members of one
-    # tight cluster share a code under coarse PQ, which tie-ranks the
-    # within-cluster top-5 arbitrarily (inherent ADC behavior, not a bug)
-    approx = pq_topk(emb, k=5, m=8, ks=16, query_ids=list(range(8))).collect()
-    exact_sets = {}
-    for r in exact:
-        exact_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
-    approx_sets = {}
-    for r in approx:
-        approx_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
-    recalls = [
-        len(exact_sets[q] & approx_sets.get(q, set())) / len(exact_sets[q])
-        for q in exact_sets
-    ]
-    assert sum(recalls) / len(recalls) >= 0.6, recalls
-
-
-def test_kmeans_codebook_reduces_distortion(spark):
-    """Integer-Lloyd codebook: on clustered data, the trained centroids'
-    total within-cell distortion must be at most the first-N init's (each
-    Lloyd step is monotone non-increasing), and strictly better when the
-    init is a poor cover (all init points from one cluster)."""
-    import numpy as np
-
-    from fetch_engines_spark.pipelines.similarity import (
-        _centroid_arr,
-        _nearest,
-        _quantize_vec,
-        kmeans_codebook,
-    )
-    from pyspark.sql import functions as F
-
-    rng = np.random.RandomState(11)
-    centers = rng.randn(4, 16) * 3
-    rows = []
-    for i in range(120):
-        # ids 0..3 (the init) all come from cluster 0 — a worst-case init
-        c = centers[0 if i < 4 else i % 4]
-        rows.append((i, (c + 0.1 * rng.randn(16)).tolist()))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    vq = emb.select(
-        F.col("vec_id").alias("vid"), _quantize_vec(F.col("embedding")).alias("vq")
-    )
-
-    def distortion(cents):
-        cb = _centroid_arr(cents)
-        return (
-            vq.crossJoin(F.broadcast(cb))
-            .select(_nearest(F.col("cb"), F.col("vq"))["d"].alias("d"))
-            .agg(F.sum("d").alias("t"))
-            .collect()[0]
-            .t
-        )
-
-    init = kmeans_codebook(vq, n_centroids=4, n_iter=0)
-    trained = kmeans_codebook(vq, n_centroids=4, n_iter=2)
-    d0, d2 = distortion(init), distortion(trained)
-    assert d2 <= d0
-    assert d2 < d0 * 0.5, (d0, d2)  # poor init must be substantially repaired
-
-
-def test_ivfpq_topk_recall_and_cell_pruning(spark):
-    """IVF-PQ: with every cell probed and fine residual quantization the
-    top-5 must substantially overlap the exact cosine top-5 on a
-    clustered corpus; with a single probed cell the result set must be a
-    subset of the exhaustive-probe candidates (pruning, not scoring,
-    changes) with dense per-query ranks."""
-    import numpy as np
-
-    from fetch_engines_spark.pipelines.similarity import brute_force_topk, ivfpq_topk
-
-    rng = np.random.RandomState(7)
-    centers = rng.randn(8, 64)
-    rows = []
-    for i in range(80):
-        c = centers[i % 8]
-        rows.append((i, (c + 0.15 * rng.randn(64)).astype(float).tolist()))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    exact = brute_force_topk(emb, k=5, query_ids=list(range(8))).collect()
-    full = ivfpq_topk(
-        emb, k=5, n_centroids=4, n_probe=4, m=8, ks=16, query_ids=list(range(8))
-    ).collect()
-    exact_sets: dict[int, set] = {}
-    for r in exact:
-        exact_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
-    full_sets: dict[int, set] = {}
-    for r in full:
-        full_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
-    recalls = [
-        len(exact_sets[q] & full_sets.get(q, set())) / len(exact_sets[q])
-        for q in exact_sets
-    ]
-    assert sum(recalls) / len(recalls) >= 0.6, recalls
-
-    pruned = ivfpq_topk(
-        emb, k=5, n_centroids=4, n_probe=1, m=8, ks=16, query_ids=list(range(8))
-    ).collect()
-    by_q: dict[int, list] = {}
-    pruned_sets: dict[int, set] = {}
-    for r in pruned:
-        by_q.setdefault(r.query_id, []).append(r.rnk)
-        pruned_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
-    for q, rnks in by_q.items():
-        assert sorted(rnks) == list(range(1, len(rnks) + 1))
-    # the pruning subset property: every n_probe=1 neighbor must be in
-    # the exhaustive-probe CANDIDATE set (k=80 ranks all candidates) —
-    # a wrong (cell, code) join key that scores unprobed cells fails here
-    all_cand = ivfpq_topk(
-        emb, k=80, n_centroids=4, n_probe=4, m=8, ks=16, query_ids=list(range(8))
-    ).collect()
-    cand_sets: dict[int, set] = {}
-    for r in all_cand:
-        cand_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
-    for q, s in pruned_sets.items():
-        assert s <= cand_sets[q], (q, s - cand_sets[q])
-
-
 def test_repetition_and_substring_never_fail_on_junk(spark):
     """Degenerate inputs (empty, single char, huge repeats, punctuation
     soup) must produce rows, never stage failures."""
@@ -1414,28 +1022,6 @@ def test_ngram_containment_catches_quote_duplication(spark):
     jac = ngram_jaccard(docs, pairs).collect()[0].jaccard_bp
     assert cont == 10000  # every shingle of the quote appears in the host
     assert jac < 2000  # Jaccard can't see it
-
-
-def test_kmeans_codebook_empty_cells_carry_previous_centroid(spark):
-    """When the init points are identical, every vector assigns to cell 0
-    (lowest-id tiebreak) and cells 1..3 get no members — the update must
-    carry their previous centroids (the coalesce path both engines
-    implement) and still return one row per centroid."""
-    from fetch_engines_spark.pipelines.similarity import kmeans_codebook
-    from pyspark.sql import functions as F  # noqa: F401
-
-    rows = [(i, [float(7)] * 4 if i < 4 else [float(i % 5)] * 4) for i in range(40)]
-    emb = spark.createDataFrame(rows, "vid long, embedding array<float>")
-    vq = emb.select(
-        "vid",
-        F.transform("embedding", lambda x: F.floor(x.cast("double") * 1024).cast("long")).alias("vq"),
-    )
-    cents = {r.cent_id: r.cv for r in kmeans_codebook(vq, n_centroids=4, n_iter=2).collect()}
-    assert sorted(cents) == [0, 1, 2, 3]
-    # empty cells 1..3 keep the identical init centroid
-    assert cents[1] == cents[2] == cents[3] == [7 * 1024] * 4
-    # cell 0 moved toward the data mean (strictly below the init value)
-    assert all(v < 7 * 1024 for v in cents[0])
 
 
 def test_jpeg_gray_sampling_factors_ignored():
@@ -1670,62 +1256,6 @@ def test_fuzzy_decontamination_string_ids_and_tiebreak(spark):
     ).collect()
     assert [(r.doc_id, r.bench_id) for r in out] == [("doc-a", "bench-a")]
     assert out[0].jaccard_bp == 10000
-
-
-def test_ivfpq_nondense_ids_assigns_correct_centroids(spark):
-    """Even-only vec_ids (0,2,4,...) make the trained cent_ids {0,2} —
-    non-dense — so a positional codebook lookup (element_at(cb, cell+1))
-    silently reads the wrong centroid or NULL for cell 2; the by-id
-    lookup must keep every query at exactly k results with real recall."""
-    import numpy as np
-
-    from fetch_engines_spark.pipelines.similarity import brute_force_topk, ivfpq_topk
-
-    rng = np.random.RandomState(11)
-    centers = rng.randn(4, 64)
-    rows = []
-    for i in range(60):
-        c = centers[i % 4]
-        rows.append((2 * i, (c + 0.1 * rng.randn(64)).astype(float).tolist()))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    queries = [0, 2]  # ids < n_centroids exist, so init is non-empty but sparse
-    exact = brute_force_topk(emb, k=5, query_ids=queries).collect()
-    got = ivfpq_topk(
-        emb, k=5, n_centroids=4, n_probe=4, m=8, ks=16, query_ids=queries
-    ).collect()
-    by_q: dict[int, set] = {}
-    for r in got:
-        by_q.setdefault(r.query_id, set()).add(r.neighbor_id)
-    assert set(by_q) == set(queries)
-    for q in queries:
-        assert len(by_q[q]) == 5
-    exact_sets: dict[int, set] = {}
-    for r in exact:
-        exact_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
-    # bar is structural-plus: the sparse init collapses 4 true clusters
-    # into 2 cells, so residuals are bimodal and PQ recall is genuinely
-    # lower than the dense-init recall test's 0.6 — the pre-fix positional
-    # lookup fails this test outright (ANSI element_at(cb, 3) on a 2-entry
-    # codebook throws INVALID_ARRAY_INDEX; verified), and measured
-    # post-fix recall here is 0.4-0.5
-    recalls = [len(exact_sets[q] & by_q[q]) / 5 for q in queries]
-    assert sum(recalls) / len(recalls) >= 0.3, recalls
-
-
-def test_kmeans_empty_init_raises(spark):
-    """All ids above n_centroids -> empty id-based init must raise, not
-    train an empty codebook that nulls every downstream assignment."""
-    import pytest as _pytest
-
-    from pyspark.sql import functions as F
-
-    from fetch_engines_spark.pipelines.similarity import kmeans_codebook
-
-    vq = spark.createDataFrame(
-        [(1000 + i, [i] * 4) for i in range(8)], "vid long, vq array<long>"
-    )
-    with _pytest.raises(ValueError, match="kmeans init empty"):
-        kmeans_codebook(vq, n_centroids=4, n_iter=1)
 
 
 def test_fuzzy_decontamination_production_recall(spark):
@@ -2130,57 +1660,6 @@ def test_lm_surprisal_hand_computed_and_oracle_parity(spark):
     for d in got:
         for c in ("n_bigrams", "oov_bigrams", "total_bits", "avg_centibits"):
             assert int(getattr(ow[d], c)) == int(getattr(got[d], c)), (d, c)
-
-
-def test_pii_redaction_adversarial_parity_and_masks(spark):
-    """PII scrub: adversarial corpus (emails with subdomains, version
-    strings vs IPs, year runs vs phones, unicode adjacency, empty text)
-    — counts and the redacted text agree with the DuckDB twin generated
-    from the same pattern table, and masks land where expected."""
-    import duckdb
-    import pandas as pd
-
-    from fetch_engines_spark.pipelines.pii import (
-        pii_features,
-        pii_oracle_sql,
-        redact_pii,
-    )
-
-    rows = [
-        (0, "see a.b@x.io and c@d.org. end"),
-        (1, "ip 10.2.3.4, version 1.2.3.4000 and 999.999.999.999"),
-        (2, "ssn 123-45-6789. call (555) 123-4567 or +1 555-123-4567"),
-        (3, "years 2020 2021 2022 id 5551234567 price 3.14.15.92"),
-        (4, "mail bob@sub.domain.co.uk, bad@@x.com, trailing@dot."),
-        (5, "phone 555.123.4567 and 555 123 4567 and (02) 123 4567"),
-        (6, ""),
-        (7, "unicode café@résumé.fr naïve 10.0.0.1"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r.asDict() for r in pii_features(df).collect()}
-    # hand-checked: 2 emails; version/999 strings count as conservative
-    # IP over-triggers (identical on both engines, documented); year
-    # runs and bare digit ids never match the phone pattern
-    assert (got[0]["n_email"], got[4]["n_email"]) == (2, 1)
-    assert (got[1]["n_ip"], got[3]["n_ip"], got[7]["n_ip"]) == (2, 1, 1)
-    assert (got[2]["n_ssn"], got[2]["n_phone"]) == (1, 2)
-    assert got[3]["n_phone"] == 0 and got[5]["n_phone"] == 2
-    assert got[6] == {
-        "doc_id": 6, "n_email": 0, "n_ip": 0, "n_ssn": 0, "n_phone": 0,
-        "redacted_md5": got[6]["redacted_md5"],
-    }
-    red = {r.doc_id: r.redacted for r in redact_pii(df).collect()}
-    assert red[0] == "see <EMAIL> and <EMAIL>. end"
-    assert red[2] == "ssn <ID>. call <PHONE> or <PHONE>"
-
-    con = duckdb.connect()
-    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
-    ora = con.execute(pii_oracle_sql()).fetchdf()
-    for r in ora.itertuples(index=False):
-        g = got[r.doc_id]
-        for c in ("n_email", "n_ip", "n_ssn", "n_phone"):
-            assert int(getattr(r, c)) == g[c], (r.doc_id, c)
-        assert r.redacted_md5 == g["redacted_md5"], r.doc_id
 
 
 # --- image dHash near-duplicate detection -----------------------------------
@@ -2669,71 +2148,6 @@ def test_video_near_dup_pairs_semantics(spark):
     assert not any("vid-c" in p for p in capped)
 
 
-def test_semantic_dedup_planted_families(spark):
-    """SemDeDup over the planted corpus: every family base (the lowest id
-    in its family) survives, and the exact/near family members that share
-    the base's k-means cell are dropped.  With 8 cells over 40 families,
-    79 of the 80 family members co-cell with an earlier member (one near
-    copy lands across a cell boundary — the documented SemDeDup recall
-    tradeoff of cluster-local comparison), so 161 of 240 docs survive."""
-    import os
-
-    from fetch_engines_spark.pipelines.similarity import semantic_dedup
-
-    path = os.path.join(
-        os.path.dirname(__file__), "..", "data", "fixtures", "neardup_embeddings.parquet"
-    )
-    emb = spark.read.parquet(path)
-    out = semantic_dedup(emb, n_centroids=8, threshold_bp=9500, n_iter=2)
-    rows = {r.vec_id: r for r in out.collect()}
-    assert len(rows) == 240
-
-    roles = {r.vec_id: (r.role, r.family) for r in emb.collect()}
-    fam_min = {}
-    for vid, (_, fam) in roles.items():
-        fam_min[fam] = min(fam_min.get(fam, vid), vid)
-    # noise never has a >=0.95-cosine neighbor: all kept
-    for vid, (role, fam) in roles.items():
-        if role == "noise":
-            assert rows[vid].keep == 1, f"noise {vid} dropped"
-        if vid == fam_min[fam] and role != "noise":
-            assert rows[vid].keep == 1, f"family {fam} base {vid} dropped"
-    kept = sum(r.keep for r in rows.values())
-    assert kept == 161  # 240 - 79 co-celled family members
-
-
-def test_semantic_dedup_capped_star(spark):
-    """Degenerate-cell guard: 300 identical vectors land in ONE k-means
-    cell; max_cluster_size routes them to the linear signature star (299
-    drops with n_close=1 via the rep), not a 44,850-pair clique.  Zero
-    vectors are sig-identical too but cosine_bp(0,0)=0 < threshold, so
-    every zero row is kept."""
-    import os
-
-    from fetch_engines_spark.pipelines.similarity import semantic_dedup
-
-    path = os.path.join(
-        os.path.dirname(__file__), "..", "data", "fixtures", "skewed_embeddings.parquet"
-    )
-    emb = spark.read.parquet(path)
-    out = semantic_dedup(
-        emb, n_centroids=8, threshold_bp=9500, n_iter=2, max_cluster_size=50
-    )
-    rows = {r.vec_id: r for r in out.collect()}
-    roles = {r.vec_id: r.role for r in emb.select("vec_id", "role").collect()}
-
-    hot = sorted(v for v, role in roles.items() if role == "hot")
-    assert rows[hot[0]].keep == 1
-    for v in hot[1:]:
-        assert rows[v].keep == 0 and rows[v].n_close == 1, f"hot {v}"
-    for v, role in roles.items():
-        if role == "zero":
-            assert rows[v].keep == 1, f"zero {v} dropped"
-    # star path is linear: total dropped docs bounded by corpus size,
-    # and no doc accumulates a quadratic n_close
-    assert max(r.n_close for r in rows.values()) <= 50
-
-
 def test_bloom_gate_no_false_negatives_and_gates_majority(spark):
     """Bloom membership: every key that built the filter tests
     maybe_present=1 (a false negative would silently drop history dups
@@ -3035,21 +2449,3 @@ def test_bm25_long_document_no_overflow(spark):
     assert all(r.score_milli >= 0 for r in top)
     # the short doc with the term beats the 3001-token doc (length norm)
     assert top[0].doc_id == 3
-
-
-def test_doc_kmeans_clusters_partitions_corpus(spark):
-    """Every doc gets exactly one cell, cells come from the trained
-    codebook's id domain (init = first n_centroids doc_ids), and the
-    clustering is non-degenerate on the sf corpus (more than one
-    non-empty cell) and deterministic across runs."""
-    from fetch_engines_spark.pipelines.similarity import doc_kmeans_clusters
-
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    out = doc_kmeans_clusters(docs, n_centroids=8, n_iter=2).collect()
-    assert len(out) == 500
-    cells = {r.doc_id: r.cell for r in out}
-    assert set(cells.values()) <= set(range(8))
-    assert len(set(cells.values())) > 1
-    again = {r.doc_id: r.cell for r in
-             doc_kmeans_clusters(docs, n_centroids=8, n_iter=2).collect()}
-    assert again == cells

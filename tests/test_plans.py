@@ -44,75 +44,6 @@ def test_classifier_queries_have_no_python(spark):
         assert "Python" not in plan and "MapInArrow" not in plan, name
 
 
-def test_embedding_topk_broadcasts_queries(spark):
-    from fetch_engines_spark.pipelines.similarity import brute_force_topk
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    df = brute_force_topk(emb, k=5, query_ids=list(range(10)))
-    plan = plan_of(df)
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-
-
-def test_embedding_candidate_pairs_has_no_cartesian(spark):
-    """Multi-table LSH dedup must candidate via bucket equi-joins — never a
-    cross/nested-loop join over the corpus (the all-pairs anti-pattern that
-    cannot survive 10^9 vectors)."""
-    from fetch_engines_spark.pipelines.similarity import embedding_candidate_pairs
-
-    emb = spark.read.parquet(f"{FIXTURES}/neardup_embeddings.parquet")
-    df = embedding_candidate_pairs(
-        emb, num_tables=8, planes_per_table=8, dims=64, threshold_bp=9500
-    )
-    plan = plan_of(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_embedding_capped_pairs_no_cartesian_single_arrow(spark):
-    """The degenerate-bucket-capped embedding join keeps the equi-join
-    shape: no cross/nested-loop joins, and the bucket matmul runs ONCE —
-    the materialized index feeds every branch (the downstream plan reads
-    the checkpointed RDD; without it the Arrow stage appeared 4x)."""
-    from fetch_engines_spark.pipelines.similarity import embedding_candidate_pairs
-
-    emb = spark.read.parquet(f"{FIXTURES}/skewed_embeddings.parquet")
-    df = embedding_candidate_pairs(
-        emb, num_tables=8, planes_per_table=8, dims=64, threshold_bp=9500,
-        max_bucket_size=50,
-    )
-    plan = plan_of(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BatchEvalPython" not in plan  # never row-at-a-time Python
-    assert "ArrowEvalPython" not in plan  # bucket index pre-materialized
-    assert "ExistingRDD" in plan
-
-    # ...and the index computation itself is exactly one Arrow stage
-    from fetch_engines_spark.pipelines.similarity import lsh_buckets_vectorized
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    idx_plan = plan_of(lsh_buckets_vectorized(emb, 8, 8, 64))
-    assert idx_plan.count("ArrowEvalPython") == 1
-    assert "Exchange" not in idx_plan  # embarrassingly parallel map stage
-
-
-def test_lsh_topk_multi_candidates_are_equi_joins(spark):
-    """Scale-config ANN flagship: the candidate stage must be bucket
-    equi-joins with the query side broadcast — never a corpus-wide
-    nested-loop — and scoring happens on the candidate set, not L copies
-    of the corpus."""
-    from fetch_engines_spark.pipelines.similarity import lsh_topk_multi
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    df = lsh_topk_multi(
-        emb, k=5, num_tables=8, planes_per_table=16, dims=64, query_ids=list(range(10))
-    )
-    plan = plan_of(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BroadcastHashJoin" in plan
-
-
 def test_minhash_fast_signatures_single_shuffle(spark):
     """Production-parameter signatures+banding: all 128 permutations fold
     into ONE map-side-combinable aggregation — exactly one shuffle keyed
@@ -191,20 +122,6 @@ def test_dedup_substring_shape(spark):
         assert marker not in plan
 
 
-def test_pq_topk_broadcast_lookups_no_cartesian(spark):
-    """PQ ADC scoring must be broadcast equi-joins on the code columns —
-    the corpus never shuffles and there is no cartesian/python stage."""
-    from fetch_engines_spark.pipelines.similarity import pq_topk
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    df = pq_topk(emb, k=5, m=4, ks=8, query_ids=list(range(10)))
-    plan = plan_of(df)
-    assert "CartesianProduct" not in plan
-    for marker in ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert marker not in plan
-    assert "BroadcastHashJoin" in plan
-
-
 def test_fuzzy_decontamination_corpus_never_sort_merge_joins(spark):
     """Every join in the fuzzy-decontamination plan must be broadcast
     (bench band index, candidate-id semi-join, candidate pairs, bench
@@ -223,27 +140,6 @@ def test_fuzzy_decontamination_corpus_never_sort_merge_joins(spark):
     plan = plan_of(df)
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") >= 4
-
-
-def test_lsh_topk_allpairs_does_not_broadcast_corpus(spark):
-    """lsh_topk in all-pairs mode (query_ids=None): the query side IS the
-    corpus, so it must not carry a FORCED broadcast hint — a hint there
-    ships the whole corpus to every executor regardless of its size and
-    dies at scale.  (Catalyst may still auto-broadcast a side it MEASURES
-    as small — that is correct and size-bounded, so the gate inspects the
-    analyzed plan for the hint, not the physical join choice.)  With a
-    bounded query list the explicit broadcast IS the right plan."""
-    from fetch_engines_spark.pipelines.similarity import lsh_topk
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-
-    def analyzed(df) -> str:
-        return df._jdf.queryExecution().analyzed().toString()
-
-    assert "hint" not in analyzed(lsh_topk(emb, k=3, num_planes=2, dims=8)).lower()
-    bounded = lsh_topk(emb, k=3, num_planes=2, dims=8, query_ids=[0, 1])
-    assert "hint" in analyzed(bounded).lower()
-    assert "BroadcastHashJoin" in plan_of(bounded)
 
 
 def test_banded_hamming_pairs_no_cartesian_jvm_verify(spark):
@@ -297,25 +193,6 @@ def test_canonicalize_media_refs_broadcast_rewrite(spark):
     # media_ref must never be a shuffle key (the span stream shuffles
     # only for doc_id re-assembly)
     assert "hashpartitioning(_ref" not in plan and "hashpartitioning(media_ref" not in plan
-
-
-def test_semantic_dedup_no_python_and_codebook_broadcast(spark):
-    """SemDeDup's plan: k-means codebook + assignment are pure JVM
-    expressions over a broadcast 1-row codebook (the only cross join is
-    that broadcast), the within-cell compare is the shared capped
-    equi-join — no Python stages, no cartesian/nested-loop pair join."""
-    from fetch_engines_spark.pipelines.similarity import semantic_dedup
-
-    emb = spark.read.parquet(f"{FIXTURES}/neardup_embeddings.parquet")
-    df = semantic_dedup(emb, n_centroids=8, threshold_bp=9500, n_iter=2)
-    plan = plan_of(df)
-    assert "CartesianProduct" not in plan
-    for marker in ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert marker not in plan
-    # the codebook rides as a broadcast row; the corpus-side pair join is
-    # hash-partitioned on cell, never nested-loop over the corpus
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    assert "ExistingRDD" in plan  # localCheckpoint-materialized centroids
 
 
 def test_bloom_gate_is_native_equi_join(spark):

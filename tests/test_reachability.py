@@ -11,7 +11,10 @@ reason.
 import ast
 from pathlib import Path
 
+import pytest
+
 import fetch_engines_spark
+from fetch_engines_spark import job
 
 ROOT = Path(fetch_engines_spark.__file__).resolve().parent
 PKG = ROOT.name
@@ -26,9 +29,6 @@ ALLOWED_UNREACHED = {
     # the reference's HybridEngine route decision as columns; its
     # consumer would be a render stage, which the batch job does not have
     f"{PKG}.routing": "HybridEngine routing parity, no render stage",
-    # PII counts and masks with a DuckDB twin; `--stage curate` does not
-    # redact, so no stage calls it
-    f"{PKG}.pipelines.pii": "PII scrub, not applied by curate",
 }
 
 
@@ -91,3 +91,12 @@ def test_walk_follows_relative_imports():
     mods = _package_modules()
     reached = _reachable(mods)
     assert {f"{PKG}.extract", f"{PKG}.pipelines", f"{PKG}.pipelines.dedup"} <= reached
+
+
+def test_semdedup_stage_is_rejected():
+    """``semdedup`` left the package with its modules, so argparse rejects
+    it as a ``--stage`` choice before any Spark session starts."""
+    with pytest.raises(SystemExit):
+        job.parse_args(
+            ["--input", "x", "--output", "y", "--run-id", "r", "--stage", "semdedup"]
+        )
