@@ -48,10 +48,8 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument(
         "--stage",
         default="extract",
-        choices=("extract", "curate", "dedup", "compact-index", "media-dedup", "mix"),
-        help="extract: spans→markdown with checkpoint/resume; curate: the "
-        "quality/repetition/substring-gate + exact-dup-keeper chain over a "
-        "documents(doc_id, text, source) table, writing kept corpus + stats; "
+        choices=("extract", "dedup", "compact-index", "media-dedup"),
+        help="extract: spans→markdown with checkpoint/resume; "
         "dedup: MinHash-LSH candidates → Jaccard verify → connected "
         "components → keepers, writing pairs/clusters/keepers; "
         "compact-index: merge N per-increment LSH index parquets "
@@ -62,20 +60,7 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
         "per-frame dHash containment for AVI/MJPEG video) "
         "writing signatures/pairs/canonical_map — with --docs, also "
         "rewrites every media span's media_ref to its cluster-canonical "
-        "id across the interleaved documents; "
-        "mix: deterministic training-mix construction at exact "
-        "--mix-targets source ratios, writing mix/",
-    )
-    p.add_argument(
-        "--mix-targets",
-        default=None,
-        help="--stage mix: comma-separated source:share_bp pairs, e.g. "
-        "'web:6000,books:2500,code:1500' (shares in basis points; the "
-        "limiting source sets the mix size)",
-    )
-    p.add_argument(
-        "--mix-stratum-col", default="source",
-        help="--stage mix: stratum column (default: source)",
+        "id across the interleaved documents",
     )
     p.add_argument(
         "--media-kind",
@@ -116,8 +101,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
         "next run.  History media is never re-decoded.  Increment "
         "media_ids must be fresh (re-crawled ids fail loudly).",
     )
-    p.add_argument("--min-quality", type=int, default=4)
-    p.add_argument("--max-shared-window-bp", type=int, default=5000)
     p.add_argument("--minhash-perms", type=int, default=128)
     p.add_argument("--band-size", type=int, default=8)
     p.add_argument("--max-bucket-size", type=int, default=2000)
@@ -148,23 +131,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
         "must share --minhash-perms/--band-size.",
     )
     return p.parse_args(argv)
-
-
-def _run_curate(spark, args) -> dict:
-    from .pipelines.curation import curate_corpus, curation_stats
-
-    docs = spark.read.parquet(args.input)
-    kept = curate_corpus(
-        docs,
-        min_quality=args.min_quality,
-        max_shared_window_bp=args.max_shared_window_bp,
-    )
-    kept.write.mode("overwrite").parquet(f"{args.output}/kept")
-    stats = curation_stats(spark.read.parquet(f"{args.output}/kept"))
-    stats.write.mode("overwrite").parquet(f"{args.output}/stats")
-    n_in = docs.count()
-    n_kept = spark.read.parquet(f"{args.output}/kept").count()
-    return {"stage": "curate", "n_input": n_in, "n_kept": n_kept}
 
 
 def _run_compact_index(spark, args) -> dict:
@@ -356,45 +322,6 @@ def _run_media_dedup(spark, args) -> dict:
     return summary
 
 
-def _run_mix(spark, args) -> dict:
-    """Training-mix construction (pipelines.text.mixture_sample): the
-    largest subcorpus at exactly the --mix-targets ratios, selected by
-    deterministic md5 rank."""
-    from pyspark.sql import functions as F
-
-    from .pipelines.text import mixture_sample
-
-    if not args.mix_targets:
-        raise ValueError("--stage mix requires --mix-targets src:share_bp,...")
-    targets: dict[str, int] = {}
-    for part in args.mix_targets.split(","):
-        name, _, share = part.strip().rpartition(":")
-        if not name or not share.lstrip("-").isdigit():
-            raise ValueError(f"--mix-targets entry {part!r} is not source:share_bp")
-        if name in targets:
-            # a dict would silently keep only the LAST share — a typo'd
-            # duplicate must not produce a mis-proportioned mix
-            raise ValueError(f"--mix-targets lists source {name!r} twice")
-        targets[name] = int(share)
-    docs = spark.read.parquet(args.input)
-    out = mixture_sample(docs, targets, stratum_col=args.mix_stratum_col)
-    out.write.mode("overwrite").parquet(f"{args.output}/mix")
-    mix = spark.read.parquet(f"{args.output}/mix")
-    per_stratum = {
-        r[args.mix_stratum_col]: r["n"]
-        for r in mix.groupBy(args.mix_stratum_col).agg(
-            F.count("*").alias("n")
-        ).collect()
-    }
-    return {
-        "stage": "mix",
-        "n_input": docs.count(),
-        "n_mix": mix.count(),
-        "per_stratum": per_stratum,
-        "targets_bp": targets,
-    }
-
-
 def _run_dedup(spark, args) -> dict:
     from pyspark.sql import functions as F
 
@@ -556,16 +483,12 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark(app_name=f"fes-{args.stage}-{args.run_id}", master=args.master)
     try:
-        if args.stage == "curate":
-            summary = _run_curate(spark, args)
-        elif args.stage == "dedup":
+        if args.stage == "dedup":
             summary = _run_dedup(spark, args)
         elif args.stage == "compact-index":
             summary = _run_compact_index(spark, args)
         elif args.stage == "media-dedup":
             summary = _run_media_dedup(spark, args)
-        elif args.stage == "mix":
-            summary = _run_mix(spark, args)
         else:
             if args.input_format == "warc":
                 from .warc import read_warc, warc_html_documents

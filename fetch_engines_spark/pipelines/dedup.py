@@ -519,8 +519,8 @@ def bloom_gate(
         # a bare union of shards with mismatched parameters would compute
         # positions in a different bit space and read every key — history
         # keys included — as "definitely new" (silent false negatives,
-        # the one failure a Bloom filter must never have); mirror
-        # cms_merge's mixed-grid guard and direct callers to bloom_merge
+        # the one failure a Bloom filter must never have); point callers
+        # at bloom_merge
         raise ValueError(
             "bloom_gate: bitmap mixes parameter sets "
             f"{tuple(span['lo'])} vs {tuple(span['hi'])} — "
@@ -576,53 +576,6 @@ def candidate_pairs_from_index(
     incremental CLI path computes the increment's index once and feeds
     every downstream join from it)."""
     return _pairs_from_buckets(buckets, max_bucket_size)
-
-
-def duplicated_ngram_stats(df: DataFrame, text_col: str = "text", n: int = 8) -> DataFrame:
-    """Substring-level dedup signal (the distributed shape of Lee et al.'s
-    "Deduplicating Training Data Makes Language Models Better" exact
-    substring matching): fingerprint every n-word window, count how many
-    documents each fingerprint appears in, and report per document the
-    fraction of its distinct windows that also occur in some other
-    document.
-
-    Scale shape (10^12 docs): windows are md5-fingerprinted and
-    deduplicated per document BEFORE the explode (array_distinct — no
-    dedup shuffle), then ONE map-side-combinable groupBy on the 16-byte
-    fingerprint counts document frequency, and ONE equi-join (co-partitioned
-    with the aggregation output by AQE) carries the counts back.  No
-    suffix array needed — window fingerprints approximate ≥n-word shared
-    substrings exactly (any shared substring of length ≥n shares all its
-    n-windows).
-    """
-    wins = df.select(
-        F.col("doc_id"),
-        F.explode(
-            F.array_distinct(
-                F.transform(shingles(F.col(text_col), n), lambda s: F.md5(s))
-            )
-        ).alias("w"),
-    )
-    freq = wins.groupBy("w").agg(F.count("*").alias("n_docs"))
-    return (
-        wins.join(freq, "w")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_windows"),
-            F.sum(F.when(F.col("n_docs") > 1, 1).otherwise(0)).alias("n_shared_windows"),
-        )
-        .select(
-            "doc_id",
-            "n_windows",
-            "n_shared_windows",
-            F.floor(
-                F.col("n_shared_windows") * 10000 / F.greatest(F.col("n_windows"), F.lit(1))
-            )
-            .cast("long")
-            .alias("shared_window_bp"),
-            (F.col("n_shared_windows") * 2 > F.col("n_windows")).alias("substring_dup"),
-        )
-    )
 
 
 def decontaminate(

@@ -2288,46 +2288,6 @@ def build_warc() -> None:
     )
 
 
-def build_spans_boilerplate() -> None:
-    """Interleaved span docs with PLANTED corpus-level boilerplate for
-    strip_boilerplate_spans: a nav span in all 40 docs, a footer in the
-    first 30, a quote in exactly 2 (below the min_docs=3 threshold, so
-    it must survive), unique body spans, and media spans that must ride
-    through untouched."""
-    span_type = pa.struct(
-        [("kind", pa.string()), ("text", pa.string()), ("media_ref", pa.string()), ("offset", pa.int32())]
-    )
-    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta"]
-    doc_ids, span_lists = [], []
-    for i in range(40):
-        spans = [("text", "Home | Products | About | Contact", None, 0)]
-        off = 1
-        for j in range(2 + i % 3):
-            body = f"article {i} paragraph {j} " + " ".join(
-                words[(i + j + k) % 8] for k in range(6)
-            )
-            spans.append(("text", body, None, off))
-            off += 1
-        if i % 2 == 0:
-            spans.append(("image", None, f"img-{i % 7}", off))
-            off += 1
-        if i in (5, 17):
-            spans.append(("text", "as noted previously", None, off))
-            off += 1
-        if i < 30:
-            spans.append(("text", "(c) Example Corp - All rights reserved", None, off))
-            off += 1
-        doc_ids.append(f"bp-{i:02d}")
-        span_lists.append(spans)
-    tbl = pa.table(
-        {
-            "doc_id": doc_ids,
-            "spans": pa.array(span_lists, type=pa.list_(span_type)),
-        }
-    )
-    pq.write_table(tbl, os.path.join(OUT, "spans_boilerplate.parquet"))
-
-
 if __name__ == "__main__":
     os.makedirs(OUT, exist_ok=True)
     build_pages()
@@ -2348,5 +2308,4 @@ if __name__ == "__main__":
     build_documents_media()
     build_avi_videos()
     build_avi_neardup()
-    build_spans_boilerplate()
     print(f"wrote fixture data to {OUT}")

@@ -450,28 +450,3 @@ def test_media_dedup_stage_video(spark, tmp_path):
         )
 
 
-def test_mix_stage_cli(spark, tmp_path):
-    """The --stage mix CLI: parses source:share_bp targets, writes mix/,
-    and the summary's per-stratum counts hit the exact ratios."""
-    from fetch_engines_spark import job
-
-    args = job.parse_args(
-        [
-            "--input", "/root/testdata/sf0.01/documents.parquet",
-            "--output", str(tmp_path / "m"),
-            "--run-id", "t",
-            "--stage", "mix",
-            "--mix-targets", "src0:5000,src1:3000,src2:2000",
-        ]
-    )
-    summary = job._run_mix(spark, args)
-    assert summary["n_mix"] == 50
-    assert summary["per_stratum"] == {"src0": 25, "src1": 15, "src2": 10}
-    import pytest as _pytest
-
-    bad = job.parse_args(
-        ["--input", "x", "--output", "y", "--run-id", "t",
-         "--stage", "mix", "--mix-targets", "src0-5000"]
-    )
-    with _pytest.raises(ValueError, match="not source:share_bp"):
-        job._run_mix(spark, bad)

@@ -312,24 +312,6 @@ def test_png_pixel_stats_stage_never_fails(spark):
             assert r.pixel_sum == exp[mid]["exp_pixel_sum"], mid
 
 
-def test_lang_id_and_quality(spark):
-    from fetch_engines_spark.pipelines.text import lang_id, quality_features
-
-    rows = [
-        (1, "the cat and the dog of the house is in the garden"),
-        (2, "der hund und die katze das ist nicht gut"),
-        (3, "xyzzy plugh"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    langs = {r.doc_id: r.lang_guess for r in lang_id(docs).collect()}
-    assert langs[1] == "en"
-    assert langs[2] == "de"
-    assert langs[3] == "unknown"
-    q = {r.doc_id: r for r in quality_features(docs).collect()}
-    assert q[1].n_tokens == 12
-    assert q[1].quality_score >= q[3].quality_score
-
-
 def test_planted_neardup_recall(spark):
     """The committed planted corpus: LSH must find every exact pair and
     most near pairs; jaccard verification separates them from noise."""
@@ -354,29 +336,6 @@ def test_planted_neardup_recall(spark):
     assert all(a[:4] == "base" or b[:4] in ("copy", "near") or True for a, b in keep)
     # noise pairs (uniq/far) don't survive the 0.5 jaccard bar
     assert not any(a.startswith("uniq") or b.startswith("uniq") for a, b in keep)
-
-
-def test_winnowing_fingerprints_robust_to_insertion(spark):
-    """Winnowing property: inserting one word changes only local
-    fingerprints — overlap stays high; unrelated docs share none."""
-    from fetch_engines_spark.pipelines.text import winnowing_fingerprints
-    import pyspark.sql.functions as F
-
-    base = "the quick brown fox jumps over the lazy dog near the quiet river bank today"
-    inserted = base.replace("jumps over", "jumps right over")
-    other = "completely unrelated words about database engines and storage layers here now"
-    docs = spark.createDataFrame(
-        [(1, base), (2, inserted), (3, other)], "doc_id long, text string"
-    )
-    fps = {
-        r.doc_id: set(r.fps)
-        for r in docs.select(
-            "doc_id", winnowing_fingerprints(F.col("text")).alias("fps")
-        ).collect()
-    }
-    overlap = len(fps[1] & fps[2]) / len(fps[1] | fps[2])
-    assert overlap >= 0.5, overlap
-    assert not (fps[1] & fps[3])
 
 
 def test_connected_components_nonconvergence_detected(spark):
@@ -427,39 +386,6 @@ def test_decontaminate_flags_planted_leak(spark):
     assert not got[2].is_contaminated
     assert not got[3].is_contaminated  # 3-word overlap < window length
     assert 0 < got[1].contamination_bp <= 10000
-
-
-def test_doc_chunks_packs_sentences_in_order(spark):
-    from fetch_engines_spark.pipelines.text import doc_chunks
-
-    # 4 sentences x 6 tokens; budget 10 → boundaries at tokens_before 0,6,12,18
-    # → chunks {0:[s0,s1(6<10)], 1:[s2(12),s3(18)]}
-    text = (
-        "one two three four five six. seven eight nine ten eleven twelve. "
-        "a b c d e f. g h i j k l."
-    )
-    docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    rows = {r.chunk_id: r for r in doc_chunks(docs, max_tokens=10).collect()}
-    assert set(rows) == {0, 1}
-    assert rows[0].n_sentences == 2 and rows[1].n_sentences == 2
-    assert rows[0].chunk_text.startswith("one two") and "twelve." in rows[0].chunk_text
-    assert rows[1].chunk_text == "a b c d e f. g h i j k l."
-    assert rows[0].n_tokens == 12 and rows[1].n_tokens == 12
-
-
-def test_cap_per_stratum_is_deterministic_and_bounded(spark):
-    from fetch_engines_spark.pipelines.text import cap_per_stratum
-
-    rows = [(i, f"s{i % 3}") for i in range(60)]
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-    a = cap_per_stratum(df, "source", k=5).collect()
-    b = cap_per_stratum(df, "source", k=5).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))  # retry-stable
-    per = {}
-    for r in a:
-        per.setdefault(r.source, []).append(r.doc_id)
-    assert all(len(v) == 5 for v in per.values())
-    assert max(r.stratum_rank for r in a) == 5
 
 
 def test_simhash64_pigeonhole_recall_is_exact(spark):
@@ -714,33 +640,6 @@ def test_bucket_pairs_cap_requires_sig_col():
         bucket_pairs(None, ["k"], "id", sig_col=None, max_bucket_size=5)
 
 
-def test_curate_corpus_gates_and_keeper_election(spark):
-    """Library-level curation semantics: with the substring gate active,
-    exact duplicates die THERE (they share every window, bp=10000) along
-    with quality/repetition failures; with it disabled, the dup pair
-    reaches keeper election and min doc_id wins."""
-    from fetch_engines_spark.pipelines.curation import curate_corpus
-
-    # a REAL gate-passing text (synthetic templates trip the Gopher
-    # repetition signals, which is itself the gates working)
-    sf = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    good = (
-        curate_corpus(sf).orderBy("doc_id").select("text").limit(1).collect()[0].text
-    )
-    rows = [
-        (1, good, "a"),
-        (2, good, "a"),            # exact dup of 1
-        (3, "spam spam spam spam spam spam spam spam", "b"),  # repetition gate
-        (4, "too short", "b"),     # quality gate
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    # default thresholds: the dup PAIR trips the cross-doc substring gate
-    assert {r.doc_id for r in curate_corpus(docs).collect()} == set()
-    # substring gate off: quality+repetition pass doc 1/2, keeper = min id
-    kept = {r.doc_id for r in curate_corpus(docs, max_shared_window_bp=10001).collect()}
-    assert kept == {1}
-
-
 def test_star_cc_handles_chains_plain_cc_cannot(spark):
     """Large-star/small-star contraction: a diameter-120 chain converges
     in O(log n) rounds where plain propagation raises at max_iter=25; on
@@ -882,85 +781,6 @@ def test_fast_affine_minhash_matches_brute_python(spark):
     assert abs(est - true_j) < 0.15, (est, true_j)
 
 
-def test_repetition_features_hand_computed(spark):
-    from fetch_engines_spark.pipelines.text import repetition_features
-
-    rows = [
-        # "a b a b a b": 6 words, 2 distinct -> dup_word_bp = floor(4*10000/6) = 6666
-        # bigrams: [a b, b a, a b, b a, a b] -> top "a b" x3, len 3
-        # chars = 11 -> top_bigram_char_bp = floor(3*3*10000/11) = 8181
-        (1, "a b a b a b"),
-        # all distinct words, no repeated 5-grams
-        (2, "one two three four five six seven"),
-        (3, ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in repetition_features(df).collect()}
-    assert out[1].dup_word_bp == 6666
-    assert out[1].top_bigram == "a b"
-    assert out[1].top_bigram_count == 3
-    assert out[1].top_bigram_char_bp == 8181
-    assert out[1].repetition_flagged
-    assert out[2].dup_word_bp == 0
-    assert out[2].dup_5gram_bp == 0
-    assert not out[2].repetition_flagged
-    assert out[3].dup_word_bp == 0  # single empty token, no crash
-
-
-def test_repetition_top_bigram_tiebreak_is_lexicographic(spark):
-    from fetch_engines_spark.pipelines.text import repetition_features
-
-    # "z y z y x w x w": bigrams z y, y z, z y, y x, x w, w x, x w
-    # -> "x w" and "z y" both appear twice; lexicographically smaller wins
-    df = spark.createDataFrame([(1, "z y z y x w x w")], "doc_id long, text string")
-    row = repetition_features(df).collect()[0]
-    assert row.top_bigram_count == 2
-    assert row.top_bigram == "x w"
-
-
-def test_duplicated_ngram_stats_planted_substring(spark):
-    from fetch_engines_spark.pipelines.dedup import duplicated_ngram_stats
-
-    shared = "alpha beta gamma delta epsilon zeta eta theta"  # exactly 8 words
-    rows = [
-        (1, shared + " unique tail one for doc one only here now"),
-        (2, shared + " another completely different ending for the second doc"),
-        (3, "totally unrelated words that appear nowhere else in this corpus at all"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in duplicated_ngram_stats(df, n=8).collect()}
-    # docs 1 and 2 share exactly the one 8-word window `shared`
-    assert out[1].n_shared_windows == 1
-    assert out[2].n_shared_windows == 1
-    assert out[3].n_shared_windows == 0
-    assert not out[3].substring_dup
-    # a full copy is flagged
-    df2 = spark.createDataFrame([(1, rows[0][1]), (2, rows[0][1])], "doc_id long, text string")
-    out2 = {r.doc_id: r for r in duplicated_ngram_stats(df2, n=8).collect()}
-    assert out2[1].shared_window_bp == 10000 and out2[1].substring_dup
-
-
-def test_repetition_and_substring_never_fail_on_junk(spark):
-    """Degenerate inputs (empty, single char, huge repeats, punctuation
-    soup) must produce rows, never stage failures."""
-    from fetch_engines_spark.pipelines.dedup import duplicated_ngram_stats
-    from fetch_engines_spark.pipelines.text import repetition_features
-
-    rows = [
-        (1, ""),
-        (2, " "),
-        (3, "a"),
-        (4, "a " * 500),
-        (5, "!!! ??? ... ;;; :::"),
-        (6, "one " + "two " * 200 + "three"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    assert repetition_features(df).count() == 6
-    assert duplicated_ngram_stats(df).count() == 6
-    flagged = {r.doc_id: r.repetition_flagged for r in repetition_features(df).collect()}
-    assert flagged[4] and flagged[6]  # pathological repeats are caught
-
-
 def test_connected_components_chain_and_clique(spark):
     from fetch_engines_spark.pipelines.dedup import connected_components
 
@@ -974,37 +794,6 @@ def test_connected_components_chain_and_clique(spark):
     assert {out[n][0] for n in "xyz"} == {"x"}
     keepers = {n for n, (_, k) in out.items() if k}
     assert keepers == {"a", "x"}
-
-
-def test_sample_by_hash_deterministic_and_monotone(spark):
-    from fetch_engines_spark.pipelines.text import sample_by_hash
-
-    docs = spark.createDataFrame([(i, f"t{i}") for i in range(2000)], "doc_id long, text string")
-    s10a = {r.doc_id for r in sample_by_hash(docs, 1000).collect()}
-    s10b = {r.doc_id for r in sample_by_hash(docs, 1000).collect()}
-    s20 = {r.doc_id for r in sample_by_hash(docs, 2000).collect()}
-    assert s10a == s10b  # reproducible
-    assert s10a <= s20  # nested samples: raising the rate only adds rows
-    assert 120 <= len(s10a) <= 280  # ~10% of 2000 within binomial bounds
-    assert 280 <= len(s20) <= 520
-
-
-def test_doc_sentences_segmentation(spark):
-    from fetch_engines_spark.pipelines.text import doc_sentences
-
-    df = spark.createDataFrame(
-        [(1, "First sentence. Second one! Third? Trailing without end"), (2, "")],
-        "doc_id long, text string",
-    )
-    rows = sorted(
-        (r.doc_id, r.sent_idx, r.sentence) for r in doc_sentences(df).collect()
-    )
-    assert rows == [
-        (1, 0, "First sentence."),
-        (1, 1, "Second one!"),
-        (1, 2, "Third?"),
-        (1, 3, "Trailing without end"),
-    ]
 
 
 def test_ngram_containment_catches_quote_duplication(spark):
@@ -1155,38 +944,6 @@ def test_fuzzy_decontamination_catches_edited_leakage(spark):
     ).collect()
     assert [(r.doc_id, r.bench_id) for r in fuzzy] == [(1, 100)]
     assert fuzzy[0].jaccard_bp >= 3000
-
-
-def test_count_min_never_underestimates_and_merges(spark):
-    """CMS invariants: estimates are >= true counts (never under), an
-    absent token reads (near) zero at this sparsity, the grid never
-    exceeds depth*width cells, and summing two shard sketches cell-wise
-    equals the whole-corpus sketch (mergeability — the property that
-    lets per-day sketches roll up without reprocessing)."""
-    from fetch_engines_spark.pipelines.text import cms_estimate, count_min_sketch
-
-    rows = [(i, ("alpha " * 20 + "beta " * 5 + f"uniq{i}").strip()) for i in range(40)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sketch = count_min_sketch(docs, depth=4, width=512)
-    assert sketch.count() <= 4 * 512
-    est = {
-        r.token: r.cms_estimate
-        for r in cms_estimate(
-            sketch, ["alpha", "beta", "uniq3", "never-seen"]
-        ).collect()
-    }
-    assert est["alpha"] >= 800 and est["beta"] >= 200 and est["uniq3"] >= 1
-    assert est["alpha"] <= 800 + 50 and est["never-seen"] <= 5  # sparse grid
-
-    a = count_min_sketch(docs.filter("doc_id < 20"), depth=4, width=512)
-    b = count_min_sketch(docs.filter("doc_id >= 20"), depth=4, width=512)
-    merged = (
-        a.unionByName(b)
-        .groupBy("row", "col", "depth", "width")
-        .agg(F.sum("n").alias("n"))
-    )
-    whole = {(r.row, r.col): r.n for r in sketch.collect()}
-    assert {(r.row, r.col): r.n for r in merged.collect()} == whole
 
 
 def test_resize_nearest_identity_and_sampling():
@@ -1565,101 +1322,6 @@ def test_warc_ingest_end_to_end_extraction(spark):
     # corrupt files -> one error row each
     bad = read_warc(spark, os.path.join(fx, "warc_bad")).collect()
     assert len(bad) == 2 and all(r.error and r.error.startswith("ERR_WARC") for r in bad)
-
-
-def test_quality_and_repetition_survive_megadoc_overflow(spark):
-    """Review finding: int32 counts x10000 overflowed (ANSI-on sessions
-    THROW) on exactly the spam docs the Gopher gates exist to catch; a
-    4 MB 'buy now' doc and a 320k-punct doc must score, not crash."""
-    from fetch_engines_spark.pipelines.text import quality_features, repetition_features
-
-    docs = spark.createDataFrame(
-        [(1, "buy now " * 500_000), (2, "!!!!!!!!" * 40_000)],
-        "doc_id long, text string",
-    )
-    q = {r.doc_id: r for r in quality_features(docs).collect()}
-    r = {r.doc_id: r for r in repetition_features(docs).collect()}
-    assert q[2].punct_ratio_bp == 10000
-    assert r[1].dup_word_bp >= 9990 and r[1].repetition_flagged
-    assert r[1].top_bigram_char_bp > 0
-
-
-def test_cms_merge_sums_cells_and_guards_metadata(spark):
-    """Review finding: a bare union of shard sketches let cms_estimate
-    min() over PARTIAL per-shard counts (underestimate) or probe an
-    arbitrary grid on mixed metadata; cms_merge sums cells and both
-    functions raise on mixed depth/width."""
-    import pytest as _pytest
-
-    from pyspark.sql import functions as F
-
-    from fetch_engines_spark.pipelines.text import (
-        cms_estimate,
-        cms_merge,
-        count_min_sketch,
-    )
-
-    day1 = spark.createDataFrame([(1, "alpha " * 5)], "doc_id long, text string")
-    day2 = spark.createDataFrame([(2, "alpha " * 7)], "doc_id long, text string")
-    s1 = count_min_sketch(day1, depth=4, width=64)
-    s2 = count_min_sketch(day2, depth=4, width=64)
-    merged = cms_merge([s1, s2])
-    est = cms_estimate(merged, ["alpha"]).collect()[0].cms_estimate
-    assert est >= 12  # never-underestimate holds across the merge
-    # a BARE union would underestimate via min() over partials
-    bare = s1.unionByName(s2)
-    bad = cms_estimate(bare, ["alpha"]).collect()[0].cms_estimate
-    assert bad < 12  # demonstrates why cms_merge exists
-    s3 = count_min_sketch(day2, depth=4, width=128)
-    with _pytest.raises(ValueError, match="mismatched depth/width"):
-        cms_merge([s1, s3])
-    with _pytest.raises(ValueError, match="mixed depth/width"):
-        cms_estimate(s1.unionByName(s3), ["alpha"])
-
-
-def test_lm_surprisal_hand_computed_and_oracle_parity(spark):
-    """Bigram-LM surprisal: hand-computed integer bits on a tiny corpus
-    (seen bigram = flog2 c(w1) - flog2 c(bigram); OOV = flog2(N)+1), a
-    sub-2-token doc yields no row, and the DuckDB twin value-matches on
-    the same frame."""
-    import duckdb
-    import pandas as pd
-
-    from fetch_engines_spark.pipelines.text import lm_surprisal, lm_surprisal_sql
-
-    rows = [
-        (1, "a b a b c", "ref"),
-        (2, "a b x", "ref"),
-        (3, "a b z z", "other"),
-        (4, "solo", "other"),  # one token -> zero bigrams -> no output row
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    got = {
-        r.doc_id: r
-        for r in lm_surprisal(
-            df, ref_filter=F.col("source") == "ref", min_count=2
-        ).collect()
-    }
-    # model: bigram "a b" x3 survives min_count; unigrams a:3 b:3 c:1 x:1, N=8
-    # doc 3: "a b" -> flog2(3)-flog2(3)=0; "b z","z z" OOV -> flog2(8)+1=4
-    assert 4 not in got
-    assert got[3].n_bigrams == 3 and got[3].oov_bigrams == 2
-    assert got[3].total_bits == 8 and got[3].avg_centibits == 266
-    # doc 1: "a b"(0) "b a"(OOV 4) "a b"(0) "b c"(OOV 4) -> 8 bits / 4
-    assert got[1].total_bits == 8 and got[1].avg_centibits == 200
-
-    con = duckdb.connect()
-    con.register(
-        "documents", pd.DataFrame(rows, columns=["doc_id", "text", "source"])
-    )
-    oracle = con.execute(
-        lm_surprisal_sql(ref_where="source = 'ref'", min_count=2)
-    ).fetchdf()
-    ow = {int(r.doc_id): r for r in oracle.itertuples(index=False)}
-    assert set(ow) == set(got)
-    for d in got:
-        for c in ("n_bigrams", "oov_bigrams", "total_bits", "avg_centibits"):
-            assert int(getattr(ow[d], c)) == int(getattr(got[d], c)), (d, c)
 
 
 # --- image dHash near-duplicate detection -----------------------------------
@@ -2194,131 +1856,6 @@ def test_bloom_merge_equals_monolithic(spark):
     }
 
 
-def test_bm25_rare_term_dominates_ranking(spark):
-    """BM25 idf: docs containing the rare term ('dup', df~25/500) must
-    outrank docs that only contain the ubiquitous terms ('customer'/
-    'scan', df~395) — the whole point of idf weighting; and every
-    returned doc contains at least one query term."""
-    from pyspark.sql import functions as F
-
-    from fetch_engines_spark.pipelines.text import bm25_topk
-
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    top = bm25_topk(docs, ["customer", "scan", "dup"], k=10).collect()
-    assert len(top) == 10
-    assert [r.rnk for r in top] == list(range(1, 11))
-    assert all(
-        top[i].score_milli >= top[i + 1].score_milli for i in range(9)
-    )
-    texts = {
-        r.doc_id: r.text
-        for r in docs.filter(
-            F.col("doc_id").isin([t.doc_id for t in top])
-        ).collect()
-    }
-    has_rare = {d for d, t in texts.items() if "dup" in t.split()}
-    assert top[0].doc_id in has_rare, "top doc lacks the rare term"
-    # every doc that beats a rare-term doc must itself contain the rare term
-    worst_rare_rank = max(r.rnk for r in top if r.doc_id in has_rare)
-    for r in top:
-        if r.rnk < worst_rare_rank and top[0].score_milli > 0:
-            assert r.doc_id in has_rare or r.score_milli >= 0
-    assert all("dup" in texts[r.doc_id].split() or
-               {"customer", "scan"} & set(texts[r.doc_id].split())
-               for r in top)
-
-
-def test_strip_boilerplate_spans_semantics(spark):
-    """Planted corpus: the 40-doc nav and 30-doc footer vanish from every
-    doc; the 2-doc quote (below min_docs=3), all unique bodies, and all
-    media spans survive in original order with original offsets."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from fetch_engines_spark.pipelines.curation import strip_boilerplate_spans
-
-    path = os.path.join(
-        os.path.dirname(__file__), "..", "data", "fixtures", "spans_boilerplate.parquet"
-    )
-    docs = spark.read.parquet(path)
-    out = {r.doc_id: r for r in strip_boilerplate_spans(docs, min_docs=3).collect()}
-    orig = {r.doc_id: r.spans for r in docs.collect()}
-    assert set(out) == set(orig)
-    for did, r in out.items():
-        texts = [s.text for s in r.spans if s.kind == "text"]
-        assert "Home | Products | About | Contact" not in texts
-        assert "(c) Example Corp - All rights reserved" not in texts
-        i = int(did.split("-")[1])
-        assert r.n_text_removed == (2 if i < 30 else 1)
-        # kept spans = original sequence minus boilerplate, same order/offsets
-        expected = [
-            s for s in orig[did]
-            if not (s.kind == "text" and s.text in (
-                "Home | Products | About | Contact",
-                "(c) Example Corp - All rights reserved",
-            ))
-        ]
-        assert [tuple(s) for s in r.spans] == [tuple(s) for s in expected]
-    assert [s.text for s in out["bp-05"].spans if s.kind == "text"][-1] == "as noted previously"
-    # media spans: one per even doc, untouched
-    n_media = sum(1 for r in out.values() for s in r.spans if s.kind == "image")
-    assert n_media == 20
-
-
-def test_mixture_sample_exact_ratios_and_edge_cases(spark):
-    """Mix ratios hit the targets exactly (50/30/20 over 25-doc sources
-    -> 25+15+10), selection is the deterministic md5 rank, a stratum
-    missing from targets is dropped, and an unachievable target (source
-    absent from the corpus) yields the EMPTY mix rather than a silently
-    skewed one."""
-    from fetch_engines_spark.pipelines.text import mixture_sample
-
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    out = mixture_sample(docs, {"src0": 5000, "src1": 3000, "src2": 2000}).collect()
-    by_src = {}
-    for r in out:
-        by_src.setdefault(r.source, []).append(r)
-    assert {s: len(v) for s, v in by_src.items()} == {
-        "src0": 25, "src1": 15, "src2": 10
-    }
-    assert all(r.source in ("src0", "src1", "src2") for r in out)
-    # determinism: re-run selects the same doc_ids
-    again = mixture_sample(docs, {"src0": 5000, "src1": 3000, "src2": 2000}).collect()
-    assert {r.doc_id for r in again} == {r.doc_id for r in out}
-    # unachievable share -> empty mix
-    empty = mixture_sample(docs, {"src0": 5000, "no_such_source": 5000})
-    assert empty.count() == 0
-
-
-def test_mixture_sample_drops_null_keys(spark):
-    """A null key has no md5 rank: both engines drop the row before the
-    counts, so it neither takes a cap slot nor shifts the ranks."""
-    import duckdb
-
-    from fetch_engines_spark.pipelines.text import mixture_sample, mixture_sample_sql
-
-    stratum_a = [(None, "a")] + [(f"a{i}", "a") for i in range(10)]
-    stratum_b = [(f"b{i}", "b") for i in range(10)]
-    cases = [
-        (stratum_a, {"a": 10000}, {"a": 10}),
-        (stratum_a + stratum_b, {"a": 5000, "b": 5000}, {"a": 10, "b": 10}),
-    ]
-    for rows, targets, caps in cases:
-        docs = spark.createDataFrame(rows, "doc_id string, source string")
-        out = {(r.doc_id, r.source, r.mix_rank) for r in mixture_sample(docs, targets).collect()}
-        for stratum, cap in caps.items():
-            ranks = sorted(rank for _, s, rank in out if s == stratum)
-            assert ranks == list(range(1, cap + 1)), (targets, stratum, ranks)
-        assert all(doc_id is not None for doc_id, _, _ in out)
-
-        con = duckdb.connect()
-        con.execute("CREATE TABLE documents (doc_id VARCHAR, source VARCHAR)")
-        con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
-        assert set(con.sql(mixture_sample_sql(targets)).fetchall()) == out
-        con.close()
-
-
 def test_bloom_gate_null_key_reads_definitely_new(spark):
     """A NULL key has no bloom positions; the row must still appear in
     the gate output as maybe_present=0 (definitely new), not silently
@@ -2338,33 +1875,6 @@ def test_bloom_gate_null_key_reads_definitely_new(spark):
            bloom_gate(q, bloom, "key", "doc_id", 1024, 3).collect()}
     assert out == {1: 1, 3: 0, 4: out[4]}  # 4 may be a false positive
     assert 3 in out  # the NULL-key row survived
-
-
-def test_strip_boilerplate_empty_and_null_spans_survive(spark):
-    """Docs with empty or NULL spans arrays come out as zero-span rows —
-    the corpus must not shrink."""
-    from fetch_engines_spark.pipelines.curation import strip_boilerplate_spans
-
-    schema = (
-        "doc_id string, spans array<struct<kind:string,text:string,"
-        "media_ref:string,offset:int>>"
-    )
-    docs = spark.createDataFrame(
-        [
-            ("d1", [("text", "nav", None, 0), ("text", "unique one", None, 1)]),
-            ("d2", [("text", "nav", None, 0)]),
-            ("d3", [("text", "nav", None, 0)]),
-            ("d-empty", []),
-            ("d-null", None),
-        ],
-        schema,
-    )
-    out = {r.doc_id: r for r in strip_boilerplate_spans(docs, min_docs=3).collect()}
-    assert set(out) == {"d1", "d2", "d3", "d-empty", "d-null"}
-    assert out["d-empty"].spans == [] and out["d-empty"].n_text_removed == 0
-    assert out["d-null"].spans == [] and out["d-null"].n_text_removed == 0
-    assert [s.text for s in out["d1"].spans] == ["unique one"]
-    assert out["d2"].spans == [] and out["d2"].n_text_removed == 1
 
 
 def test_bloom_gate_rejects_mismatched_parameters(spark):
@@ -2397,10 +1907,6 @@ def test_bloom_gate_rejects_mismatched_parameters(spark):
     # row's parameters (silent false negatives) — round-6 ADVICE guard
     with _pytest.raises(ValueError, match="bloom_merge"):
         bloom_gate(keys, bloom.unionByName(other), "key", "doc_id")
-    from fetch_engines_spark.pipelines.text import cms_merge
-
-    with _pytest.raises(ValueError, match="no sketches"):
-        cms_merge([])
     # NULL keys contribute no junk rows to the bitmap
     nb = bloom_build(
         spark.createDataFrame([("a",), (None,)], "key string"), "key", 2048, 3
@@ -2408,44 +1914,3 @@ def test_bloom_gate_rejects_mismatched_parameters(spark):
     assert nb.filter("word_id IS NULL").count() == 0
 
 
-def test_strip_boilerplate_null_span_element_survives(spark):
-    """A NULL struct ELEMENT inside a real spans array has a position
-    and must ride through (parity with the unnest-based oracle), while
-    empty/NULL arrays still collapse to zero spans."""
-    from fetch_engines_spark.pipelines.curation import strip_boilerplate_spans
-
-    schema = (
-        "doc_id string, spans array<struct<kind:string,text:string,"
-        "media_ref:string,offset:int>>"
-    )
-    docs = spark.createDataFrame(
-        [
-            ("d1", [("text", "a", None, 0), None, ("text", "b", None, 2)]),
-            ("d2", []),
-        ],
-        schema,
-    )
-    out = {r.doc_id: r for r in strip_boilerplate_spans(docs, min_docs=3).collect()}
-    assert len(out["d1"].spans) == 3 and out["d1"].spans[1] is None
-    assert out["d2"].spans == []
-
-
-def test_bm25_long_document_no_overflow(spark):
-    """The review-confirmed crash: a 3000-token document overflowed the
-    int32 score arithmetic under ANSI mode.  Long docs must score, not
-    raise — and the rare-term doc still wins."""
-    docs = spark.createDataFrame(
-        [
-            (1, "dup " + "filler " * 3000),
-            (2, "plain " * 3000),
-            (3, "dup only here"),
-        ],
-        "doc_id long, text string",
-    )
-    from fetch_engines_spark.pipelines.text import bm25_topk
-
-    top = bm25_topk(docs, ["dup"], k=3).collect()
-    assert len(top) == 3
-    assert all(r.score_milli >= 0 for r in top)
-    # the short doc with the term beats the 3001-token doc (length norm)
-    assert top[0].doc_id == 3

@@ -96,32 +96,6 @@ def test_simhash_capped_pairs_no_python_and_no_cartesian(spark):
     assert "ExistingRDD" in plan  # localCheckpoint-materialized signatures
 
 
-def test_repetition_features_is_shuffle_free_native(spark):
-    """Gopher repetition signals must run inside the scan stage: zero
-    exchanges, zero Python — pure higher-order functions per document."""
-    from fetch_engines_spark.pipelines.text import repetition_features
-
-    df = repetition_features(spark.read.parquet(f"{SF}/documents.parquet"))
-    plan = plan_of(df)
-    assert "Exchange" not in plan, plan
-    for marker in ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert marker not in plan
-
-
-def test_dedup_substring_shape(spark):
-    """Substring dedup: per-doc distinct windows BEFORE the explode (no
-    dedup shuffle), one partial-agg'd count, one equi-join — and no
-    cartesian/python anywhere."""
-    from fetch_engines_spark.pipelines.dedup import duplicated_ngram_stats
-
-    df = duplicated_ngram_stats(spark.read.parquet(f"{SF}/documents.parquet"), n=8)
-    plan = plan_of(df)
-    assert "CartesianProduct" not in plan
-    assert "partial_count" in plan  # map-side combine on the window freq
-    for marker in ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert marker not in plan
-
-
 def test_fuzzy_decontamination_corpus_never_sort_merge_joins(spark):
     """Every join in the fuzzy-decontamination plan must be broadcast
     (bench band index, candidate-id semi-join, candidate pairs, bench
@@ -215,78 +189,6 @@ def test_bloom_gate_is_native_equi_join(spark):
     plan = plan_of(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    for marker in ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert marker not in plan
-
-
-def test_bm25_topk_is_take_ordered_no_shuffle_scoring(spark):
-    """BM25's corpus side is ONE projection over the scan (per-term
-    size(filter(...)) — no explode, no shuffle); stats are a 1-row
-    broadcast; the top-k compiles to TakeOrderedAndProject, so the
-    corpus is never globally sorted."""
-    from fetch_engines_spark.pipelines.text import bm25_topk
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    df = bm25_topk(docs, ["customer", "scan", "dup"], k=10)
-    plan = plan_of(df)
-    assert "TakeOrderedAndProject" in plan
-    assert "CartesianProduct" not in plan
-    assert "Generate" not in plan  # no explode in the scoring path
-    for marker in ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert marker not in plan
-
-
-def test_boilerplate_strip_is_native_equi_join(spark):
-    """Boilerplate-span removal: explode + combinable distinct-doc count +
-    one equi-join on the text hash + one reassembly groupBy — no Python
-    stages, no cartesian."""
-    from pyspark.sql import functions as F
-
-    from fetch_engines_spark.pipelines.curation import strip_boilerplate_spans
-
-    docs = spark.read.parquet(f"{FIXTURES}/spans_boilerplate.parquet")
-    out = strip_boilerplate_spans(docs, min_docs=3)
-    ex = out.select(
-        "doc_id", "n_text_removed", F.posexplode("spans").alias("new_pos", "s")
-    )
-    df = ex.select(
-        "doc_id",
-        F.col("new_pos").cast("int").alias("new_pos"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("offset"),
-        "n_text_removed",
-    )
-    plan = plan_of(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    for marker in ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert marker not in plan
-
-
-def test_mixture_sample_bucketed_rank_no_stratum_wide_window(spark):
-    """Round-6 fix of the round-5 weak flag: the exact rank window must
-    partition by (stratum, md5-prefix bucket) — thousands of uniform
-    keys — never by the stratum alone (one reducer sorting a whole
-    stratum at 100 TB).  Bucket offsets + caps ride as a
-    BroadcastHashJoin build side; the corpus shuffles once for the
-    bucketed window."""
-    from fetch_engines_spark.pipelines.text import mixture_sample
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    df = mixture_sample(docs, {"src0": 5000, "src1": 3000, "src2": 2000}).select(
-        "doc_id", "source", "mix_rank"
-    )
-    plan = plan_of(df)
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-    # exactly one corpus rank window, and it is bucket-partitioned
-    assert plan.count("Window [row_number()") == 1
-    import re
-
-    m = re.search(r"Window \[row_number\(\).*?windowspecdefinition\(([^)]*)\)", plan)
-    assert m and "__mix_bucket" in m.group(1), plan[:2000]
     for marker in ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
         assert marker not in plan
 
