@@ -56,27 +56,10 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
         "(comma-separated --input) into one deduplicated index so the "
         "next increment reads one index, not N; "
         "media-dedup: perceptual near-dup over a media(media_id, payload) "
-        "table (dHash for images, segment-loudness fingerprint for WAV, "
-        "per-frame dHash containment for AVI/MJPEG video) "
+        "table of PNG/GIF/JPEG images (dHash) "
         "writing signatures/pairs/canonical_map — with --docs, also "
         "rewrites every media span's media_ref to its cluster-canonical "
         "id across the interleaved documents",
-    )
-    p.add_argument(
-        "--media-kind",
-        default="image",
-        choices=("image", "audio", "video"),
-        help="--stage media-dedup signature type: image (PNG/GIF/JPEG "
-        "dHash), audio (WAV fingerprint), or video (AVI/MJPEG per-frame "
-        "dHash + clip-level frame-hash containment; pairs carry "
-        "n_shared/share_bp instead of hamming)",
-    )
-    p.add_argument(
-        "--min-share-bp",
-        type=int,
-        default=8000,
-        help="video containment threshold: 10000 * shared distinct frame "
-        "hashes / min clip hash-set size",
     )
     p.add_argument(
         "--docs",
@@ -171,33 +154,14 @@ def _run_media_dedup(spark, args) -> dict:
     from pyspark.sql import functions as F
 
     from .pipelines.multimodal import (
-        afp_near_dup_pairs,
-        audio_fingerprint,
         canonical_media_map,
         canonicalize_media_refs,
         dhash_near_dup_pairs,
         image_dhash,
     )
 
-    from .pipelines.multimodal import video_frame_dhash, video_near_dup_pairs
-
     media = spark.read.parquet(args.input)
-    if args.media_kind == "image":
-        sign, hex_col = image_dhash, "dhash_hex"
-        pair_fn = lambda s: dhash_near_dup_pairs(  # noqa: E731
-            s, max_hamming=args.max_hamming, max_bucket_size=args.max_bucket_size
-        )
-    elif args.media_kind == "audio":
-        sign, hex_col = audio_fingerprint, "afp_hex"
-        pair_fn = lambda s: afp_near_dup_pairs(  # noqa: E731
-            s, max_hamming=args.max_hamming, max_bucket_size=args.max_bucket_size
-        )
-    else:  # video: per-frame signatures, containment pairs
-        sign, hex_col = video_frame_dhash, "dhash_hex"
-        pair_fn = lambda s: video_near_dup_pairs(  # noqa: E731
-            s, min_share_bp=args.min_share_bp, max_bucket_size=args.max_bucket_size
-        )
-    sign(media).write.mode("overwrite").parquet(f"{args.output}/signatures")
+    image_dhash(media).write.mode("overwrite").parquet(f"{args.output}/signatures")
     sigs = spark.read.parquet(f"{args.output}/signatures")
     n_media = sigs.count()
     n_errors = sigs.filter("error IS NOT NULL").count()
@@ -208,14 +172,6 @@ def _run_media_dedup(spark, args) -> dict:
 
         from .pipelines.multimodal import incremental_media_near_dups
 
-        if args.media_kind == "video":
-            raise ValueError(
-                "--incremental-signatures supports image/audio (one 64-bit "
-                "hash per item); video clips carry per-frame hash SETS — "
-                "run full video dedup per batch, or dedup at the frame "
-                "level with --media-kind image over extracted frames"
-            )
-
         for own in ("signatures", "signatures_merged"):
             if _os.path.abspath(args.incremental_signatures) == _os.path.abspath(
                 f"{args.output}/{own}"
@@ -225,10 +181,10 @@ def _run_media_dedup(spark, args) -> dict:
                     f"run's own --output — use a fresh --output per increment"
                 )
         hist = spark.read.parquet(args.incremental_signatures)
-        if hex_col not in hist.columns:
+        if "dhash_hex" not in hist.columns:
             raise ValueError(
-                f"--incremental-signatures parquet lacks {hex_col} — it was "
-                f"not written by a --media-kind {args.media_kind} run"
+                "--incremental-signatures parquet lacks dhash_hex — it is "
+                "not a media-dedup signatures table"
             )
         # re-crawl guard: an increment media_id already present in history
         # would silently merge two signatures under one id (the cross-pair
@@ -252,14 +208,14 @@ def _run_media_dedup(spark, args) -> dict:
         #    hash (blank thumbnails) yields one audit row per increment
         #    item, never n_inc x n_hist.
         hist_rep = (
-            hist.filter(f"{hex_col} IS NOT NULL")
-            .groupBy(hex_col)
+            hist.filter("dhash_hex IS NOT NULL")
+            .groupBy("dhash_hex")
             .agg(F.min("media_id").alias("hist_id"))
         )
         identity = (
-            sigs.filter(f"{hex_col} IS NOT NULL")
-            .select("media_id", hex_col)
-            .join(hist_rep, hex_col)
+            sigs.filter("dhash_hex IS NOT NULL")
+            .select("media_id", "dhash_hex")
+            .join(hist_rep, "dhash_hex")
             .select("media_id", "hist_id", F.lit(0).alias("hamming"))
         )
         remaining = sigs.join(
@@ -269,7 +225,6 @@ def _run_media_dedup(spark, args) -> dict:
         near = incremental_media_near_dups(
             remaining,
             hist,
-            hex_col=hex_col,
             max_hamming=args.max_hamming,
             max_bucket_size=args.max_bucket_size,
         )
@@ -285,7 +240,9 @@ def _run_media_dedup(spark, args) -> dict:
         hist.unionByName(sigs).write.mode("overwrite").parquet(
             f"{args.output}/signatures_merged"
         )
-    pair_fn(sigs).write.mode("overwrite").parquet(f"{args.output}/pairs")
+    dhash_near_dup_pairs(
+        sigs, max_hamming=args.max_hamming, max_bucket_size=args.max_bucket_size
+    ).write.mode("overwrite").parquet(f"{args.output}/pairs")
     pairs = spark.read.parquet(f"{args.output}/pairs")
     cmap_df = canonical_media_map(pairs)
     if cross is not None:
@@ -305,7 +262,6 @@ def _run_media_dedup(spark, args) -> dict:
     cmap = spark.read.parquet(f"{args.output}/canonical_map")
     summary = {
         "stage": "media-dedup",
-        "media_kind": args.media_kind,
         "n_media": n_media,
         "n_errors": n_errors,
         "n_pairs": pairs.count(),

@@ -1,21 +1,12 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Image near-duplicate detection over ``media(media_id, payload)`` tables.
 
-Images/audio/video are carried as ``binary`` columns with typed metadata
-structs; decode / feature-extract / resize / frame-sample run as
-Arrow-batched pandas UDFs over ``mapInPandas``.  The codec libraries are
-not available in this container, so the *decode* step is a deterministic
-header parser over a self-describing synthetic format (see
-``FESB`` below), with the real-codec path stubbed behind
-``NotImplementedError`` — the Spark-side plumbing (schema, partitioning,
-UDF signature, Arrow batch shape) is real and tested.
-
-Synthetic payload format ("FESB", fetch-engines-spark binary):
-  bytes 0-3   magic  b"FESB"
-  byte  4     media kind (1=image, 2=audio, 3=video)
-  bytes 5-8   width  (big-endian uint32)  [image/video]
-  bytes 9-12  height (big-endian uint32)  [image/video]
-  bytes 13-16 n_frames / n_samples (big-endian uint32)
-  bytes 17-   opaque payload
+Images are carried as opaque ``binary`` payloads.  From-scratch PNG, GIF
+and JPEG decoders (stdlib plus numpy) feed a 64-bit dHash in one
+Arrow-batched ``mapInPandas`` stage, so pixels never leave the worker;
+pigeonhole-banded joins turn the hashes into near-duplicate pairs, and
+the pair clusters rewrite the ``media_ref`` of interleaved document
+spans to one canonical id.  ``--stage media-dedup`` in ``job.py`` drives
+the whole path.
 """
 
 from __future__ import annotations
@@ -26,70 +17,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-MAGIC = b"FESB"
-KINDS = {1: "image", 2: "audio", 3: "video"}
-
-MEDIA_META_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("kind", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_frames", IntegerType()),
-        StructField("payload_bytes", LongType()),
-        StructField("error", StringType()),
-    ]
-)
-
-MEDIA_INPUT_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("payload", BinaryType()),
-    ]
-)
-
-
-def encode_payload(kind: int, width: int, height: int, n_frames: int, body: bytes) -> bytes:
-    return MAGIC + struct.pack(">BIII", kind, width, height, n_frames) + body
-
-
-def decode_header(payload: bytes) -> dict:
-    """Parse the FESB header. Raises ValueError on malformed payloads."""
-    if payload is None or len(payload) < 17 or payload[:4] != MAGIC:
-        raise ValueError("not a FESB payload")
-    kind, width, height, n_frames = struct.unpack(">BIII", payload[4:17])
-    if kind not in KINDS:
-        raise ValueError(f"unknown media kind {kind}")
-    return {
-        "kind": KINDS[kind],
-        "width": width,
-        "height": height,
-        "n_frames": n_frames,
-        "payload_bytes": len(payload),
-    }
-
-
-def decode_real_codec(payload: bytes) -> dict:  # pragma: no cover - stub
-    """Licensed-codec video/audio decode (ffmpeg: H.264/H.265/VP9/AAC…) —
-    unavailable in this container.
-
-    STUB: wire the actual codec here when the cluster image ships one.
-    This stub's surface has shrunk every round: PNG/GIF/JPEG
-    (``decode_png``/``decode_gif``/``decode_jpeg``), animated GIF
-    (``decode_gif_frames``), PCM WAV (``decode_wav``), and AVI/MJPEG
-    video (``decode_avi_frames``) are all REAL from-scratch decoders —
-    only bitstreams needing licensed reference decoders remain here.
-    """
-    raise NotImplementedError("codec libraries not available in this environment")
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 
 # --- real PNG pixel decode (stdlib-only) -------------------------------------
@@ -374,179 +302,6 @@ def decode_gif(payload: bytes) -> dict:
         else:
             raise ValueError(f"unexpected GIF block 0x{b:02x}")
     raise ValueError("no image data")
-
-
-# --- real animated-GIF multi-frame decode (stdlib-only) ----------------------
-
-
-MAX_GIF_FRAME_PIXELS = 64_000_000  # total across frames: n_frames x W x H
-
-
-def decode_gif_frames(payload: bytes, max_frames: int = 256) -> dict:
-    """Animated GIF → {width, height, n_frames, frames: [bytes (RGB)]}:
-    full GIF89a animation semantics with the stdlib only — per-frame
-    partial rects composited onto the logical-screen canvas, graphics-
-    control transparency (transparent indices leave the canvas pixel),
-    disposal methods 0/1 (leave), 2 (restore rect to background color),
-    3 (restore previous canvas), interlaced frames de-interlaced, local
-    color tables, 255-byte sub-block LZW.  Each returned frame is the
-    FULL canvas snapshot after compositing (what a viewer displays) —
-    the real input to a frame-sampling pipeline, vs the plan-only path
-    over the synthetic FESB container.  The combined n_frames×W×H cap
-    turns a frame bomb into an error row, never an executor OOM."""
-    import struct as _s
-
-    if payload is None or payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF (bad signature)")
-    if len(payload) < 13:
-        raise ValueError("truncated header")
-    sw, sh, flags, bg_idx, _ar = _s.unpack("<HHBBB", payload[6:13])
-    if sw == 0 or sh == 0:
-        raise ValueError(f"degenerate screen ({sw}x{sh})")
-    pos = 13
-    gct = None
-    if flags & 0x80:
-        n = 2 << (flags & 0x07)
-        gct = payload[pos : pos + 3 * n]
-        if len(gct) < 3 * n:
-            raise ValueError("truncated global color table")
-        pos += 3 * n
-    bg_rgb = (
-        gct[3 * bg_idx : 3 * bg_idx + 3]
-        if gct is not None and 3 * bg_idx + 3 <= len(gct)
-        else b"\x00\x00\x00"
-    )
-    canvas = bytearray(bg_rgb * (sw * sh))
-    frames: list[bytes] = []
-    # pending graphics-control state for the NEXT image
-    disposal, transparent = 0, None
-    while pos < len(payload):
-        b = payload[pos]
-        if b == 0x21:  # extension
-            if pos + 2 > len(payload):
-                raise ValueError("truncated extension")
-            label = payload[pos + 1]
-            pos += 2
-            if pos >= len(payload):
-                raise ValueError("truncated extension block")
-            if label == 0xF9 and pos + 1 + payload[pos] <= len(payload) and payload[pos] >= 4:
-                blk = payload[pos + 1 : pos + 1 + payload[pos]]
-                disposal = (blk[0] >> 2) & 0x07
-                transparent = blk[3] if blk[0] & 0x01 else None
-            while pos < len(payload) and payload[pos] != 0:
-                pos += 1 + payload[pos]
-            pos += 1
-        elif b == 0x2C:  # image descriptor
-            if pos + 10 > len(payload):
-                raise ValueError("truncated image descriptor")
-            fx, fy, iw, ih, iflags = _s.unpack("<HHHHB", payload[pos + 1 : pos + 10])
-            pos += 10
-            if iw == 0 or ih == 0 or fx + iw > sw or fy + ih > sh:
-                raise ValueError(f"frame rect ({fx},{fy},{iw},{ih}) outside {sw}x{sh}")
-            if (len(frames) + 1) * sw * sh > MAX_GIF_FRAME_PIXELS:
-                raise ValueError("animation exceeds the total pixel cap")
-            if len(frames) >= max_frames:
-                raise ValueError(f"more than {max_frames} frames")
-            table = gct
-            if iflags & 0x80:
-                n = 2 << (iflags & 0x07)
-                table = payload[pos : pos + 3 * n]
-                if len(table) < 3 * n:
-                    raise ValueError("truncated local color table")
-                pos += 3 * n
-            if table is None:
-                raise ValueError("no color table")
-            if pos >= len(payload):
-                raise ValueError("truncated before LZW data")
-            min_code_size = payload[pos]
-            pos += 1
-            lzw = bytearray()
-            while pos < len(payload) and payload[pos] != 0:
-                ln = payload[pos]
-                lzw += payload[pos + 1 : pos + 1 + ln]
-                pos += 1 + ln
-            pos += 1  # block terminator
-            idx = _lzw_decode(bytes(lzw), min_code_size, iw * ih)
-            if len(idx) < iw * ih:
-                raise ValueError("LZW underrun")
-            if iflags & 0x40:  # interlaced frame
-                idx = _gif_deinterlace(idx, iw, ih)
-            prev = bytes(canvas) if disposal == 3 else None
-            for j in range(ih):
-                crow = ((fy + j) * sw + fx) * 3
-                for i2 in range(iw):
-                    ci = idx[j * iw + i2]
-                    if transparent is not None and ci == transparent:
-                        continue
-                    if 3 * ci + 3 > len(table):
-                        raise ValueError("palette index out of range")
-                    canvas[crow + 3 * i2 : crow + 3 * i2 + 3] = table[3 * ci : 3 * ci + 3]
-            frames.append(bytes(canvas))
-            if disposal == 2:  # restore rect to background
-                for j in range(ih):
-                    crow = ((fy + j) * sw + fx) * 3
-                    canvas[crow : crow + 3 * iw] = bg_rgb * iw
-            elif disposal == 3 and prev is not None:  # restore previous
-                canvas[:] = prev
-            disposal, transparent = 0, None
-        elif b == 0x3B:  # trailer
-            break
-        else:
-            raise ValueError(f"unexpected GIF block 0x{b:02x}")
-    if not frames:
-        raise ValueError("no image data")
-    return {"width": sw, "height": sh, "n_frames": len(frames), "frames": frames}
-
-
-GIF_FRAME_STATS_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_frames", IntegerType()),
-        StructField("pixel_sum", LongType()),
-        StructField("error", StringType()),
-    ]
-)
-
-
-def _gif_frame_stats_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in GIF_FRAME_STATS_SCHEMA.names}
-
-        def emit(mid, fi, w, h, nf, ps, err):
-            out["media_id"].append(mid)
-            out["frame_idx"].append(fi)
-            out["width"].append(w)
-            out["height"].append(h)
-            out["n_frames"].append(nf)
-            out["pixel_sum"].append(ps)
-            out["error"].append(err)
-
-        for row in pdf.itertuples(index=False):
-            try:
-                g = decode_gif_frames(
-                    bytes(row.payload) if row.payload is not None else None
-                )
-            except Exception as exc:
-                emit(row.media_id, None, None, None, None, None,
-                     f"ERR_GIF: {type(exc).__name__}: {exc}"[:200])
-                continue
-            for fi, fr in enumerate(g["frames"]):
-                emit(row.media_id, fi, g["width"], g["height"], g["n_frames"],
-                     sum(fr), None)
-        yield pd.DataFrame(out)
-
-
-def gif_frame_stats(media: DataFrame) -> DataFrame:
-    """media(media_id, payload) → one row per ANIMATION FRAME with the
-    composited-canvas pixel sum — real multi-frame decode feeding the
-    frame-sampling pipeline (vs the plan-only path over the synthetic
-    FESB video container); malformed payloads become one error row."""
-    return media.select("media_id", "payload").mapInPandas(
-        _gif_frame_stats_batches, schema=GIF_FRAME_STATS_SCHEMA
-    )
 
 
 # --- real baseline-JPEG image decode (stdlib + numpy IDCT) -------------------
@@ -1095,174 +850,9 @@ def _raise(msg: str):
     raise ValueError(msg)
 
 
-# --- real WAV (RIFF/PCM) audio decode (stdlib-only) --------------------------
-
-
-# Executor-memory guard: largest accepted PCM16 data chunk (in samples).
-# 16M samples = 32 MiB of raw payload; without a cap, a huge or corrupt
-# chunk length would expand ~15-30x into Python ints and OOM the executor
-# instead of producing an error row (same design as the PNG/GIF 64M-pixel
-# caps).
-MAX_WAV_SAMPLES = 16 * 1024 * 1024
-
-
-def _parse_wav(payload: bytes, max_samples: int = MAX_WAV_SAMPLES) -> tuple:
-    """RIFF/WAVE chunk walk → (sample_rate, channels, bits, data bytes)
-    for PCM 8/16/24-bit.  Tolerates extra chunks (LIST, fact); raises
-    ValueError on non-PCM/other-depth/malformed/oversized payloads."""
-    import struct as _s
-
-    if payload is None or len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    pos = 12
-    fmt = None
-    data = None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (clen,) = _s.unpack("<I", payload[pos + 4 : pos + 8])
-        body = payload[pos + 8 : pos + 8 + clen]
-        if len(body) < clen:
-            raise ValueError("truncated chunk")
-        if cid == b"fmt ":
-            if clen < 16:
-                raise ValueError("short fmt chunk")
-            fmt = _s.unpack("<HHIIHH", body[:16])
-        elif cid == b"data":
-            data = body
-        pos += 8 + clen + (clen & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
-        raise ValueError("missing fmt or data chunk")
-    audio_format, channels, sample_rate, _byte_rate, _block_align, bits = fmt
-    if audio_format != 1 or bits not in (8, 16, 24):
-        raise ValueError(
-            f"unsupported WAV format {audio_format}/{bits}-bit (PCM 8/16/24 only)"
-        )
-    if len(data) // (bits // 8) > max_samples:
-        raise ValueError(
-            f"data chunk has {len(data) // (bits // 8)} samples (cap {max_samples})"
-        )
-    return sample_rate, channels, bits, data
-
-
-def _wav_samples_np(data: bytes, bits: int):
-    """PCM buffer → numpy int32 sample array: 8-bit WAV is UNSIGNED
-    (centered by -128 per the RIFF spec), 16-bit signed LE, 24-bit
-    signed LE packed 3-bytes (sign-extended via the int32 shift trick —
-    no per-sample Python loop)."""
-    import numpy as _np
-
-    if bits == 8:
-        return _np.frombuffer(data, dtype=_np.uint8).astype(_np.int32) - 128
-    if bits == 16:
-        n = (len(data) // 2) * 2
-        return _np.frombuffer(data[:n], dtype="<i2").astype(_np.int32)
-    n = (len(data) // 3) * 3
-    b = _np.frombuffer(data[:n], dtype=_np.uint8).reshape(-1, 3).astype(_np.int32)
-    # place the 3 bytes in the TOP of an int32, then arithmetic-shift
-    # back down 8 — sign extension for free
-    return ((b[:, 0] << 8) | (b[:, 1] << 16) | (b[:, 2] << 24)) >> 8
-
-
-def decode_wav(payload: bytes, max_samples: int = MAX_WAV_SAMPLES) -> dict:
-    """RIFF/WAVE bytes → {sample_rate, channels, bits, n_frames,
-    samples: list[int]} for PCM 8/16/24-bit (8-bit returned centered:
-    stored-unsigned minus 128).  Materializes the sample list — use the
-    stats pipeline (_wav_stats_batches) for bounded-memory aggregates;
-    the ``max_samples`` cap turns runaway chunk lengths into an error
-    row either way."""
-    sample_rate, channels, bits, data = _parse_wav(payload, max_samples)
-    arr = _wav_samples_np(data, bits)
-    n = len(arr)
-    samples = arr.tolist()  # one C call, not 16M Python int() calls
-    return {
-        "sample_rate": sample_rate,
-        "channels": channels,
-        "bits": bits,
-        "n_frames": n // max(channels, 1),
-        "samples": samples,
-    }
-
-
-WAV_STATS_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("n_frames", LongType()),
-        StructField("peak", IntegerType()),
-        StructField("energy", LongType()),
-        StructField("error", StringType()),
-    ]
-)
-
-
-def _wav_stats_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in WAV_STATS_SCHEMA.names}
-        for row in pdf.itertuples(index=False):
-            rate = ch = n_frames = peak = energy = None
-            err = None
-            try:
-                import numpy as _np
-
-                rate, ch, bits, data = _parse_wav(
-                    bytes(row.payload) if row.payload is not None else None
-                )
-                # stats over the raw PCM buffer — no Python int-list
-                # materialization (the ~15-30x amplification the decode_wav
-                # samples list would cost on large clips)
-                a = _wav_samples_np(data, bits)
-                n_frames = len(a) // max(ch, 1)
-                peak = int(_np.abs(a).max()) if len(a) else 0
-                # exact energy via chunked accumulation: a 24-bit chunk sum
-                # is <= 2^16 * 2^46 = 2^62 (int64-safe); the Python-int
-                # accumulator is unbounded, and a total past int64 becomes
-                # an error row instead of a silently WRAPPED energy (max
-                # 24-bit clips can exceed 2^63 inside the sample cap)
-                s64 = a.astype(_np.int64)
-                energy = 0
-                for lo in range(0, len(s64), 1 << 16):
-                    c = s64[lo : lo + (1 << 16)]
-                    energy += int((c * c).sum())
-                if energy > 0x7FFFFFFFFFFFFFFF:
-                    raise ValueError(f"energy {energy} overflows int64")
-            except Exception as exc:
-                err = f"ERR_WAV: {type(exc).__name__}: {exc}"[:200]
-            out["media_id"].append(row.media_id)
-            out["sample_rate"].append(rate)
-            out["channels"].append(ch)
-            out["n_frames"].append(n_frames)
-            out["peak"].append(peak)
-            out["energy"].append(energy)
-            out["error"].append(err)
-        yield pd.DataFrame(out)
-
-
-def wav_audio_stats(media: DataFrame) -> DataFrame:
-    """media(media_id, payload:binary) → per-clip PCM statistics from the
-    REAL audio decode path (integer peak/energy — exact across engines);
-    one Arrow-batched stage, never-fail contract."""
-    return media.select("media_id", "payload").mapInPandas(
-        _wav_stats_batches, schema=WAV_STATS_SCHEMA
-    )
-
-
-PNG_STATS_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("pixel_sum", LongType()),
-        StructField("error", StringType()),
-    ]
-)
-
-
 def _decode_image(payload) -> tuple[dict, int]:
-    """Signature-dispatched image decode (GIF / JPEG / PNG) → (img dict,
-    channels) — the ONE dispatch both pixel-stats and resize stages use,
-    so a new format or error-contract change lands in every consumer."""
+    """GIF / JPEG / PNG decode chosen by the payload's signature bytes →
+    (img dict, channels)."""
     payload = bytes(payload) if payload is not None else None
     if payload is not None and payload[:6] in (b"GIF87a", b"GIF89a"):
         return decode_gif(payload), 3
@@ -1272,97 +862,6 @@ def _decode_image(payload) -> tuple[dict, int]:
     img = decode_png(payload)
     return img, img["channels"]
 
-
-def _png_stats_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in PNG_STATS_SCHEMA.names}
-        for row in pdf.itertuples(index=False):
-            width = height = channels = pixel_sum = None
-            err = None
-            try:
-                img, channels = _decode_image(row.payload)
-                width, height = img["width"], img["height"]
-                pixel_sum = sum(img["pixels"])
-            except Exception as exc:
-                err = f"ERR_IMG: {type(exc).__name__}: {exc}"[:200]
-            out["media_id"].append(row.media_id)
-            out["width"].append(width)
-            out["height"].append(height)
-            out["channels"].append(channels)
-            out["pixel_sum"].append(pixel_sum)
-            out["error"].append(err)
-        yield pd.DataFrame(out)
-
-
-def png_pixel_stats(media: DataFrame) -> DataFrame:
-    """media(media_id, payload:binary) → per-image pixel statistics from
-    the REAL decode paths (PNG: inflate + unfilter; GIF: LZW + palette;
-    JPEG: Huffman + IDCT + YCbCr — dispatched by signature), summed over
-    raw pixel bytes; one Arrow-batched stage, never-fail contract."""
-    return media.select("media_id", "payload").mapInPandas(
-        _png_stats_batches, schema=PNG_STATS_SCHEMA
-    )
-
-
-def resize_nearest(
-    pixels: bytes, w: int, h: int, ch: int, out_w: int, out_h: int
-) -> bytes:
-    """Nearest-neighbor resize of an interleaved raster: output pixel
-    (x, y) samples source (floor(x·w/out_w), floor(y·h/out_h)) — the
-    deterministic integer rule both the pipeline and the fixture
-    generator implement, so resized stats are writer/decoder-exact
-    (no interpolation arithmetic to diverge)."""
-    import numpy as np
-
-    a = np.frombuffer(pixels, dtype=np.uint8).reshape(h, w, ch)
-    ys = (np.arange(out_h) * h) // out_h
-    xs = (np.arange(out_w) * w) // out_w
-    return a[ys][:, xs].tobytes()
-
-
-def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in MEDIA_META_SCHEMA.names}
-        for row in pdf.itertuples(index=False):
-            payload = bytes(row.payload) if row.payload is not None else None
-            meta = {"kind": None, "width": None, "height": None, "n_frames": None, "payload_bytes": None}
-            err = None
-            try:
-                meta = decode_header(payload)
-            except ValueError as exc:
-                err = str(exc)
-            out["media_id"].append(row.media_id)
-            out["kind"].append(meta.get("kind"))
-            out["width"].append(meta.get("width"))
-            out["height"].append(meta.get("height"))
-            out["n_frames"].append(meta.get("n_frames"))
-            out["payload_bytes"].append(meta.get("payload_bytes"))
-            out["error"].append(err)
-        yield pd.DataFrame(out)
-
-
-def extract_media_metadata(media: DataFrame) -> DataFrame:
-    """media(media_id, payload:binary) → typed metadata via one
-    Arrow-batched mapInPandas stage (the decode slot of the multimodal
-    pipeline)."""
-    return media.select("media_id", "payload").mapInPandas(
-        _decode_batches, schema=MEDIA_META_SCHEMA
-    )
-
-
-def frame_sample_plan(media_meta: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame-sampling *plan*: for video rows, the frame indices a decoder
-    would extract (sequence + explode; JVM-side, no UDF).  Downstream real
-    decoding consumes (media_id, frame_idx) pairs."""
-    from pyspark.sql import functions as F
-
-    vids = media_meta.filter(F.col("kind") == "video")
-    return vids.select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.col("n_frames") - 1, F.lit(0)), F.lit(every_n))
-        ).alias("frame_idx"),
-    )
 
 # --- perceptual hash (dHash) + image near-duplicate pairs -------------------
 
@@ -1384,10 +883,10 @@ IMAGE_DHASH_SCHEMA = StructType(
 def dhash64(pixels: bytes, w: int, h: int, ch: int) -> tuple[str, int, int, int, int]:
     """64-bit difference hash of an interleaved raster: integer luma
     ((299R+587G+114B) div 1000 for >=3 channels, channel 0 otherwise),
-    nearest-neighbor resample to 9x8 with the same floor(i*src/out) rule
-    as :func:`resize_nearest`, bit(y,x) = luma[y][x+1] > luma[y][x],
-    packed row-major MSB-first.  Returns (hex16, b0..b3) where b0 is the
-    top 16 bits — the four pigeonhole blocks for banded near-dup search
+    nearest-neighbor resample to 9x8 by the integer floor(i*src/out) rule,
+    bit(y,x) = luma[y][x+1] > luma[y][x], packed row-major MSB-first.
+    Returns (hex16, b0..b3) where b0 is the top 16 bits — the four
+    pigeonhole blocks for banded near-dup search
     (hamming <= 3 guarantees at least one equal block).  All arithmetic
     is integer, so the fixture generator's plain-Python twin reproduces
     it bit-for-bit."""
@@ -1469,56 +968,14 @@ def dhash_near_dup_pairs(
     no join back to the signature table.  Scale shape: one shuffle on
     the block key; 65,536 values per block keeps buckets fine-grained.
     """
-    return _banded_hamming_pairs(sigs, "dhash_hex", max_hamming, max_bucket_size)
-
-
-def _signature_blocks(sigs: DataFrame, hex_col: str) -> DataFrame:
-    """64-bit signature table → one row per (media, 16-bit pigeonhole
-    block): the bucket assignment for banded near-dup joins (error rows
-    dropped; blocks b0..b3 ride along for the carry verify)."""
-    bcols = [f"b{i}" for i in range(4)]
-    ok = sigs.filter(F.col("error").isNull())
-    return ok.select(
-        "media_id",
-        hex_col,
-        *bcols,
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("block_id"), F.col(f"b{i}").alias("block_val")
-                )
-                for i in range(4)
-            ])
-        ).alias("blk"),
-    ).select(
-        "media_id",
-        hex_col,
-        *bcols,
-        F.col("blk.block_id").alias("block_id"),
-        F.col("blk.block_val").alias("block_val"),
-    )
-
-
-def _banded_hamming_pairs(
-    sigs: DataFrame,
-    hex_col: str,
-    max_hamming: int,
-    max_bucket_size: int | None,
-) -> DataFrame:
-    """Shared 64-bit-signature near-dup core (dHash images, audio
-    fingerprints): explode the four 16-bit pigeonhole blocks (columns
-    b0..b3 + ``hex_col`` on ``sigs``; error rows dropped), bucket-join
-    via the shared capped guard with blocks carried, verify hamming
-    JVM-side (xor + bit_count), filter to ``max_hamming``."""
     from .candidates import bucket_pairs
 
     bcols = [f"b{i}" for i in range(4)]
-    buckets = _signature_blocks(sigs, hex_col)
     pairs = bucket_pairs(
-        buckets,
+        _signature_blocks(sigs),
         key_cols=["block_id", "block_val"],
         id_col="media_id",
-        sig_col=hex_col,
+        sig_col="dhash_hex",
         max_bucket_size=max_bucket_size,
         out_a="media_a",
         out_b="media_b",
@@ -1535,112 +992,31 @@ def _banded_hamming_pairs(
     )
 
 
-# --- audio fingerprint (segment-energy difference coding) -------------------
-
-AUDIO_AFP_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("n_frames", LongType()),
-        StructField("afp_hex", StringType()),
-        StructField("b0", IntegerType()),
-        StructField("b1", IntegerType()),
-        StructField("b2", IntegerType()),
-        StructField("b3", IntegerType()),
-        StructField("error", StringType()),
-    ]
-)
-
-
-def afp64(samples, channels: int) -> tuple[str, int, int, int, int]:
-    """64-bit audio fingerprint of interleaved PCM samples: downmix to
-    mono by per-frame channel SUM (integer, no rounding), split the mono
-    stream into 65 equal segments with the same floor(i*n/out) boundary
-    rule as the image resample, segment loudness = sum of |sample|, and
-    bit(i) = loudness[i+1] > loudness[i], packed MSB-first.  Returns
-    (hex16, b0..b3), b0 = top 16 bits.
-
-    Invariances (by construction, tested): positive amplitude scaling
-    (k·x keeps every comparison), channel layout (a stereo clip whose
-    downmix is proportional to a mono clip's stream fingerprints
-    identically), and silence → all-zero hash (ties are strict-greater
-    false) — the degenerate cluster for the capped bucket guard.
-    Overflow-safe: |sample| <= 2^23 (24-bit PCM) x 2^24 samples (the
-    decoder cap) = 2^47 running sum, inside int64."""
-    import numpy as np
-
-    m = np.asarray(samples, dtype=np.int64)
-    if channels > 1:
-        n = (len(m) // channels) * channels
-        m = m[:n].reshape(-1, channels).sum(axis=1)
-    a = np.abs(m)
-    nf = len(a)
-    bounds = (np.arange(66, dtype=np.int64) * nf) // 65
-    cs = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(a)])
-    e = cs[bounds[1:]] - cs[bounds[:-1]]
-    bits = e[1:] > e[:-1]
-    v = int.from_bytes(np.packbits(bits).tobytes(), "big")
-    return (
-        format(v, "016x"),
-        (v >> 48) & 0xFFFF,
-        (v >> 32) & 0xFFFF,
-        (v >> 16) & 0xFFFF,
-        v & 0xFFFF,
+def _signature_blocks(sigs: DataFrame) -> DataFrame:
+    """dHash table → one row per (media, 16-bit pigeonhole block): the
+    bucket assignment for banded near-dup joins (error rows dropped;
+    blocks b0..b3 ride along for the carry verify)."""
+    bcols = [f"b{i}" for i in range(4)]
+    ok = sigs.filter(F.col("error").isNull())
+    return ok.select(
+        "media_id",
+        "dhash_hex",
+        *bcols,
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(i).alias("block_id"), F.col(f"b{i}").alias("block_val")
+                )
+                for i in range(4)
+            ])
+        ).alias("blk"),
+    ).select(
+        "media_id",
+        "dhash_hex",
+        *bcols,
+        F.col("blk.block_id").alias("block_id"),
+        F.col("blk.block_val").alias("block_val"),
     )
-
-
-def audio_fingerprint(media: DataFrame) -> DataFrame:
-    """media(media_id, payload) → 64-bit audio fingerprint per WAV clip,
-    decode (PCM 8/16/24-bit) fused with the fingerprint in one
-    Arrow-batched stage — samples never leave the worker; never-fail
-    contract (error rows carry NULL hash).  The per-clip half of audio
-    near-dup detection; pair generation is :func:`afp_near_dup_pairs`."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {k: [] for k in AUDIO_AFP_SCHEMA.names}
-            for row in pdf.itertuples(index=False):
-                rate = ch = n_frames = hex16 = None
-                blocks = (None, None, None, None)
-                err = None
-                try:
-                    rate, ch, bits, data = _parse_wav(
-                        bytes(row.payload) if row.payload is not None else None
-                    )
-                    arr = _wav_samples_np(data, bits)
-                    n_frames = len(arr) // max(ch, 1)
-                    hex16, *blocks = afp64(arr, ch)
-                except Exception as exc:
-                    err = f"ERR_WAV: {type(exc).__name__}: {exc}"[:200]
-                out["media_id"].append(row.media_id)
-                out["sample_rate"].append(rate)
-                out["channels"].append(ch)
-                out["n_frames"].append(n_frames)
-                out["afp_hex"].append(hex16)
-                for i in range(4):
-                    out[f"b{i}"].append(blocks[i])
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "payload").mapInPandas(
-        batches, schema=AUDIO_AFP_SCHEMA
-    )
-
-
-def afp_near_dup_pairs(
-    sigs: DataFrame,
-    max_hamming: int = 3,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Audio fingerprint table (from :func:`audio_fingerprint`) → ordered
-    near-duplicate pairs (media_a, media_b, hamming) at hamming <=
-    ``max_hamming`` — same 4x16-bit pigeonhole banding, shared capped
-    bucket guard, and carried-block hamming verify as the image path
-    (:func:`dhash_near_dup_pairs`); exact recall at the default
-    threshold.  Silent clips all hash to zero (the degenerate hot
-    bucket) and take the linear star path when capped."""
-    return _banded_hamming_pairs(sigs, "afp_hex", max_hamming, max_bucket_size)
 
 
 def canonical_media_map(pairs: DataFrame) -> DataFrame:
@@ -1663,7 +1039,6 @@ def canonical_media_map(pairs: DataFrame) -> DataFrame:
 def canonicalize_media_refs(
     docs: DataFrame,
     canon_map: DataFrame,
-    broadcast_map: bool = True,
 ) -> DataFrame:
     """Interleaved-corpus media dedup: rewrite every span's ``media_ref``
     to its cluster-canonical id (``canon_map`` from
@@ -1674,13 +1049,11 @@ def canonicalize_media_refs(
     spans survive with their value intact.
 
     Scale shape: posexplode → LEFT join on media_ref → re-assemble
-    ordered by position.  With ``broadcast_map`` (the default — the map
-    holds only media needing rewrite) the ref join is broadcast, so the
-    shuffles are the groupBy(doc_id) re-assembly and the doc_id
-    join-back of the untouched document columns (the aggregated side is
-    already partitioned on doc_id, so only the input side exchanges);
-    set it False to let AQE pick a shuffle join when a pathological
-    corpus makes the map huge.
+    ordered by position.  The map holds only media needing rewrite, so
+    the ref join is broadcast and the shuffles are the groupBy(doc_id)
+    re-assembly and the doc_id join-back of the untouched document
+    columns (the aggregated side is already partitioned on doc_id, so
+    only the input side exchanges).
     Giant documents are one row each here — the same salted-repartition
     guidance as the extract stage applies upstream.
 
@@ -1688,11 +1061,11 @@ def canonicalize_media_refs(
     there is no grouping key to re-assemble them on, and collapsing
     every NULL-id row into one group would merge unrelated documents'
     spans — surface them upstream if they matter."""
-    m = canon_map.select(
-        F.col("media_ref").alias("_ref"), F.col("canonical_ref").alias("_canon")
+    m = F.broadcast(
+        canon_map.select(
+            F.col("media_ref").alias("_ref"), F.col("canonical_ref").alias("_canon")
+        )
     )
-    if broadcast_map:
-        m = F.broadcast(m)
     null_id_docs = docs.filter(F.col("doc_id").isNull())
     docs = docs.filter(F.col("doc_id").isNotNull())
     ex = docs.select(
@@ -1754,7 +1127,6 @@ def canonicalize_media_refs(
 def incremental_media_near_dups(
     inc_sigs: DataFrame,
     hist_sigs: DataFrame,
-    hex_col: str = "dhash_hex",
     max_hamming: int = 3,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
@@ -1777,11 +1149,11 @@ def incremental_media_near_dups(
     from .candidates import cross_bucket_pairs
 
     pairs = cross_bucket_pairs(
-        _signature_blocks(inc_sigs, hex_col),
-        _signature_blocks(hist_sigs, hex_col),
+        _signature_blocks(inc_sigs),
+        _signature_blocks(hist_sigs),
         key_cols=["block_id", "block_val"],
         id_col="media_id",
-        sig_col=hex_col,
+        sig_col="dhash_hex",
         max_bucket_size=max_bucket_size,
         out_a="media_id",
         out_b="hist_id",
@@ -1803,319 +1175,4 @@ def incremental_media_near_dups(
         .withColumn("hamming", hamming.cast("int"))
         .filter(F.col("hamming") <= max_hamming)
         .select("media_id", "hist_id", "hamming")
-    )
-
-
-# --- real video decode: AVI/MJPEG (RIFF container + per-frame JPEG) ---------
-
-MAX_AVI_FRAME_PIXELS = 64_000_000  # total across frames: n_frames x W x H
-
-
-def decode_avi_frames(
-    payload: bytes, max_frames: int = 256, sample_every: int = 1
-) -> dict:
-    """AVI (RIFF) Motion-JPEG video → {width, height, channels, n_frames,
-    frame_indices, frames: list[bytes]} — REAL video decode built on the
-    from-scratch baseline/progressive JPEG entropy decoder: RIFF chunk
-    walk (hdrl → avih + 'vids' strh/strf, movi → '##dc' frame chunks,
-    word-aligned), each frame an independent self-contained JPEG.
-    ``sample_every`` decodes only frames 0, n, 2n, … — the container
-    walk still counts every chunk (n_frames is the true total) but the
-    expensive per-frame entropy decode is skipped for unsampled frames,
-    which is what makes frame sampling cheap at scale (MJPEG frames are
-    independent; no inter-frame state to replay).  Subset: the MJPG
-    fourcc with JFIF frames carrying their own DQT/DHT (the
-    OpenDML-style table-less variant raises, as do other codecs — the
-    honest boundary stays at real codec bitstreams like H.264, which
-    need licensed reference decoders this container doesn't ship);
-    frame dimensions must match the stream header.  Caps mirror the GIF
-    path: ``max_frames`` and a total-pixel bound over the DECODED frames
-    turn dimension bombs into error rows, never executor OOM.
-
-    Reference video layout per AVI RIFF spec (msdn AVIMAINHEADER /
-    AVISTREAMHEADER); no reference-repo analog (fetch-engines has no
-    codec code)."""
-    import struct as _s
-
-    if payload is None or len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-        raise ValueError("not a RIFF/AVI payload")
-
-    avih = None
-    vids = False
-    mjpg = False
-    strf_wh = None
-    frames_raw: list[bytes] = []
-
-    def walk(buf: bytes, pos: int, end: int, depth: int = 0) -> None:
-        nonlocal avih, vids, mjpg, strf_wh
-        if depth > 8:
-            raise ValueError("RIFF nesting too deep")
-        while pos + 8 <= end:
-            cid = buf[pos : pos + 4]
-            (clen,) = _s.unpack("<I", buf[pos + 4 : pos + 8])
-            body_at = pos + 8
-            if body_at + clen > end:
-                raise ValueError(f"truncated chunk {cid!r}")
-            if cid == b"LIST":
-                ltype = buf[body_at : body_at + 4]
-                if ltype in (b"hdrl", b"strl", b"movi"):
-                    walk(buf, body_at + 4, body_at + clen, depth + 1)
-            elif cid == b"avih":
-                if clen < 40:
-                    raise ValueError("short avih chunk")
-                a = _s.unpack("<10I", buf[body_at : body_at + 40])
-                avih = {"n_frames": a[4], "width": a[8], "height": a[9]}
-            elif cid == b"strh":
-                if clen >= 8:
-                    vids = vids or buf[body_at : body_at + 4] == b"vids"
-                    mjpg = mjpg or buf[body_at + 4 : body_at + 8] == b"MJPG"
-            elif cid == b"strf" and vids and strf_wh is None:
-                if clen >= 16:
-                    w, h = _s.unpack("<ii", buf[body_at + 4 : body_at + 12])
-                    strf_wh = (w, abs(h))  # negative biHeight = top-down
-            elif len(cid) == 4 and cid[2:4] == b"dc":
-                frames_raw.append(buf[body_at : body_at + clen])
-            pos = body_at + clen + (clen & 1)  # chunks are word-aligned
-
-    (riff_len,) = _s.unpack("<I", payload[4:8])
-    walk(payload, 12, min(len(payload), 8 + riff_len))
-
-    if avih is None:
-        raise ValueError("missing avih header")
-    if not vids:
-        raise ValueError("no 'vids' stream")
-    if not mjpg:
-        raise ValueError("unsupported video codec (MJPG only)")
-    if not frames_raw:
-        raise ValueError("movi list has no frame chunks")
-    if avih["n_frames"] not in (0, len(frames_raw)):
-        # dwTotalFrames=0 is tolerated (common in real muxers); a nonzero
-        # count disagreeing with the movi content is a corrupt container
-        raise ValueError(
-            f"avih says {avih['n_frames']} frames, movi has {len(frames_raw)}"
-        )
-    w, h = avih["width"], avih["height"]
-    if strf_wh is not None and strf_wh != (w, h):
-        raise ValueError(f"strf {strf_wh} disagrees with avih {(w, h)}")
-    frame_indices = list(range(0, len(frames_raw), max(sample_every, 1)))
-    # the cap bounds DECODED work: a long video sparsely sampled is fine
-    # (the container walk is O(payload), the entropy decode is the cost)
-    if len(frame_indices) > max_frames:
-        raise ValueError(
-            f"{len(frame_indices)} sampled frames (cap {max_frames}; "
-            f"raise sample_every)"
-        )
-    if len(frame_indices) * w * h > MAX_AVI_FRAME_PIXELS:
-        raise ValueError(
-            f"{len(frame_indices)}x{w}x{h} decoded frames exceed total pixel cap"
-        )
-
-    frames: list[bytes] = []
-    channels = None
-    for i in frame_indices:
-        img = decode_jpeg(frames_raw[i])
-        if (img["width"], img["height"]) != (w, h):
-            raise ValueError(
-                f"frame {i} is {img['width']}x{img['height']}, header says {w}x{h}"
-            )
-        if channels is None:
-            channels = img["channels"]
-        elif img["channels"] != channels:
-            raise ValueError(f"frame {i} channel count changed mid-stream")
-        frames.append(img["pixels"])
-    return {
-        "width": w,
-        "height": h,
-        "channels": channels,
-        "n_frames": len(frames_raw),
-        "frame_indices": frame_indices,
-        "frames": frames,
-    }
-
-
-VIDEO_FRAME_STATS_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("n_frames", IntegerType()),
-        StructField("pixel_sum", LongType()),
-        StructField("error", StringType()),
-    ]
-)
-
-
-def video_frame_stats(media: DataFrame, every_n: int = 1) -> DataFrame:
-    """media(media_id, payload) → one row per (sampled) VIDEO FRAME with
-    its pixel sum — the real-decode counterpart of the plan-only
-    `frame_sample_plan` over synthetic FESB containers, for the one
-    video codec this container can decode from scratch (AVI/MJPEG).
-    ``every_n`` samples frames 0, n, 2n, … WITHOUT decoding the skipped
-    ones' pixels (the container walk still indexes them — frame chunks
-    are independent JPEGs, so sampling skips the expensive entropy
-    decode, the point of frame sampling at scale).  Never-fail contract:
-    malformed payloads become one error row."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {k: [] for k in VIDEO_FRAME_STATS_SCHEMA.names}
-
-            def emit(mid, fi, w, h, ch, nf, ps, err):
-                out["media_id"].append(mid)
-                out["frame_idx"].append(fi)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(ch)
-                out["n_frames"].append(nf)
-                out["pixel_sum"].append(ps)
-                out["error"].append(err)
-
-            for row in pdf.itertuples(index=False):
-                try:
-                    v = decode_avi_frames(
-                        bytes(row.payload) if row.payload is not None else None,
-                        sample_every=every_n,
-                    )
-                except Exception as exc:
-                    emit(row.media_id, None, None, None, None, None, None,
-                         f"ERR_VID: {type(exc).__name__}: {exc}"[:200])
-                    continue
-                for fi, px in zip(v["frame_indices"], v["frames"]):
-                    emit(row.media_id, fi, v["width"], v["height"],
-                         v["channels"], v["n_frames"], sum(px), None)
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "payload").mapInPandas(
-        batches, schema=VIDEO_FRAME_STATS_SCHEMA
-    )
-
-
-VIDEO_FRAME_DHASH_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("n_frames", IntegerType()),
-        StructField("dhash_hex", StringType()),
-        StructField("error", StringType()),
-    ]
-)
-
-
-def video_frame_dhash(media: DataFrame, every_n: int = 1) -> DataFrame:
-    """media(media_id, payload) → one row per (sampled) AVI/MJPEG frame
-    with its 64-bit dHash — container walk + per-frame JPEG decode +
-    hash fused in one Arrow stage, unsampled frames' entropy decode
-    skipped.  The per-clip half of video near-dup detection; pair
-    scoring is :func:`video_near_dup_pairs`."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {k: [] for k in VIDEO_FRAME_DHASH_SCHEMA.names}
-
-            def emit(mid, fi, nf, hx, err):
-                out["media_id"].append(mid)
-                out["frame_idx"].append(fi)
-                out["n_frames"].append(nf)
-                out["dhash_hex"].append(hx)
-                out["error"].append(err)
-
-            for row in pdf.itertuples(index=False):
-                try:
-                    v = decode_avi_frames(
-                        bytes(row.payload) if row.payload is not None else None,
-                        sample_every=every_n,
-                    )
-                except Exception as exc:
-                    emit(row.media_id, None, None, None,
-                         f"ERR_VID: {type(exc).__name__}: {exc}"[:200])
-                    continue
-                for fi, px in zip(v["frame_indices"], v["frames"]):
-                    hx, *_ = dhash64(px, v["width"], v["height"], v["channels"])
-                    emit(row.media_id, fi, v["n_frames"], hx, None)
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "payload").mapInPandas(
-        batches, schema=VIDEO_FRAME_DHASH_SCHEMA
-    )
-
-
-def video_near_dup_pairs(
-    frame_sigs: DataFrame,
-    min_share_bp: int = 8000,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Per-frame dHash table (from :func:`video_frame_dhash`) → ordered
-    clip near-duplicate pairs (media_a, media_b, n_shared, share_bp):
-    two clips are near-dups when the smaller one's DISTINCT frame-hash
-    set is largely contained in the other's (share_bp = 10000 *
-    |shared| / min(|A|, |B|), integer floor — re-ordered, trimmed, or
-    frame-sampled copies of a video keep high containment even when
-    frame COUNTS differ).
-
-    Shape: candidate pairs come from a bucketed join on the exact frame
-    hash through the shared capped guard — a hot frame hash (black
-    frames, station idents, title cards across thousands of videos) is
-    the classic degenerate bucket, and with ``max_bucket_size`` set it
-    takes the linear star path keyed on a whole-clip signature (md5 of
-    the sorted distinct hash set, so clip-identical copies always
-    match).  The shared-count then comes from joining the BOUNDED
-    candidate list back to the two per-clip hash sets (id-equi-joins;
-    AQE broadcasts the small side) — never a quadratic self-join."""
-    ok = frame_sigs.filter(
-        F.col("error").isNull() & F.col("dhash_hex").isNotNull()
-    )
-    per_clip = ok.select("media_id", "dhash_hex").distinct()
-    clip_sig = per_clip.groupBy("media_id").agg(
-        F.md5(
-            F.concat_ws(",", F.array_sort(F.collect_list("dhash_hex")))
-        ).alias("clip_sig"),
-        F.count("*").alias("n_distinct"),
-    )
-    from .candidates import bucket_pairs
-
-    buckets = per_clip.join(clip_sig, "media_id")
-    cand = bucket_pairs(
-        buckets,
-        key_cols=["dhash_hex"],
-        id_col="media_id",
-        sig_col="clip_sig",
-        max_bucket_size=max_bucket_size,
-        out_a="media_a",
-        out_b="media_b",
-    )
-    a = per_clip.select(
-        F.col("media_id").alias("media_a"), F.col("dhash_hex").alias("_ha")
-    )
-    b = per_clip.select(
-        F.col("media_id").alias("media_b"), F.col("dhash_hex").alias("_hb")
-    )
-    shared = (
-        cand.join(a, "media_a")
-        .join(b, "media_b")
-        .filter(F.col("_ha") == F.col("_hb"))
-        .groupBy("media_a", "media_b")
-        .agg(F.count("*").alias("n_shared"))
-    )
-    sa = clip_sig.select(
-        F.col("media_id").alias("media_a"), F.col("n_distinct").alias("_na")
-    )
-    sb = clip_sig.select(
-        F.col("media_id").alias("media_b"), F.col("n_distinct").alias("_nb")
-    )
-    return (
-        shared.join(sa, "media_a")
-        .join(sb, "media_b")
-        .withColumn(
-            # true integer division (div), not double-divide-then-cast:
-            # exact floor on both engines by construction
-            "share_bp",
-            F.expr("cast((10000 * n_shared) div least(_na, _nb) as int)"),
-        )
-        .filter(F.col("share_bp") >= min_share_bp)
-        .select(
-            "media_a", "media_b",
-            F.col("n_shared").cast("int").alias("n_shared"), "share_bp",
-        )
     )

@@ -638,178 +638,6 @@ def _gif_bytes(width: int, height: int, palette: list[tuple[int, int, int]], ind
     return bytes(out)
 
 
-def _gif_anim_bytes(
-    sw: int,
-    sh: int,
-    palette: list[tuple[int, int, int]],
-    frames: list[dict],
-    bg_idx: int = 0,
-) -> bytes:
-    """Animated-GIF WRITER (independent of the decoder under test):
-    logical screen + global color table + per-frame [GCE +] image
-    descriptor with partial rects, disposal, transparency, optional
-    local palettes and interlacing.  Each frame dict: {x, y, w, h,
-    indices, disposal=0, transparent=None, local_palette=None,
-    interlaced=False}."""
-    import struct as _s
-
-    n_bits = max(2, (len(palette) - 1).bit_length())
-    table_size = 1 << n_bits
-    gct = b"".join(bytes(c) for c in palette) + b"\x00\x00\x00" * (table_size - len(palette))
-    out = bytearray(b"GIF89a")
-    out += _s.pack("<HHBBB", sw, sh, 0x80 | (n_bits - 1), bg_idx, 0)
-    out += gct
-    for fr in frames:
-        disposal = fr.get("disposal", 0)
-        transparent = fr.get("transparent")
-        if disposal or transparent is not None:
-            packed = (disposal << 2) | (1 if transparent is not None else 0)
-            out += bytes([0x21, 0xF9, 0x04, packed, 0, 0, transparent or 0, 0x00])
-        lp = fr.get("local_palette")
-        iflags = 0
-        lct = b""
-        bits = n_bits
-        if lp is not None:
-            bits = max(2, (len(lp) - 1).bit_length())
-            iflags |= 0x80 | (bits - 1)
-            lct = b"".join(bytes(c) for c in lp) + b"\x00\x00\x00" * ((1 << bits) - len(lp))
-        if fr.get("interlaced"):
-            iflags |= 0x40
-        out += b"\x2c" + _s.pack("<HHHHB", fr["x"], fr["y"], fr["w"], fr["h"], iflags)
-        out += lct
-        idx = fr["indices"]
-        if fr.get("interlaced"):
-            idx = b"".join(
-                idx[r * fr["w"] : (r + 1) * fr["w"]]
-                for start, step in ((0, 8), (4, 8), (2, 4), (1, 2))
-                for r in range(start, fr["h"], step)
-            )
-        out.append(bits)
-        lzw = _lzw_encode(idx, bits)
-        for j in range(0, len(lzw), 255):
-            block = lzw[j : j + 255]
-            out.append(len(block))
-            out += block
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
-
-
-def _gif_anim_expected(sw, sh, palette, frames, bg_idx=0):
-    """Independent plain-Python composition of the expected per-frame
-    canvases: paint each rect (transparent indices leave the canvas),
-    then apply disposal (2=restore rect to bg color, 3=restore previous
-    canvas).  Returns the list of full-canvas RGB byte strings."""
-    bg = bytes(palette[bg_idx])
-    canvas = list(bg * (sw * sh))
-    snaps = []
-    for fr in frames:
-        pal = fr.get("local_palette") or palette
-        prev = list(canvas) if fr.get("disposal", 0) == 3 else None
-        for j in range(fr["h"]):
-            for i2 in range(fr["w"]):
-                ci = fr["indices"][j * fr["w"] + i2]
-                if fr.get("transparent") is not None and ci == fr["transparent"]:
-                    continue
-                o = ((fr["y"] + j) * sw + (fr["x"] + i2)) * 3
-                canvas[o : o + 3] = bytes(pal[ci])
-        snaps.append(bytes(bytearray(canvas)))
-        d = fr.get("disposal", 0)
-        if d == 2:
-            for j in range(fr["h"]):
-                o = ((fr["y"] + j) * sw + fr["x"]) * 3
-                canvas[o : o + 3 * fr["w"]] = bg * fr["w"]
-        elif d == 3 and prev is not None:
-            canvas = prev
-    return snaps
-
-
-def build_gif_anim() -> None:
-    """Animated-GIF fixture: writer-encoded multi-frame animations
-    (partial rects, transparency, disposal 0/1/2/3, local palette,
-    interlaced frame) with expected per-frame composited-canvas pixel
-    sums from an independent plain-Python composition; self-checked
-    through the pipeline decoder at build time."""
-    from fetch_engines_spark.pipelines.multimodal import decode_gif_frames
-
-    pal = [((i * 37) % 256, (i * 91) % 256, (i * 53) % 256) for i in range(8)]
-
-    def rect(w, h, seed, nc=8):
-        # seed multiplies x so different frames get DIFFERENT index
-        # multisets (an additive seed is a permutation → equal pixel
-        # sums, which would weaken the per-frame oracle rows)
-        return bytes(((x * x * seed + y * 7 + seed) % nc) for y in range(h) for x in range(w))
-
-    cases = []
-    cases.append(("anim-basic", 16, 12, [
-        {"x": 0, "y": 0, "w": 16, "h": 12, "indices": rect(16, 12, 1)},
-        {"x": 0, "y": 0, "w": 16, "h": 12, "indices": rect(16, 12, 2)},
-        {"x": 0, "y": 0, "w": 16, "h": 12, "indices": rect(16, 12, 3)},
-    ]))
-    cases.append(("anim-partial-transparent", 20, 15, [
-        {"x": 0, "y": 0, "w": 20, "h": 15, "indices": rect(20, 15, 4)},
-        {"x": 5, "y": 3, "w": 8, "h": 6, "indices": rect(8, 6, 5), "transparent": 2},
-        {"x": 10, "y": 8, "w": 6, "h": 4, "indices": rect(6, 4, 6), "transparent": 0},
-    ]))
-    cases.append(("anim-dispose-bg", 12, 10, [
-        {"x": 0, "y": 0, "w": 12, "h": 10, "indices": rect(12, 10, 1)},
-        {"x": 2, "y": 2, "w": 5, "h": 4, "indices": rect(5, 4, 2), "disposal": 2},
-        {"x": 4, "y": 5, "w": 4, "h": 3, "indices": rect(4, 3, 3)},
-    ]))
-    cases.append(("anim-dispose-prev", 12, 10, [
-        {"x": 0, "y": 0, "w": 12, "h": 10, "indices": rect(12, 10, 7)},
-        {"x": 1, "y": 1, "w": 6, "h": 5, "indices": rect(6, 5, 2), "disposal": 3},
-        {"x": 3, "y": 2, "w": 5, "h": 5, "indices": rect(5, 5, 4), "transparent": 1},
-    ]))
-    lp = [((i * 61 + 5) % 256, (i * 17) % 256, (i * 101) % 256) for i in range(4)]
-    cases.append(("anim-localpal-interlaced", 14, 11, [
-        {"x": 0, "y": 0, "w": 14, "h": 11, "indices": rect(14, 11, 1)},
-        {"x": 2, "y": 0, "w": 10, "h": 11, "indices": rect(10, 11, 3, nc=4),
-         "local_palette": lp, "interlaced": True},
-    ]))
-
-    payload_rows = []
-    exp_rows = []
-    for mid, sw, sh, frames in cases:
-        payload = _gif_anim_bytes(sw, sh, pal, frames)
-        snaps = _gif_anim_expected(sw, sh, pal, frames)
-        got = decode_gif_frames(payload)
-        assert got["n_frames"] == len(frames), mid
-        for fi, snap in enumerate(snaps):
-            assert got["frames"][fi] == snap, f"{mid}#{fi}: writer/decoder disagreement"
-            exp_rows.append((mid, fi, sw, sh, len(frames), sum(snap), None))
-        payload_rows.append((mid, payload))
-    # error rows: truncation mid-frame, rect outside the logical screen
-    bad = bytearray(_gif_anim_bytes(8, 8, pal, [
-        {"x": 0, "y": 0, "w": 8, "h": 8, "indices": rect(8, 8, 1)}]))
-    desc = bad.find(b"\x2c")
-    bad[desc + 1] = 6  # x=6 -> 6+8 > 8: rect outside screen
-    payload_rows.append(("anim-bad-rect", bytes(bad)))
-    exp_rows.append(("anim-bad-rect", None, None, None, None, None, "ERR_GIF"))
-    payload_rows.append(("anim-truncated", payload_rows[0][1][:25]))
-    exp_rows.append(("anim-truncated", None, None, None, None, None, "ERR_GIF"))
-
-    pq.write_table(
-        pa.table({
-            "media_id": [r[0] for r in payload_rows],
-            "payload": pa.array([r[1] for r in payload_rows], pa.binary()),
-        }),
-        os.path.join(OUT, "gif_anim.parquet"),
-    )
-    pq.write_table(
-        pa.table({
-            "media_id": [r[0] for r in exp_rows],
-            "frame_idx": pa.array([r[1] for r in exp_rows], pa.int32()),
-            "exp_width": pa.array([r[2] for r in exp_rows], pa.int32()),
-            "exp_height": pa.array([r[3] for r in exp_rows], pa.int32()),
-            "exp_n_frames": pa.array([r[4] for r in exp_rows], pa.int32()),
-            "exp_pixel_sum": pa.array([r[5] for r in exp_rows], pa.int64()),
-            "exp_error_prefix": [r[6] for r in exp_rows],
-        }),
-        os.path.join(OUT, "gif_anim_expected.parquet"),
-    )
-
-
 def _resize8_sum(px: bytes, w: int, h: int, ch: int) -> int:
     """Expected 8x8 nearest-neighbor thumbnail pixel sum, computed with a
     plain-Python loop INDEPENDENT of the pipeline's numpy resize (same
@@ -1714,454 +1542,6 @@ def build_documents_media() -> None:
     )
 
 
-def _avi_bytes(
-    width: int,
-    height: int,
-    frame_payloads: list[bytes],
-    fourcc: bytes = b"MJPG",
-    total_override: int | None = None,
-    strf_wh: tuple[int, int] | None = None,
-) -> bytes:
-    """Minimal AVI/RIFF writer (independent of the decoder under test):
-    hdrl (avih + one 'vids' strl with strh/strf BITMAPINFOHEADER) +
-    movi with one word-aligned '00dc' chunk per frame payload.
-    ``total_override`` / ``strf_wh`` let error fixtures plant
-    header-vs-content disagreements."""
-    import struct as _s
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        return cid + _s.pack("<I", len(body)) + body + (b"\x00" if len(body) & 1 else b"")
-
-    def lst(ltype: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", ltype + body)
-
-    n = total_override if total_override is not None else len(frame_payloads)
-    avih = _s.pack(
-        "<14I", 33333, 0, 0, 0, n, 0, 1, 0, width, height, 0, 0, 0, 0
-    )
-    strh = b"vids" + fourcc + _s.pack("<IHHIIIIIIII", 0, 0, 0, 0, 1, 30, 0, n, 0, 10000, 0) + _s.pack("<4H", 0, 0, width, height)
-    sw, sh = strf_wh if strf_wh is not None else (width, height)
-    strf = _s.pack("<IiiHH4sIiiII", 40, sw, sh, 1, 24, fourcc, 0, 0, 0, 0, 0)
-    hdrl = lst(b"hdrl", chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in frame_payloads))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + _s.pack("<I", len(body)) + body
-
-
-def build_avi_videos() -> None:
-    """AVI/MJPEG video fixture: writer-emitted RIFF containers whose
-    frames are generator-encoded baseline JPEGs (gray DC tiles, YCbCr
-    4:4:4 color, 4:2:0 subsampled, odd non-MCU-multiple crop) with the
-    expected per-frame pixel sums derived from the quantized
-    coefficients via the spec IDCT — plus error rows: a non-MJPG
-    codec fourcc, an empty movi, a header/stream dimension mismatch,
-    truncation, and not-a-RIFF.  Self-checked through the pipeline
-    decoder at build time."""
-    from fetch_engines_spark.pipelines.multimodal import decode_avi_frames
-
-    flat1 = [1] * 64
-    q2 = [2] * 64
-
-    def dc_block(v: int) -> list[int]:
-        blk = [0] * 64
-        blk[0] = (v - 128) * 8
-        return blk
-
-    def gray_frame(w: int, h: int, levels: list[int], q) -> tuple[bytes, bytes]:
-        bx, by = (w + 7) // 8, (h + 7) // 8
-        blocks = [dc_block(levels[i % len(levels)]) for i in range(bx * by)]
-        return (
-            _jpeg_bytes(w, h, [blocks], [q]),
-            _jpeg_expected_pixels(w, h, [blocks], [q]),
-        )
-
-    def color_frame(w: int, h: int, y: int, cb: int, cr: int) -> tuple[bytes, bytes]:
-        bx, by = (w + 7) // 8, (h + 7) // 8
-        comps = [[dc_block(v)] * (bx * by) for v in (y, cb, cr)]
-        return (
-            _jpeg_bytes(w, h, comps, [flat1, flat1, flat1]),
-            _jpeg_expected_pixels(w, h, comps, [flat1, flat1, flat1]),
-        )
-
-    rows = []  # (media_id, payload, [(frame_idx, w, h, ch, pixel_sum)], err)
-
-    def add(mid: str, w: int, h: int, fr: list[tuple[bytes, bytes]], ch: int) -> None:
-        payload = _avi_bytes(w, h, [f[0] for f in fr])
-        got = decode_avi_frames(payload)
-        assert got["n_frames"] == len(fr) and (got["width"], got["height"]) == (w, h), mid
-        for i, (_, px) in enumerate(fr):
-            assert got["frames"][i] == px, f"{mid}: frame {i} writer/decoder disagreement"
-        rows.append(
-            (mid, payload,
-             [(i, w, h, ch, sum(f[1])) for i, f in enumerate(fr)], None)
-        )
-
-    add("avi-gray", 16, 16, [gray_frame(16, 16, [40 + 30 * i, 90 + 10 * i], q2) for i in range(4)], 1)
-    add("avi-color", 16, 8, [color_frame(16, 8, 60, 110, 150), color_frame(16, 8, 200, 140, 120)], 3)
-    # 4:2:0 subsampled color frame (the dominant web MJPEG layout)
-    y420 = [dc_block(v) for v in (50, 100, 150, 200)]
-    sub = _jpeg_bytes(16, 16, [y420, [dc_block(90)], [dc_block(170)]], [flat1, flat1, flat1], sampling=[(2, 2), (1, 1), (1, 1)])
-    sub_px = _jpeg_expected_pixels(16, 16, [y420, [dc_block(90)], [dc_block(170)]], [flat1, flat1, flat1], sampling=[(2, 2), (1, 1), (1, 1)])
-    add("avi-420", 16, 16, [(sub, sub_px)], 3)
-    add("avi-odd", 11, 9, [gray_frame(11, 9, [77], flat1), gray_frame(11, 9, [154, 31], q2)], 1)
-
-    g1, _ = gray_frame(8, 8, [128], flat1)
-    rows.append(("avi-wrong-codec", _avi_bytes(8, 8, [g1], fourcc=b"H264"), None, "ERR_VID"))
-    rows.append(("avi-count-mismatch", _avi_bytes(8, 8, [g1, g1], total_override=5), None, "ERR_VID"))
-    rows.append(("avi-no-frames", _avi_bytes(8, 8, []), None, "ERR_VID"))
-    rows.append(("avi-dim-mismatch", _avi_bytes(8, 8, [g1], strf_wh=(16, 16)), None, "ERR_VID"))
-    rows.append(("avi-truncated", rows[0][1][:40], None, "ERR_VID"))
-    rows.append(("avi-not-riff", b"MOOV not an avi", None, "ERR_VID"))
-
-    pq.write_table(
-        pa.table(
-            {
-                "media_id": [r[0] for r in rows],
-                "payload": pa.array([r[1] for r in rows], pa.binary()),
-            }
-        ),
-        os.path.join(OUT, "avi_videos.parquet"),
-    )
-    exp_rows = []
-    for mid, _, frames, err in rows:
-        if err is not None:
-            exp_rows.append((mid, None, None, None, None, None, None, err))
-        else:
-            nf = len(frames)
-            for i, w, h, ch, ps in frames:
-                exp_rows.append((mid, i, w, h, ch, nf, ps, None))
-    pq.write_table(
-        pa.table(
-            {
-                "media_id": [r[0] for r in exp_rows],
-                "frame_idx": pa.array([r[1] for r in exp_rows], pa.int32()),
-                "exp_width": pa.array([r[2] for r in exp_rows], pa.int32()),
-                "exp_height": pa.array([r[3] for r in exp_rows], pa.int32()),
-                "exp_channels": pa.array([r[4] for r in exp_rows], pa.int32()),
-                "exp_n_frames": pa.array([r[5] for r in exp_rows], pa.int32()),
-                "exp_pixel_sum": pa.array([r[6] for r in exp_rows], pa.int64()),
-                "exp_error_prefix": [r[7] for r in exp_rows],
-            }
-        ),
-        os.path.join(OUT, "avi_expected.parquet"),
-    )
-
-
-def build_avi_neardup() -> None:
-    """Video near-duplicate fixture: AVI/MJPEG clips assembled from a
-    shared pool of distinct gray frames — an exact copy, a re-ordered
-    copy and a trimmed prefix (frame-hash containment 10000 despite
-    different payload bytes / frame counts / order), a half-overlap clip
-    (5000 bp, below the default threshold), unrelated clips, a black
-    frame shared into one clip plus three black-only clips (the
-    degenerate hot frame-hash bucket — and the documented
-    tiny-clip-containment property: a 1-distinct-hash black clip is
-    fully contained in ANY clip that has one black frame), and a
-    truncated error row.  Expected per-frame dhashes from the
-    independent plain-Python twin over the spec-IDCT expected pixels."""
-    from fetch_engines_spark.pipelines.multimodal import decode_avi_frames
-
-    flat1 = [1] * 64
-    w = h = 16
-
-    def dc_block(v: int) -> list[int]:
-        blk = [0] * 64
-        blk[0] = (v - 128) * 8
-        return blk
-
-    def frame(i: int) -> tuple[bytes, str]:
-        # DC level + a horizontal AC ripple per block: DC-only tiles
-        # collapse to a handful of tile-order hash patterns, the ripple
-        # gives every pool frame a distinct sampled-luma landscape
-        def blk(k: int) -> list[int]:
-            # a single freq-1 ripple is MONOTONE across a block (every
-            # within-tile comparison gets the same sign) — mix freq 1/2/3
-            # horizontals + a vertical so sampled columns flip
-            # independently per frame
-            b = dc_block((37 * i + 29 * k + 13) % 200 + 20)
-            b[1] = (((17 * i + 11 * k) % 31) - 15) * 4
-            b[2] = (((13 * i + 19 * k) % 29) - 14) * 4
-            b[3] = (((7 * i + 23 * k) % 25) - 12) * 4
-            b[8] = (((23 * i + 7 * k) % 27) - 13) * 4
-            # non-separable (1,1) term: pure f(x)+g(y) mixes keep every
-            # row's comparison signs identical — the cross term varies
-            # them per sampled row
-            b[9] = (((19 * i + 13 * k) % 33) - 16) * 4
-            return b
-
-        blocks = [blk(k) for k in range(4)]
-        payload = _jpeg_bytes(w, h, [blocks], [flat1])
-        px = _jpeg_expected_pixels(w, h, [blocks], [flat1])
-        return payload, _dhash_expected(px, w, h, 1)[0]
-
-    pool = [frame(i) for i in range(24)]
-    hashes = [hx for _, hx in pool]
-    assert len(set(hashes)) == len(hashes), "frame pool hashes must be distinct"
-    black_payload = _jpeg_bytes(w, h, [[dc_block(0)] * 4], [flat1])
-    black_px = _jpeg_expected_pixels(w, h, [[dc_block(0)] * 4], [flat1])
-    black_hx = _dhash_expected(black_px, w, h, 1)[0]
-    assert black_hx == "0" * 16
-
-    clips = [
-        ("vid-a", [0, 1, 2, 3, 4, 5]),
-        ("vid-a-copy", [0, 1, 2, 3, 4, 5]),
-        ("vid-a-reorder", [3, 1, 5, 0, 4, 2]),
-        ("vid-a-trimmed", [0, 1, 2, 3]),
-        ("vid-b", [6, 7, 8, 9, 10, 11]),
-        ("vid-b-half", [6, 7, 8, 20, 21, 22]),
-        ("vid-c", [12, 13, 14, 15, 16, 17, -1]),  # -1 = one black frame
-        ("vid-d", [18, 19, 23]),
-    ]
-    rows = []
-    for mid, idxs in clips:
-        payloads = [black_payload if i < 0 else pool[i][0] for i in idxs]
-        exp = [black_hx if i < 0 else pool[i][1] for i in idxs]
-        payload = _avi_bytes(w, h, payloads)
-        got = decode_avi_frames(payload)
-        from fetch_engines_spark.pipelines.multimodal import dhash64
-        for fi, px in enumerate(got["frames"]):
-            assert dhash64(px, w, h, 1)[0] == exp[fi], (mid, fi)
-        rows.append((mid, payload, exp, None))
-    for j in range(3):
-        payload = _avi_bytes(w, h, [black_payload] * (2 + j))
-        rows.append((f"vid-black-{j}", payload, [black_hx] * (2 + j), None))
-    rows.append(("vid-truncated", rows[0][1][:50], None, "ERR_VID"))
-
-    pq.write_table(
-        pa.table(
-            {
-                "media_id": [r[0] for r in rows],
-                "payload": pa.array([r[1] for r in rows], pa.binary()),
-            }
-        ),
-        os.path.join(OUT, "avi_neardup.parquet"),
-    )
-    exp_rows = []
-    for mid, _, exp, err in rows:
-        if err is not None:
-            exp_rows.append((mid, None, None, None, err))
-        else:
-            for fi, hx in enumerate(exp):
-                exp_rows.append((mid, fi, len(exp), hx, None))
-    pq.write_table(
-        pa.table(
-            {
-                "media_id": [r[0] for r in exp_rows],
-                "frame_idx": pa.array([r[1] for r in exp_rows], pa.int32()),
-                "exp_n_frames": pa.array([r[2] for r in exp_rows], pa.int32()),
-                "exp_dhash_hex": [r[3] for r in exp_rows],
-                "exp_error_prefix": [r[4] for r in exp_rows],
-            }
-        ),
-        os.path.join(OUT, "avi_neardup_expected.parquet"),
-    )
-
-
-def _wav_bytes(sample_rate: int, channels: int, samples: list[int], extra_chunk: bool = False, bits: int = 16) -> bytes:
-    """WAV WRITER (independent of the decoder under test): PCM RIFF with
-    fmt + data chunks at 8/16/24-bit depth (8-bit stored UNSIGNED:
-    sample+128, per the RIFF spec; 24-bit packed signed LE);
-    ``extra_chunk`` inserts a LIST chunk the chunk walk must skip."""
-    import struct as _s
-
-    if bits == 8:
-        data = bytes((s + 128) & 0xFF for s in samples)
-    elif bits == 16:
-        data = b"".join(_s.pack("<h", s) for s in samples)
-    elif bits == 24:
-        data = b"".join((s & 0xFFFFFF).to_bytes(3, "little") for s in samples)
-    else:
-        raise ValueError(bits)
-    block_align = channels * (bits // 8)
-    fmt = _s.pack("<HHIIHH", 1, channels, sample_rate, sample_rate * block_align, block_align, bits)
-    chunks = b"fmt " + _s.pack("<I", len(fmt)) + fmt
-    if extra_chunk:
-        info = b"INFOIART" + _s.pack("<I", 5) + b"gen\x00 "
-        chunks += b"LIST" + _s.pack("<I", len(info)) + info + (b"\x00" if len(info) & 1 else b"")
-    chunks += b"data" + _s.pack("<I", len(data)) + data + (b"\x00" if len(data) & 1 else b"")
-    return b"RIFF" + _s.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-def _afp_expected(samples, channels: int):
-    """Expected 64-bit audio fingerprint (hex + four 16-bit blocks),
-    plain-Python loops INDEPENDENT of the pipeline's numpy
-    implementation (same per-frame channel-sum downmix, same
-    floor(i*n/65) segment boundaries, segment loudness = sum of
-    |sample|, bit = next segment louder, MSB-first)."""
-    mono = []
-    nfr = len(samples) // channels
-    for f in range(nfr):
-        mono.append(sum(samples[f * channels + c] for c in range(channels)))
-    n = len(mono)
-    e = []
-    for i in range(65):
-        lo, hi = (i * n) // 65, ((i + 1) * n) // 65
-        e.append(sum(abs(x) for x in mono[lo:hi]))
-    v = 0
-    for i in range(64):
-        v = (v << 1) | (1 if e[i + 1] > e[i] else 0)
-    return (
-        format(v, "016x"),
-        (v >> 48) & 0xFFFF,
-        (v >> 32) & 0xFFFF,
-        (v >> 16) & 0xFFFF,
-        v & 0xFFFF,
-    )
-
-
-def build_wavs() -> None:
-    """Real-WAV decode fixture: generator-written PCM16 clips (mono,
-    stereo, extra-chunk layout) with expected frame count / peak / energy
-    recorded from the RAW integer samples."""
-    rows = []  # (media_id, payload, rate, ch, n_frames, peak, energy, err)
-
-    def tri(n, period, amp, phase=0):
-        # integer triangle wave: deterministic, engine-exact
-        return [
-            (abs(((i + phase) % period) * 2 - period) - period // 2) * amp
-            for i in range(n)
-        ]
-
-    cases = [
-        ("wav-mono", 8000, 1, tri(480, 40, 300)),
-        ("wav-stereo", 16000, 2, tri(960, 64, 150, phase=7)),
-        ("wav-quiet", 8000, 1, tri(200, 16, 3)),
-        ("wav-listchunk", 22050, 1, tri(333, 50, 99)),
-        # 8-bit (stored unsigned, centered on read) and 24-bit depths
-        ("wav-8bit", 8000, 1, tri(300, 30, 1)),
-        ("wav-24bit", 48000, 2, tri(480, 48, 60000, phase=3)),
-    ]
-    for mid, rate, ch, samples in cases:
-        bits = {"wav-8bit": 8, "wav-24bit": 24}.get(mid, 16)
-        payload = _wav_bytes(
-            rate, ch, samples, extra_chunk=(mid == "wav-listchunk"), bits=bits
-        )
-        # 8-bit is stored unsigned; the decoder returns it CENTERED, so
-        # the expected fingerprint reads the same centered values
-        rows.append(
-            (mid, payload, rate, ch, len(samples) // ch,
-             max(abs(s) for s in samples), sum(s * s for s in samples), None,
-             *_afp_expected(samples, ch))
-        )
-    rows.append(("wav-truncated", rows[0][1][:30], None, None, None, None, None, "ERR_WAV",
-                 None, None, None, None, None))
-    rows.append(("wav-not-riff", b"OggS not a wav", None, None, None, None, None, "ERR_WAV",
-                 None, None, None, None, None))
-
-    pq.write_table(
-        pa.table(
-            {
-                "media_id": [r[0] for r in rows],
-                "payload": pa.array([r[1] for r in rows], pa.binary()),
-                "exp_sample_rate": pa.array([r[2] for r in rows], pa.int32()),
-                "exp_channels": pa.array([r[3] for r in rows], pa.int32()),
-                "exp_n_frames": pa.array([r[4] for r in rows], pa.int64()),
-                "exp_peak": pa.array([r[5] for r in rows], pa.int32()),
-                "exp_energy": pa.array([r[6] for r in rows], pa.int64()),
-                "exp_error_prefix": [r[7] for r in rows],
-                "exp_afp_hex": [r[8] for r in rows],
-                **{
-                    f"exp_b{j}": pa.array(
-                        [r[9 + j] for r in rows], pa.int32()
-                    )
-                    for j in range(4)
-                },
-            }
-        ),
-        os.path.join(OUT, "wavs.parquet"),
-    )
-
-
-def build_audio_neardup() -> None:
-    """Audio near-duplicate fixture for the fingerprint pipeline:
-    deterministic LCG-noise PCM16 mono clips with planted exact copies
-    (hamming 0, identical payload), amplitude-scaled copies (hamming 0,
-    DIFFERENT payload — the fingerprint's positive-scale invariance), a
-    stereo re-layout of a mono clip (per-frame channel sum is 2x the
-    mono stream → identical fingerprint across channel layouts),
-    local-edit near-dups (one segment amplified → few flipped bits),
-    unrelated noise, and a silent cluster — every all-zero clip hashes
-    to the all-zero fingerprint, the degenerate hot bucket the capped
-    star path must linearize.  Expected hashes from the plain-Python
-    ``_afp_expected`` twin."""
-    rate, nfr = 8000, 1300
-
-    def noise(seed: int, amp: int = 4000) -> list[int]:
-        s = seed
-        out = []
-        for _ in range(nfr):
-            s = (s * 1103515245 + 12345) & 0x7FFFFFFF
-            out.append(((s >> 16) % (2 * amp + 1)) - amp)
-        return out
-
-    rows = []
-
-    def add(mid: str, samples: list[int], ch: int = 1) -> None:
-        rows.append(
-            (mid, _wav_bytes(rate, ch, samples), *_afp_expected(samples, ch))
-        )
-
-    base: dict[str, list[int]] = {}
-    for i in range(14):
-        base[f"clip-{i:03d}"] = noise(4000 + 11 * i)
-        add(f"clip-{i:03d}", base[f"clip-{i:03d}"])
-    # exact copies (identical payload)
-    for i in (0, 4):
-        add(f"clip-{i:03d}-copy", base[f"clip-{i:03d}"])
-    # amplitude-scaled copies: x3 keeps |sample| <= 12000 (no clipping),
-    # every segment-loudness comparison is scale-invariant
-    for i in (1, 8):
-        add(f"clip-{i:03d}-scaled", [3 * s for s in base[f"clip-{i:03d}"]])
-    # stereo re-layout: L = R = mono sample, downmix = 2x mono stream
-    m = base["clip-002"]
-    add("clip-002-stereo", [s for x in m for s in (x, x)], ch=2)
-    # local-edit near-dups: amplify one interior segment 5x — flips the
-    # comparisons that read that segment.  The flip count depends on the
-    # clip's original bits, so pick the first interior segment (from a
-    # deterministic start offset per clip) whose edit lands at hamming
-    # 1-3: genuinely-near, genuinely-nonzero
-    for i, seg0 in ((3, 20), (9, 44)):
-        src = base[f"clip-{i:03d}"]
-        edited = ham = None
-        for seg in range(seg0, seg0 + 30):
-            lo, hi = (seg * nfr) // 65, ((seg + 1) * nfr) // 65
-            cand = src[:lo] + [min(5 * s, 32767) for s in src[lo:hi]] + src[hi:]
-            ham = sum(
-                bin(a ^ b).count("1")
-                for a, b in zip(
-                    _afp_expected(src, 1)[1:], _afp_expected(cand, 1)[1:]
-                )
-            )
-            if 1 <= ham <= 3:
-                edited = cand
-                break
-        assert edited is not None, (i, seg0, ham)
-        add(f"clip-{i:03d}-near", edited)
-    # silent cluster: zero samples at differing lengths all hash to the
-    # all-zero fingerprint (strict-greater ties) — the degenerate bucket
-    for j, n in enumerate((600, 900, 1300, 1300, 2000)):
-        rows.append(
-            (f"silent-{j}", _wav_bytes(rate, 1, [0] * n), *_afp_expected([0] * n, 1))
-        )
-
-    pq.write_table(
-        pa.table(
-            {
-                "media_id": [r[0] for r in rows],
-                "payload": pa.array([r[1] for r in rows], pa.binary()),
-                "exp_afp_hex": [r[2] for r in rows],
-                **{
-                    f"exp_b{j}": pa.array(
-                        [r[3 + j] for r in rows], pa.int32()
-                    )
-                    for j in range(4)
-                },
-            }
-        ),
-        os.path.join(OUT, "audio_neardup.parquet"),
-    )
-
-
 def _warc_record(wtype: str, rec_id: str, headers: dict, block: bytes) -> bytes:
     """One WARC/1.0 record (independent of the parser under test)."""
     h = [b"WARC/1.0"]
@@ -2301,11 +1681,6 @@ if __name__ == "__main__":
     build_gifs()
     build_jpegs()
     build_images_neardup()
-    build_gif_anim()
     build_warc()
-    build_wavs()
-    build_audio_neardup()
     build_documents_media()
-    build_avi_videos()
-    build_avi_neardup()
     print(f"wrote fixture data to {OUT}")

@@ -257,11 +257,11 @@ def test_dedup_stage_incremental_index_roundtrip(spark, tmp_path):
 
 
 def test_media_dedup_stage_cli(spark, tmp_path):
-    """The --stage media-dedup CLI end-to-end for both signature kinds:
-    image dHash over the planted image corpus (with --docs rewriting the
-    interleaved documents' media_refs to cluster-canonical ids) and the
-    audio fingerprint over the planted WAV corpus.  Signatures are
-    written BEFORE pair generation (the durable decode checkpoint)."""
+    """The --stage media-dedup CLI end-to-end: image dHash over the
+    planted image corpus, with --docs rewriting the interleaved
+    documents' media_refs to cluster-canonical ids.  Signatures are
+    written BEFORE pair generation (the durable decode checkpoint).
+    The retired audio/video switches are rejected by argparse."""
     import os
 
     from fetch_engines_spark import job
@@ -275,7 +275,6 @@ def test_media_dedup_stage_cli(spark, tmp_path):
             "--output", out,
             "--run-id", "m1",
             "--stage", "media-dedup",
-            "--media-kind", "image",
             "--max-bucket-size", "50",
         ]
     )
@@ -291,21 +290,12 @@ def test_media_dedup_stage_cli(spark, tmp_path):
     ]
     assert docs["dm-05"].spans == [] and docs["dm-06"].spans is None
 
-    out2 = str(tmp_path / "aud")
-    args2 = job.parse_args(
-        [
-            "--input", os.path.join(fx, "audio_neardup.parquet"),
-            "--output", out2,
-            "--run-id", "m2",
-            "--stage", "media-dedup",
-            "--media-kind", "audio",
-        ]
-    )
-    s2 = job._run_media_dedup(spark, args2)
-    assert s2["n_media"] == 26 and s2["n_pairs"] == 17
-    # silent cluster (5) collapses to 1 canonical + planted dup/near pairs
-    assert s2["n_remapped_media"] == 11
-    assert "n_docs" not in s2
+    for flag, value in (("--media-kind", "image"), ("--min-share-bp", "8000")):
+        with pytest.raises(SystemExit):
+            job.parse_args(
+                ["--input", "x", "--output", out, "--run-id", "m2",
+                 "--stage", "media-dedup", flag, value]
+            )
 
 
 def test_media_dedup_stage_incremental(spark, tmp_path):
@@ -407,45 +397,6 @@ def test_media_dedup_stage_incremental(spark, tmp_path):
                  "--output", str(tmp_path / "run3"),
                  "--run-id", "r4", "--stage", "media-dedup",
                  "--incremental-signatures", f"{out1}/signatures"]
-            ),
-        )
-
-
-def test_media_dedup_stage_video(spark, tmp_path):
-    """--stage media-dedup --media-kind video: per-frame dHash signatures,
-    containment pairs, and a canonical map clustering the copy/reorder/
-    trim family and the black-frame family; incremental mode rejects
-    video with an actionable error."""
-    import os
-
-    from fetch_engines_spark import job
-
-    fx = os.path.join(os.path.dirname(__file__), "..", "data", "fixtures")
-    out = str(tmp_path / "vid")
-    s = job._run_media_dedup(
-        spark,
-        job.parse_args(
-            ["--input", os.path.join(fx, "avi_neardup.parquet"),
-             "--output", out, "--run-id", "v1", "--stage", "media-dedup",
-             "--media-kind", "video"]
-        ),
-    )
-    assert s["n_media"] == 54  # per-frame signature rows
-    assert s["n_pairs"] == 12
-    cmap = {
-        r.media_ref: r.canonical_ref
-        for r in spark.read.parquet(f"{out}/canonical_map").collect()
-    }
-    assert cmap["vid-a-copy"] == "vid-a" and cmap["vid-a-trimmed"] == "vid-a"
-    assert cmap["vid-black-1"] == "vid-black-0" and cmap["vid-c"] == "vid-black-0"
-    with pytest.raises(ValueError, match="image/audio"):
-        job._run_media_dedup(
-            spark,
-            job.parse_args(
-                ["--input", os.path.join(fx, "avi_neardup.parquet"),
-                 "--output", str(tmp_path / "vid2"), "--run-id", "v2",
-                 "--stage", "media-dedup", "--media-kind", "video",
-                 "--incremental-signatures", f"{out}/signatures"]
             ),
         )
 

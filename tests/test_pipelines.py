@@ -71,50 +71,6 @@ def test_simhash_near_dups_close(docs):
     assert hamming(sh[1], sh[3]) <= hamming(sh[1], sh[6])
 
 
-def test_media_metadata_roundtrip(spark):
-    from fetch_engines_spark.pipelines.multimodal import (
-        encode_payload,
-        extract_media_metadata,
-    )
-
-    rows = [
-        ("img1", encode_payload(1, 640, 480, 1, b"xyz")),
-        ("vid1", encode_payload(3, 1920, 1080, 300, b"frames")),
-        ("bad1", b"garbage"),
-        ("null1", None),
-    ]
-    from fetch_engines_spark.pipelines.multimodal import MEDIA_INPUT_SCHEMA
-
-    media = spark.createDataFrame(rows, MEDIA_INPUT_SCHEMA)
-    out = {r.media_id: r for r in extract_media_metadata(media).collect()}
-    assert out["img1"].kind == "image" and out["img1"].width == 640
-    assert out["vid1"].kind == "video" and out["vid1"].n_frames == 300
-    assert out["bad1"].error is not None and out["bad1"].kind is None
-    assert out["null1"].error is not None
-
-
-def test_frame_sample_plan(spark):
-    from fetch_engines_spark.pipelines.multimodal import (
-        MEDIA_INPUT_SCHEMA,
-        encode_payload,
-        extract_media_metadata,
-        frame_sample_plan,
-    )
-
-    media = spark.createDataFrame(
-        [("v", encode_payload(3, 10, 10, 25, b""))], MEDIA_INPUT_SCHEMA
-    )
-    frames = frame_sample_plan(extract_media_metadata(media), every_n=10).collect()
-    assert [r.frame_idx for r in frames] == [0, 10, 20]
-
-
-def test_decode_real_codec_is_stubbed():
-    from fetch_engines_spark.pipelines.multimodal import decode_real_codec
-
-    with pytest.raises(NotImplementedError):
-        decode_real_codec(b"")
-
-
 def test_png_decode_roundtrips_every_filter_type():
     """Writer applies the filter; decoder must invert it — full pixel-array
     equality (not just sums) per filter type and color type."""
@@ -264,52 +220,27 @@ def test_gif_truncations_raise_valueerror_not_indexerror():
         # IndexError or anything else propagates and fails the test
 
 
-def test_wav_decode_roundtrip_and_chunk_walk():
-    import scripts.build_fixture_data as bfd
-
-    from fetch_engines_spark.pipelines.multimodal import decode_wav
-
-    samples = [0, 100, -200, 32767, -32768, 5]
-    for extra in (False, True):
-        w = decode_wav(bfd._wav_bytes(44100, 2, samples, extra_chunk=extra))
-        assert w["samples"] == samples
-        assert (w["sample_rate"], w["channels"], w["n_frames"]) == (44100, 2, 3)
-    with pytest.raises(ValueError):
-        decode_wav(b"RIFFxxxxWAVE")  # no chunks
-    with pytest.raises(ValueError):
-        decode_wav(b"not riff at all")
-
-
-def test_wav_audio_stats_stage_never_fails(spark):
-    import os
-
-    from fetch_engines_spark.pipelines.multimodal import wav_audio_stats
-
-    path = os.path.join(os.path.dirname(__file__), "..", "data", "fixtures", "wavs.parquet")
-    wavs = spark.read.parquet(path)
-    rows = {r.media_id: r for r in wav_audio_stats(wavs).collect()}
-    assert len(rows) == 8  # incl. the 8-bit and 24-bit depth rows
-    assert rows["wav-truncated"].error and rows["wav-truncated"].error.startswith("ERR_WAV")
-    exp = {r["media_id"]: r for r in wavs.select("media_id", "exp_energy", "exp_peak").collect()}
-    for mid, r in rows.items():
-        if r.error is None:
-            assert (r.energy, r.peak) == (exp[mid]["exp_energy"], exp[mid]["exp_peak"]), mid
-
-
 def test_png_pixel_stats_stage_never_fails(spark):
+    """Every decodable PNG fixture decodes to its expected pixel sum; an
+    undecodable one raises ValueError and becomes an ERR_IMG row in the
+    fused decode+dHash stage, never a stage failure."""
     import os
 
-    from fetch_engines_spark.pipelines.multimodal import png_pixel_stats
+    from fetch_engines_spark.pipelines.multimodal import decode_png, image_dhash
 
     path = os.path.join(os.path.dirname(__file__), "..", "data", "fixtures", "pngs.parquet")
     pngs = spark.read.parquet(path)
-    rows = {r.media_id: r for r in png_pixel_stats(pngs).collect()}
-    assert len(rows) == 12  # incl. the two Adam7 interlaced rows
+    exp = pngs.select("media_id", "payload", "exp_pixel_sum").collect()
+    assert len(exp) == 12  # incl. the two Adam7 interlaced rows
+    for e in exp:
+        if e.exp_pixel_sum is None:
+            with pytest.raises(ValueError):
+                decode_png(bytes(e.payload))
+        else:
+            assert sum(decode_png(bytes(e.payload))["pixels"]) == e.exp_pixel_sum, e.media_id
+    rows = {r.media_id: r for r in image_dhash(pngs).collect()}
+    assert len(rows) == 12
     assert rows["png-truncated"].error and rows["png-truncated"].error.startswith("ERR_IMG")
-    exp = {r["media_id"]: r for r in pngs.select("media_id", "exp_pixel_sum").collect()}
-    for mid, r in rows.items():
-        if r.error is None:
-            assert r.pixel_sum == exp[mid]["exp_pixel_sum"], mid
 
 
 def test_planted_neardup_recall(spark):
@@ -946,22 +877,6 @@ def test_fuzzy_decontamination_catches_edited_leakage(spark):
     assert fuzzy[0].jaccard_bp >= 3000
 
 
-def test_resize_nearest_identity_and_sampling():
-    """resize to the same dims is the identity; a 4x4 -> 2x2 resize picks
-    exactly the floor(i*src/dst) grid points."""
-    from fetch_engines_spark.pipelines.multimodal import resize_nearest
-
-    px = bytes(range(48))  # 4x4x3
-    assert resize_nearest(px, 4, 4, 3, 4, 4) == px
-    small = resize_nearest(px, 4, 4, 3, 2, 2)
-    # rows 0,2 and cols 0,2 -> pixels (0,0),(0,2),(2,0),(2,2)
-    expect = b"".join(px[(y * 4 + x) * 3 : (y * 4 + x) * 3 + 3] for y in (0, 2) for x in (0, 2))
-    assert small == expect
-    # upsample replicates
-    up = resize_nearest(bytes([10, 200]), 2, 1, 1, 4, 1)
-    assert up == bytes([10, 10, 200, 200])
-
-
 def test_jpeg_fill_bytes_and_tem_marker_skipped():
     """T.81 B.1.1.2: 0xFF fill bytes may pad the space before any marker,
     and TEM (0xFF01) / RSTn are standalone (no length field) — legal
@@ -1118,55 +1033,6 @@ def test_compacted_index_equals_monolithic(spark):
         compact_minhash_indexes([a, b])
 
 
-def test_gif_frames_stage_and_semantics(spark):
-    """Animated-GIF stage: per-frame rows against the generator's
-    independent composition, error rows for bad-rect/truncated payloads,
-    and the disposal/transparency semantics spot-checked directly."""
-    import os
-
-    from fetch_engines_spark.pipelines.multimodal import (
-        decode_gif_frames,
-        gif_frame_stats,
-    )
-    from scripts.build_fixture_data import _gif_anim_bytes
-
-    path = os.path.join(os.path.dirname(__file__), "..", "data", "fixtures", "gif_anim.parquet")
-    anims = spark.read.parquet(path)
-    rows = gif_frame_stats(anims).collect()
-    by_media: dict[str, list] = {}
-    errs = {}
-    for r in rows:
-        if r.error:
-            errs[r.media_id] = r.error
-        else:
-            by_media.setdefault(r.media_id, []).append(r)
-    assert set(errs) == {"anim-bad-rect", "anim-truncated"}
-    assert all(e.startswith("ERR_GIF") for e in errs.values())
-    assert len(by_media["anim-basic"]) == 3
-
-    # direct semantics: transparency leaves the canvas, disposal 2
-    # restores the rect to background, disposal 3 restores the canvas
-    pal = [(0, 0, 0), (10, 20, 30), (200, 100, 50), (5, 5, 5)]
-    base = {"x": 0, "y": 0, "w": 4, "h": 4, "indices": bytes([1] * 16)}
-    over = {"x": 1, "y": 1, "w": 2, "h": 2,
-            "indices": bytes([2, 3, 3, 2]), "transparent": 3, "disposal": 3}
-    g = decode_gif_frames(_gif_anim_bytes(4, 4, pal, [base, over, base]))
-    f0, f1, f2 = g["frames"]
-    # transparent indices (the two 3s) keep frame-0 pixels
-    def px(fr, x, y):
-        return fr[(y * 4 + x) * 3 : (y * 4 + x) * 3 + 3]
-    assert px(f1, 1, 1) == bytes(pal[2]) and px(f1, 2, 2) == bytes(pal[2])
-    assert px(f1, 2, 1) == bytes(pal[1]) and px(f1, 1, 2) == bytes(pal[1])
-    assert f2 == f0  # disposal 3 restored the canvas before frame 3
-
-    d2 = {"x": 1, "y": 1, "w": 2, "h": 2, "indices": bytes([2] * 4), "disposal": 2}
-    tail = {"x": 3, "y": 3, "w": 1, "h": 1, "indices": bytes([1])}
-    g2 = decode_gif_frames(_gif_anim_bytes(4, 4, pal, [base, d2, tail], bg_idx=0))
-    f_last = g2["frames"][2]
-    assert px(f_last, 1, 1) == bytes(pal[0])  # disposal 2 -> bg color
-    assert px(f_last, 0, 0) == bytes(pal[1])  # outside rect untouched
-
-
 def test_jpeg_progressive_padded_grid_mixed_walks():
     """Progressive geometry edge the roundtrip property can't reach (its
     crop bound keeps rasters MCU-aligned): a 24x8 4:2:0 frame whose luma
@@ -1239,48 +1105,14 @@ def test_media_decoder_truncation_raises_valueerror_not_indexerror():
     to escape as IndexError."""
     import pytest as _pytest
 
-    from fetch_engines_spark.pipelines.multimodal import (
-        decode_gif_frames,
-        decode_jpeg,
-    )
+    from fetch_engines_spark.pipelines.multimodal import decode_gif, decode_jpeg
 
     with _pytest.raises(ValueError, match="fill bytes"):
         decode_jpeg(b"\xff\xd8" + b"\xff" * 8)
     # 4x4 screen, 2-entry GCT (6 bytes), then a GCE label at EOF
     gif_head = b"GIF89a" + bytes([4, 0, 4, 0, 0x80, 0, 0]) + b"\x00" * 6
-    with _pytest.raises(ValueError, match="truncated extension"):
-        decode_gif_frames(gif_head + b"\x21\xf9")
-
-
-def test_wav_24bit_energy_never_wraps():
-    """Review finding: sum(s^2) over a loud 24-bit clip exceeds int64
-    inside the sample cap; the stats path must emit an error row (via
-    ValueError), never a silently wrapped/negative energy."""
-    import struct as _s
-
-    import pytest as _pytest
-
-    from fetch_engines_spark.pipelines.multimodal import _parse_wav, _wav_samples_np
-
-    # 200k full-scale 24-bit samples: true energy 1.4e19 > 2^63-1
-    n = 200_000
-    data = ((1 << 23) - 1).to_bytes(3, "little") * n
-    fmt = _s.pack("<HHIIHH", 1, 1, 48000, 48000 * 3, 3, 24)
-    chunks = b"fmt " + _s.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + _s.pack("<I", len(data)) + data
-    payload = b"RIFF" + _s.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-    import numpy as _np
-
-    import fetch_engines_spark.pipelines.multimodal as mm
-    import pandas as pd
-
-    pdf = pd.DataFrame({"media_id": ["loud24"], "payload": [payload]})
-    out = next(mm._wav_stats_batches(iter([pdf])))
-    assert out["error"][0] is not None and "overflows int64" in out["error"][0]
-    # a quieter 24-bit clip still computes the exact energy
-    quiet = _wav_samples_np(data[: 3 * 100], 24)
-    assert int(quiet[0]) == (1 << 23) - 1
+    with _pytest.raises(ValueError, match="no image data"):
+        decode_gif(gif_head + b"\x21\xf9")
 
 
 def test_warc_ingest_end_to_end_extraction(spark):
@@ -1444,112 +1276,6 @@ def test_dhash_near_dup_capped_linearizes_blank_cluster(spark):
     }
 
 
-# --- audio fingerprint near-duplicate detection -----------------------------
-
-
-def test_afp64_unit_properties():
-    """Pure function sanity: silence → all-zero fingerprint (ties are
-    strict-greater false) at any length; strictly-louder-by-segment
-    stream → all ones; positive amplitude scaling and mono→stereo
-    re-layout (channel-sum downmix) are invariances."""
-    from fetch_engines_spark.pipelines.multimodal import afp64
-
-    for n in (0, 64, 130, 1300):
-        hex16, b0, b1, b2, b3 = afp64([0] * n, 1)
-        assert hex16 == "0" * 16 and (b0, b1, b2, b3) == (0, 0, 0, 0)
-    ramp = [i for i in range(65) for _ in range(4)]  # 65 segments of 4
-    assert afp64(ramp, 1)[0] == "f" * 16
-    import random
-
-    rng = random.Random(7)
-    clip = [rng.randint(-4000, 4000) for _ in range(1300)]
-    assert afp64(clip, 1) == afp64([3 * s for s in clip], 1)
-    stereo = [s for x in clip for s in (x, x)]
-    assert afp64(clip, 1)[0] == afp64(stereo, 2)[0]
-
-
-def test_audio_fingerprint_matches_independent_twin(spark):
-    """Fused WAV decode + fingerprint over both audio corpora (8/16/24-bit
-    depths, mono/stereo, extra-chunk layout, error rows, and the near-dup
-    corpus) must reproduce the generator's plain-Python fingerprint of
-    the raw pre-encode samples bit-for-bit."""
-    from fetch_engines_spark.pipelines.multimodal import audio_fingerprint
-
-    df = spark.read.parquet(
-        _fixture_path("wavs"), _fixture_path("audio_neardup")
-    )
-    got = {r.media_id: r for r in audio_fingerprint(df).collect()}
-    checked = 0
-    for e in df.select(
-        "media_id", "exp_afp_hex", "exp_b0", "exp_b1", "exp_b2", "exp_b3"
-    ).collect():
-        g = got[e.media_id]
-        assert g.afp_hex == e.exp_afp_hex, e.media_id
-        assert (g.b0, g.b1, g.b2, g.b3) == (
-            e.exp_b0, e.exp_b1, e.exp_b2, e.exp_b3
-        ), e.media_id
-        if e.exp_afp_hex is None:
-            assert g.error is not None and g.error.startswith("ERR_WAV")
-        else:
-            assert g.error is None
-            checked += 1
-    assert checked >= 30
-
-
-def test_afp_near_dup_pairs_exact_recall(spark):
-    """Banded audio pair generation must equal the brute-force hamming<=3
-    set.  The fixture plants exact copies, amplitude-scaled copies and a
-    stereo re-layout (hamming 0 with DIFFERENT payload bytes — the
-    fingerprint invariances), local segment edits (hamming 1-3), far
-    noise, and a 5-clip silent cluster."""
-    from fetch_engines_spark.pipelines.multimodal import (
-        afp_near_dup_pairs,
-        audio_fingerprint,
-    )
-
-    nd = spark.read.parquet(_fixture_path("audio_neardup"))
-    exp_rows = nd.select("media_id", "exp_b0", "exp_b1", "exp_b2", "exp_b3").collect()
-    brute = {}
-    for i, a in enumerate(exp_rows):
-        for b in exp_rows[i + 1 :]:
-            lo, hi = sorted([a, b], key=lambda r: r.media_id)
-            ham = sum(
-                bin(getattr(lo, f"exp_b{j}") ^ getattr(hi, f"exp_b{j}")).count("1")
-                for j in range(4)
-            )
-            if ham <= 3:
-                brute[(lo.media_id, hi.media_id)] = ham
-    got = {
-        (r.media_a, r.media_b): r.hamming
-        for r in afp_near_dup_pairs(audio_fingerprint(nd)).collect()
-    }
-    assert got == brute
-    assert len(brute) == 17  # 10 silent + 2 copies + 2 scaled + 1 stereo + 2 near
-    assert sorted(h for h in got.values() if h > 0) == [1, 2]
-
-
-def test_afp_near_dup_capped_linearizes_silent_cluster(spark):
-    """With a bucket cap below the silent cluster's size, the shared
-    guard's star path replaces its 10 quadratic pairs with 4 linear star
-    edges connecting all 5 silent clips; pairs outside the hot bucket
-    are unchanged (7 planted dup/near pairs)."""
-    from fetch_engines_spark.pipelines.multimodal import (
-        afp_near_dup_pairs,
-        audio_fingerprint,
-    )
-
-    sigs = audio_fingerprint(spark.read.parquet(_fixture_path("audio_neardup")))
-    got = {
-        (r.media_a, r.media_b): r.hamming
-        for r in afp_near_dup_pairs(sigs, max_bucket_size=4).collect()
-    }
-    silent = {p for p in got if p[0].startswith("silent")}
-    other = set(got) - silent
-    assert len(silent) == 4
-    assert {m for p in silent for m in p} == {f"silent-{j}" for j in range(5)}
-    assert len(other) == 7 and all(not p[0].startswith("silent") for p in other)
-
-
 def test_canonicalize_media_refs_semantics(spark):
     """Interleaved-corpus media dedup composite: cluster members rewrite
     to the cluster-canonical id, canonicals/unique/dangling refs and
@@ -1674,140 +1400,6 @@ def test_incremental_media_equivalence_with_monolithic(spark):
             for r in dhash_near_dup_pairs(part).collect()
         }
     assert split == mono
-
-
-# --- AVI/MJPEG video decode -------------------------------------------------
-
-
-def test_video_frame_stats_matches_expected(spark):
-    """Real AVI/MJPEG decode over the fixture corpus (gray DC tiles,
-    YCbCr 4:4:4, 4:2:0 subsampled, odd crop; wrong-codec / no-frames /
-    dim-mismatch / truncated / not-RIFF error rows) must reproduce the
-    generator's spec-IDCT per-frame pixel sums exactly."""
-    from fetch_engines_spark.pipelines.multimodal import video_frame_stats
-
-    vids = spark.read.parquet(_fixture_path("avi_videos"))
-    got = {
-        (r.media_id, r.frame_idx): r
-        for r in video_frame_stats(vids).collect()
-    }
-    exp = spark.read.parquet(_fixture_path("avi_expected")).collect()
-    assert len(got) == len(exp) == 15
-    for e in exp:
-        g = got[(e.media_id, e.frame_idx)]
-        if e.exp_error_prefix is not None:
-            assert g.error is not None and g.error.startswith(e.exp_error_prefix), e.media_id
-        else:
-            assert g.error is None, (e.media_id, g.error)
-            assert (g.width, g.height, g.channels, g.n_frames, g.pixel_sum) == (
-                e.exp_width, e.exp_height, e.exp_channels,
-                e.exp_n_frames, e.exp_pixel_sum,
-            ), (e.media_id, e.frame_idx)
-
-
-def test_avi_frame_sampling_skips_decode():
-    """``sample_every`` must genuinely SKIP the entropy decode of
-    unsampled frames (the point of frame sampling at scale): an AVI
-    whose odd frames are corrupt decodes fine at every_n=2 — frame
-    indices and true n_frames intact — and fails at every_n=1."""
-    import pytest as _pytest
-
-    from scripts.build_fixture_data import _avi_bytes, _jpeg_bytes
-    from fetch_engines_spark.pipelines.multimodal import decode_avi_frames
-
-    def blk(v):
-        b = [0] * 64
-        b[0] = (v - 128) * 8
-        return b
-
-    good = [_jpeg_bytes(8, 8, [[blk(v)]], [[1] * 64]) for v in (50, 120, 200)]
-    frames = [good[0], b"\xff\xd8garbage-not-a-jpeg", good[2]]
-    payload = _avi_bytes(8, 8, frames)
-    v = decode_avi_frames(payload, sample_every=2)
-    assert v["n_frames"] == 3 and v["frame_indices"] == [0, 2]
-    assert len(v["frames"]) == 2
-    with _pytest.raises(ValueError):
-        decode_avi_frames(payload)  # every frame -> hits the corrupt one
-    # the max_frames cap bounds DECODED work, not container length: a
-    # 300-frame video sparsely sampled decodes fine (3 frames), densely
-    # sampled it trips the cap with an actionable message
-    long = _avi_bytes(8, 8, [good[0]] * 300)
-    vl = decode_avi_frames(long, sample_every=100)
-    assert vl["n_frames"] == 300 and vl["frame_indices"] == [0, 100, 200]
-    with _pytest.raises(ValueError, match="sample_every"):
-        decode_avi_frames(long)
-
-
-def test_video_frame_dhash_matches_twin(spark):
-    """Per-frame dHash over the video near-dup corpus must reproduce the
-    generator's plain-Python dhash of the spec-IDCT expected pixels for
-    every frame; the truncated clip yields one error row."""
-    from fetch_engines_spark.pipelines.multimodal import video_frame_dhash
-
-    nd = spark.read.parquet(_fixture_path("avi_neardup"))
-    got = {
-        (r.media_id, r.frame_idx): r
-        for r in video_frame_dhash(nd).collect()
-    }
-    exp = spark.read.parquet(_fixture_path("avi_neardup_expected")).collect()
-    assert len(got) == len(exp) == 54
-    for e in exp:
-        g = got[(e.media_id, e.frame_idx)]
-        if e.exp_error_prefix:
-            assert g.error and g.error.startswith(e.exp_error_prefix)
-        else:
-            assert g.dhash_hex == e.exp_dhash_hex, (e.media_id, e.frame_idx)
-            assert g.n_frames == e.exp_n_frames and g.error is None
-
-
-def test_video_near_dup_pairs_semantics(spark):
-    """Clip-level containment scoring: exact copy, re-ordered copy, and
-    trimmed prefix all score 10000 (payload bytes, frame order, and
-    frame COUNT all differ); the half-overlap clip scores 5000 and is
-    excluded at the default threshold; the black-only clips cluster,
-    and a clip containing ONE black frame fully contains each
-    single-hash black clip (the documented tiny-clip containment
-    property of min()-normalization)."""
-    from fetch_engines_spark.pipelines.multimodal import (
-        video_frame_dhash,
-        video_near_dup_pairs,
-    )
-
-    sigs = video_frame_dhash(spark.read.parquet(_fixture_path("avi_neardup")))
-    got = {
-        (r.media_a, r.media_b): (r.n_shared, r.share_bp)
-        for r in video_near_dup_pairs(sigs).collect()
-    }
-    a_family = {"vid-a", "vid-a-copy", "vid-a-reorder", "vid-a-trimmed"}
-    for p, (n, bp) in got.items():
-        assert bp == 10000, p
-        if set(p) <= a_family:
-            assert n == (4 if "vid-a-trimmed" in p else 6)
-    assert len([p for p in got if set(p) <= a_family]) == 6
-    assert ("vid-b", "vid-b-half") not in got  # 5000 bp < 8000 threshold
-    low = {
-        (r.media_a, r.media_b): r.share_bp
-        for r in video_near_dup_pairs(sigs, min_share_bp=4000).collect()
-    }
-    assert low[("vid-b", "vid-b-half")] == 5000
-    blacks = {p for p in got if p[0].startswith("vid-black") or p[1].startswith("vid-black")}
-    assert {frozenset(p) for p in blacks} == {
-        frozenset(x) for x in (
-            ("vid-black-0", "vid-black-1"), ("vid-black-0", "vid-black-2"),
-            ("vid-black-1", "vid-black-2"), ("vid-black-0", "vid-c"),
-            ("vid-black-1", "vid-c"), ("vid-black-2", "vid-c"),
-        )
-    }
-    # capped: the 4-clip black-frame bucket takes the star path — the
-    # three clip-sig-identical black clips stay linked via their rep;
-    # the sig-diverse vid-c is dropped there (documented cap tradeoff)
-    capped = {
-        (r.media_a, r.media_b)
-        for r in video_near_dup_pairs(sigs, max_bucket_size=3).collect()
-    }
-    assert ("vid-black-0", "vid-black-1") in capped
-    assert ("vid-black-0", "vid-black-2") in capped
-    assert not any("vid-c" in p for p in capped)
 
 
 def test_bloom_gate_no_false_negatives_and_gates_majority(spark):

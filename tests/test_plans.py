@@ -117,7 +117,7 @@ def test_fuzzy_decontamination_corpus_never_sort_merge_joins(spark):
 
 
 def test_banded_hamming_pairs_no_cartesian_jvm_verify(spark):
-    """Image/audio near-dup pair generation: candidate join is a bucketed
+    """Image near-dup pair generation: candidate join is a bucketed
     equi-join (never CartesianProduct/BroadcastNestedLoop), and the
     hamming verify runs JVM-side on carried blocks — after the one
     Arrow stage that computes signatures, NO further Python stage may

@@ -367,17 +367,6 @@ def test_gif_writer_decoder_roundtrip_arbitrary(w, h, ncolors, seed):
     assert img["pixels"] == b"".join(bytes(palette[i]) for i in idx)
 
 
-@given(st.lists(st.integers(-32768, 32767), min_size=1, max_size=64), st.integers(1, 2))
-@settings(max_examples=40, deadline=None)
-def test_wav_writer_decoder_roundtrip_arbitrary(samples, channels):
-    from scripts.build_fixture_data import _wav_bytes
-
-    from fetch_engines_spark.pipelines.multimodal import decode_wav
-
-    w = decode_wav(_wav_bytes(8000, channels, samples, extra_chunk=len(samples) % 2 == 0))
-    assert w["samples"] == samples and w["channels"] == channels
-
-
 @given(
     st.integers(1, 3),
     st.integers(1, 3),
@@ -430,7 +419,7 @@ def test_jpeg_writer_decoder_roundtrip_arbitrary(bw, bh, crop, nc, dri, ysamp, s
 
 @given(
     st.binary(min_size=0, max_size=300),
-    st.sampled_from([b"\x89PNG\r\n\x1a\n", b"GIF89a", b"RIFF", b"\xff\xd8\xff\xe0"]),
+    st.sampled_from([b"\x89PNG\r\n\x1a\n", b"GIF89a", b"\xff\xd8\xff\xe0"]),
 )
 @settings(max_examples=150, deadline=None)
 def test_media_decoders_never_crash_unexpectedly(data, sig):
@@ -441,13 +430,11 @@ def test_media_decoders_never_crash_unexpectedly(data, sig):
         decode_gif,
         decode_jpeg,
         decode_png,
-        decode_wav,
     )
 
     fn = {
         b"\x89PNG\r\n\x1a\n": decode_png,
         b"GIF89a": decode_gif,
-        b"RIFF": decode_wav,
         b"\xff\xd8\xff\xe0": decode_jpeg,
     }[sig]
     try:
@@ -573,51 +560,6 @@ def test_gif_interlaced_roundtrip_arbitrary(w, h, ncolors, seed):
     idx = bytes((seed + x * 3 + y * 17) % ncolors for y in range(h) for x in range(w))
     img = decode_gif(_gif_bytes(w, h, palette, idx, interlaced=True))
     assert img["pixels"] == b"".join(bytes(palette[i]) for i in idx)
-
-
-@given(
-    st.integers(4, 16),
-    st.integers(4, 16),
-    st.integers(1, 4),
-    st.integers(0, 2**31 - 1),
-)
-@settings(max_examples=40, deadline=None)
-def test_gif_animation_roundtrip_arbitrary(sw, sh, n_frames, seed):
-    """Animation property: arbitrary frame rects, disposal methods,
-    transparency, and interlacing must composite to exactly the
-    generator's independent plain-Python canvases."""
-    import random
-
-    from scripts.build_fixture_data import _gif_anim_bytes, _gif_anim_expected
-
-    from fetch_engines_spark.pipelines.multimodal import decode_gif_frames
-
-    rng = random.Random(seed)
-    pal = [((i * 37 + seed) % 256, (i * 91) % 256, (i * 53) % 256) for i in range(8)]
-    frames = []
-    for _ in range(n_frames):
-        w = rng.randint(1, sw)
-        h = rng.randint(1, sh)
-        fr = {
-            "x": rng.randint(0, sw - w),
-            "y": rng.randint(0, sh - h),
-            "w": w,
-            "h": h,
-            "indices": bytes(rng.randrange(8) for _ in range(w * h)),
-            "disposal": rng.choice([0, 0, 1, 2, 3]),
-            "interlaced": rng.random() < 0.3,
-        }
-        if rng.random() < 0.5:
-            fr["transparent"] = rng.randrange(8)
-        frames.append(fr)
-    payload = _gif_anim_bytes(sw, sh, pal, frames, bg_idx=rng.randrange(8))
-    # bg_idx must match between writer and expected-composer
-    # (re-extract it from the payload header)
-    bg_idx = payload[11]
-    got = decode_gif_frames(payload)
-    exp = _gif_anim_expected(sw, sh, pal, frames, bg_idx=bg_idx)
-    assert got["n_frames"] == len(frames)
-    assert got["frames"] == exp
 
 
 @given(
