@@ -48,41 +48,13 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument(
         "--stage",
         default="extract",
-        choices=("extract", "dedup", "compact-index", "media-dedup"),
+        choices=("extract", "dedup", "compact-index"),
         help="extract: spans→markdown with checkpoint/resume; "
         "dedup: MinHash-LSH candidates → Jaccard verify → connected "
         "components → keepers, writing pairs/clusters/keepers; "
         "compact-index: merge N per-increment LSH index parquets "
         "(comma-separated --input) into one deduplicated index so the "
-        "next increment reads one index, not N; "
-        "media-dedup: perceptual near-dup over a media(media_id, payload) "
-        "table of PNG/GIF/JPEG images (dHash) "
-        "writing signatures/pairs/canonical_map — with --docs, also "
-        "rewrites every media span's media_ref to its cluster-canonical "
-        "id across the interleaved documents",
-    )
-    p.add_argument(
-        "--docs",
-        default=None,
-        help="--stage media-dedup: interleaved documents(doc_id, spans) "
-        "parquet whose media_refs are rewritten to cluster-canonical ids "
-        "(written to {output}/documents)",
-    )
-    p.add_argument(
-        "--incremental-signatures",
-        default=None,
-        help="--stage media-dedup: path to a prior run's "
-        "{output}/signatures (or signatures_merged) parquet — the input "
-        "is treated as a NEW crawl increment: every item near-duplicate "
-        "of history is written to cross_dups (identity dups via a direct "
-        "hash join against one representative per hash; hamming 1+ via "
-        "the cross-corpus capped guard) and EXCLUDED from the "
-        "within-increment pair/cluster outputs; the canonical map gains "
-        "each dropped item's best history match (so --docs rewrites land "
-        "on surviving history media); a merged signature table (history "
-        "+ surviving increment) is written to signatures_merged for the "
-        "next run.  History media is never re-decoded.  Increment "
-        "media_ids must be fresh (re-crawled ids fail loudly).",
+        "next increment reads one index, not N",
     )
     p.add_argument("--minhash-perms", type=int, default=128)
     p.add_argument("--band-size", type=int, default=8)
@@ -135,147 +107,6 @@ def _run_compact_index(spark, args) -> dict:
         "n_rows_in": n_in,
         "n_rows_out": n_out,
     }
-
-
-def _run_media_dedup(spark, args) -> dict:
-    """Perceptual media near-dup: one fused decode+signature pass is
-    WRITTEN to {output}/signatures — every downstream stage of this run
-    (pairs, cross-dups, map) reads the parquet back instead of holding
-    pixels in memory or re-decoding; a RE-INVOCATION of the stage
-    re-decodes from scratch (unlike the extract stage's per-bucket
-    resume — signature runs are single-pass by design).  Then banded
-    pairs → connected components → canonical map; with --docs, the
-    interleaved documents get their media_refs rewritten to
-    cluster-canonical ids at {output}/documents (incremental runs
-    extend the map with each dropped item's best history match, so
-    spans referencing dropped increment media rewrite to surviving
-    HISTORY ids — assumes history was itself canonicalized by its own
-    run's map)."""
-    from pyspark.sql import functions as F
-
-    from .pipelines.multimodal import (
-        canonical_media_map,
-        canonicalize_media_refs,
-        dhash_near_dup_pairs,
-        image_dhash,
-    )
-
-    media = spark.read.parquet(args.input)
-    image_dhash(media).write.mode("overwrite").parquet(f"{args.output}/signatures")
-    sigs = spark.read.parquet(f"{args.output}/signatures")
-    n_media = sigs.count()
-    n_errors = sigs.filter("error IS NOT NULL").count()
-    n_hist_dups = None
-    cross = None
-    if args.incremental_signatures:
-        import os as _os
-
-        from .pipelines.multimodal import incremental_media_near_dups
-
-        for own in ("signatures", "signatures_merged"):
-            if _os.path.abspath(args.incremental_signatures) == _os.path.abspath(
-                f"{args.output}/{own}"
-            ):
-                raise ValueError(
-                    "--incremental-signatures must not point inside this "
-                    f"run's own --output — use a fresh --output per increment"
-                )
-        hist = spark.read.parquet(args.incremental_signatures)
-        if "dhash_hex" not in hist.columns:
-            raise ValueError(
-                "--incremental-signatures parquet lacks dhash_hex — it is "
-                "not a media-dedup signatures table"
-            )
-        # re-crawl guard: an increment media_id already present in history
-        # would silently merge two signatures under one id (the cross-pair
-        # generator drops same-id pairs, and signatures_merged would carry
-        # duplicate ids that fan out every later run) — fail loudly, like
-        # the text index's re-crawled-id conflict guard
-        n_conflicts = sigs.join(
-            hist.select("media_id"), "media_id", "left_semi"
-        ).count()
-        if n_conflicts:
-            raise ValueError(
-                f"{n_conflicts} increment media_ids already exist in "
-                "--incremental-signatures history — media ids must be "
-                "unique per crawl (re-crawled items need fresh ids, or "
-                "drop them from the increment)"
-            )
-        # 1) signature-IDENTITY dups by direct hash join (linear,
-        #    cap-independent — every identical item is caught even when
-        #    its bucket is capped in the banded path below).  History is
-        #    collapsed to ONE representative id per hash first, so a hot
-        #    hash (blank thumbnails) yields one audit row per increment
-        #    item, never n_inc x n_hist.
-        hist_rep = (
-            hist.filter("dhash_hex IS NOT NULL")
-            .groupBy("dhash_hex")
-            .agg(F.min("media_id").alias("hist_id"))
-        )
-        identity = (
-            sigs.filter("dhash_hex IS NOT NULL")
-            .select("media_id", "dhash_hex")
-            .join(hist_rep, "dhash_hex")
-            .select("media_id", "hist_id", F.lit(0).alias("hamming"))
-        )
-        remaining = sigs.join(
-            identity.select("media_id").distinct(), "media_id", "left_anti"
-        )
-        # 2) near-dup (hamming 1..max) via the banded cross-corpus path
-        near = incremental_media_near_dups(
-            remaining,
-            hist,
-            max_hamming=args.max_hamming,
-            max_bucket_size=args.max_bucket_size,
-        )
-        identity.unionByName(near).write.mode("overwrite").parquet(
-            f"{args.output}/cross_dups"
-        )
-        cross = spark.read.parquet(f"{args.output}/cross_dups")
-        n_hist_dups = cross.select("media_id").distinct().count()
-        # within-increment stages run on the SURVIVORS only
-        sigs = remaining.join(
-            cross.select("media_id").distinct(), "media_id", "left_anti"
-        )
-        hist.unionByName(sigs).write.mode("overwrite").parquet(
-            f"{args.output}/signatures_merged"
-        )
-    dhash_near_dup_pairs(
-        sigs, max_hamming=args.max_hamming, max_bucket_size=args.max_bucket_size
-    ).write.mode("overwrite").parquet(f"{args.output}/pairs")
-    pairs = spark.read.parquet(f"{args.output}/pairs")
-    cmap_df = canonical_media_map(pairs)
-    if cross is not None:
-        # incremental: each dropped increment item maps to its BEST
-        # history match (lowest hamming, then lowest hist_id) so span
-        # rewrites land on surviving history media, never dangling refs
-        cross_best = (
-            cross.groupBy("media_id")
-            .agg(F.min(F.struct("hamming", "hist_id")).alias("_m"))
-            .select(
-                F.col("media_id").alias("media_ref"),
-                F.col("_m.hist_id").alias("canonical_ref"),
-            )
-        )
-        cmap_df = cmap_df.unionByName(cross_best)
-    cmap_df.write.mode("overwrite").parquet(f"{args.output}/canonical_map")
-    cmap = spark.read.parquet(f"{args.output}/canonical_map")
-    summary = {
-        "stage": "media-dedup",
-        "n_media": n_media,
-        "n_errors": n_errors,
-        "n_pairs": pairs.count(),
-        "n_remapped_media": cmap.count(),
-    }
-    if n_hist_dups is not None:
-        summary["n_hist_dups"] = n_hist_dups
-    if args.docs:
-        docs = spark.read.parquet(args.docs)
-        canonicalize_media_refs(docs, cmap).write.mode("overwrite").parquet(
-            f"{args.output}/documents"
-        )
-        summary["n_docs"] = spark.read.parquet(f"{args.output}/documents").count()
-    return summary
 
 
 def _run_dedup(spark, args) -> dict:
@@ -443,8 +274,6 @@ def main(argv: list[str] | None = None) -> int:
             summary = _run_dedup(spark, args)
         elif args.stage == "compact-index":
             summary = _run_compact_index(spark, args)
-        elif args.stage == "media-dedup":
-            summary = _run_media_dedup(spark, args)
         else:
             if args.input_format == "warc":
                 from .warc import read_warc, warc_html_documents

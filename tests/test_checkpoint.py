@@ -254,150 +254,3 @@ def test_dedup_stage_incremental_index_roundtrip(spark, tmp_path):
     assert kept2 <= ids and s1["n_keepers"] == len(ids) - len(kept2)
     # audit output exists
     assert os.path.exists(str(tmp_path / "run2" / "cross_candidates"))
-
-
-def test_media_dedup_stage_cli(spark, tmp_path):
-    """The --stage media-dedup CLI end-to-end: image dHash over the
-    planted image corpus, with --docs rewriting the interleaved
-    documents' media_refs to cluster-canonical ids.  Signatures are
-    written BEFORE pair generation (the durable decode checkpoint).
-    The retired audio/video switches are rejected by argparse."""
-    import os
-
-    from fetch_engines_spark import job
-
-    fx = os.path.join(os.path.dirname(__file__), "..", "data", "fixtures")
-    out = str(tmp_path / "img")
-    args = job.parse_args(
-        [
-            "--input", os.path.join(fx, "images_neardup.parquet"),
-            "--docs", os.path.join(fx, "documents_media.parquet"),
-            "--output", out,
-            "--run-id", "m1",
-            "--stage", "media-dedup",
-            "--max-bucket-size", "50",
-        ]
-    )
-    s = job._run_media_dedup(spark, args)
-    assert s["n_media"] == 34 and s["n_errors"] == 0
-    assert s["n_pairs"] == 28 and s["n_remapped_media"] == 13
-    assert s["n_docs"] == 10
-    sigs = spark.read.parquet(f"{out}/signatures")
-    assert sigs.filter("dhash_hex IS NULL").count() == 0
-    docs = {r.doc_id: r for r in spark.read.parquet(f"{out}/documents").collect()}
-    assert [sp.media_ref for sp in docs["dm-02"].spans] == [
-        "blank-0", "img-002", "blank-0",
-    ]
-    assert docs["dm-05"].spans == [] and docs["dm-06"].spans is None
-
-    for flag, value in (("--media-kind", "image"), ("--min-share-bp", "8000")):
-        with pytest.raises(SystemExit):
-            job.parse_args(
-                ["--input", "x", "--output", out, "--run-id", "m2",
-                 "--stage", "media-dedup", flag, value]
-            )
-
-
-def test_media_dedup_stage_incremental(spark, tmp_path):
-    """Two-run incremental media dedup: run 1 indexes the base images;
-    run 2 treats the copies/edits + two history-identical blanks + the
-    untouched remainder as a NEW increment with --incremental-signatures
-    — every item near-dup of history is dropped (identity via the
-    direct hash semi-join even under a tight bucket cap; hamming 1+ via
-    the banded cross path) WITHOUT re-decoding history, and
-    signatures_merged covers history + survivors for the next run."""
-    import os
-
-    from fetch_engines_spark import job
-
-    fx = os.path.join(os.path.dirname(__file__), "..", "data", "fixtures")
-    src = os.path.join(fx, "images_neardup.parquet")
-    inc_ids = (
-        "media_id LIKE '%-copy' OR media_id LIKE '%-near' "
-        "OR media_id IN ('blank-5','blank-6','img-003','img-006')"
-    )
-    base = spark.read.parquet(src)
-    out1, out2 = str(tmp_path / "run1"), str(tmp_path / "run2")
-    base.filter(f"NOT ({inc_ids})").write.parquet(str(tmp_path / "hist.parquet"))
-    base.filter(inc_ids).write.parquet(str(tmp_path / "inc.parquet"))
-
-    s1 = job._run_media_dedup(
-        spark,
-        job.parse_args(
-            ["--input", str(tmp_path / "hist.parquet"), "--output", out1,
-             "--run-id", "r1", "--stage", "media-dedup", "--max-bucket-size", "50"]
-        ),
-    )
-    assert "n_hist_dups" not in s1
-
-    s2 = job._run_media_dedup(
-        spark,
-        job.parse_args(
-            ["--input", str(tmp_path / "inc.parquet"), "--output", out2,
-             "--run-id", "r2", "--stage", "media-dedup",
-             "--incremental-signatures", f"{out1}/signatures",
-             "--docs", os.path.join(fx, "documents_media.parquet"),
-             "--max-bucket-size", "4"]
-        ),
-    )
-    # 7 copies/edits + 2 blanks match history; img-003 / img-006 are the
-    # genuinely-new survivors (base images not referenced by any dup)
-    assert s2["n_media"] == 11 and s2["n_hist_dups"] == 9
-    # audit completeness: EVERY dropped item appears in cross_dups with
-    # the history item it matched (identity rows included, hamming 0
-    # against the per-hash history representative)
-    cross = {
-        r.media_id: (r.hist_id, r.hamming)
-        for r in spark.read.parquet(f"{out2}/cross_dups").collect()
-    }
-    assert set(cross) == {
-        "img-000-copy", "img-002-near", "img-005-copy", "img-007-near",
-        "img-010-copy", "img-012-near", "img-015-copy", "blank-5", "blank-6",
-    }
-    assert cross["img-000-copy"] == ("img-000", 0)
-    assert cross["blank-5"] == ("blank-0", 0)  # per-hash history rep
-    assert cross["img-012-near"] == ("img-012", 1)  # banded near path
-    # --docs with incremental: spans referencing DROPPED increment media
-    # rewrite to the surviving history id, never dangling
-    docs = {r.doc_id: r for r in spark.read.parquet(f"{out2}/documents").collect()}
-    assert [sp.media_ref for sp in docs["dm-01"].spans] == [None, "img-000", None]
-    # blank-5 (dropped increment) -> its history match; img-002-near
-    # (banded near-dup) -> its history match; blank-2 is a HISTORY ref —
-    # untouched here, by contract history refs were canonicalized by
-    # run 1's own map
-    assert [sp.media_ref for sp in docs["dm-02"].spans] == [
-        "blank-0", "img-002", "blank-2",
-    ]
-    merged = spark.read.parquet(f"{out2}/signatures_merged")
-    assert merged.count() == s1["n_media"] + 2
-    surv = {
-        r.media_id
-        for r in merged.join(
-            spark.read.parquet(f"{out1}/signatures"), "media_id", "left_anti"
-        ).collect()
-    }
-    assert surv == {"img-003", "img-006"}
-    # self-overwrite guard
-    with pytest.raises(ValueError, match="own"):
-        job._run_media_dedup(
-            spark,
-            job.parse_args(
-                ["--input", str(tmp_path / "inc.parquet"), "--output", out2,
-                 "--run-id", "r3", "--stage", "media-dedup",
-                 "--incremental-signatures", f"{out2}/signatures"]
-            ),
-        )
-    # re-crawl guard: an increment reusing a history media_id fails
-    # loudly instead of merging two signatures under one id
-    with pytest.raises(ValueError, match="already exist"):
-        job._run_media_dedup(
-            spark,
-            job.parse_args(
-                ["--input", str(tmp_path / "hist.parquet"),
-                 "--output", str(tmp_path / "run3"),
-                 "--run-id", "r4", "--stage", "media-dedup",
-                 "--incremental-signatures", f"{out1}/signatures"]
-            ),
-        )
-
-

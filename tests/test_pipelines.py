@@ -71,123 +71,6 @@ def test_simhash_near_dups_close(docs):
     assert hamming(sh[1], sh[3]) <= hamming(sh[1], sh[6])
 
 
-def test_png_decode_roundtrips_every_filter_type():
-    """Writer applies the filter; decoder must invert it — full pixel-array
-    equality (not just sums) per filter type and color type."""
-    import scripts.build_fixture_data as bfd
-
-    from fetch_engines_spark.pipelines.multimodal import decode_png
-
-    def gradient(w, h, ch, seed):
-        return bytes(((x * 7 + y * 13 + c * 29 + seed * 31) % 256)
-                     for y in range(h) for x in range(w) for c in range(ch))
-
-    for ct, ch in ((0, 1), (2, 3), (4, 2), (6, 4)):
-        for filt in (0, 1, 2, 3, 4):
-            px = gradient(11, 7, ch, filt + ct)
-            img = decode_png(bfd._png_bytes(11, 7, ct, px, [filt]))
-            assert img["pixels"] == px, (ct, filt)
-            assert (img["width"], img["height"], img["channels"]) == (11, 7, ch)
-    # mixed per-row filters
-    px = gradient(5, 10, 3, 3)
-    assert decode_png(bfd._png_bytes(5, 10, 2, px, [0, 1, 2, 3, 4]))["pixels"] == px
-
-
-def test_png_decode_rejects_unsupported_and_corrupt():
-    import scripts.build_fixture_data as bfd
-
-    from fetch_engines_spark.pipelines.multimodal import decode_png
-
-    good = bfd._png_bytes(4, 4, 2, bytes(48), [0])
-    with pytest.raises(ValueError):
-        decode_png(b"NOTAPNG")
-    with pytest.raises(ValueError):
-        decode_png(good[:30])
-    with pytest.raises(Exception):
-        decode_png(good[:20] + b"\x00" * (len(good) - 20))  # corrupted IDAT
-
-
-def test_gif_decode_roundtrips_all_palette_sizes():
-    """Writer LZW-compresses; decoder must invert sub-blocking, the
-    variable-width LZW stream (incl. code-width growth and KwKwK), and
-    the palette — full RGB pixel-array equality."""
-    import scripts.build_fixture_data as bfd
-
-    from fetch_engines_spark.pipelines.multimodal import decode_gif
-
-    for w, h, ncolors, seed in [(8, 8, 2, 1), (33, 21, 16, 2), (60, 40, 256, 3)]:
-        palette = [((i * 37) % 256, (i * 91) % 256, (i * 53) % 256) for i in range(ncolors)]
-        idx = bytes(((x * 7 + y * 13 + seed) % ncolors) for y in range(h) for x in range(w))
-        img = decode_gif(bfd._gif_bytes(w, h, palette, idx, with_extension=True))
-        assert (img["width"], img["height"]) == (w, h)
-        assert img["pixels"] == b"".join(bytes(palette[i]) for i in idx)
-    with pytest.raises(ValueError):
-        decode_gif(b"GIF89a\x00")
-    with pytest.raises(ValueError):
-        decode_gif(b"BM not a gif")
-
-
-def test_png_decompression_bomb_bounded():
-    """An IDAT inflating far past the declared raster must raise (error
-    row), never allocate the full inflated payload."""
-    import struct
-    import zlib
-
-    from scripts.build_fixture_data import _png_chunk
-
-    from fetch_engines_spark.pipelines.multimodal import decode_png
-
-    ihdr = struct.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 0)  # declares 4x4 RGB
-    bomb = zlib.compress(b"\x00" * 50_000_000, 9)  # ~48 KB compressed
-    payload = (
-        b"\x89PNG\r\n\x1a\n"
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", bomb)
-        + _png_chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="inflates past|too large"):
-        decode_png(payload)
-    # declared-dimension bomb (huge IHDR) also rejected up front
-    big = struct.pack(">IIBBBBB", 1 << 20, 1 << 20, 8, 2, 0, 0, 0)
-    with pytest.raises(ValueError, match="too large"):
-        decode_png(b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", big) + _png_chunk(b"IDAT", b"x") + _png_chunk(b"IEND", b""))
-
-
-def test_png_zero_height_bomb_rejected_before_inflate():
-    """height=0 must be rejected up front: zlib's max_length=0 means
-    UNLIMITED, so inflating first would re-open the bomb hole."""
-    import struct
-    import zlib
-
-    from scripts.build_fixture_data import _png_chunk
-
-    from fetch_engines_spark.pipelines.multimodal import decode_png
-
-    ihdr = struct.pack(">IIBBBBB", 16, 0, 8, 2, 0, 0, 0)
-    bomb = zlib.compress(b"\x00" * 20_000_000, 9)
-    payload = (
-        b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", bomb) + _png_chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="degenerate"):
-        decode_png(payload)
-
-
-def test_gif_dimension_bomb_rejected():
-    """A GIF declaring 65535x65535 must raise before LZW output grows."""
-    import struct
-
-    from fetch_engines_spark.pipelines.multimodal import decode_gif
-
-    gif = bytearray(b"GIF89a")
-    gif += struct.pack("<HHBBB", 4, 4, 0x80, 0, 0)
-    gif += b"\x00\x00\x00\xff\xff\xff"  # 2-entry palette
-    gif += b"\x2c" + struct.pack("<HHHHB", 0, 0, 65535, 65535, 0)
-    gif += b"\x02\x01\x4c\x00\x3b"
-    with pytest.raises(ValueError, match="bad dimensions"):
-        decode_gif(bytes(gif))
-
-
 def test_pdf_word_suffix_stream_does_not_swallow_objects():
     """An object body containing the word 'downstream' (no real stream)
     must not swallow subsequent objects in the scan."""
@@ -205,42 +88,7 @@ def test_pdf_word_suffix_stream_does_not_swallow_objects():
     assert b"/Kids" in objs[2]
 
 
-def test_gif_truncations_raise_valueerror_not_indexerror():
-    import scripts.build_fixture_data as bfd
-
-    from fetch_engines_spark.pipelines.multimodal import decode_gif
-
-    pal = [(0, 0, 0), (255, 255, 255)]
-    full = bfd._gif_bytes(4, 4, pal, bytes([0, 1] * 8))
-    for cut in range(6, len(full)):
-        try:
-            decode_gif(full[:cut])
-        except ValueError:
-            pass  # the documented contract
         # IndexError or anything else propagates and fails the test
-
-
-def test_png_pixel_stats_stage_never_fails(spark):
-    """Every decodable PNG fixture decodes to its expected pixel sum; an
-    undecodable one raises ValueError and becomes an ERR_IMG row in the
-    fused decode+dHash stage, never a stage failure."""
-    import os
-
-    from fetch_engines_spark.pipelines.multimodal import decode_png, image_dhash
-
-    path = os.path.join(os.path.dirname(__file__), "..", "data", "fixtures", "pngs.parquet")
-    pngs = spark.read.parquet(path)
-    exp = pngs.select("media_id", "payload", "exp_pixel_sum").collect()
-    assert len(exp) == 12  # incl. the two Adam7 interlaced rows
-    for e in exp:
-        if e.exp_pixel_sum is None:
-            with pytest.raises(ValueError):
-                decode_png(bytes(e.payload))
-        else:
-            assert sum(decode_png(bytes(e.payload))["pixels"]) == e.exp_pixel_sum, e.media_id
-    rows = {r.media_id: r for r in image_dhash(pngs).collect()}
-    assert len(rows) == 12
-    assert rows["png-truncated"].error and rows["png-truncated"].error.startswith("ERR_IMG")
 
 
 def test_planted_neardup_recall(spark):
@@ -744,29 +592,6 @@ def test_ngram_containment_catches_quote_duplication(spark):
     assert jac < 2000  # Jaccard can't see it
 
 
-def test_jpeg_gray_sampling_factors_ignored():
-    """T.81 A.2: a single-component scan is non-interleaved, so declared
-    luma sampling factors must NOT change the block layout — a grayscale
-    stream encoded 1x1 but declaring 2x2 decodes identically."""
-    import scripts.build_fixture_data as bfd
-
-    from fetch_engines_spark.pipelines.multimodal import decode_jpeg
-
-    blocks = []
-    for b in range(8):  # 32x16 → 4x2 blocks
-        blk = [0] * 64
-        blk[0] = (b * 31 - 100) % 1024 - 512
-        blk[1] = 9
-        blocks.append(blk)
-    payload = bfd._jpeg_bytes(32, 16, [blocks], [[1] * 64])
-    base = decode_jpeg(payload)
-    mutated = bytearray(payload)
-    sof = mutated.find(b"\xff\xc0")
-    assert mutated[sof + 11] == 0x11
-    mutated[sof + 11] = 0x22  # declare 2x2 luma factors
-    assert decode_jpeg(bytes(mutated))["pixels"] == base["pixels"]
-
-
 def test_incremental_dedup_equals_full_corpus_restricted(spark):
     """Incremental candidates (new increment vs persisted index + within
     the increment) must equal the FULL-corpus candidate set restricted
@@ -875,36 +700,6 @@ def test_fuzzy_decontamination_catches_edited_leakage(spark):
     ).collect()
     assert [(r.doc_id, r.bench_id) for r in fuzzy] == [(1, 100)]
     assert fuzzy[0].jaccard_bp >= 3000
-
-
-def test_jpeg_fill_bytes_and_tem_marker_skipped():
-    """T.81 B.1.1.2: 0xFF fill bytes may pad the space before any marker,
-    and TEM (0xFF01) / RSTn are standalone (no length field) — legal
-    streams carrying either between header segments must decode
-    identically, not misparse the next two bytes as a segment length."""
-    import scripts.build_fixture_data as bfd
-
-    from fetch_engines_spark.pipelines.multimodal import decode_jpeg
-
-    blocks = []
-    for b in range(8):  # 32x16 -> 4x2 blocks
-        blk = [0] * 64
-        blk[0] = (b * 17 - 60) % 1024 - 512
-        blk[2] = -4
-        blocks.append(blk)
-    payload = bfd._jpeg_bytes(32, 16, [blocks], [[1] * 64])
-    base = decode_jpeg(payload)
-
-    sof = payload.find(b"\xff\xc0")
-    assert sof > 2
-    padded = payload[:sof] + b"\xff\xff\xff" + payload[sof:]  # fill bytes
-    assert decode_jpeg(padded)["pixels"] == base["pixels"]
-
-    with_tem = payload[:sof] + b"\xff\x01" + payload[sof:]  # standalone TEM
-    assert decode_jpeg(with_tem)["pixels"] == base["pixels"]
-
-    both = payload[:sof] + b"\xff\x01\xff\xff" + payload[sof:]
-    assert decode_jpeg(both)["pixels"] == base["pixels"]
 
 
 def test_fuzzy_decontamination_string_ids_and_tiebreak(spark):
@@ -1033,88 +828,6 @@ def test_compacted_index_equals_monolithic(spark):
         compact_minhash_indexes([a, b])
 
 
-def test_jpeg_progressive_padded_grid_mixed_walks():
-    """Progressive geometry edge the roundtrip property can't reach (its
-    crop bound keeps rasters MCU-aligned): a 24x8 4:2:0 frame whose luma
-    MCU-padded grid (4x2 blocks) exceeds the component raster (3x1) —
-    the interleaved DC scan codes the 5 pad blocks, the non-interleaved
-    AC scans walk ONLY the raster, and the decode must still be
-    pixel-exact after the crop."""
-    import scripts.build_fixture_data as bfd
-
-    from fetch_engines_spark.pipelines.multimodal import decode_jpeg
-
-    flat1 = [1] * 64
-
-    def dc_block(v):
-        blk = [0] * 64
-        blk[0] = (v - 128) * 8
-        return blk
-
-    y = [dc_block(v) for v in (60, 180, 120, 240, 90, 30, 200, 140)]
-    y[0][1] = 14
-    cb = [dc_block(90), dc_block(100)]
-    cr = [dc_block(170), dc_block(150)]
-    samp = [(2, 2), (1, 1), (1, 1)]
-    scans = [
-        ([0, 1, 2], 0, 0, 0, 1),
-        ([0], 1, 63, 0, 1), ([1], 1, 63, 0, 1), ([2], 1, 63, 0, 1),
-        ([0, 1, 2], 0, 0, 1, 0),
-        ([0], 1, 63, 1, 0), ([1], 1, 63, 1, 0), ([2], 1, 63, 1, 0),
-    ]
-    pay = bfd._jpeg_bytes_progressive(24, 8, [y, cb, cr], [flat1] * 3, scans, sampling=samp)
-    exp = bfd._jpeg_expected_pixels(24, 8, [y, cb, cr], [flat1] * 3, sampling=samp)
-    got = decode_jpeg(pay)
-    assert (got["width"], got["height"]) == (24, 8)
-    assert got["pixels"] == exp
-
-
-def test_jpeg_progressive_per_component_dc_scans():
-    """Per-component NON-interleaved DC scans (legal progressive layout;
-    the fixtures and property test use interleaved DC) decode exactly."""
-    import scripts.build_fixture_data as bfd
-
-    from fetch_engines_spark.pipelines.multimodal import decode_jpeg
-
-    flat1 = [1] * 64
-
-    def dc_block(v):
-        blk = [0] * 64
-        blk[0] = (v - 128) * 8
-        return blk
-
-    y = [dc_block(60), dc_block(180), dc_block(120), dc_block(240)]
-    y[0][1] = 12
-    cb = [dc_block(90)]
-    cr = [dc_block(170)]
-    samp = [(2, 2), (1, 1), (1, 1)]
-    scans = [
-        ([0], 0, 0, 0, 1), ([1], 0, 0, 0, 1), ([2], 0, 0, 0, 1),
-        ([0], 1, 63, 0, 0), ([1], 1, 63, 0, 0), ([2], 1, 63, 0, 0),
-        ([0], 0, 0, 1, 0), ([1], 0, 0, 1, 0), ([2], 0, 0, 1, 0),
-    ]
-    pay = bfd._jpeg_bytes_progressive(16, 16, [y, cb, cr], [flat1] * 3, scans, sampling=samp)
-    exp = bfd._jpeg_expected_pixels(16, 16, [y, cb, cr], [flat1] * 3, sampling=samp)
-    assert decode_jpeg(pay)["pixels"] == exp
-
-
-def test_media_decoder_truncation_raises_valueerror_not_indexerror():
-    """Contract: malformed payloads raise ValueError (the Arrow stages
-    map that to error rows) — review findings: a JPEG ending in 0xFF
-    fill bytes and a GIF ending at a graphics-control label both used
-    to escape as IndexError."""
-    import pytest as _pytest
-
-    from fetch_engines_spark.pipelines.multimodal import decode_gif, decode_jpeg
-
-    with _pytest.raises(ValueError, match="fill bytes"):
-        decode_jpeg(b"\xff\xd8" + b"\xff" * 8)
-    # 4x4 screen, 2-entry GCT (6 bytes), then a GCE label at EOF
-    gif_head = b"GIF89a" + bytes([4, 0, 4, 0, 0x80, 0, 0]) + b"\x00" * 6
-    with _pytest.raises(ValueError, match="no image data"):
-        decode_gif(gif_head + b"\x21\xf9")
-
-
 def test_warc_ingest_end_to_end_extraction(spark):
     """WARC → documents → extraction: the HTML 200 response in the
     fixture archive must flow through warc_html_documents into
@@ -1157,249 +870,6 @@ def test_warc_ingest_end_to_end_extraction(spark):
 
 
 # --- image dHash near-duplicate detection -----------------------------------
-
-
-def _fixture_path(name: str) -> str:
-    import os
-
-    return os.path.join(
-        os.path.dirname(__file__), "..", "data", "fixtures", f"{name}.parquet"
-    )
-
-
-def test_dhash64_unit_properties():
-    """Pure function sanity: uniform raster → all-zero hash regardless of
-    level (every adjacent-sample comparison ties, > is strict); a strict
-    left-to-right luminance ramp → all-ones hash; block split recombines
-    to the full value."""
-    from fetch_engines_spark.pipelines.multimodal import dhash64
-
-    for level in (0, 128, 255):
-        hex16, b0, b1, b2, b3 = dhash64(bytes([level]) * (9 * 8 * 3), 9, 8, 3)
-        assert hex16 == "0" * 16 and (b0, b1, b2, b3) == (0, 0, 0, 0)
-    ramp = bytes(b for x in range(9) for b in (x * 28,) * 3) * 8
-    hex16, b0, b1, b2, b3 = dhash64(ramp, 9, 8, 3)
-    assert hex16 == "f" * 16
-    assert ((b0 << 48) | (b1 << 32) | (b2 << 16) | b3) == int(hex16, 16)
-
-
-def test_image_dhash_matches_independent_twin(spark):
-    """Fused decode+dHash over all four image fixture corpora (PNG every
-    filter type + Adam7, GIF incl. interlaced, JPEG baseline +
-    subsampled + progressive, and the near-dup corpus) must reproduce
-    the generator's plain-Python dHash of the raw pre-encode pixels
-    bit-for-bit; undecodable rows → NULL hash + error."""
-    from fetch_engines_spark.pipelines.multimodal import image_dhash
-
-    df = spark.read.parquet(
-        _fixture_path("pngs"), _fixture_path("gifs"), _fixture_path("jpegs"),
-        _fixture_path("images_neardup"),
-    )
-    got = {r.media_id: r for r in image_dhash(df).collect()}
-    checked = 0
-    for e in df.select(
-        "media_id", "exp_dhash_hex", "exp_b0", "exp_b1", "exp_b2", "exp_b3"
-    ).collect():
-        g = got[e.media_id]
-        assert g.dhash_hex == e.exp_dhash_hex, e.media_id
-        assert (g.b0, g.b1, g.b2, g.b3) == (
-            e.exp_b0, e.exp_b1, e.exp_b2, e.exp_b3
-        ), e.media_id
-        if e.exp_dhash_hex is None:
-            assert g.error is not None and g.error.startswith("ERR_IMG")
-        else:
-            assert g.error is None
-            checked += 1
-    assert checked >= 30  # decodable rows actually exercised
-
-
-def test_dhash_near_dup_pairs_exact_recall(spark):
-    """Banded pair generation must equal the brute-force hamming<=3 set
-    (pigeonhole: 4x16-bit blocks give exact recall at the default
-    threshold).  The fixture plants exact copies (hamming 0 with
-    different payload bytes), local-edit near-dups, far-apart noise, and
-    a 7-image uniform 'blank thumbnail' cluster."""
-    from fetch_engines_spark.pipelines.multimodal import (
-        dhash_near_dup_pairs,
-        image_dhash,
-    )
-
-    nd = spark.read.parquet(_fixture_path("images_neardup"))
-    exp_rows = nd.select("media_id", "exp_b0", "exp_b1", "exp_b2", "exp_b3").collect()
-    brute = {}
-    for i, a in enumerate(exp_rows):
-        for b in exp_rows[i + 1 :]:
-            lo, hi = sorted([a, b], key=lambda r: r.media_id)
-            ham = sum(
-                bin(getattr(lo, f"exp_b{j}") ^ getattr(hi, f"exp_b{j}")).count("1")
-                for j in range(4)
-            )
-            if ham <= 3:
-                brute[(lo.media_id, hi.media_id)] = ham
-    got = {
-        (r.media_a, r.media_b): r.hamming
-        for r in dhash_near_dup_pairs(image_dhash(nd)).collect()
-    }
-    assert got == brute
-    assert len(brute) == 28  # 21 blank + 4 copies + 3 near-dups
-    assert 1 in got.values()  # at least one genuinely-nonzero near-dup
-
-
-def test_dhash_near_dup_capped_linearizes_blank_cluster(spark):
-    """With a bucket cap below the blank cluster's size, the shared
-    guard's star path replaces its 21 quadratic pairs with 6 linear
-    star edges that still connect all 7 blanks; pairs outside the hot
-    bucket are unchanged."""
-    from fetch_engines_spark.pipelines.multimodal import (
-        dhash_near_dup_pairs,
-        image_dhash,
-    )
-
-    sigs = image_dhash(spark.read.parquet(_fixture_path("images_neardup")))
-    got = {
-        (r.media_a, r.media_b): r.hamming
-        for r in dhash_near_dup_pairs(sigs, max_bucket_size=5).collect()
-    }
-    blank = {p for p in got if p[0].startswith("blank")}
-    other = {p: h for p, h in got.items() if not p[0].startswith("blank")}
-    assert len(blank) == 6
-    assert {m for p in blank for m in p} == {f"blank-{j}" for j in range(7)}
-    assert all(h == 0 for p, h in got.items() if p in blank)
-    assert other == {
-        ("img-000", "img-000-copy"): 0,
-        ("img-002", "img-002-near"): 0,
-        ("img-005", "img-005-copy"): 0,
-        ("img-007", "img-007-near"): 0,
-        ("img-010", "img-010-copy"): 0,
-        ("img-012", "img-012-near"): 1,
-        ("img-015", "img-015-copy"): 0,
-    }
-
-
-def test_canonicalize_media_refs_semantics(spark):
-    """Interleaved-corpus media dedup composite: cluster members rewrite
-    to the cluster-canonical id, canonicals/unique/dangling refs and
-    text spans pass through, span order and non-span columns are
-    preserved, and empty-spans / NULL-spans docs survive with their
-    value intact (the distinction collect_list would otherwise erase)."""
-    from fetch_engines_spark.pipelines.multimodal import (
-        canonical_media_map,
-        canonicalize_media_refs,
-        dhash_near_dup_pairs,
-        image_dhash,
-    )
-
-    media = spark.read.parquet(_fixture_path("images_neardup"))
-    cm = canonical_media_map(dhash_near_dup_pairs(image_dhash(media)))
-    cmap = {r.media_ref: r.canonical_ref for r in cm.collect()}
-    # identity rows dropped: only members needing rewrite are in the map
-    assert cmap["img-000-copy"] == "img-000" and "img-000" not in cmap
-    assert cmap["blank-6"] == "blank-0" and "blank-0" not in cmap
-
-    schema = (
-        "doc_id string, title string, "
-        "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-    )
-    docs = spark.createDataFrame(
-        [
-            ("d1", "a", [("text", "hi", None, 0), ("image", None, "img-000-copy", 1)]),
-            ("d2", "b", [("image", None, "img-002-near", 0), ("image", None, "blank-4", 1)]),
-            ("d3", "c", [("image", None, "img-001", 0), ("image", None, "nope-404", 1)]),
-            ("d4", "d", []),
-            ("d5", "e", None),
-        ],
-        schema,
-    )
-    out = {r.doc_id: r for r in canonicalize_media_refs(docs, cm).collect()}
-    assert [s.media_ref for s in out["d1"].spans] == [None, "img-000"]
-    assert [s.text for s in out["d1"].spans] == ["hi", None]
-    assert [s.offset for s in out["d1"].spans] == [0, 1]
-    assert [s.media_ref for s in out["d2"].spans] == ["img-002", "blank-0"]
-    assert [s.media_ref for s in out["d3"].spans] == ["img-001", "nope-404"]
-    assert out["d4"].spans == [] and out["d5"].spans is None
-    assert {r.title for r in out.values()} == {"a", "b", "c", "d", "e"}
-
-
-def test_incremental_media_near_dups(spark):
-    """Cross-corpus media near-dup: a new increment (the planted copies/
-    edits + two genuinely fresh images) against the persisted base
-    signatures finds exactly the planted matches without touching base
-    payloads; with blanks split across the sides and a cap below the
-    history blank count, the guard collapses the hot bucket to
-    signature-identical matches (still found — they ARE identical)
-    instead of n_inc x n_hist."""
-    from fetch_engines_spark.pipelines.multimodal import (
-        image_dhash,
-        incremental_media_near_dups,
-    )
-
-    nd = spark.read.parquet(_fixture_path("images_neardup"))
-    inc_ids = "media_id LIKE '%-copy' OR media_id LIKE '%-near' OR media_id IN ('blank-5','blank-6')"
-    hist = image_dhash(nd.filter(f"NOT ({inc_ids})"))
-    inc = image_dhash(nd.filter(inc_ids))
-    got = {
-        (r.media_id, r.hist_id): r.hamming
-        for r in incremental_media_near_dups(inc, hist).collect()
-    }
-    planted = {
-        ("img-000-copy", "img-000"): 0,
-        ("img-002-near", "img-002"): 0,
-        ("img-005-copy", "img-005"): 0,
-        ("img-007-near", "img-007"): 0,
-        ("img-010-copy", "img-010"): 0,
-        ("img-012-near", "img-012"): 1,
-        ("img-015-copy", "img-015"): 0,
-    }
-    # uncapped: every inc blank matches every hist blank (2 x 5 = 10)
-    blanks = {p for p in got if p[0].startswith("blank")}
-    assert len(blanks) == 10 and all(got[p] == 0 for p in blanks)
-    assert {p: h for p, h in got.items() if not p[0].startswith("blank")} == planted
-    # capped below the history blank count: hot bucket collapses to
-    # signature-identical matches — inc blanks still flagged as dups of
-    # history (identical signature), planted matches intact
-    capped = {
-        (r.media_id, r.hist_id): r.hamming
-        for r in incremental_media_near_dups(inc, hist, max_bucket_size=4).collect()
-    }
-    assert {p: h for p, h in capped.items() if not p[0].startswith("blank")} == planted
-    # capped hot bucket: per-signature-group collapse — one rep-to-rep
-    # pair survives (a true identity dup), never 2x5; the CLI drops ALL
-    # identity dups via the direct hash semi-join BEFORE this path, so
-    # nothing is lost end-to-end (test_media_dedup_stage_incremental)
-    capped_blanks = {p for p in capped if p[0].startswith("blank")}
-    assert capped_blanks and capped_blanks < blanks
-    assert all(capped[p] == 0 for p in capped_blanks)
-
-
-def test_incremental_media_equivalence_with_monolithic(spark):
-    """Increment-vs-history cross pairs + within-increment pairs +
-    within-history pairs must together recover exactly the monolithic
-    corpus's pair set (as unordered id pairs) — the proof that
-    incremental processing loses nothing."""
-    from fetch_engines_spark.pipelines.multimodal import (
-        dhash_near_dup_pairs,
-        image_dhash,
-        incremental_media_near_dups,
-    )
-
-    nd = spark.read.parquet(_fixture_path("images_neardup"))
-    inc_ids = "media_id LIKE '%-copy' OR media_id LIKE '%-near' OR media_id IN ('blank-5','blank-6')"
-    hist_sigs = image_dhash(nd.filter(f"NOT ({inc_ids})"))
-    inc_sigs = image_dhash(nd.filter(inc_ids))
-    mono = {
-        frozenset((r.media_a, r.media_b))
-        for r in dhash_near_dup_pairs(image_dhash(nd)).collect()
-    }
-    split = {
-        frozenset((r.media_id, r.hist_id))
-        for r in incremental_media_near_dups(inc_sigs, hist_sigs).collect()
-    }
-    for part in (hist_sigs, inc_sigs):
-        split |= {
-            frozenset((r.media_a, r.media_b))
-            for r in dhash_near_dup_pairs(part).collect()
-        }
-    assert split == mono
 
 
 def test_bloom_gate_no_false_negatives_and_gates_majority(spark):

@@ -327,242 +327,6 @@ def test_pdf_writer_parser_roundtrip_arbitrary_text(lines):
 
 
 @given(
-    st.integers(1, 12),
-    st.integers(1, 10),
-    st.sampled_from([0, 2, 4, 6]),
-    st.lists(st.integers(0, 4), min_size=1, max_size=5),
-    st.integers(0, 2**32 - 1),
-)
-@settings(max_examples=40, deadline=None)
-def test_png_writer_decoder_roundtrip_arbitrary(w, h, color_type, filters, seed):
-    """PNG property: any dimensions/color type/per-row filter mix written
-    by the generator decodes to the exact pixel array."""
-    from scripts.build_fixture_data import _png_bytes
-
-    from fetch_engines_spark.pipelines.multimodal import decode_png
-
-    ch = {0: 1, 2: 3, 4: 2, 6: 4}[color_type]
-    px = bytes((seed * 2654435761 + i * 97) % 256 for i in range(w * h * ch))
-    img = decode_png(_png_bytes(w, h, color_type, px, filters))
-    assert img["pixels"] == px and (img["width"], img["height"]) == (w, h)
-
-
-@given(
-    st.integers(1, 24),
-    st.integers(1, 12),
-    st.integers(2, 64),
-    st.integers(0, 2**31 - 1),
-)
-@settings(max_examples=40, deadline=None)
-def test_gif_writer_decoder_roundtrip_arbitrary(w, h, ncolors, seed):
-    """GIF property: any dimensions/palette size decode to the exact RGB
-    array (exercising LZW dictionary growth and width boundaries)."""
-    from scripts.build_fixture_data import _gif_bytes
-
-    from fetch_engines_spark.pipelines.multimodal import decode_gif
-
-    palette = [((i * 37 + seed) % 256, (i * 91) % 256, (i * 53) % 256) for i in range(ncolors)]
-    idx = bytes((seed + i * 31) % ncolors for i in range(w * h))
-    img = decode_gif(_gif_bytes(w, h, palette, idx, with_extension=bool(seed % 2)))
-    assert img["pixels"] == b"".join(bytes(palette[i]) for i in idx)
-
-
-@given(
-    st.integers(1, 3),
-    st.integers(1, 3),
-    st.integers(0, 5),
-    st.sampled_from([1, 3]),
-    st.integers(0, 2),
-    st.sampled_from([None, (2, 2), (2, 1), (1, 2)]),
-    st.integers(0, 2**31 - 1),
-)
-@settings(max_examples=40, deadline=None)
-def test_jpeg_writer_decoder_roundtrip_arbitrary(bw, bh, crop, nc, dri, ysamp, seed):
-    """JPEG property: arbitrary quantized coefficients (random sparsity →
-    every DC category, AC run/size, ZRL, EOB path), varied quant tables,
-    gray + YCbCr, non-multiple-of-8 crops, restart intervals, and chroma
-    subsampling (4:2:0 / 4:2:2 / 4:4:0) decode to exactly the spec-IDCT
-    expected pixels."""
-    from scripts.build_fixture_data import _jpeg_bytes, _jpeg_expected_pixels
-
-    from fetch_engines_spark.pipelines.multimodal import decode_jpeg
-
-    sampling = None
-    if nc == 3 and ysamp is not None:
-        sampling = [ysamp, (1, 1), (1, 1)]
-    hmax = sampling[0][0] if sampling else 1
-    vmax = sampling[0][1] if sampling else 1
-    # dims measured in MCUs so every sampling layout stays block-aligned
-    # to the grid; crop still exercises non-multiple-of-8 edges
-    w, h = bw * 8 * hmax - crop, bh * 8 * vmax - (crop % 3)
-    qts = [
-        [1 + (seed + ci * 7 + i) % 5 for i in range(64)] for ci in range(nc)
-    ]
-    comps = []
-    for ci in range(nc):
-        hs, vs = (sampling[ci] if sampling else (1, 1))
-        n_blocks = (bw * hs) * (bh * vs)
-        blocks = []
-        for b in range(n_blocks):
-            blk = [0] * 64
-            blk[0] = ((seed >> 3) + b * 37 + ci * 101) % 1024 - 512
-            for j in range((seed + b) % 4):
-                pos = (seed // 5 + 13 * j + b * 29) % 63 + 1
-                blk[pos] = ((seed >> (j + 2)) % 64) - 32
-            blocks.append(blk)
-        comps.append(blocks)
-    payload = _jpeg_bytes(w, h, comps, qts, dri=dri, sampling=sampling)
-    img = decode_jpeg(payload)
-    assert (img["width"], img["height"], img["channels"]) == (w, h, nc)
-    assert img["pixels"] == _jpeg_expected_pixels(w, h, comps, qts, sampling=sampling)
-
-
-@given(
-    st.binary(min_size=0, max_size=300),
-    st.sampled_from([b"\x89PNG\r\n\x1a\n", b"GIF89a", b"\xff\xd8\xff\xe0"]),
-)
-@settings(max_examples=150, deadline=None)
-def test_media_decoders_never_crash_unexpectedly(data, sig):
-    """Fuzz: arbitrary bytes behind each magic either decode or raise —
-    the Arrow stages convert any raise to an error row; nothing may hang
-    or exhaust memory (bomb guards bound all allocations)."""
-    from fetch_engines_spark.pipelines.multimodal import (
-        decode_gif,
-        decode_jpeg,
-        decode_png,
-    )
-
-    fn = {
-        b"\x89PNG\r\n\x1a\n": decode_png,
-        b"GIF89a": decode_gif,
-        b"\xff\xd8\xff\xe0": decode_jpeg,
-    }[sig]
-    try:
-        fn(sig + data)
-    except Exception:
-        pass
-
-
-@given(
-    st.integers(1, 3),
-    st.integers(1, 2),
-    st.integers(0, 5),
-    st.sampled_from([1, 3]),
-    st.integers(0, 2),
-    st.sampled_from([None, (2, 2), (2, 1)]),
-    st.sampled_from([(0, 0), (1, 1), (2, 1)]),
-    st.integers(0, 2**31 - 1),
-)
-@settings(max_examples=40, deadline=None)
-def test_jpeg_progressive_roundtrip_arbitrary(bw, bh, crop, nc, dri, ysamp, approx, seed):
-    """Progressive-JPEG property: the same arbitrary quantized
-    coefficients as the baseline roundtrip, re-encoded as SOF2 scan
-    scripts — spectral selection, EOBn runs, DC/AC successive
-    approximation at (al_luma, al_chroma) levels, refinement correction
-    bits (incl. eager-ZRL splits), interleaved DC + per-component AC,
-    restart intervals — must decode to exactly the same spec-IDCT
-    pixels (progressive coding is lossless over the coefficients)."""
-    from scripts.build_fixture_data import (
-        _jpeg_bytes_progressive,
-        _jpeg_expected_pixels,
-    )
-
-    from fetch_engines_spark.pipelines.multimodal import decode_jpeg
-
-    sampling = None
-    if nc == 3 and ysamp is not None:
-        sampling = [ysamp, (1, 1), (1, 1)]
-    hmax = sampling[0][0] if sampling else 1
-    vmax = sampling[0][1] if sampling else 1
-    w, h = bw * 8 * hmax - crop, bh * 8 * vmax - (crop % 3)
-    qts = [
-        [1 + (seed + ci * 7 + i) % 5 for i in range(64)] for ci in range(nc)
-    ]
-    comps = []
-    for ci in range(nc):
-        hs, vs = (sampling[ci] if sampling else (1, 1))
-        n_blocks = (bw * hs) * (bh * vs)
-        blocks = []
-        for b in range(n_blocks):
-            blk = [0] * 64
-            blk[0] = ((seed >> 3) + b * 37 + ci * 101) % 1024 - 512
-            for j in range((seed + b) % 4):
-                pos = (seed // 5 + 13 * j + b * 29) % 63 + 1
-                blk[pos] = ((seed >> (j + 2)) % 64) - 32
-            blocks.append(blk)
-        comps.append(blocks)
-    al_y, al_c = approx
-    allc = list(range(nc))
-    scans = [(allc, 0, 0, 0, al_y)]
-    for ci in range(nc):
-        al0 = al_y if ci == 0 else al_c
-        scans.append(([ci], 1, 5, 0, al0))
-        scans.append(([ci], 6, 63, 0, al0))
-    for lvl in range(al_y, 0, -1):
-        scans.append((allc, 0, 0, lvl, lvl - 1))
-    for ci in range(nc):
-        al0 = al_y if ci == 0 else al_c
-        for lvl in range(al0, 0, -1):
-            scans.append(([ci], 1, 5, lvl, lvl - 1))
-            scans.append(([ci], 6, 63, lvl, lvl - 1))
-    payload = _jpeg_bytes_progressive(
-        w, h, comps, qts, scans, sampling=sampling, dri=dri
-    )
-    img = decode_jpeg(payload)
-    assert (img["width"], img["height"], img["channels"]) == (w, h, nc)
-    assert img["pixels"] == _jpeg_expected_pixels(w, h, comps, qts, sampling=sampling)
-
-
-@given(
-    st.integers(1, 20),
-    st.integers(1, 20),
-    st.sampled_from([0, 2, 6]),
-    st.lists(st.integers(0, 4), min_size=1, max_size=5),
-    st.integers(0, 2**31 - 1),
-)
-@settings(max_examples=60, deadline=None)
-def test_png_adam7_roundtrip_arbitrary(w, h, ct, filters, seed):
-    """Adam7 property: arbitrary (incl. tiny/ragged) dimensions, every
-    color type and filter mix, encoded interlaced, must decode to the
-    EXACT display-order pixels — pixel equality (not just sums) catches
-    any pass-order or scatter-position mistake."""
-    from scripts.build_fixture_data import _png_bytes
-
-    from fetch_engines_spark.pipelines.multimodal import decode_png
-
-    ch = {0: 1, 2: 3, 6: 4}[ct]
-    px = bytes(((x * 7 + y * 13 + c * 29 + seed) % 256)
-               for y in range(h) for x in range(w) for c in range(ch))
-    img = decode_png(_png_bytes(w, h, ct, px, filters, interlaced=True))
-    assert (img["width"], img["height"], img["channels"]) == (w, h, ch)
-    assert img["pixels"] == px
-    # and the same pixels non-interlaced agree
-    img2 = decode_png(_png_bytes(w, h, ct, px, filters))
-    assert img2["pixels"] == px
-
-
-@given(
-    st.integers(1, 24),
-    st.integers(1, 24),
-    st.integers(2, 16),
-    st.integers(0, 2**31 - 1),
-)
-@settings(max_examples=60, deadline=None)
-def test_gif_interlaced_roundtrip_arbitrary(w, h, ncolors, seed):
-    """GIF interlace property: rows stored in 4-pass order must
-    de-interlace to the exact display-order pixels at any height
-    (heights < 8 leave early passes ragged or empty)."""
-    from scripts.build_fixture_data import _gif_bytes
-
-    from fetch_engines_spark.pipelines.multimodal import decode_gif
-
-    palette = [((i * 37 + seed) % 256, (i * 91) % 256, (i * 53) % 256) for i in range(ncolors)]
-    idx = bytes((seed + x * 3 + y * 17) % ncolors for y in range(h) for x in range(w))
-    img = decode_gif(_gif_bytes(w, h, palette, idx, interlaced=True))
-    assert img["pixels"] == b"".join(bytes(palette[i]) for i in idx)
-
-
-@given(
     st.lists(
         st.tuples(
             st.sampled_from(["response", "request", "warcinfo", "metadata"]),
