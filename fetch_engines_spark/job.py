@@ -48,13 +48,15 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument(
         "--stage",
         default="extract",
-        choices=("extract", "dedup", "compact-index"),
+        choices=("extract", "dedup", "compact-index", "media-dedup"),
         help="extract: spans→markdown with checkpoint/resume; "
         "dedup: MinHash-LSH candidates → Jaccard verify → connected "
         "components → keepers, writing pairs/clusters/keepers; "
         "compact-index: merge N per-increment LSH index parquets "
         "(comma-separated --input) into one deduplicated index so the "
-        "next increment reads one index, not N",
+        "next increment reads one index, not N; "
+        "media-dedup: perceptual near-dup over a media(media_id, payload) "
+        "table of PNG images (dHash) writing signatures/pairs/canonical_map",
     )
     p.add_argument("--minhash-perms", type=int, default=128)
     p.add_argument("--band-size", type=int, default=8)
@@ -106,6 +108,42 @@ def _run_compact_index(spark, args) -> dict:
         "n_inputs": len(paths),
         "n_rows_in": n_in,
         "n_rows_out": n_out,
+    }
+
+
+def _run_media_dedup(spark, args) -> dict:
+    """Perceptual media near-dup: one fused decode+signature pass is
+    WRITTEN to {output}/signatures — every downstream stage of this run
+    (pairs, map) reads the parquet back instead of holding pixels in
+    memory or re-decoding; a RE-INVOCATION of the stage re-decodes from
+    scratch (unlike the extract stage's per-bucket resume — signature
+    runs are single-pass by design).  Then banded pairs → connected
+    components → canonical map."""
+    from .pipelines.multimodal import (
+        canonical_media_map,
+        dhash_near_dup_pairs,
+        image_dhash,
+    )
+
+    media = spark.read.parquet(args.input)
+    image_dhash(media).write.mode("overwrite").parquet(f"{args.output}/signatures")
+    sigs = spark.read.parquet(f"{args.output}/signatures")
+    n_media = sigs.count()
+    n_errors = sigs.filter("error IS NOT NULL").count()
+    dhash_near_dup_pairs(
+        sigs, max_hamming=args.max_hamming, max_bucket_size=args.max_bucket_size
+    ).write.mode("overwrite").parquet(f"{args.output}/pairs")
+    pairs = spark.read.parquet(f"{args.output}/pairs")
+    canonical_media_map(pairs).write.mode("overwrite").parquet(
+        f"{args.output}/canonical_map"
+    )
+    cmap = spark.read.parquet(f"{args.output}/canonical_map")
+    return {
+        "stage": "media-dedup",
+        "n_media": n_media,
+        "n_errors": n_errors,
+        "n_pairs": pairs.count(),
+        "n_remapped_media": cmap.count(),
     }
 
 
@@ -274,6 +312,8 @@ def main(argv: list[str] | None = None) -> int:
             summary = _run_dedup(spark, args)
         elif args.stage == "compact-index":
             summary = _run_compact_index(spark, args)
+        elif args.stage == "media-dedup":
+            summary = _run_media_dedup(spark, args)
         else:
             if args.input_format == "warc":
                 from .warc import read_warc, warc_html_documents

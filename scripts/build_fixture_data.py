@@ -472,6 +472,270 @@ def build_adversarial_corpus() -> None:
     )
 
 
+def _png_chunk(ctype: bytes, data: bytes) -> bytes:
+    import struct as _s
+    import zlib as _z
+
+    return _s.pack(">I", len(data)) + ctype + data + _s.pack(
+        ">I", _z.crc32(ctype + data) & 0xFFFFFFFF
+    )
+
+
+def _png_filtered(pixels: bytes, height: int, stride: int, ch: int, row_filters: list[int]) -> bytearray:
+    """Apply per-row filter types (0=None 1=Sub 2=Up 3=Average 4=Paeth)
+    to raw pixel rows, emitting the filter-byte-interleaved stream; used
+    whole-image (non-interlaced) and per Adam7 pass (interlaced)."""
+
+    def paeth(a, b, c):
+        p = a + b - c
+        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+        if pa <= pb and pa <= pc:
+            return a
+        return b if pb <= pc else c
+
+    raw = bytearray()
+    for r in range(height):
+        f = row_filters[r % len(row_filters)]
+        cur = pixels[r * stride : (r + 1) * stride]
+        prev = pixels[(r - 1) * stride : r * stride] if r else bytes(stride)
+        raw.append(f)
+        for i in range(stride):
+            a = cur[i - ch] if i >= ch else 0
+            b = prev[i]
+            c = prev[i - ch] if i >= ch else 0
+            if f == 0:
+                raw.append(cur[i])
+            elif f == 1:
+                raw.append((cur[i] - a) & 0xFF)
+            elif f == 2:
+                raw.append((cur[i] - b) & 0xFF)
+            elif f == 3:
+                raw.append((cur[i] - (a + b) // 2) & 0xFF)
+            elif f == 4:
+                raw.append((cur[i] - paeth(a, b, c)) & 0xFF)
+            else:
+                raise ValueError(f)
+    return raw
+
+
+_ADAM7_W = (
+    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
+    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
+)
+
+
+def _png_bytes(width: int, height: int, color_type: int, pixels: bytes, row_filters: list[int], interlaced: bool = False) -> bytes:
+    """PNG WRITER (independent of the decoder under test): filters the
+    raw pixel rows (whole-image, or per Adam7 pass sub-image when
+    ``interlaced`` — pixels stay in DISPLAY order either way), deflates,
+    and wraps in signature+IHDR+IDAT+IEND."""
+    import struct as _s
+    import zlib as _z
+
+    ch = {0: 1, 2: 3, 4: 2, 6: 4}[color_type]
+    stride = width * ch
+    if not interlaced:
+        raw = _png_filtered(pixels, height, stride, ch, row_filters)
+    else:
+        raw = bytearray()
+        for x0, y0, dx, dy in _ADAM7_W:
+            pw = (width - x0 + dx - 1) // dx
+            ph = (height - y0 + dy - 1) // dy
+            if pw <= 0 or ph <= 0:
+                continue  # empty pass: no scanlines at all
+            sub = bytearray()
+            for j in range(ph):
+                for i in range(pw):
+                    src = ((y0 + j * dy) * width + (x0 + i * dx)) * ch
+                    sub += pixels[src : src + ch]
+            raw += _png_filtered(bytes(sub), ph, pw * ch, ch, row_filters)
+    ihdr = _s.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 1 if interlaced else 0)
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + _png_chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IDAT", _z.compress(bytes(raw)))
+        + _png_chunk(b"IEND", b"")
+    )
+
+
+def _resize8_sum(px: bytes, w: int, h: int, ch: int) -> int:
+    """Expected 8x8 nearest-neighbor thumbnail pixel sum, computed with a
+    plain-Python loop INDEPENDENT of the pipeline's numpy resize (same
+    floor(i*src/8) sampling rule)."""
+    total = 0
+    for y in range(8):
+        sy = (y * h) // 8
+        for x in range(8):
+            sx = (x * w) // 8
+            for c in range(ch):
+                total += px[(sy * w + sx) * ch + c]
+    return total
+
+
+def _dhash_expected(px: bytes, w: int, h: int, ch: int):
+    """Expected 64-bit dHash (hex + four 16-bit blocks), computed with
+    plain-Python loops INDEPENDENT of the pipeline's numpy implementation
+    (same integer luma (299R+587G+114B)//1000, same floor(i*src/out)
+    resample to 9x8, same row-major MSB-first packing)."""
+
+    def luma(x: int, y: int) -> int:
+        o = (y * w + x) * ch
+        if ch >= 3:
+            return (299 * px[o] + 587 * px[o + 1] + 114 * px[o + 2]) // 1000
+        return px[o]
+
+    v = 0
+    for y in range(8):
+        sy = (y * h) // 8
+        row = [luma((x * w) // 9, sy) for x in range(9)]
+        for x in range(8):
+            v = (v << 1) | (1 if row[x + 1] > row[x] else 0)
+    return (
+        format(v, "016x"),
+        (v >> 48) & 0xFFFF,
+        (v >> 32) & 0xFFFF,
+        (v >> 16) & 0xFFFF,
+        v & 0xFFFF,
+    )
+
+
+def _dhash_cols(rows, hex_i: int):
+    """pa.table columns for the expected-dhash fields appended at
+    ``rows[i][hex_i:hex_i+5]`` (hex, b0..b3)."""
+    return {
+        "exp_dhash_hex": [r[hex_i] for r in rows],
+        **{
+            f"exp_b{j}": pa.array(
+                [r[hex_i + 1 + j] for r in rows], pa.int32()
+            )
+            for j in range(4)
+        },
+    }
+
+
+def build_pngs() -> None:
+    """Real-PNG decode fixture: generator-written PNGs (every filter type,
+    gray/RGB/RGBA) with the expected width/height/channels/pixel_sum
+    recorded from the RAW pixel array before filtering+deflate — the
+    decoder under test must invert both to reproduce them."""
+    rows = []  # (media_id, payload, exp_w, exp_h, exp_ch, exp_sum, exp_err)
+
+    def gradient(w, h, ch, seed):
+        return bytes(((x * 7 + y * 13 + c * 29 + seed * 31) % 256)
+                     for y in range(h) for x in range(w) for c in range(ch))
+
+    cases = [
+        ("png-none", 16, 12, 2, 3, [0]),
+        ("png-sub", 16, 12, 2, 5, [1]),
+        ("png-up", 16, 12, 2, 7, [2]),
+        ("png-avg", 16, 12, 2, 11, [3]),
+        ("png-paeth", 16, 12, 2, 13, [4]),
+        ("png-mixed", 24, 17, 2, 17, [0, 1, 2, 3, 4]),
+        ("png-gray", 9, 9, 0, 19, [1, 4]),
+        ("png-rgba", 8, 6, 6, 23, [2, 3]),
+        # Adam7 interlaced: odd dims exercise empty/ragged passes; all
+        # five filter types cycle within each pass sub-image
+        ("png-adam7", 21, 13, 2, 29, [0, 1, 2, 3, 4]),
+        ("png-adam7-tiny", 3, 2, 0, 31, [1, 4]),
+    ]
+    for mid, w, h, ct, seed, filters in cases:
+        ch = {0: 1, 2: 3, 6: 4}[ct]
+        px = gradient(w, h, ch, seed)
+        payload = _png_bytes(w, h, ct, px, filters, interlaced=mid.startswith("png-adam7"))
+        rows.append((mid, payload, w, h, ch, sum(px), None, _resize8_sum(px, w, h, ch),
+                     *_dhash_expected(px, w, h, ch)))
+    rows.append(("png-truncated", rows[0][1][:40], None, None, None, None, "ERR_IMG", None,
+                 None, None, None, None, None))
+    rows.append(("png-not-a-png", b"JFIF not a png", None, None, None, None, "ERR_IMG", None,
+                 None, None, None, None, None))
+
+    pq.write_table(
+        pa.table(
+            {
+                "media_id": [r[0] for r in rows],
+                "payload": pa.array([r[1] for r in rows], pa.binary()),
+                "exp_width": pa.array([r[2] for r in rows], pa.int32()),
+                "exp_height": pa.array([r[3] for r in rows], pa.int32()),
+                "exp_channels": pa.array([r[4] for r in rows], pa.int32()),
+                "exp_pixel_sum": pa.array([r[5] for r in rows], pa.int64()),
+                "exp_error_prefix": [r[6] for r in rows],
+                "exp_resize8_sum": pa.array([r[7] for r in rows], pa.int64()),
+                **_dhash_cols(rows, 8),
+            }
+        ),
+        os.path.join(OUT, "pngs.parquet"),
+    )
+
+
+def build_images_neardup() -> None:
+    """Image near-duplicate fixture for the dHash pipeline: deterministic
+    LCG-noise RGB PNGs with planted exact duplicates (hamming 0), planted
+    few-bit near-duplicates (a strong local edit at a dHash sample point
+    flips 1-3 bits), unrelated noise images (far apart), and a uniform
+    'blank thumbnail' cluster — every uniform image hashes to all-zero
+    dHash regardless of its gray level, which is exactly the degenerate
+    hot bucket the capped star path must linearize.  Expected hashes come
+    from the plain-Python ``_dhash_expected`` twin, independent of the
+    pipeline's numpy implementation."""
+    w, h, ch = 24, 16, 3
+
+    def noise(seed: int) -> bytearray:
+        s = seed
+        out = bytearray()
+        for _ in range(w * h * ch):
+            s = (s * 1103515245 + 12345) & 0x7FFFFFFF
+            out.append((s >> 16) & 0xFF)
+        return out
+
+    rows = []
+
+    def add(mid: str, px: bytes) -> None:
+        payload = _png_bytes(w, h, 2, bytes(px), [0])
+        rows.append((mid, payload, *_dhash_expected(px, w, h, ch)))
+
+    base_px: dict[str, bytearray] = {}
+    for i in range(20):
+        px = noise(1000 + 7 * i)
+        base_px[f"img-{i:03d}"] = px
+        add(f"img-{i:03d}", px)
+    # exact duplicates of four bases
+    for i in (0, 5, 10, 15):
+        add(f"img-{i:03d}-copy", base_px[f"img-{i:03d}"])
+    # near duplicates: overwrite a 3x2 pixel patch at a sampled dHash
+    # cell (xs contains 10, ys contains 6) with white — flips the two
+    # comparisons that read that sample in at most one sampled row
+    for i in (2, 7, 12):
+        px = bytearray(base_px[f"img-{i:03d}"])
+        for y in (6, 7):
+            for x in (10, 11, 12):
+                o = (y * w + x) * ch
+                px[o : o + 3] = b"\xff\xff\xff"
+        add(f"img-{i:03d}-near", px)
+    # uniform cluster: all-identical-luma rasters -> all-zero dHash (the
+    # degenerate bucket); two gray levels so payloads differ but hashes
+    # collide
+    for j in range(7):
+        level = 128 if j < 4 else 200
+        add(f"blank-{j}", bytes([level]) * (w * h * ch))
+
+    pq.write_table(
+        pa.table(
+            {
+                "media_id": [r[0] for r in rows],
+                "payload": pa.array([r[1] for r in rows], pa.binary()),
+                "exp_dhash_hex": [r[2] for r in rows],
+                **{
+                    f"exp_b{j}": pa.array(
+                        [r[3 + j] for r in rows], pa.int32()
+                    )
+                    for j in range(4)
+                },
+            }
+        ),
+        os.path.join(OUT, "images_neardup.parquet"),
+    )
+
+
 def _warc_record(wtype: str, rec_id: str, headers: dict, block: bytes) -> bytes:
     """One WARC/1.0 record (independent of the parser under test)."""
     h = [b"WARC/1.0"]
@@ -607,5 +871,7 @@ if __name__ == "__main__":
     build_neardup_corpus()
     build_neardup_hi_corpus()
     build_adversarial_corpus()
+    build_pngs()
+    build_images_neardup()
     build_warc()
     print(f"wrote fixture data to {OUT}")

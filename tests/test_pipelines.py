@@ -71,6 +71,88 @@ def test_simhash_near_dups_close(docs):
     assert hamming(sh[1], sh[3]) <= hamming(sh[1], sh[6])
 
 
+def test_png_decode_roundtrips_every_filter_type():
+    """Writer applies the filter; decoder must invert it — full pixel-array
+    equality (not just sums) per filter type and color type."""
+    import scripts.build_fixture_data as bfd
+
+    from fetch_engines_spark.pipelines.multimodal import decode_png
+
+    def gradient(w, h, ch, seed):
+        return bytes(((x * 7 + y * 13 + c * 29 + seed * 31) % 256)
+                     for y in range(h) for x in range(w) for c in range(ch))
+
+    for ct, ch in ((0, 1), (2, 3), (4, 2), (6, 4)):
+        for filt in (0, 1, 2, 3, 4):
+            px = gradient(11, 7, ch, filt + ct)
+            img = decode_png(bfd._png_bytes(11, 7, ct, px, [filt]))
+            assert img["pixels"] == px, (ct, filt)
+            assert (img["width"], img["height"], img["channels"]) == (11, 7, ch)
+    # mixed per-row filters
+    px = gradient(5, 10, 3, 3)
+    assert decode_png(bfd._png_bytes(5, 10, 2, px, [0, 1, 2, 3, 4]))["pixels"] == px
+
+
+def test_png_decode_rejects_unsupported_and_corrupt():
+    import scripts.build_fixture_data as bfd
+
+    from fetch_engines_spark.pipelines.multimodal import decode_png
+
+    good = bfd._png_bytes(4, 4, 2, bytes(48), [0])
+    with pytest.raises(ValueError):
+        decode_png(b"NOTAPNG")
+    with pytest.raises(ValueError):
+        decode_png(good[:30])
+    with pytest.raises(Exception):
+        decode_png(good[:20] + b"\x00" * (len(good) - 20))  # corrupted IDAT
+
+
+def test_png_decompression_bomb_bounded():
+    """An IDAT inflating far past the declared raster must raise (error
+    row), never allocate the full inflated payload."""
+    import struct
+    import zlib
+
+    from scripts.build_fixture_data import _png_chunk
+
+    from fetch_engines_spark.pipelines.multimodal import decode_png
+
+    ihdr = struct.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 0)  # declares 4x4 RGB
+    bomb = zlib.compress(b"\x00" * 50_000_000, 9)  # ~48 KB compressed
+    payload = (
+        b"\x89PNG\r\n\x1a\n"
+        + _png_chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IDAT", bomb)
+        + _png_chunk(b"IEND", b"")
+    )
+    with pytest.raises(ValueError, match="inflates past|too large"):
+        decode_png(payload)
+    # declared-dimension bomb (huge IHDR) also rejected up front
+    big = struct.pack(">IIBBBBB", 1 << 20, 1 << 20, 8, 2, 0, 0, 0)
+    with pytest.raises(ValueError, match="too large"):
+        decode_png(b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", big) + _png_chunk(b"IDAT", b"x") + _png_chunk(b"IEND", b""))
+
+
+def test_png_zero_height_bomb_rejected_before_inflate():
+    """height=0 must be rejected up front: zlib's max_length=0 means
+    UNLIMITED, so inflating first would re-open the bomb hole."""
+    import struct
+    import zlib
+
+    from scripts.build_fixture_data import _png_chunk
+
+    from fetch_engines_spark.pipelines.multimodal import decode_png
+
+    ihdr = struct.pack(">IIBBBBB", 16, 0, 8, 2, 0, 0, 0)
+    bomb = zlib.compress(b"\x00" * 20_000_000, 9)
+    payload = (
+        b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IDAT", bomb) + _png_chunk(b"IEND", b"")
+    )
+    with pytest.raises(ValueError, match="degenerate"):
+        decode_png(payload)
+
+
 def test_pdf_word_suffix_stream_does_not_swallow_objects():
     """An object body containing the word 'downstream' (no real stream)
     must not swallow subsequent objects in the scan."""
@@ -89,6 +171,29 @@ def test_pdf_word_suffix_stream_does_not_swallow_objects():
 
 
         # IndexError or anything else propagates and fails the test
+
+
+def test_png_pixel_stats_stage_never_fails(spark):
+    """Every decodable PNG fixture decodes to its expected pixel sum; an
+    undecodable one raises ValueError and becomes an ERR_IMG row in the
+    fused decode+dHash stage, never a stage failure."""
+    import os
+
+    from fetch_engines_spark.pipelines.multimodal import decode_png, image_dhash
+
+    path = os.path.join(os.path.dirname(__file__), "..", "data", "fixtures", "pngs.parquet")
+    pngs = spark.read.parquet(path)
+    exp = pngs.select("media_id", "payload", "exp_pixel_sum").collect()
+    assert len(exp) == 12  # incl. the two Adam7 interlaced rows
+    for e in exp:
+        if e.exp_pixel_sum is None:
+            with pytest.raises(ValueError):
+                decode_png(bytes(e.payload))
+        else:
+            assert sum(decode_png(bytes(e.payload))["pixels"]) == e.exp_pixel_sum, e.media_id
+    rows = {r.media_id: r for r in image_dhash(pngs).collect()}
+    assert len(rows) == 12
+    assert rows["png-truncated"].error and rows["png-truncated"].error.startswith("ERR_IMG")
 
 
 def test_planted_neardup_recall(spark):
@@ -872,6 +977,119 @@ def test_warc_ingest_end_to_end_extraction(spark):
 # --- image dHash near-duplicate detection -----------------------------------
 
 
+def _fixture_path(name: str) -> str:
+    import os
+
+    return os.path.join(
+        os.path.dirname(__file__), "..", "data", "fixtures", f"{name}.parquet"
+    )
+
+
+def test_dhash64_unit_properties():
+    """Pure function sanity: uniform raster → all-zero hash regardless of
+    level (every adjacent-sample comparison ties, > is strict); a strict
+    left-to-right luminance ramp → all-ones hash; block split recombines
+    to the full value."""
+    from fetch_engines_spark.pipelines.multimodal import dhash64
+
+    for level in (0, 128, 255):
+        hex16, b0, b1, b2, b3 = dhash64(bytes([level]) * (9 * 8 * 3), 9, 8, 3)
+        assert hex16 == "0" * 16 and (b0, b1, b2, b3) == (0, 0, 0, 0)
+    ramp = bytes(b for x in range(9) for b in (x * 28,) * 3) * 8
+    hex16, b0, b1, b2, b3 = dhash64(ramp, 9, 8, 3)
+    assert hex16 == "f" * 16
+    assert ((b0 << 48) | (b1 << 32) | (b2 << 16) | b3) == int(hex16, 16)
+
+
+def test_image_dhash_matches_independent_twin(spark):
+    """Fused decode+dHash over both image fixture corpora (PNG every
+    filter type + Adam7, and the near-dup corpus) must reproduce the
+    generator's plain-Python dHash of the raw pre-encode pixels
+    bit-for-bit; undecodable rows → NULL hash + error."""
+    from fetch_engines_spark.pipelines.multimodal import image_dhash
+
+    df = spark.read.parquet(_fixture_path("pngs"), _fixture_path("images_neardup"))
+    got = {r.media_id: r for r in image_dhash(df).collect()}
+    checked = 0
+    for e in df.select(
+        "media_id", "exp_dhash_hex", "exp_b0", "exp_b1", "exp_b2", "exp_b3"
+    ).collect():
+        g = got[e.media_id]
+        assert g.dhash_hex == e.exp_dhash_hex, e.media_id
+        assert (g.b0, g.b1, g.b2, g.b3) == (
+            e.exp_b0, e.exp_b1, e.exp_b2, e.exp_b3
+        ), e.media_id
+        if e.exp_dhash_hex is None:
+            assert g.error is not None and g.error.startswith("ERR_IMG")
+        else:
+            assert g.error is None
+            checked += 1
+    assert checked >= 30  # decodable rows actually exercised
+
+
+def test_dhash_near_dup_pairs_exact_recall(spark):
+    """Banded pair generation must equal the brute-force hamming<=3 set
+    (pigeonhole: 4x16-bit blocks give exact recall at the default
+    threshold).  The fixture plants exact copies (hamming 0 with
+    different payload bytes), local-edit near-dups, far-apart noise, and
+    a 7-image uniform 'blank thumbnail' cluster."""
+    from fetch_engines_spark.pipelines.multimodal import (
+        dhash_near_dup_pairs,
+        image_dhash,
+    )
+
+    nd = spark.read.parquet(_fixture_path("images_neardup"))
+    exp_rows = nd.select("media_id", "exp_b0", "exp_b1", "exp_b2", "exp_b3").collect()
+    brute = {}
+    for i, a in enumerate(exp_rows):
+        for b in exp_rows[i + 1 :]:
+            lo, hi = sorted([a, b], key=lambda r: r.media_id)
+            ham = sum(
+                bin(getattr(lo, f"exp_b{j}") ^ getattr(hi, f"exp_b{j}")).count("1")
+                for j in range(4)
+            )
+            if ham <= 3:
+                brute[(lo.media_id, hi.media_id)] = ham
+    got = {
+        (r.media_a, r.media_b): r.hamming
+        for r in dhash_near_dup_pairs(image_dhash(nd)).collect()
+    }
+    assert got == brute
+    assert len(brute) == 28  # 21 blank + 4 copies + 3 near-dups
+    assert 1 in got.values()  # at least one genuinely-nonzero near-dup
+
+
+def test_dhash_near_dup_capped_linearizes_blank_cluster(spark):
+    """With a bucket cap below the blank cluster's size, the shared
+    guard's star path replaces its 21 quadratic pairs with 6 linear
+    star edges that still connect all 7 blanks; pairs outside the hot
+    bucket are unchanged."""
+    from fetch_engines_spark.pipelines.multimodal import (
+        dhash_near_dup_pairs,
+        image_dhash,
+    )
+
+    sigs = image_dhash(spark.read.parquet(_fixture_path("images_neardup")))
+    got = {
+        (r.media_a, r.media_b): r.hamming
+        for r in dhash_near_dup_pairs(sigs, max_bucket_size=5).collect()
+    }
+    blank = {p for p in got if p[0].startswith("blank")}
+    other = {p: h for p, h in got.items() if not p[0].startswith("blank")}
+    assert len(blank) == 6
+    assert {m for p in blank for m in p} == {f"blank-{j}" for j in range(7)}
+    assert all(h == 0 for p, h in got.items() if p in blank)
+    assert other == {
+        ("img-000", "img-000-copy"): 0,
+        ("img-002", "img-002-near"): 0,
+        ("img-005", "img-005-copy"): 0,
+        ("img-007", "img-007-near"): 0,
+        ("img-010", "img-010-copy"): 0,
+        ("img-012", "img-012-near"): 1,
+        ("img-015", "img-015-copy"): 0,
+    }
+
+
 def test_bloom_gate_no_false_negatives_and_gates_majority(spark):
     """Bloom membership: every key that built the filter tests
     maybe_present=1 (a false negative would silently drop history dups
@@ -974,5 +1192,3 @@ def test_bloom_gate_rejects_mismatched_parameters(spark):
         spark.createDataFrame([("a",), (None,)], "key string"), "key", 2048, 3
     )
     assert nb.filter("word_id IS NULL").count() == 0
-
-

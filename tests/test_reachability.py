@@ -94,16 +94,17 @@ def test_walk_follows_relative_imports():
 
 
 def test_semdedup_stage_is_rejected(monkeypatch):
-    """Every retired stage (``semdedup``, then ``curate`` and ``mix``, then
-    ``media-dedup``) left the package with its modules, so argparse rejects
-    it as a ``--stage`` choice, and each retired stage-only flag as an
-    unknown argument, before any Spark session starts."""
+    """Every retired stage (``semdedup``, then ``curate`` and ``mix``) left
+    the package with its modules, so argparse rejects it as a ``--stage``
+    choice before any Spark session starts; so too each retired
+    stage-only flag (``media-dedup``'s ``--docs`` and
+    ``--incremental-signatures``), as an unknown argument."""
     from fetch_engines_spark import session
 
     started = []
     monkeypatch.setattr(session, "get_spark", lambda **kw: started.append(kw))
     base = ["--input", "x", "--output", "y", "--run-id", "r"]
-    rejected = [["--stage", stage] for stage in ("semdedup", "curate", "mix", "media-dedup")]
+    rejected = [["--stage", stage] for stage in ("semdedup", "curate", "mix")]
     rejected += [["--docs", "x"], ["--incremental-signatures", "x"]]
     for extra in rejected:
         with pytest.raises(SystemExit) as exit_info:
