@@ -290,19 +290,17 @@ def remove_high_link_density_in_selected_content(idx: DocIndex, content: int) ->
             idx.remove(i)
 
 
-def remove_svg_image_refs(root: Element, els: list[Element] | None = None) -> None:
-    """P5 (parity: markdown-converter.ts:256-262)."""
-    if els is None:
-        els = root.query_selector_all("img[src]")
+def remove_svg_image_refs(els: list[Element]) -> None:
+    """P5 (parity: markdown-converter.ts:256-262) over the ``img[src]``
+    elements ``els``."""
     for el in els:
         if ".svg" in (el.get_attribute("src") or "").lower():
             el.remove()
 
 
-def remove_breadcrumbs(root: Element, els: list[Element] | None = None) -> None:
-    """P6 (parity: markdown-converter.ts:264-292)."""
-    if els is None:
-        els = root.query_selector_all(",".join(_BREADCRUMB_SELECTORS))
+def remove_breadcrumbs(els: list[Element]) -> None:
+    """P6 (parity: markdown-converter.ts:264-292) over the breadcrumb
+    matches ``els``."""
     for el in els:
         nav = el.closest("nav")
         (nav or el).remove()
@@ -322,10 +320,9 @@ def remove_content_subtree_boilerplate(idx: DocIndex, content: int) -> None:
 _ABSOLUTIZE_SELECTOR = "a[href], img[src], source[src], video[src], audio[src], track[src]"
 
 
-def absolutize_relative_urls(
-    root: Element, base_url: str | None, els: list[Element] | None = None
-) -> None:
-    """P4 (parity: markdown-converter.ts:361-407)."""
+def absolutize_relative_urls(els: list[Element], base_url: str | None) -> None:
+    """P4 (parity: markdown-converter.ts:361-407) over the
+    ``_ABSOLUTIZE_SELECTOR`` matches ``els``."""
     if not base_url:
         return
     try:
@@ -334,8 +331,6 @@ def absolutize_relative_urls(
             return
     except ValueError:
         return
-    if els is None:
-        els = root.query_selector_all(_ABSOLUTIZE_SELECTOR)
     for el in els:
         for attr in ("href", "src"):
             raw = el.get_attribute(attr)
@@ -702,9 +697,9 @@ class MarkdownConverter:
             )
             for el in pre_els:
                 el.remove()
-            absolutize_relative_urls(root, base_url, els=abs_els)
-            remove_svg_image_refs(root, els=svg_els)
-            remove_breadcrumbs(root, els=bc_els)
+            absolutize_relative_urls(abs_els, base_url)
+            remove_svg_image_refs(svg_els)
+            remove_breadcrumbs(bc_els)
 
             idx = DocIndex(root, _DOCUMENT_SELECTORS)
             remove_high_link_density_elements(idx, DEFAULT_LINK_DENSITY_THRESHOLD)

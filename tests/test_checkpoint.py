@@ -254,46 +254,3 @@ def test_dedup_stage_incremental_index_roundtrip(spark, tmp_path):
     assert kept2 <= ids and s1["n_keepers"] == len(ids) - len(kept2)
     # audit output exists
     assert os.path.exists(str(tmp_path / "run2" / "cross_candidates"))
-
-
-def test_media_dedup_stage_cli(spark, tmp_path):
-    """The --stage media-dedup CLI end-to-end: image dHash over the
-    planted image corpus, banded pairs and the canonical map.
-    Signatures are written BEFORE pair generation (the durable decode
-    checkpoint).  The retired audio/video switches are rejected by
-    argparse."""
-    import os
-
-    from fetch_engines_spark import job
-
-    fx = os.path.join(os.path.dirname(__file__), "..", "data", "fixtures")
-    out = str(tmp_path / "img")
-    args = job.parse_args(
-        [
-            "--input", os.path.join(fx, "images_neardup.parquet"),
-            "--output", out,
-            "--run-id", "m1",
-            "--stage", "media-dedup",
-            "--max-bucket-size", "50",
-        ]
-    )
-    s = job._run_media_dedup(spark, args)
-    assert s["n_media"] == 34 and s["n_errors"] == 0
-    assert s["n_pairs"] == 28 and s["n_remapped_media"] == 13
-    sigs = spark.read.parquet(f"{out}/signatures")
-    assert sigs.filter("dhash_hex IS NULL").count() == 0
-    cmap = {
-        r.media_ref: r.canonical_ref
-        for r in spark.read.parquet(f"{out}/canonical_map").collect()
-    }
-    assert cmap["blank-5"] == cmap["blank-2"] == "blank-0"
-    assert cmap["img-002-near"] == "img-002" and "img-001" not in cmap
-    # identity rows dropped: canonical ids are not in the map
-    assert "blank-0" not in cmap and "img-002" not in cmap
-
-    for flag, value in (("--media-kind", "image"), ("--min-share-bp", "8000")):
-        with pytest.raises(SystemExit):
-            job.parse_args(
-                ["--input", "x", "--output", out, "--run-id", "m2",
-                 "--stage", "media-dedup", flag, value]
-            )

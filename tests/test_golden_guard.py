@@ -46,6 +46,25 @@ def test_goldens_regenerate_deterministically(tmp_path):
         )
 
 
+def test_warc_fixtures_regenerate_byte_identically(tmp_path, monkeypatch):
+    """The WARC writer leaves the wall clock out of its gzip headers, so
+    rebuilding the WARC fixtures into a temp dir writes the committed
+    files byte for byte."""
+    import scripts.build_fixture_data as bfd
+
+    monkeypatch.setattr(bfd, "OUT", str(tmp_path))
+    bfd.build_warc()
+    for rel in (
+        "warc/sample.warc.gz",
+        "warc/sample-plain.warc",
+        "warc_bad/truncated.warc.gz",
+        "warc_bad/not-a.warc",
+    ):
+        built = (tmp_path / rel).read_bytes()
+        with open(os.path.join(FIXTURES, rel), "rb") as f:
+            assert built == f.read(), rel
+
+
 def test_truncated_golden_obeys_m13_rules():
     """Structural (converter-independent) checks of the M13 truncation
     golden: bounded length, the literal suffix, and the sentence-boundary

@@ -75,13 +75,12 @@ def test_capped_pairs_no_python_and_no_cartesian(spark):
 
 def test_simhash_capped_pairs_no_python_and_no_cartesian(spark):
     """The 64-bit SimHash capped join (shared candidates.bucket_pairs
-    guard) keeps the equi-join shape: no cross/nested-loop joins, and —
-    like the media near-dup gate — the ONLY Python is the single
-    Arrow-batched signature stage (round 6: simhash64_vectorized,
-    differential-tested vs the expression reference), which is
-    checkpoint-materialized so the join/verify plan itself is pure JVM
-    (the checkpointed RDD feeds both join sides and the hamming
-    verify)."""
+    guard) keeps the equi-join shape: no cross/nested-loop joins, and
+    the ONLY Python is the single Arrow-batched signature stage (round
+    6: simhash64_vectorized, differential-tested vs the expression
+    reference), which is checkpoint-materialized so the join/verify
+    plan itself is pure JVM (the checkpointed RDD feeds both join sides
+    and the hamming verify)."""
     from fetch_engines_spark.pipelines.dedup import simhash_candidate_pairs64
 
     docs = spark.read.parquet(f"{FIXTURES}/adversarial.parquet")
@@ -114,34 +113,6 @@ def test_fuzzy_decontamination_corpus_never_sort_merge_joins(spark):
     plan = plan_of(df)
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") >= 4
-
-
-def test_banded_hamming_pairs_no_cartesian_jvm_verify(spark):
-    """Image near-dup pair generation: candidate join is a bucketed
-    equi-join (never CartesianProduct/BroadcastNestedLoop), and the
-    hamming verify runs JVM-side on carried blocks — after the one
-    Arrow stage that computes signatures, NO further Python stage may
-    appear (no join back to the signature table either: exactly one
-    Arrow marker in the whole plan because the self-join reuses it on
-    both sides is wrong — the explode fans one signature scan into both
-    join sides, so the marker appears once per side, but never a THIRD
-    time for a verify join-back)."""
-    from fetch_engines_spark.pipelines.multimodal import (
-        dhash_near_dup_pairs,
-        image_dhash,
-    )
-
-    sigs = image_dhash(
-        spark.read.parquet("data/fixtures/images_neardup.parquet")
-    )
-    plan = plan_of(dhash_near_dup_pairs(sigs))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoop" not in plan
-    for marker in ("ArrowEvalPython", "BatchEvalPython"):
-        assert marker not in plan
-    # the decode+hash Arrow stage feeds both join sides; a third
-    # occurrence would mean a redundant signature join-back
-    assert plan.count("MapInPandas") <= 2, plan
 
 
 def test_bloom_gate_is_native_equi_join(spark):

@@ -327,69 +327,6 @@ def test_pdf_writer_parser_roundtrip_arbitrary_text(lines):
 
 
 @given(
-    st.integers(1, 12),
-    st.integers(1, 10),
-    st.sampled_from([0, 2, 4, 6]),
-    st.lists(st.integers(0, 4), min_size=1, max_size=5),
-    st.integers(0, 2**32 - 1),
-)
-@settings(max_examples=40, deadline=None)
-def test_png_writer_decoder_roundtrip_arbitrary(w, h, color_type, filters, seed):
-    """PNG property: any dimensions/color type/per-row filter mix written
-    by the generator decodes to the exact pixel array."""
-    from scripts.build_fixture_data import _png_bytes
-
-    from fetch_engines_spark.pipelines.multimodal import decode_png
-
-    ch = {0: 1, 2: 3, 4: 2, 6: 4}[color_type]
-    px = bytes((seed * 2654435761 + i * 97) % 256 for i in range(w * h * ch))
-    img = decode_png(_png_bytes(w, h, color_type, px, filters))
-    assert img["pixels"] == px and (img["width"], img["height"]) == (w, h)
-
-
-@given(st.binary(min_size=0, max_size=300))
-@settings(max_examples=150, deadline=None)
-def test_media_decoders_never_crash_unexpectedly(data):
-    """Fuzz: arbitrary bytes behind the PNG magic either decode or raise —
-    the Arrow stage converts any raise to an error row; nothing may hang
-    or exhaust memory (bomb guards bound all allocations)."""
-    from fetch_engines_spark.pipelines.multimodal import decode_png
-
-    try:
-        decode_png(b"\x89PNG\r\n\x1a\n" + data)
-    except Exception:
-        pass
-
-
-@given(
-    st.integers(1, 20),
-    st.integers(1, 20),
-    st.sampled_from([0, 2, 6]),
-    st.lists(st.integers(0, 4), min_size=1, max_size=5),
-    st.integers(0, 2**31 - 1),
-)
-@settings(max_examples=60, deadline=None)
-def test_png_adam7_roundtrip_arbitrary(w, h, ct, filters, seed):
-    """Adam7 property: arbitrary (incl. tiny/ragged) dimensions, every
-    color type and filter mix, encoded interlaced, must decode to the
-    EXACT display-order pixels — pixel equality (not just sums) catches
-    any pass-order or scatter-position mistake."""
-    from scripts.build_fixture_data import _png_bytes
-
-    from fetch_engines_spark.pipelines.multimodal import decode_png
-
-    ch = {0: 1, 2: 3, 6: 4}[ct]
-    px = bytes(((x * 7 + y * 13 + c * 29 + seed) % 256)
-               for y in range(h) for x in range(w) for c in range(ch))
-    img = decode_png(_png_bytes(w, h, ct, px, filters, interlaced=True))
-    assert (img["width"], img["height"], img["channels"]) == (w, h, ch)
-    assert img["pixels"] == px
-    # and the same pixels non-interlaced agree
-    img2 = decode_png(_png_bytes(w, h, ct, px, filters))
-    assert img2["pixels"] == px
-
-
-@given(
     st.lists(
         st.tuples(
             st.sampled_from(["response", "request", "warcinfo", "metadata"]),

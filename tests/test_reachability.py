@@ -26,9 +26,6 @@ ALLOWED_UNREACHED = {
     # the north rule names PDF/layout parse; routing PDFs through
     # `--stage extract` would add an input type, so it stays stage-less
     f"{PKG}.pdf": "PDF/layout parse kept for the north rule",
-    # the reference's HybridEngine route decision as columns; its
-    # consumer would be a render stage, which the batch job does not have
-    f"{PKG}.routing": "HybridEngine routing parity, no render stage",
 }
 
 
@@ -94,17 +91,17 @@ def test_walk_follows_relative_imports():
 
 
 def test_semdedup_stage_is_rejected(monkeypatch):
-    """Every retired stage (``semdedup``, then ``curate`` and ``mix``) left
-    the package with its modules, so argparse rejects it as a ``--stage``
-    choice before any Spark session starts; so too each retired
-    stage-only flag (``media-dedup``'s ``--docs`` and
+    """Every retired stage (``semdedup``, then ``curate`` and ``mix``,
+    then ``media-dedup``) left the package with its modules, so argparse
+    rejects it as a ``--stage`` choice before any Spark session starts;
+    so too each retired stage-only flag (``media-dedup``'s ``--docs`` and
     ``--incremental-signatures``), as an unknown argument."""
     from fetch_engines_spark import session
 
     started = []
     monkeypatch.setattr(session, "get_spark", lambda **kw: started.append(kw))
     base = ["--input", "x", "--output", "y", "--run-id", "r"]
-    rejected = [["--stage", stage] for stage in ("semdedup", "curate", "mix")]
+    rejected = [["--stage", s] for s in ("semdedup", "curate", "mix", "media-dedup")]
     rejected += [["--docs", "x"], ["--incremental-signatures", "x"]]
     for extra in rejected:
         with pytest.raises(SystemExit) as exit_info:
