@@ -48,13 +48,10 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument(
         "--stage",
         default="extract",
-        choices=("extract", "dedup", "compact-index"),
+        choices=("extract", "dedup"),
         help="extract: spans→markdown with checkpoint/resume; "
         "dedup: MinHash-LSH candidates → Jaccard verify → connected "
-        "components → keepers, writing pairs/clusters/keepers; "
-        "compact-index: merge N per-increment LSH index parquets "
-        "(comma-separated --input) into one deduplicated index so the "
-        "next increment reads one index, not N",
+        "components → keepers, writing pairs/clusters/keepers",
     )
     p.add_argument("--minhash-perms", type=int, default=128)
     p.add_argument("--band-size", type=int, default=8)
@@ -74,39 +71,7 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
         default=3,
         help="simhash64 verify threshold (pigeonhole-exact for < 4)",
     )
-    p.add_argument(
-        "--incremental-index",
-        default=None,
-        help="path to a prior dedup run's {output}/index parquet: the "
-        "input is treated as a NEW crawl increment — signature-identical "
-        "docs vs the index are dropped without rescanning the historical "
-        "corpus, band-collision candidates are written for auditing, and "
-        "a MERGED index (prior + this increment's keepers) is written "
-        "for the next run.  minhash method only; index and increment "
-        "must share --minhash-perms/--band-size.",
-    )
     return p.parse_args(argv)
-
-
-def _run_compact_index(spark, args) -> dict:
-    """Merge N per-increment LSH index parquets (comma-separated
-    --input) into one deduplicated index at {output}/index."""
-    from .pipelines.dedup import compact_minhash_indexes
-
-    paths = [p.strip() for p in args.input.split(",") if p.strip()]
-    if len(paths) < 2:
-        raise ValueError("--stage compact-index wants >=2 comma-separated index paths")
-    indexes = [spark.read.parquet(p) for p in paths]
-    n_in = sum(ix.count() for ix in indexes)
-    merged = compact_minhash_indexes(indexes)
-    merged.write.mode("overwrite").parquet(f"{args.output}/index")
-    n_out = spark.read.parquet(f"{args.output}/index").count()
-    return {
-        "stage": "compact-index",
-        "n_inputs": len(paths),
-        "n_rows_in": n_in,
-        "n_rows_out": n_out,
-    }
 
 
 def _run_dedup(spark, args) -> dict:
@@ -115,92 +80,12 @@ def _run_dedup(spark, args) -> dict:
     from .pipelines.dedup import (
         connected_components_star,
         minhash_candidate_pairs_fast,
-        minhash_index,
         ngram_jaccard,
         simhash_candidate_pairs64,
     )
 
     docs = spark.read.parquet(args.input)
-    sig_dropped = 0
-    prior_index = None
-    inc_verified = None
-    if args.incremental_index:
-        import os as _os
-
-        if args.dedup_method != "minhash":
-            raise ValueError("--incremental-index requires --dedup-method minhash")
-        if _os.path.abspath(args.incremental_index) == _os.path.abspath(
-            f"{args.output}/index"
-        ):
-            # overwriting the path being read would destroy the only copy
-            # of the history index AFTER the expensive run completed
-            raise ValueError(
-                "--incremental-index must not point at this run's own "
-                f"{args.output}/index — use a fresh --output per increment"
-            )
-        prior_index = spark.read.parquet(args.incremental_index)
-        # the banding parameters are part of the persisted contract: a
-        # mismatched index yields ZERO collisions (silent no-op dedup),
-        # so the index self-describes and the run fails loudly instead
-        if "mh_perms" not in prior_index.columns:
-            raise ValueError(
-                "--incremental-index parquet lacks mh_perms/mh_band_size "
-                "metadata columns — not a {output}/index written by this job"
-            )
-        meta = prior_index.select("mh_perms", "mh_band_size").first()
-        if meta and (
-            meta["mh_perms"] != args.minhash_perms
-            or meta["mh_band_size"] != args.band_size
-        ):
-            raise ValueError(
-                f"index was built with --minhash-perms {meta['mh_perms']} "
-                f"--band-size {meta['mh_band_size']}; this run uses "
-                f"{args.minhash_perms}/{args.band_size} — band keys would "
-                "never collide"
-            )
-        from .pipelines.candidates import cross_bucket_pairs
-        from .pipelines.dedup import candidate_pairs_from_index
-
-        # ONE signature pass over the increment: every downstream join
-        # (cross candidates, sig drop, within-increment pairs) reads the
-        # materialized index instead of re-deriving signatures from text
-        new_buckets = minhash_index(
-            docs, num_hashes=args.minhash_perms, band_size=args.band_size, fast=True
-        ).localCheckpoint(eager=True)
-        dup_ids = (
-            new_buckets.select("doc_id", "sig_key")
-            .distinct()
-            .join(prior_index.select("sig_key").distinct(), "sig_key")
-            .select("doc_id")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        sig_dropped = dup_ids.count()
-        # audit output: band collisions that are NOT already resolved by
-        # the signature-identity drop (the index carries no text, so
-        # these are what a downstream verifier still needs to look at)
-        cross = cross_bucket_pairs(
-            prior_index,
-            new_buckets,
-            ["band_id", "band_key"],
-            "doc_id",
-            sig_col="sig_key",
-            max_bucket_size=args.max_bucket_size,
-            out_a="doc_a",
-            out_b="doc_b",
-        )
-        cross.join(
-            dup_ids.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_anti"
-        ).write.mode("overwrite").parquet(f"{args.output}/cross_candidates")
-        docs = docs.join(dup_ids, "doc_id", "left_anti")
-        kept_buckets = new_buckets.join(dup_ids, "doc_id", "left_anti")
-        inc_pairs = candidate_pairs_from_index(kept_buckets, args.max_bucket_size)
-        inc_verified = ngram_jaccard(docs, inc_pairs).filter(
-            F.col("jaccard_bp") >= args.jaccard_threshold_bp
-        )
-    if args.incremental_index:
-        verified = inc_verified
-    elif args.dedup_method == "simhash64":
+    if args.dedup_method == "simhash64":
         # pigeonhole candidates + integer hamming verify (already in the
         # pair output — no second verify pass needed; the hamming score
         # column is kept in the pairs parquet, mirroring jaccard_bp)
@@ -228,38 +113,14 @@ def _run_dedup(spark, args) -> dict:
         clusters.filter(~F.col("is_keeper")).select("doc_id"), "doc_id", "left_anti"
     )
     keepers.write.mode("overwrite").parquet(f"{args.output}/keepers")
-    if args.dedup_method == "minhash":
-        # index of this run's keepers — with --incremental-index, merged
-        # with the prior index so the next increment deduplicates against
-        # the full history without rescanning it.  The banding params ride
-        # as metadata columns so a future run with mismatched parameters
-        # fails loudly instead of silently finding zero collisions.
-        idx = (
-            minhash_index(
-                spark.read.parquet(f"{args.output}/keepers"),
-                num_hashes=args.minhash_perms,
-                band_size=args.band_size,
-                fast=True,
-            )
-            .withColumn("mh_perms", F.lit(args.minhash_perms))
-            .withColumn("mh_band_size", F.lit(args.band_size))
-        )
-        if prior_index is not None:
-            idx = prior_index.unionByName(idx)
-        idx.write.mode("overwrite").parquet(f"{args.output}/index")
-    summary = {
+    return {
         "stage": "dedup",
         "method": args.dedup_method,
-        # with --incremental-index, docs was already filtered: report the
-        # pre-drop increment size
-        "n_input": (docs.count() + sig_dropped),
+        "n_input": docs.count(),
         "n_dup_pairs": verified.count(),
         "n_clustered": clusters.count(),
         "n_keepers": spark.read.parquet(f"{args.output}/keepers").count(),
     }
-    if args.incremental_index:
-        summary["n_sig_dropped_vs_index"] = sig_dropped
-    return summary
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -272,8 +133,6 @@ def main(argv: list[str] | None = None) -> int:
     try:
         if args.stage == "dedup":
             summary = _run_dedup(spark, args)
-        elif args.stage == "compact-index":
-            summary = _run_compact_index(spark, args)
         else:
             if args.input_format == "warc":
                 from .warc import read_warc, warc_html_documents

@@ -108,77 +108,3 @@ def bucket_pairs(
     )
     return small_pairs.unionByName(star_pairs).distinct()
 
-
-def cross_bucket_pairs(
-    left_buckets: DataFrame,
-    right_buckets: DataFrame,
-    key_cols: list[str],
-    id_col: str,
-    sig_col: str | None = None,
-    max_bucket_size: int | None = None,
-    out_a: str = "id_a",
-    out_b: str = "id_b",
-) -> DataFrame:
-    """Distinct (left_id, right_id) pairs co-bucketed on ``key_cols``
-    across TWO bucket tables — the incremental-dedup join (a new crawl
-    increment against a persisted corpus index) where the quadratic risk
-    is n_left × n_right per bucket.
-
-    Guard semantics (``max_bucket_size``) — STRICTLY bounded, like
-    :func:`bucket_pairs`' star path: buckets at or under the cap on
-    BOTH sides cross-join fully (≤ cap² pairs).  A bucket oversized on
-    EITHER side emits only (a) one rep-to-rep pair per shared
-    ``sig_col`` signature group — each such pair is a true
-    signature-identical duplicate, and there is at most one per group,
-    so this is linear in the number of groups, never n_l × n_r — plus
-    (b) a single bucket-representative pair (min id each side) so the
-    band-level collision itself stays auditable.  Signature-distinct
-    strangers inside an oversized bucket are dropped there (the same
-    documented recall tradeoff as bucket_pairs, recoverable via the
-    other bands); per-sig collapse — NOT per-sig rep retention — is
-    what keeps a signature-DIVERSE hot bucket (n distinct templates
-    sharing one band) from reverting to the quadratic join the guard
-    exists to prevent."""
-    cond = F.lit(True)
-    for k in key_cols:
-        cond = cond & (F.col(f"l.{k}") == F.col(f"r.{k}"))
-
-    def _ids(joined):
-        return (
-            joined.filter(F.col(f"l.{id_col}") != F.col(f"r.{id_col}"))
-            .select(
-                F.col(f"l.{id_col}").alias(out_a), F.col(f"r.{id_col}").alias(out_b)
-            )
-            .distinct()
-        )
-
-    if max_bucket_size is None:
-        return _ids(left_buckets.alias("l").join(right_buckets.alias("r"), cond))
-    if sig_col is None:
-        raise ValueError(
-            "max_bucket_size requires sig_col (full-signature digest) for the star path"
-        )
-    lcnt = left_buckets.groupBy(*key_cols).agg(F.count("*").alias("n_l"))
-    rcnt = right_buckets.groupBy(*key_cols).agg(F.count("*").alias("n_r"))
-    sizes = lcnt.join(rcnt, key_cols)  # only buckets present on BOTH sides pair
-    small_k = sizes.filter(
-        (F.col("n_l") <= max_bucket_size) & (F.col("n_r") <= max_bucket_size)
-    ).select(*key_cols)
-    big_k = sizes.filter(
-        (F.col("n_l") > max_bucket_size) | (F.col("n_r") > max_bucket_size)
-    ).select(*key_cols)
-
-    ls = left_buckets.join(small_k, key_cols)
-    rs = right_buckets.join(small_k, key_cols)
-    small_pairs = _ids(ls.alias("l").join(rs.alias("r"), cond))
-
-    lb = left_buckets.join(big_k, key_cols)
-    rb = right_buckets.join(big_k, key_cols)
-    l_sig = lb.groupBy(*key_cols, sig_col).agg(F.min(id_col).alias(id_col))
-    r_sig = rb.groupBy(*key_cols, sig_col).agg(F.min(id_col).alias(id_col))
-    sig_cond = cond & (F.col(f"l.{sig_col}") == F.col(f"r.{sig_col}"))
-    sig_pairs = _ids(l_sig.alias("l").join(r_sig.alias("r"), sig_cond))
-    l_rep = lb.groupBy(*key_cols).agg(F.min(id_col).alias(id_col))
-    r_rep = rb.groupBy(*key_cols).agg(F.min(id_col).alias(id_col))
-    rep_pairs = _ids(l_rep.alias("l").join(r_rep.alias("r"), cond))
-    return small_pairs.unionByName(sig_pairs).unionByName(rep_pairs).distinct()

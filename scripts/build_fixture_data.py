@@ -499,6 +499,7 @@ def build_warc() -> None:
     whole-file payloads for the error-row path."""
     import gzip as _gz
     import hashlib
+    import io
 
     html_body = (
         b"<html><head><title>Fixture Page</title></head><body>"
@@ -550,8 +551,16 @@ def build_warc() -> None:
     raw_records = [_warc_record(t, rid, hdr, blk) for t, rid, hdr, blk in recs]
     plain = b"".join(raw_records)
     # one member per record; mtime=0 keeps the wall clock out of the
-    # gzip header, so a rebuild writes the same bytes
-    gz = b"".join(_gz.compress(r, mtime=0) for r in raw_records)
+    # gzip header, and GzipFile writes that header itself (OS byte 255)
+    # where gzip.compress(mtime=0) leaves it to zlib (OS byte 3), so a
+    # rebuild writes the same bytes whichever way the local gzip goes
+    def member(r: bytes) -> bytes:
+        buf = io.BytesIO()
+        with _gz.GzipFile(fileobj=buf, mode="wb", mtime=0) as f:
+            f.write(r)
+        return buf.getvalue()
+
+    gz = b"".join(member(r) for r in raw_records)
 
     warc_dir = os.path.join(OUT, "warc")
     os.makedirs(warc_dir, exist_ok=True)

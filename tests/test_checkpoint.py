@@ -203,54 +203,3 @@ def test_dedup_stage_cli_both_methods(spark, tmp_path):
         assert summary["n_keepers"] < summary["n_input"]
         clusters = spark.read.parquet(str(tmp_path / method / "clusters"))
         assert clusters.filter("is_keeper").count() < summary["n_input"]
-
-
-def test_dedup_stage_incremental_index_roundtrip(spark, tmp_path):
-    """Two-run incremental dedup: run 1 writes {output}/index; run 2
-    treats a new increment (half exact copies of indexed docs, half
-    fresh) as input with --incremental-index — the copies are dropped by
-    signature identity WITHOUT rescanning the historical corpus, fresh
-    docs survive, and the merged index covers both runs."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from fetch_engines_spark import job
-
-    src = os.path.join(os.path.dirname(__file__), "..", "data", "fixtures", "neardup.parquet")
-    base_args = [
-        "--output", "", "--run-id", "t", "--stage", "dedup",
-        "--minhash-perms", "24", "--band-size", "2",
-    ]
-    a1 = job.parse_args(["--input", src] + base_args)
-    a1.output = str(tmp_path / "run1")
-    s1 = job._run_dedup(spark, a1)
-    assert os.path.exists(str(tmp_path / "run1" / "index"))
-
-    # increment: 20 exact copies of indexed keepers + 20 fresh docs
-    keepers = spark.read.parquet(str(tmp_path / "run1" / "keepers"))
-    copies = keepers.limit(20).withColumn(
-        "doc_id", F.concat(F.lit("inc-"), F.col("doc_id"))
-    )
-    fresh = spark.createDataFrame(
-        [(f"fresh{i:02d}", f"unique increment document number {i} " + " ".join(f"w{i}x{j}" for j in range(30)))
-         for i in range(20)],
-        "doc_id string, text string",
-    )
-    inc_path = str(tmp_path / "increment.parquet")
-    copies.select("doc_id", "text").unionByName(fresh).write.parquet(inc_path)
-
-    a2 = job.parse_args(["--input", inc_path] + base_args)
-    a2.output = str(tmp_path / "run2")
-    a2.incremental_index = str(tmp_path / "run1" / "index")
-    s2 = job._run_dedup(spark, a2)
-    assert s2["n_input"] == 40
-    assert s2["n_sig_dropped_vs_index"] == 20  # every copy killed by the index
-    kept2 = {r.doc_id for r in spark.read.parquet(str(tmp_path / "run2" / "keepers")).collect()}
-    assert all(d.startswith("fresh") for d in kept2) and len(kept2) == 20
-    # merged index covers run-1 keepers AND the increment's keepers
-    merged = spark.read.parquet(str(tmp_path / "run2" / "index"))
-    ids = {r.doc_id for r in merged.select("doc_id").distinct().collect()}
-    assert kept2 <= ids and s1["n_keepers"] == len(ids) - len(kept2)
-    # audit output exists
-    assert os.path.exists(str(tmp_path / "run2" / "cross_candidates"))

@@ -18,30 +18,6 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_exact_duplicates(docs):
-    from fetch_engines_spark.pipelines.dedup import exact_duplicates
-
-    groups = exact_duplicates(docs).collect()
-    assert len(groups) == 1
-    assert groups[0].group_size == 2
-    assert groups[0].keeper_doc_id == 1
-
-
-def test_minhash_near_dups_share_signature(docs):
-    from fetch_engines_spark.pipelines.dedup import minhash_signatures
-
-    sigs = minhash_signatures(docs, num_hashes=4).collect()
-    by_doc = {}
-    for r in sigs:
-        by_doc.setdefault(r.doc_id, {})[r.hash_idx] = r.minhash
-    # exact dups: identical signatures
-    assert by_doc[1] == by_doc[2]
-    # near dups share at least one minhash (common shingles dominate)
-    assert any(by_doc[1][k] == by_doc[3][k] for k in by_doc[1])
-    # unrelated docs share none
-    assert all(by_doc[1][k] != by_doc[6][k] for k in by_doc[1])
-
-
 def test_minhash_candidate_pairs(docs):
     from fetch_engines_spark.pipelines.dedup import minhash_candidate_pairs
 
@@ -53,22 +29,17 @@ def test_minhash_candidate_pairs(docs):
 def test_ngram_jaccard_values(spark, docs):
     from fetch_engines_spark.pipelines.dedup import ngram_jaccard
 
-    pairs = spark.createDataFrame([(1, 2), (1, 6)], "doc_a long, doc_b long")
-    res = {(r.doc_a, r.doc_b): r.jaccard_bp for r in ngram_jaccard(docs, pairs).collect()}
+    # a short doc (8) quoted whole inside a long host (9)
+    short = " ".join(f"tok{i}" for i in range(30))
+    host = short + " " + " ".join(f"pad{i}" for i in range(300))
+    quoted = docs.unionByName(
+        spark.createDataFrame([(8, short), (9, host)], "doc_id long, text string")
+    )
+    pairs = spark.createDataFrame([(1, 2), (1, 6), (8, 9)], "doc_a long, doc_b long")
+    res = {(r.doc_a, r.doc_b): r.jaccard_bp for r in ngram_jaccard(quoted, pairs).collect()}
     assert res[(1, 2)] == 10000  # identical
     assert res[(1, 6)] == 0  # disjoint
-
-
-def test_simhash_near_dups_close(docs):
-    from fetch_engines_spark.pipelines.dedup import simhash
-
-    sh = {r.doc_id: r.simhash for r in simhash(docs).collect()}
-    assert sh[1] == sh[2]
-
-    def hamming(a, b):
-        return bin(a ^ b).count("1")
-
-    assert hamming(sh[1], sh[3]) <= hamming(sh[1], sh[6])
+    assert res[(8, 9)] < 2000  # the quote dilutes to ~|A|/|B|
 
 
 def test_pdf_word_suffix_stream_does_not_swallow_objects():
@@ -142,28 +113,6 @@ def test_connected_components_nonconvergence_detected(spark):
     assert set(labels.values()) == {0}
 
 
-def test_decontaminate_flags_planted_leak(spark):
-    """A benchmark item quoted verbatim from one training doc must flag
-    that doc (and only it); overlap below the window length must not."""
-    from fetch_engines_spark.pipelines.dedup import decontaminate
-
-    leak = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    docs = spark.createDataFrame(
-        [
-            (1, f"prefix words here {leak} suffix words here"),
-            (2, "totally unrelated content with many distinct words inside"),
-            (3, "alpha beta gamma short overlap only three words shared"),
-        ],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame([(100, leak)], "doc_id long, text string")
-    got = {r.doc_id: r for r in decontaminate(docs, bench, n=8).collect()}
-    assert got[1].is_contaminated and got[1].n_contaminated == 3  # 10-word leak → 3 8-windows
-    assert not got[2].is_contaminated
-    assert not got[3].is_contaminated  # 3-word overlap < window length
-    assert 0 < got[1].contamination_bp <= 10000
-
-
 def test_simhash64_pigeonhole_recall_is_exact(spark):
     """64-bit/16-bit-block config: the block join must contain EVERY pair
     within max_hamming across both halves (pigeonhole over 4 blocks),
@@ -200,12 +149,7 @@ def test_simhash_vectorized_matches_expr(spark):
     strings, runs of spaces (empty tokens), unicode, single tokens,
     heavy repetition, and exact vote ties (2·ones == n must NOT set the
     bit).  NULL text yields no row on either path."""
-    from fetch_engines_spark.pipelines.dedup import (
-        simhash,
-        simhash64,
-        simhash64_vectorized,
-        simhash_vectorized,
-    )
+    from fetch_engines_spark.pipelines.dedup import simhash64, simhash64_vectorized
 
     rows = [
         (1, "order agg batch key spark part hash"),
@@ -218,9 +162,6 @@ def test_simhash_vectorized_matches_expr(spark):
         (8, "x y " * 500),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    ref = {r.doc_id: r.simhash for r in simhash(docs, bits=32).collect()}
-    fast = {r.doc_id: r.simhash for r in simhash_vectorized(docs, bits=32).collect()}
-    assert fast == ref and 7 not in fast
     ref64 = {r.doc_id: (r.sim_lo, r.sim_hi) for r in simhash64(docs).collect()}
     fast64 = {
         r.doc_id: (r.sim_lo, r.sim_hi) for r in simhash64_vectorized(docs).collect()
@@ -228,12 +169,6 @@ def test_simhash_vectorized_matches_expr(spark):
     assert fast64 == ref64 and 7 not in fast64
     # and on real corpus text
     corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    assert (
-        simhash_vectorized(corpus, bits=32)
-        .exceptAll(simhash(corpus, bits=32))
-        .count()
-        == 0
-    )
     assert simhash64_vectorized(corpus).exceptAll(simhash64(corpus)).count() == 0
 
 
@@ -572,259 +507,6 @@ def test_connected_components_chain_and_clique(spark):
     assert keepers == {"a", "x"}
 
 
-def test_ngram_containment_catches_quote_duplication(spark):
-    """A short doc fully quoted inside a long host: Jaccard dilutes to
-    ~|A|/|B| while containment reads ~10000 — the asymmetric-dup signal."""
-    from fetch_engines_spark.pipelines.dedup import ngram_containment, ngram_jaccard
-
-    short = " ".join(f"tok{i}" for i in range(30))
-    host = short + " " + " ".join(f"pad{i}" for i in range(300))
-    docs = spark.createDataFrame(
-        [(1, short), (2, host)], "doc_id long, text string"
-    )
-    pairs = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
-    cont = ngram_containment(docs, pairs).collect()[0].containment_bp
-    jac = ngram_jaccard(docs, pairs).collect()[0].jaccard_bp
-    assert cont == 10000  # every shingle of the quote appears in the host
-    assert jac < 2000  # Jaccard can't see it
-
-
-def test_incremental_dedup_equals_full_corpus_restricted(spark):
-    """Incremental candidates (new increment vs persisted index + within
-    the increment) must equal the FULL-corpus candidate set restricted
-    to pairs touching a new doc — re-running dedup over the historical
-    corpus buys nothing the index join doesn't already find."""
-    from fetch_engines_spark.pipelines.dedup import (
-        incremental_candidate_pairs,
-        minhash_candidate_pairs,
-        minhash_index,
-    )
-
-    docs = spark.read.parquet("data/fixtures/neardup.parquet")
-    old = docs.filter(F.substring("doc_id", 1, 4) != "copy")
-    new = docs.filter(F.substring("doc_id", 1, 4) == "copy")
-    old_ids = {r.doc_id for r in old.select("doc_id").collect()}
-
-    inc = incremental_candidate_pairs(new, minhash_index(old))
-    got = {frozenset((r.doc_a, r.doc_b)) for r in inc.collect()}
-
-    full = minhash_candidate_pairs(docs)
-    want = {
-        frozenset((r.doc_a, r.doc_b))
-        for r in full.collect()
-        if r.doc_a not in old_ids or r.doc_b not in old_ids
-    }
-    assert got == want and want  # 30 planted copies guarantee non-trivial
-
-
-def test_incremental_dedup_cross_cap_bounds_hot_bucket(spark):
-    """The cross-side guard, signature-IDENTICAL pathology: 5000
-    identical indexed docs x 100 identical new docs share every band
-    bucket; an oversized bucket emits only one sig-matched rep pair
-    plus one bucket-rep pair per band — a handful of pairs, not the
-    500k of the raw cross join."""
-    from fetch_engines_spark.pipelines.dedup import (
-        incremental_candidate_pairs,
-        minhash_index,
-    )
-
-    docs = spark.read.parquet("data/fixtures/adversarial.parquet")
-    old = docs.filter(F.col("doc_id").startswith("boiler"))
-    new = old.limit(100).withColumn(
-        "doc_id", F.concat(F.lit("new-"), F.col("doc_id"))
-    )
-    pairs = incremental_candidate_pairs(
-        new, minhash_index(old), max_bucket_size=50
-    )
-    n = pairs.filter("vs_index").count()
-    assert 0 < n <= 10, n  # ≤ (1 sig pair + 1 rep pair) per band
-
-
-def test_cross_bucket_pairs_sig_diverse_hot_bucket_stays_linear(spark):
-    """The cross-side guard, signature-DIVERSE pathology (the harder
-    case): 300 indexed + 300 new docs share ONE bucket but every doc
-    has a UNIQUE signature — per-sig rep retention would keep all 600
-    reps and the join would be 300x300=90k pairs; the strict guard must
-    emit only the sig-matched pairs (none here) plus one bucket-rep
-    pair.  Small buckets elsewhere must still cross-join fully."""
-    from fetch_engines_spark.pipelines.candidates import cross_bucket_pairs
-
-    left = spark.createDataFrame(
-        [(f"old{i:03d}", 0, "hot", f"lsig{i}") for i in range(300)]
-        + [(f"old-s{i}", 1, "cold", f"csig{i}") for i in range(3)],
-        "doc_id string, band_id long, band_key string, sig_key string",
-    )
-    right = spark.createDataFrame(
-        [(f"new{i:03d}", 0, "hot", f"rsig{i}") for i in range(300)]
-        + [(f"new-s{i}", 1, "cold", f"dsig{i}") for i in range(2)],
-        "doc_id string, band_id long, band_key string, sig_key string",
-    )
-    pairs = cross_bucket_pairs(
-        left, right, ["band_id", "band_key"], "doc_id",
-        sig_col="sig_key", max_bucket_size=50,
-        out_a="doc_a", out_b="doc_b",
-    ).collect()
-    hot = [r for r in pairs if r.doc_a.startswith("old0") or r.doc_a == "old000"]
-    hot = [r for r in pairs if not r.doc_a.startswith("old-s")]
-    assert len(hot) == 1  # ONE bucket-rep pair, not 90,000
-    assert (hot[0].doc_a, hot[0].doc_b) == ("old000", "new000")
-    cold = [r for r in pairs if r.doc_a.startswith("old-s")]
-    assert len(cold) == 6  # 3 x 2 full cross join below the cap
-
-
-def test_fuzzy_decontamination_catches_edited_leakage(spark):
-    """A benchmark item leaked with a junk token inserted every 6 words:
-    no 8-word window survives, so EXACT decontamination sees nothing —
-    fuzzy (MinHash bands + Jaccard) must still flag the source."""
-    from fetch_engines_spark.pipelines.dedup import decontaminate, decontaminate_fuzzy
-
-    base_words = [f"w{i}" for i in range(60)]
-    bench_text = " ".join(base_words)
-    edited = []
-    for i, w in enumerate(base_words):
-        edited.append(w)
-        if i % 6 == 5:
-            edited.append(f"x{i}")
-    docs = spark.createDataFrame(
-        [(1, " ".join(edited)), (2, "entirely unrelated text about nothing at all here")],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame([(100, bench_text)], "doc_id long, text string")
-    exact = decontaminate(docs, bench, n=8).filter("is_contaminated").count()
-    assert exact == 0  # every 8-word window is broken by the inserts
-    fuzzy = decontaminate_fuzzy(
-        docs, bench, num_hashes=6, band_size=1, threshold_bp=3000
-    ).collect()
-    assert [(r.doc_id, r.bench_id) for r in fuzzy] == [(1, 100)]
-    assert fuzzy[0].jaccard_bp >= 3000
-
-
-def test_fuzzy_decontamination_string_ids_and_tiebreak(spark):
-    """String doc/bench ids must work end-to-end (the previous best-match
-    negated bench_id, which CAST-fails on strings), and the tiebreak at
-    equal jaccard must pick the LOWEST bench_id — matching the DuckDB
-    twin's ORDER BY jaccard_bp DESC, bench_id ASC."""
-    from fetch_engines_spark.pipelines.dedup import decontaminate_fuzzy
-
-    text = " ".join(f"w{i}" for i in range(40))
-    docs = spark.createDataFrame(
-        [("doc-a", text), ("doc-b", "totally different content on another topic")],
-        "doc_id string, text string",
-    )
-    # two benchmark items with IDENTICAL text -> identical jaccard tie
-    bench = spark.createDataFrame(
-        [("bench-z", text), ("bench-a", text)], "doc_id string, text string"
-    )
-    out = decontaminate_fuzzy(
-        docs, bench, num_hashes=6, band_size=1, threshold_bp=5000
-    ).collect()
-    assert [(r.doc_id, r.bench_id) for r in out] == [("doc-a", "bench-a")]
-    assert out[0].jaccard_bp == 10000
-
-
-def test_fuzzy_decontamination_production_recall(spark):
-    """Recall gate at PRODUCTION parameters (128 perms / 16 bands of 8 —
-    banded similarity threshold ~(1/16)^(1/8) ≈ 0.71, tuned for ≥0.8
-    jaccard leaks), mirroring test_minhash_production_recall: 30 bench
-    items leaked with a word replaced every 40 words (true 3-shingle
-    jaccard ≈ 0.86) must be flagged with the right bench_id ≥ 95% of the
-    time, and unrelated docs must not be flagged at all.  The driver
-    query (`decontaminate_fuzzy`) runs DEMO parameters (4 hashes /
-    band 2) for oracle replay; this gate is the production evidence."""
-    import random
-
-    from fetch_engines_spark.pipelines.dedup import decontaminate_fuzzy
-
-    rng = random.Random(42)
-    bench_rows, doc_rows = [], []
-    for i in range(30):
-        vocab = [f"b{i}w{j}" for j in range(400)]
-        words = [vocab[rng.randrange(400)] for _ in range(200)]
-        bench_rows.append((f"bench{i:02d}", " ".join(words)))
-        leaked = list(words)
-        for p in range(20, 200, 40):  # 5 replacements -> J ~ 0.86
-            leaked[p] = f"junk{i}x{p}"
-        doc_rows.append((f"leak{i:02d}", " ".join(leaked)))
-    for i in range(30):
-        words = [f"u{i}w{rng.randrange(400)}" for _ in range(200)]
-        doc_rows.append((f"uniq{i:02d}", " ".join(words)))
-    docs = spark.createDataFrame(doc_rows, "doc_id string, text string")
-    bench = spark.createDataFrame(bench_rows, "doc_id string, text string")
-    out = decontaminate_fuzzy(
-        docs, bench, num_hashes=128, band_size=8, threshold_bp=7000
-    ).collect()
-    flagged = {r.doc_id: r.bench_id for r in out}
-    hits = sum(
-        1 for i in range(30) if flagged.get(f"leak{i:02d}") == f"bench{i:02d}"
-    )
-    assert hits >= 29, hits  # >=95% recall of edited leaks
-    assert not any(d.startswith("uniq") for d in flagged), flagged
-
-
-def test_compacted_index_equals_monolithic(spark):
-    """Index-lifecycle gate: compacting 3 per-increment LSH indexes must
-    (a) equal the monolithic index built from the full history in one
-    shot, row for row — a byte-identical re-crawl collapses to one row
-    set — and (b) answer an incremental query identically; a re-crawl
-    with CHANGED text raises under strict, and mismatched banding
-    metadata always raises."""
-    import pytest as _pytest
-
-    from pyspark.sql import functions as F
-
-    from fetch_engines_spark.pipelines.dedup import (
-        compact_minhash_indexes,
-        incremental_candidate_pairs,
-        minhash_index,
-    )
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    docs = [
-        (f"d{i:02d}", f"{base} doc {i} " + " ".join(f"t{i}w{j}" for j in range(10)))
-        for i in range(30)
-    ]
-
-    def mk(rows):
-        return spark.createDataFrame(rows, "doc_id string, text string")
-
-    # history split into 3 increments; d05 re-crawled byte-identically in inc2
-    incs = [docs[:10], docs[10:20] + [docs[5]], docs[20:]]
-    idxs = [minhash_index(mk(r), num_hashes=8, band_size=2) for r in incs]
-    compacted = compact_minhash_indexes(idxs)
-    mono = minhash_index(mk(docs), num_hashes=8, band_size=2)
-    assert sorted(map(tuple, compacted.collect())) == sorted(map(tuple, mono.collect()))
-
-    new = mk([("n0", docs[3][1]), ("n1", " ".join(f"fresh{j}" for j in range(25)))])
-    def q(index):
-        return {
-            (r.doc_a, r.doc_b, r.vs_index)
-            for r in incremental_candidate_pairs(
-                new, index, num_hashes=8, band_size=2
-            ).collect()
-        }
-    got = q(compacted)
-    assert got == q(mono)
-    assert ("d03", "n0", True) in got  # exact re-crawl must collide
-
-    # strict: a re-crawl with different text raises instead of silently
-    # keeping two signatures for one doc_id
-    changed = minhash_index(
-        mk([("d05", " ".join(f"rewritten{j}" for j in range(20)))]),
-        num_hashes=8, band_size=2,
-    )
-    with _pytest.raises(ValueError, match="conflicting signatures"):
-        compact_minhash_indexes([idxs[0], changed])
-    # ...unless strict=False, which keeps every historical signature
-    loose = compact_minhash_indexes([idxs[0], changed], strict=False)
-    assert loose.filter("doc_id = 'd05'").count() > idxs[0].filter("doc_id = 'd05'").count()
-
-    # mismatched banding metadata: no shared collision space -> raise
-    a = idxs[0].withColumn("mh_perms", F.lit(8)).withColumn("mh_band_size", F.lit(2))
-    b = idxs[2].withColumn("mh_perms", F.lit(128)).withColumn("mh_band_size", F.lit(8))
-    with _pytest.raises(ValueError, match="banding parameter"):
-        compact_minhash_indexes([a, b])
-
-
 def test_warc_ingest_end_to_end_extraction(spark):
     """WARC → documents → extraction: the HTML 200 response in the
     fixture archive must flow through warc_html_documents into
@@ -864,107 +546,3 @@ def test_warc_ingest_end_to_end_extraction(spark):
     # corrupt files -> one error row each
     bad = read_warc(spark, os.path.join(fx, "warc_bad")).collect()
     assert len(bad) == 2 and all(r.error and r.error.startswith("ERR_WARC") for r in bad)
-
-
-def test_bloom_gate_no_false_negatives_and_gates_majority(spark):
-    """Bloom membership: every key that built the filter tests
-    maybe_present=1 (a false negative would silently drop history dups
-    from the exact verify), and at m/n ≈ 8 the definitely-new majority
-    is correctly gated OUT of the downstream anti-join."""
-    from pyspark.sql import functions as F
-
-    from fetch_engines_spark.pipelines.dedup import bloom_build, bloom_gate
-
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    hist = docs.filter(F.col("doc_id") < 250).select(F.md5("text").alias("key"))
-    bloom = bloom_build(hist, "key", m_bits=2048, k_hashes=3)
-    q = docs.select("doc_id", F.md5("text").alias("key"))
-    out = {
-        r.doc_id: r.maybe_present
-        for r in bloom_gate(q, bloom, "key", "doc_id", m_bits=2048, k_hashes=3).collect()
-    }
-    assert len(out) == 500
-    assert all(out[d] == 1 for d in out if d < 250)  # no false negatives
-    fps = sum(1 for d, m in out.items() if d >= 250 and m == 1)
-    # texts are unique across docs, so every >=250 hit is a false
-    # positive; expected rate (1 - e^(-3*250/2048))^3 ~ 2.9%
-    assert fps / 250 < 0.10, f"{fps} false positives of 250"
-    assert sum(1 for d, m in out.items() if d >= 250 and m == 0) > 200
-
-
-def test_bloom_merge_equals_monolithic(spark):
-    """Incremental filters OR together exactly: bloom(A) | bloom(B) is
-    word-for-word the monolithic bloom(A ∪ B)."""
-    from pyspark.sql import functions as F
-
-    from fetch_engines_spark.pipelines.dedup import bloom_build, bloom_merge
-
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    keys = docs.select("doc_id", F.md5("text").alias("key"))
-    a = bloom_build(keys.filter("doc_id < 125").select("key"), "key", 2048, 3)
-    b = bloom_build(
-        keys.filter("doc_id >= 125 and doc_id < 250").select("key"), "key", 2048, 3
-    )
-    mono = bloom_build(keys.filter("doc_id < 250").select("key"), "key", 2048, 3)
-    merged = bloom_merge([a, b])
-    assert {(r.word_id, r.bits) for r in merged.collect()} == {
-        (r.word_id, r.bits) for r in mono.collect()
-    }
-
-
-def test_bloom_gate_null_key_reads_definitely_new(spark):
-    """A NULL key has no bloom positions; the row must still appear in
-    the gate output as maybe_present=0 (definitely new), not silently
-    vanish (explode would drop it)."""
-    from pyspark.sql import functions as F
-
-    from fetch_engines_spark.pipelines.dedup import bloom_build, bloom_gate
-
-    keys = spark.createDataFrame(
-        [(1, "a"), (2, "b")], "doc_id long, key string"
-    )
-    bloom = bloom_build(keys.select("key"), "key", 1024, 3)
-    q = spark.createDataFrame(
-        [(1, "a"), (3, None), (4, "zz")], "doc_id long, key string"
-    )
-    out = {r.doc_id: r.maybe_present for r in
-           bloom_gate(q, bloom, "key", "doc_id", 1024, 3).collect()}
-    assert out == {1: 1, 3: 0, 4: out[4]}  # 4 may be a false positive
-    assert 3 in out  # the NULL-key row survived
-
-
-def test_bloom_gate_rejects_mismatched_parameters(spark):
-    """The bitmap self-describes m_bits/k_hashes; a gate with a
-    different bit space must raise, not silently read every key as
-    definitely-new (false negatives)."""
-    import pytest as _pytest
-
-    from pyspark.sql import functions as F
-
-    from fetch_engines_spark.pipelines.dedup import (
-        bloom_build,
-        bloom_gate,
-        bloom_merge,
-    )
-
-    keys = spark.createDataFrame([(1, "a")], "doc_id long, key string")
-    bloom = bloom_build(keys.select("key"), "key", 2048, 3)
-    with _pytest.raises(ValueError, match="different bit spaces"):
-        bloom_gate(keys, bloom, "key", "doc_id", m_bits=1 << 20)
-    with _pytest.raises(ValueError, match="k_hashes"):
-        bloom_gate(keys, bloom, "key", "doc_id", k_hashes=5)
-    # defaulting reads the bitmap's own parameters
-    out = bloom_gate(keys, bloom, "key", "doc_id").collect()
-    assert out[0].maybe_present == 1
-    other = bloom_build(keys.select("key"), "key", 4096, 3)
-    with _pytest.raises(ValueError, match="different parameters"):
-        bloom_merge([bloom, other]).collect()
-    # a bare union of mismatched shards must not pick an arbitrary first
-    # row's parameters (silent false negatives) — round-6 ADVICE guard
-    with _pytest.raises(ValueError, match="bloom_merge"):
-        bloom_gate(keys, bloom.unionByName(other), "key", "doc_id")
-    # NULL keys contribute no junk rows to the bitmap
-    nb = bloom_build(
-        spark.createDataFrame([("a",), (None,)], "key string"), "key", 2048, 3
-    )
-    assert nb.filter("word_id IS NULL").count() == 0

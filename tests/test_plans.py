@@ -95,50 +95,6 @@ def test_simhash_capped_pairs_no_python_and_no_cartesian(spark):
     assert "ExistingRDD" in plan  # localCheckpoint-materialized signatures
 
 
-def test_fuzzy_decontamination_corpus_never_sort_merge_joins(spark):
-    """Every join in the fuzzy-decontamination plan must be broadcast
-    (bench band index, candidate-id semi-join, candidate pairs, bench
-    shingles): a SortMergeJoin here means the 10^12-doc corpus shuffles
-    on doc_id just to keep a benchmark-bounded candidate set."""
-    from pyspark.sql import functions as F
-
-    from fetch_engines_spark.pipelines.dedup import decontaminate_fuzzy
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    bench = docs.filter(F.col("doc_id") % 25 == 0).select(
-        "doc_id",
-        F.expr("substring(text, 1, greatest(length(text) - 30, 50))").alias("text"),
-    )
-    df = decontaminate_fuzzy(docs, bench, threshold_bp=5000, max_bucket_size=2000)
-    plan = plan_of(df)
-    assert "SortMergeJoin" not in plan
-    assert plan.count("BroadcastHashJoin") >= 4
-
-
-def test_bloom_gate_is_native_equi_join(spark):
-    """The bloom membership test is one equi-join on word_id + one
-    combinable groupBy — no Python stages, no cartesian, and the literal
-    mask array is constant-folded into the projection."""
-    from pyspark.sql import functions as F
-
-    from fetch_engines_spark.pipelines.dedup import bloom_build, bloom_gate
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    hist = docs.filter(F.col("doc_id") < 250).select(F.md5("text").alias("key"))
-    bloom = bloom_build(hist, "key", m_bits=2048, k_hashes=3)
-    q = docs.select("doc_id", F.md5("text").alias("key"))
-    df = bloom_gate(q, bloom, "key", "doc_id", m_bits=2048, k_hashes=3).select(
-        "doc_id",
-        (F.col("doc_id") < 250).cast("int").alias("in_history"),
-        "maybe_present",
-    )
-    plan = plan_of(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    for marker in ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert marker not in plan
-
-
 def test_spread_scan_probe_cache_keys_on_plan(spark, tmp_path):
     """A raw single-file scan and the same scan already repartitioned to
     defaultParallelism read the same files; the probe cache must not hand

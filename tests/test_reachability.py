@@ -92,17 +92,25 @@ def test_walk_follows_relative_imports():
 
 def test_semdedup_stage_is_rejected(monkeypatch):
     """Every retired stage (``semdedup``, then ``curate`` and ``mix``,
-    then ``media-dedup``) left the package with its modules, so argparse
-    rejects it as a ``--stage`` choice before any Spark session starts;
-    so too each retired stage-only flag (``media-dedup``'s ``--docs`` and
-    ``--incremental-signatures``), as an unknown argument."""
+    then ``media-dedup``, then ``compact-index``) left the package with
+    its code, so argparse rejects it as a ``--stage`` choice before any
+    Spark session starts; so too each retired stage-only flag
+    (``media-dedup``'s ``--docs`` and ``--incremental-signatures``,
+    ``dedup``'s ``--incremental-index``), as an unknown argument."""
     from fetch_engines_spark import session
 
     started = []
     monkeypatch.setattr(session, "get_spark", lambda **kw: started.append(kw))
     base = ["--input", "x", "--output", "y", "--run-id", "r"]
-    rejected = [["--stage", s] for s in ("semdedup", "curate", "mix", "media-dedup")]
-    rejected += [["--docs", "x"], ["--incremental-signatures", "x"]]
+    rejected = [
+        ["--stage", s]
+        for s in ("semdedup", "curate", "mix", "media-dedup", "compact-index")
+    ]
+    rejected += [
+        ["--docs", "x"],
+        ["--incremental-signatures", "x"],
+        ["--incremental-index", "x"],
+    ]
     for extra in rejected:
         with pytest.raises(SystemExit) as exit_info:
             job.main(base + extra)
